@@ -28,16 +28,41 @@ class OlapApi:
     - ``/olap/<fact>/measures``                   (M3)
     - ``/olap/<fact>/aggregate?cut=&drilldown=&measure=&aggregate=&output=``
 
-    ``plan_cache_size`` (default 128): dashboards repeat a small set of
-    aggregate requests verbatim, and each repeat would otherwise re-pay
-    grammar compilation + Catalyst analysis (the dominant share of
-    report-sized interactive latency — bench.py --latency).  Identical
-    (fact, params) requests therefore reuse the built DataFrame, whose
-    analyzed plan Spark caches on the object; EXECUTION still runs per
-    request.  Staleness horizon is unchanged: the cached plan reads the
-    same registered frame (and its file listing) a fresh build would —
-    re-registering a fact bumps its version and structurally
-    invalidates every cached plan over it.  Size 0 disables."""
+    ``plan_cache_size`` (default 128; 0 disables) bounds one LRU that
+    serves dashboards, which repeat a small set of aggregate requests
+    verbatim, at two depths:
+
+    - PLANS: identical (fact, frame version, plan params) requests
+      reuse the built DataFrame, whose analyzed plan Spark caches on
+      the object — no grammar compilation or Catalyst re-analysis.
+      ``/aggregate`` and ``/explain`` share these entries.
+    - RESPONSES: an ``/aggregate`` request that repeats returns the
+      payload its plan already produced, so a repeat runs no Spark
+      job.  A response is keyed by the plan's key plus the output
+      kind (``output=table`` vs JSON rows) plus the rollup lattice
+      version (:meth:`RollupStore.lattice_version`, the manifest's
+      mtime; ``None`` without a lattice).  It is served only while the
+      plan entry that produced it is cached: evicting or replacing the
+      plan drops its responses.  Only successful payloads are kept —
+      errors always re-run.
+
+    Invalidation: re-registering a fact bumps its frame version (a new
+    key for plans and responses); ``materialize``/``refresh`` rewrite
+    the lattice manifest (a new lattice version for responses);
+    :meth:`clear_plan_cache` drops both.  Staleness horizon is that of
+    a cached plan, which reads the same registered frame (and its file
+    listing) a fresh build would.
+
+    Memory bound: at most ``plan_cache_size`` plans, each with up to
+    two report-sized responses.
+
+    Payloads are SHARED and read-only: every repeat of a request gets
+    the same object, so callers encode, print or read it and never
+    mutate it (the HTTP server, the CLI, bench.py and the examples
+    do only that)."""
+
+    _STATS = ("plan_hits", "plan_misses", "response_hits", "evictions", "self_heals")
+    _OUTPUT_KINDS = ("rows", "table")
 
     def __init__(
         self, engine: CubeEngine, rollups=None, plan_cache_size: int = 128
@@ -50,15 +75,34 @@ class OlapApi:
         self.rollups = rollups
         self._plan_cache_size = max(0, int(plan_cache_size))
         self._plan_cache: OrderedDict[tuple, Any] = OrderedDict()
+        #: (plan key, output kind) -> (plan, lattice version, payload);
+        #: every key names a plan in ``_plan_cache`` (dropped with it)
+        self._responses: dict[tuple, tuple] = {}
+        self._stats = dict.fromkeys(self._STATS, 0)
         # the server is ThreadingHTTPServer: concurrent requests mutate
         # the LRU (move_to_end / popitem) — guard the compound ops
         self._plan_cache_lock = threading.Lock()
 
+    def cache_stats(self) -> dict[str, int]:
+        """Cache counters since construction (a disabled cache counts
+        nothing):
+
+        - ``plan_hits`` / ``plan_misses``: ``/aggregate`` and
+          ``/explain`` plan lookups that found / built a plan;
+        - ``response_hits``: ``/aggregate`` requests answered from a
+          memoized response (no plan lookup, no Spark job);
+        - ``evictions``: plans the LRU bound dropped, responses and all;
+        - ``self_heals``: requests whose cached plan failed to execute
+          and that succeeded after evicting and rebuilding it."""
+        with self._plan_cache_lock:
+            return dict(self._stats)
+
     def clear_plan_cache(self) -> None:
-        """Drop every cached aggregate plan.  Fact re-registration
-        invalidates structurally (frame versions key the cache); call
-        this for out-of-band plan-affecting changes the key can't see —
-        e.g. re-configuring the rollup lattice.  (An in-place rollup
+        """Drop every cached aggregate plan and memoized response.
+        Fact re-registration and lattice rewrites invalidate
+        structurally (see the class docstring); call this for
+        out-of-band plan-affecting changes the keys can't see — e.g.
+        re-configuring the rollup lattice.  (An in-place rollup
         RE-materialization additionally deletes the files a cached
         plan's index lists; ``_aggregate`` self-heals that case by
         evicting and rebuilding on execution failure, so a daemon
@@ -66,6 +110,7 @@ class OlapApi:
         call.)"""
         with self._plan_cache_lock:
             self._plan_cache.clear()
+            self._responses.clear()
 
     def handle(self, path: str, params: dict[str, str] | None = None) -> Any:
         params = params or {}
@@ -142,10 +187,17 @@ class OlapApi:
             ),
         )
 
-    def _evict_plan(self, fact: str, params: dict[str, str]) -> None:
-        """Drop one cached plan (execution-failure recovery path)."""
+    def _drop_responses(self, key: tuple) -> None:
+        """Forget the responses of plan ``key`` (lock held)."""
+        for kind in self._OUTPUT_KINDS:
+            self._responses.pop((key, kind), None)
+
+    def _evict_plan(self, key: tuple) -> None:
+        """Drop one cached plan and its responses (execution-failure
+        recovery path)."""
         with self._plan_cache_lock:
-            self._plan_cache.pop(self._cache_key(fact, params), None)
+            self._plan_cache.pop(key, None)
+            self._drop_responses(key)
 
     def _build_aggregate_df(self, fact: str, params: dict[str, str]):
         """ONE plan builder for ``/aggregate`` and ``/explain`` — the
@@ -160,17 +212,25 @@ class OlapApi:
         files a cached plan's index lists)."""
         if not self._plan_cache_size:
             return self._build_aggregate_df_uncached(fact, params)
-        key = self._cache_key(fact, params)
+        return self._cached_plan(self._cache_key(fact, params), fact, params)
+
+    def _cached_plan(self, key: tuple, fact: str, params: dict[str, str]):
         with self._plan_cache_lock:
             cached = self._plan_cache.get(key)
             if cached is not None:
                 self._plan_cache.move_to_end(key)
+                self._stats["plan_hits"] += 1
                 return cached
         df = self._build_aggregate_df_uncached(fact, params)
         with self._plan_cache_lock:
+            self._stats["plan_misses"] += 1
             self._plan_cache[key] = df
+            # a replaced plan's responses go with it
+            self._drop_responses(key)
             if len(self._plan_cache) > self._plan_cache_size:
-                self._plan_cache.popitem(last=False)
+                old, _ = self._plan_cache.popitem(last=False)
+                self._drop_responses(old)
+                self._stats["evictions"] += 1
         return df
 
     def _build_aggregate_df_uncached(self, fact: str, params: dict[str, str]):
@@ -199,9 +259,30 @@ class OlapApi:
 
     def _aggregate(self, fact: str, params: dict[str, str]) -> Any:
         self.catalog.fact(fact)  # unknown fact -> KeyError -> 404
-        df = self._build_aggregate_df(fact, params)
+        if not self._plan_cache_size:
+            return self._materialize(self._build_aggregate_df(fact, params), params)
+        key = self._cache_key(fact, params)
+        slot = (key, "table" if params.get("output") == "table" else "rows")
+        # read BEFORE the plan runs: a lattice rewritten mid-request
+        # leaves this response under the old version, which no later
+        # request matches
+        lattice = (
+            None if self.rollups is None else self.rollups.lattice_version(fact)
+        )
+        with self._plan_cache_lock:
+            plan, version, payload = self._responses.get(slot, (None,) * 3)
+            if (
+                plan is not None
+                and plan is self._plan_cache.get(key)
+                and version == lattice
+            ):
+                self._plan_cache.move_to_end(key)
+                self._stats["response_hits"] += 1
+                return payload
+        df = self._cached_plan(key, fact, params)
+        healed = False
         try:
-            return self._materialize(df, params)
+            payload = self._materialize(df, params)
         except (KeyError, ValueError):
             raise  # request errors — nothing to retry
         except Exception:
@@ -210,12 +291,17 @@ class OlapApi:
             # index lists); without eviction the poisoned entry would
             # 400 this shape until restart.  Evict, rebuild, retry
             # ONCE — a fresh-plan failure is a real error and raises.
-            if not self._plan_cache_size:
-                raise
-            self._evict_plan(fact, params)
-            return self._materialize(
-                self._build_aggregate_df(fact, params), params
-            )
+            self._evict_plan(key)
+            df = self._cached_plan(key, fact, params)
+            payload = self._materialize(df, params)
+            healed = True
+        with self._plan_cache_lock:
+            self._stats["self_heals"] += healed
+            # memoize only under the plan that produced it, if a
+            # concurrent eviction or rebuild has not replaced it
+            if self._plan_cache.get(key) is df:
+                self._responses[slot] = (df, lattice, payload)
+        return payload
 
     @staticmethod
     def _materialize(df, params: dict[str, str]) -> Any:

@@ -89,12 +89,22 @@ class RollupStore:
     def _manifest_path(self, fact: str) -> str:
         return os.path.join(self._fact_dir(fact), "_LATTICE.json")
 
-    def _load_manifest(self, fact: str) -> dict:
-        path = self._manifest_path(fact)
+    def lattice_version(self, fact: str) -> int | None:
+        """Identity of ``fact``'s lattice: its manifest's mtime (ns), or
+        None when nothing is materialized.  ``materialize`` and
+        ``refresh`` rewrite the manifest — in this process or another
+        — so any change to the lattice changes this token; response
+        caches over routed aggregates key on it."""
         try:
-            mtime = os.stat(path).st_mtime_ns
+            return os.stat(self._manifest_path(fact)).st_mtime_ns
         except FileNotFoundError:
+            return None
+
+    def _load_manifest(self, fact: str) -> dict:
+        mtime = self.lattice_version(fact)
+        if mtime is None:
             return {"rollups": {}, "measures": {}}
+        path = self._manifest_path(fact)
         hit = self._manifest_cache.get(fact)
         if hit is not None and hit[0] == mtime:
             return hit[1]

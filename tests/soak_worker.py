@@ -154,9 +154,13 @@ def main(sf_dir: str, lattice_dir: str) -> None:
         assert len(transient_5xx) <= 16, transient_5xx[:3]
 
     # entry bound: the LRU never outgrew its configured size — the
-    # cache pins DataFrames, so an unbounded map is a leak by design
+    # cache pins DataFrames, so an unbounded map is a leak by design —
+    # and the response memo holds at most two responses (JSON rows,
+    # table) per cached plan, each for a plan still in the LRU
     with api._plan_cache_lock:
         assert len(api._plan_cache) <= 8
+        assert len(api._responses) <= 2 * len(api._plan_cache)
+        assert {k for k, _ in api._responses} <= set(api._plan_cache)
     gc.collect()
     py_growth = _rss_kb(os.getpid()) - py_rss0
     assert py_growth < 400_000, f"python RSS grew {py_growth} kB"

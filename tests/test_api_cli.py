@@ -510,3 +510,216 @@ def test_poisoned_cached_plan_evicts_and_retries(spark, sf_dir, tmp_path):
     u._build_aggregate_df = lambda fact, params: doomed2
     with pytest.raises(Exception):
         u.handle("/olap/loans2/aggregate", p)
+
+
+# -- response memo: a repeated /aggregate returns the payload it already
+# built, so the repeat runs no Spark job ------------------------------------
+
+P = {"cut": "date:1997", "drilldown": "date", "measure": "loans"}
+AGG = "/olap/loans2/aggregate"
+
+
+def _loans_api(spark, sf_dir, **kw):
+    eng = CubeEngine(default_catalog())
+    eng.register_fact("loans2", build_loans_fact(spark, sf_dir))
+    return OlapApi(eng, **kw)
+
+
+def _jobs_during(spark, group, fn):
+    """(fn(), number of Spark jobs fn ran), via a job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, "response memo job-count probe")
+    try:
+        out = fn()
+    finally:
+        sc.setJobGroup(None, None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_repeated_aggregate_runs_no_spark_job(spark, sf_dir):
+    api = _loans_api(spark, sf_dir)
+    first, jobs1 = _jobs_during(spark, "memo-first", lambda: api.handle(AGG, P))
+    again, jobs2 = _jobs_during(spark, "memo-again", lambda: api.handle(AGG, P))
+    assert jobs1 >= 1 and jobs2 == 0
+    assert again is first  # the shared payload itself
+    assert again == OlapApi(api.engine, plan_cache_size=0).handle(AGG, P)
+    assert api.cache_stats()["response_hits"] == 1
+
+
+def test_output_kinds_memoized_separately(spark, sf_dir):
+    api = _loans_api(spark, sf_dir)
+    table_p = {**P, "output": "table"}
+    rows = api.handle(AGG, P)
+    table = api.handle(AGG, table_p)
+    assert "data" in rows and table[0] == ["month", "loans"]
+    # one plan, two responses; each repeat gets its own kind back
+    assert len(api._plan_cache) == 1 and len(api._responses) == 2
+    assert api.handle(AGG, table_p) is table
+    assert api.handle(AGG, P) is rows
+    assert api.cache_stats()["response_hits"] == 2
+
+
+def test_errors_are_not_memoized(spark, sf_dir, tmp_path):
+    import shutil
+
+    api = _loans_api(spark, sf_dir)
+    for _ in range(2):
+        with pytest.raises(ValueError):  # 400: malformed cut
+            api.handle(AGG, {"cut": "date", "drilldown": "date"})
+        with pytest.raises(KeyError):  # 404: unknown fact
+            api.handle("/olap/no_such_fact/aggregate", P)
+    # 500: every build yields a plan whose execution fails, so the
+    # evict-and-retry fails too
+    doomed_dir = str(tmp_path / "doomed")
+    spark.range(3).write.parquet(doomed_dir)
+    doomed = spark.read.parquet(doomed_dir)
+    shutil.rmtree(doomed_dir)
+    api._build_aggregate_df_uncached = lambda fact, params: doomed
+    for _ in range(2):
+        with pytest.raises(Exception):
+            api.handle(AGG, P)
+    assert api._responses == {}
+    assert api.cache_stats()["response_hits"] == 0
+
+
+def test_plan_cache_size_zero_memoizes_nothing(spark, sf_dir):
+    api = _loans_api(spark, sf_dir, plan_cache_size=0)
+    first = api.handle(AGG, P)
+    again, jobs = _jobs_during(spark, "memo-off", lambda: api.handle(AGG, P))
+    assert again == first and again is not first
+    assert jobs >= 1
+    assert api._plan_cache == {} and api._responses == {}
+    assert set(api.cache_stats().values()) == {0}
+
+
+def test_memo_entries_never_exceed_the_lru_bound(spark, sf_dir):
+    api = _loans_api(spark, sf_dir, plan_cache_size=2)
+    shapes = [
+        {**P, "measure": m, "cut": f"date:{y}"}
+        for y in ("1996", "1997")
+        for m in ("loans", "value")
+    ]
+    for params in shapes + shapes[:1]:
+        for kind in ({}, {"output": "table"}):
+            api.handle(AGG, {**params, **kind})
+            assert len(api._plan_cache) <= 2
+            assert len(api._responses) <= 2 * len(api._plan_cache)
+            # every response belongs to a plan still in the LRU
+            assert {k for k, _ in api._responses} <= set(api._plan_cache)
+    # the wrap-around to shapes[0] found it evicted: no response hit
+    stats = api.cache_stats()
+    assert stats["evictions"] == 3 and stats["response_hits"] == 0
+
+
+def test_memo_invalidation(spark, sf_dir, tmp_path):
+    """A lattice rewrite (materialize, refresh), fact re-registration
+    and clear_plan_cache() each retire the memoized response: the next
+    request runs Spark again, and the request after it is answered
+    from the fresh memo."""
+    from opl_spark.rollups import RollupStore
+
+    eng = CubeEngine(default_catalog())
+    full = build_loans_fact(spark, sf_dir)
+    eng.register_fact("loans2", full)
+    store = RollupStore(spark, str(tmp_path / "lattice"))
+    groupings = [["year", "month", "day", "loan_type"]]
+    store.materialize(eng, "loans2", groupings)
+    api = OlapApi(eng, rollups=store)
+    expected = OlapApi(eng, plan_cache_size=0).handle(AGG, P)
+    served = api.handle(AGG, P)
+    assert served == expected
+
+    changes = {
+        "materialize": lambda: store.materialize(eng, "loans2", groupings),
+        "refresh": lambda: store.refresh(eng, "loans2", full.limit(0)),
+        "register_fact": lambda: eng.register_fact("loans2", full),
+        "clear_plan_cache": api.clear_plan_cache,
+    }
+    for i, (name, change) in enumerate(changes.items()):
+        version = store.lattice_version("loans2")
+        change()
+        if name in ("materialize", "refresh"):
+            assert store.lattice_version("loans2") != version, name
+        fresh, jobs = _jobs_during(
+            spark, f"memo-{name}", lambda: api.handle(AGG, P)
+        )
+        assert jobs >= 1 and fresh is not served and fresh == expected, name
+        again, jobs = _jobs_during(
+            spark, f"memo-{name}-again", lambda: api.handle(AGG, P)
+        )
+        assert jobs == 0 and again is fresh, name
+        assert api.cache_stats()["response_hits"] == i + 1, name
+        served = fresh
+
+
+def test_cache_stats_count_every_path(spark, sf_dir, tmp_path):
+    import shutil
+
+    api = _loans_api(spark, sf_dir)
+    good = api.handle(AGG, P)  # plan miss
+    api.handle(AGG, P)  # response hit
+    api.handle("/olap/loans2/explain", P)  # plan hit
+    assert api.cache_stats() == {
+        "plan_hits": 1, "plan_misses": 1, "response_hits": 1,
+        "evictions": 0, "self_heals": 0,
+    }
+    # a replaced plan takes its responses along: the planted plan runs,
+    # fails, is evicted and rebuilt once
+    doomed_dir = str(tmp_path / "doomed")
+    spark.range(3).write.parquet(doomed_dir)
+    doomed = spark.read.parquet(doomed_dir)
+    shutil.rmtree(doomed_dir)
+    key = api._cache_key("loans2", P)
+    with api._plan_cache_lock:
+        api._plan_cache[key] = doomed
+    healed = api.handle(AGG, P)
+    assert healed == good and healed is not good
+    assert api.handle(AGG, P) is healed
+    assert api.cache_stats() == {
+        "plan_hits": 2, "plan_misses": 2, "response_hits": 2,
+        "evictions": 0, "self_heals": 1,
+    }
+
+
+def test_memo_under_concurrent_churn(spark, sf_dir):
+    """More threads than cores hammer an LRU far smaller than the shape
+    mix, with a short switch interval: every answer stays correct, the
+    bound holds, and every request is counted exactly once (a response
+    hit or one plan lookup) — a lost update under the lock breaks the
+    sum."""
+    import sys
+    from concurrent.futures import ThreadPoolExecutor
+
+    api = _loans_api(spark, sf_dir, plan_cache_size=2)
+    requests = [
+        {**P, "cut": f"date:{y}", **kind}
+        for y in ("1995", "1996", "1997")
+        for kind in ({}, {"output": "table"})
+    ]
+    plain = OlapApi(api.engine, plan_cache_size=0)
+    expected = [plain.handle(AGG, p) for p in requests]
+    n_threads, per_thread = 12, 12
+
+    def client(tid: int) -> int:
+        for i in range(per_thread):
+            k = (tid * 5 + i) % len(requests)
+            assert api.handle(AGG, requests[k]) == expected[k], (tid, i)
+        return per_thread
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        with ThreadPoolExecutor(max_workers=n_threads) as pool:
+            futures = [pool.submit(client, t) for t in range(n_threads)]
+            done = [f.result(timeout=600) for f in futures]
+    finally:
+        sys.setswitchinterval(old)
+    assert done == [per_thread] * n_threads
+    with api._plan_cache_lock:
+        assert len(api._plan_cache) <= 2
+        assert {k for k, _ in api._responses} <= set(api._plan_cache)
+    s = api.cache_stats()
+    assert s["response_hits"] + s["plan_hits"] + s["plan_misses"] == (
+        n_threads * per_thread
+    ), s
+    assert s["self_heals"] == 0

@@ -274,6 +274,31 @@ def test_http_aggregate_latency_guard(routed_server):
     assert med < 1.5, f"warm routed aggregate median {med:.2f}s ({warm})"
 
 
+def test_repeated_request_is_served_from_the_response_memo(routed_server):
+    """A repeated routed /aggregate is answered from the memoized
+    response: byte-identical to the first answer and to an uncached,
+    unrouted API, also under concurrent repeats."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    api, _, srv = routed_server
+    params = {"cut": "date:1997", "drilldown": "loan_type", "measure": "value",
+              "output": "table"}
+    expected = encode_response(
+        OlapApi(api.engine, plan_cache_size=0).handle(
+            "/olap/loans2/aggregate", params
+        )
+    )
+    hits0 = api.cache_stats()["response_hits"]
+    status, first = _get(srv, "/olap/loans2/aggregate", params)
+    assert status == 200 and first == expected
+    with ThreadPoolExecutor(max_workers=4) as pool:
+        repeats = list(pool.map(
+            lambda _: _get(srv, "/olap/loans2/aggregate", params), range(8)
+        ))
+    assert repeats == [(200, expected)] * 8
+    assert api.cache_stats()["response_hits"] - hits0 == 8
+
+
 def test_aggregate_concurrent_requests_match_sequential(server):
     """8 concurrent /aggregate requests with distinct shapes must each
     return exactly the bytes the same request produces sequentially —

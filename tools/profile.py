@@ -1,12 +1,15 @@
 #!/usr/bin/env python
-"""Round-13 optimization profiler: for each named query, capture the
-physical plan (``explain("formatted")``) into plans/r14/<id>_<tag>.txt
-and time the noop-sink execution (best of N, same methodology as
+"""Optimization profiler: for each named query, capture the physical
+plan (``explain("formatted")``) into plans/<dir>/<id>_<tag>.txt and
+time the noop-sink execution (best of N, same methodology as
 bench.py:run_set), reporting wall seconds and the number of Spark jobs
 the query scheduled (sequential-action shapes show up as job count).
 
 Usage:
-    python tools/profile_r14.py [--tag before|after] [--runs 2] q_a q_b ...
+    python tools/profile.py --plans r14 [--tag before|after] [--runs 2] q_a q_b ...
+
+``--plans`` names the subdirectory of plans/ the captured plans go to
+(one per optimization round: plans/r13, plans/r14, ...).
 
 Timing here is for ITERATION ONLY (relative before/after on the same
 host, same session); the recording of record stays bench.py's.
@@ -14,6 +17,7 @@ host, same session); the recording of record stays bench.py's.
 
 from __future__ import annotations
 
+import argparse
 import io
 import json
 import os
@@ -21,7 +25,12 @@ import sys
 import time
 from contextlib import redirect_stdout
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+if __name__ == "__main__":
+    # replace (not prepend to) this script's own directory on the path:
+    # tools/profile.py would otherwise shadow the stdlib ``profile``
+    # module that cProfile — imported by pyspark — loads
+    sys.path[0] = REPO
 
 _DRIVER_MEM = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "4g")
 os.environ.setdefault(
@@ -30,33 +39,24 @@ os.environ.setdefault(
 
 
 def main() -> None:
-    args = sys.argv[1:]
-    tag = "before"
-    runs = 2
-    if "--tag" in args:
-        i = args.index("--tag")
-        tag = args[i + 1]
-        del args[i : i + 2]
-    if "--runs" in args:
-        i = args.index("--runs")
-        runs = int(args[i + 1])
-        del args[i : i + 2]
-    names = args
-    if not names:
-        raise SystemExit("usage: profile_r14.py [--tag t] [--runs n] q_a ...")
+    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    ap.add_argument("--plans", required=True,
+                    help="subdirectory of plans/ for the captured plans")
+    ap.add_argument("--tag", default="before")
+    ap.add_argument("--runs", type=int, default=2)
+    ap.add_argument("names", nargs="+", metavar="query_id")
+    args = ap.parse_args()
+    tag, runs, names = args.tag, args.runs, args.names
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    out_dir = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "plans", "r14",
-    )
+    out_dir = os.path.join(REPO, "plans", args.plans)
     os.makedirs(out_dir, exist_ok=True)
 
     from opl_spark import workload
     from opl_spark.session import get_spark
     from opl_spark.sources import TABLES, load_table
 
-    spark = get_spark(app_name=f"opl-profile-r14-{tag}")
+    spark = get_spark(app_name=f"opl-profile-{args.plans}-{tag}")
     qs = workload.queries()
     # warm-up: parquet footers + codegen, as in bench.run_set
     for t in TABLES:
