@@ -32,26 +32,28 @@ class OlapApi:
     serves dashboards, which repeat a small set of aggregate requests
     verbatim, at two depths:
 
-    - PLANS: identical (fact, frame version, plan params) requests
-      reuse the built DataFrame, whose analyzed plan Spark caches on
-      the object — no grammar compilation or Catalyst re-analysis.
-      ``/aggregate`` and ``/explain`` share these entries.
+    - PLANS: identical (fact, frame version, lattice version, plan
+      params) requests reuse the built DataFrame, whose analyzed plan
+      Spark caches on the object — no grammar compilation or Catalyst
+      re-analysis.  The lattice version is
+      :meth:`RollupStore.lattice_version` (the manifest's mtime;
+      ``None`` without a lattice).  ``/aggregate`` and ``/explain``
+      share these entries.
     - RESPONSES: an ``/aggregate`` request that repeats returns the
       payload its plan already produced, so a repeat runs no Spark
       job.  A response is keyed by the plan's key plus the output
-      kind (``output=table`` vs JSON rows) plus the rollup lattice
-      version (:meth:`RollupStore.lattice_version`, the manifest's
-      mtime; ``None`` without a lattice).  It is served only while the
-      plan entry that produced it is cached: evicting or replacing the
-      plan drops its responses.  Only successful payloads are kept —
-      errors always re-run.
+      kind (``output=table`` vs JSON rows).  It is served only while
+      the plan entry that produced it is cached: evicting or replacing
+      the plan drops its responses.  Only successful payloads are
+      kept — errors always re-run.
 
-    Invalidation: re-registering a fact bumps its frame version (a new
-    key for plans and responses); ``materialize``/``refresh`` rewrite
-    the lattice manifest (a new lattice version for responses);
-    :meth:`clear_plan_cache` drops both.  Staleness horizon is that of
-    a cached plan, which reads the same registered frame (and its file
-    listing) a fresh build would.
+    Invalidation: re-registering a fact bumps its frame version, and
+    ``materialize``/``refresh`` rewrite the lattice manifest (a new
+    lattice version) — either way a new key for plans and responses,
+    so a lattice rewritten from different data is never answered by a
+    plan built over the old one; :meth:`clear_plan_cache` drops both.
+    Staleness horizon is that of a cached plan, which reads the same
+    registered frame (and its file listing) a fresh build would.
 
     Memory bound: at most ``plan_cache_size`` plans, each with up to
     two report-sized responses.
@@ -75,8 +77,8 @@ class OlapApi:
         self.rollups = rollups
         self._plan_cache_size = max(0, int(plan_cache_size))
         self._plan_cache: OrderedDict[tuple, Any] = OrderedDict()
-        #: (plan key, output kind) -> (plan, lattice version, payload);
-        #: every key names a plan in ``_plan_cache`` (dropped with it)
+        #: (plan key, output kind) -> (plan, payload); every key names
+        #: a plan in ``_plan_cache`` (dropped with it)
         self._responses: dict[tuple, tuple] = {}
         self._stats = dict.fromkeys(self._STATS, 0)
         # the server is ThreadingHTTPServer: concurrent requests mutate
@@ -178,10 +180,13 @@ class OlapApi:
         kw["share_within"] = params.get("share_within")
         return kw
 
-    def _cache_key(self, fact: str, params: dict[str, str]) -> tuple:
+    def _cache_key(
+        self, fact: str, params: dict[str, str], lattice: int | None = None
+    ) -> tuple:
         return (
             fact,
             self.engine.frame_version(fact),
+            lattice,
             tuple(
                 (k, params[k]) for k in self._PLAN_PARAMS if k in params
             ),
@@ -205,14 +210,18 @@ class OlapApi:
         holds by construction because both routes call this.  Core
         requests route through the rollup lattice when configured;
         extension params always go to the live engine.  Built plans
-        are LRU-cached per (fact, frame version, plan params) — see
-        the class docstring; failed builds are never cached, and
-        ``_aggregate`` evicts-and-retries when a cached plan's
-        EXECUTION fails (a rollup re-materialized in place deletes the
-        files a cached plan's index lists)."""
+        are LRU-cached per (fact, frame version, lattice version, plan
+        params) — see the class docstring; failed builds are never
+        cached, and ``_aggregate`` evicts-and-retries when a cached
+        plan's EXECUTION fails (a rollup re-materialized in place
+        deletes the files a cached plan's index lists)."""
         if not self._plan_cache_size:
             return self._build_aggregate_df_uncached(fact, params)
-        return self._cached_plan(self._cache_key(fact, params), fact, params)
+        key = self._cache_key(fact, params, self._lattice_version(fact))
+        return self._cached_plan(key, fact, params)
+
+    def _lattice_version(self, fact: str) -> int | None:
+        return None if self.rollups is None else self.rollups.lattice_version(fact)
 
     def _cached_plan(self, key: tuple, fact: str, params: dict[str, str]):
         with self._plan_cache_lock:
@@ -261,21 +270,14 @@ class OlapApi:
         self.catalog.fact(fact)  # unknown fact -> KeyError -> 404
         if not self._plan_cache_size:
             return self._materialize(self._build_aggregate_df(fact, params), params)
-        key = self._cache_key(fact, params)
+        # the lattice version is read BEFORE the plan runs: a lattice
+        # rewritten mid-request leaves this plan and response under the
+        # old version, which no later request matches
+        key = self._cache_key(fact, params, self._lattice_version(fact))
         slot = (key, "table" if params.get("output") == "table" else "rows")
-        # read BEFORE the plan runs: a lattice rewritten mid-request
-        # leaves this response under the old version, which no later
-        # request matches
-        lattice = (
-            None if self.rollups is None else self.rollups.lattice_version(fact)
-        )
         with self._plan_cache_lock:
-            plan, version, payload = self._responses.get(slot, (None,) * 3)
-            if (
-                plan is not None
-                and plan is self._plan_cache.get(key)
-                and version == lattice
-            ):
+            plan, payload = self._responses.get(slot, (None, None))
+            if plan is not None and plan is self._plan_cache.get(key):
                 self._plan_cache.move_to_end(key)
                 self._stats["response_hits"] += 1
                 return payload
@@ -300,7 +302,7 @@ class OlapApi:
             # memoize only under the plan that produced it, if a
             # concurrent eviction or rebuild has not replaced it
             if self._plan_cache.get(key) is df:
-                self._responses[slot] = (df, lattice, payload)
+                self._responses[slot] = (df, payload)
         return payload
 
     @staticmethod

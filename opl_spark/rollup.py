@@ -4,8 +4,11 @@ grain per fact; at 100 TB a year-grain dashboard query must never
 rescan the event-level fact).
 
 Build once: aggregate the fact to its finest useful grain (usually
-day) and save it as a catalog table.  Route per query: a request at
-grain g is answered by the FINEST materialization that is still
+day) and save it as a catalog table (:func:`lineitem_day_rollup_table`,
+one table per data directory; a new directory gets a new table, so
+nothing here refreshes in place — incremental maintenance of the
+served lattice is ``rollups.RollupStore.refresh``).  Route per query:
+a request at grain g is answered by the FINEST materialization that is still
 coarse enough to roll up into g — day answers month/quarter/year by
 re-aggregating day rows (calendar grains nest exactly), and only a
 request finer than every materialization falls through to the fact.
@@ -56,32 +59,6 @@ def route(requested: str, available: list[str]) -> str | None:
     return max(candidates, key=GRAINS.index)
 
 
-def build_time_rollup(
-    fact: DataFrame,
-    ts_col: str,
-    keys: list[str],
-    sums: dict[str, Column],
-    table: str,
-    grain: str = "day",
-    num_buckets: int = 8,
-) -> DataFrame:
-    """Materialize the (grain bucket, keys) → partial-sum rollup as a
-    bucketed catalog table and return its scan.
-
-    ``sums`` maps output column name → its AGGREGATE expression
-    (keep money in DECIMAL so partials re-sum exactly).  A row count
-    ``n_rows`` is always carried so downstream COUNT/AVG stay
-    routable.  Bucketing on the first key keeps the re-aggregation
-    join/groupBy exchange-light, the same layout contract as the
-    bucketed graph tables.
-    """
-    from opl_spark.sources.bucketing import write_bucketed
-
-    agged = time_rollup_frame(fact, ts_col, keys, sums, grain)
-    write_bucketed(agged, table, keys[0], num_buckets=num_buckets)
-    return fact.sparkSession.table(table)
-
-
 def time_rollup_frame(
     fact: DataFrame,
     ts_col: str,
@@ -89,10 +66,11 @@ def time_rollup_frame(
     sums: dict[str, Column],
     grain: str = "day",
 ) -> DataFrame:
-    """The (grain bucket, keys) → partial-sum frame
-    :func:`build_time_rollup` materializes — exposed separately so
-    callers can route the write through a concurrency-safe store
-    (``sources.bucketing.bucketed_table_atomic``)."""
+    """The (grain bucket, keys) → partial-sum frame a rollup table
+    stores.  ``sums`` maps output column name → its AGGREGATE
+    expression (keep money in DECIMAL so partials re-sum exactly); a
+    row count ``n_rows`` is always carried so downstream COUNT/AVG stay
+    routable."""
     return fact.groupBy(
         grain_col(F.col(ts_col), grain).alias("bucket"), *[F.col(k) for k in keys]
     ).agg(
@@ -165,96 +143,3 @@ def rollup_answer(
         F.sum("n_rows").alias("n_rows"),
         *[F.sum(c).alias(c) for c in sums],
     )
-
-
-def _partitioned_agg(
-    fact: DataFrame,
-    ts_col: str,
-    keys: list[str],
-    sums: dict[str, Column],
-    grain: str,
-) -> DataFrame:
-    agged = fact.groupBy(
-        grain_col(F.col(ts_col), grain).alias("bucket"), *[F.col(k) for k in keys]
-    ).agg(
-        F.count(F.lit(1)).alias("n_rows"),
-        *[expr.alias(name) for name, expr in sums.items()],
-    )
-    # month partition directories: refresh granularity — coarse enough
-    # to keep directory counts sane at 100 TB, fine enough that one
-    # late day rewrites one month, not the table
-    return agged.withColumn("part", F.date_format("bucket", "yyyy-MM"))
-
-
-def build_partitioned_rollup(
-    fact: DataFrame,
-    ts_col: str,
-    keys: list[str],
-    sums: dict[str, Column],
-    path: str,
-    grain: str = "day",
-) -> None:
-    """Materialize the rollup as MONTH-partitioned parquet — the
-    layout :func:`refresh_partitioned_rollup` can maintain
-    incrementally (a bucketed catalog table can only be rewritten
-    whole)."""
-    _partitioned_agg(fact, ts_col, keys, sums, grain).write.partitionBy(
-        "part"
-    ).mode("overwrite").parquet(path)
-
-
-def refresh_partitioned_rollup(
-    spark: SparkSession,
-    fact_delta: DataFrame,
-    ts_col: str,
-    keys: list[str],
-    sums: dict[str, Column],
-    path: str,
-    grain: str = "day",
-) -> list[str]:
-    """Incremental rollup maintenance for an APPEND-only fact: fold a
-    delta batch into the materialized rollup, rewriting ONLY the month
-    partitions the delta touches (dynamic partition overwrite) — the
-    always-fresh-materialized-view loop; a full rebuild rescans the
-    100 TB fact for every late hour of data, this rescans one month of
-    summary rows.
-
-    Partial-sum algebra: the delta aggregates to the same
-    (bucket, keys, n_rows, sums) shape and COMBINES with the stored
-    partials by one more SUM — exact because every routed measure is
-    algebraic (the module's additivity contract).  The affected-month
-    list is collected driver-side (metadata-sized).  The merged result
-    is ``localCheckpoint``-materialized BEFORE the overwrite: the job
-    reads the same files it replaces, and a lazy plan would have its
-    input renamed away mid-write (the warehouse compact/upsert rule).
-
-    Returns the rewritten partition values.
-    """
-    delta = _partitioned_agg(fact_delta, ts_col, keys, sums, grain)
-    affected = [r["part"] for r in delta.select("part").distinct().collect()]
-    if not affected:
-        return []
-    stored = spark.read.parquet(path)
-    existing = stored.filter(F.col("part").isin(affected))
-    merged = (
-        existing.unionByName(delta)
-        .groupBy("bucket", *keys, "part")
-        .agg(
-            F.sum("n_rows").alias("n_rows"),
-            *[F.sum(name).alias(name) for name in sums],
-        )
-    )
-    # pin column types to the STORED schema: the combine re-SUM widens
-    # decimals (28,2 -> 38,2), and a rewritten partition with a wider
-    # physical type than its untouched siblings breaks every later read
-    # (PARQUET_COLUMN_DATA_TYPE_MISMATCH)
-    merged = merged.select(
-        *[F.col(f.name).cast(f.dataType).alias(f.name) for f in stored.schema.fields]
-    ).localCheckpoint()  # materialize BEFORE overwriting the inputs
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        merged.write.partitionBy("part").mode("overwrite").parquet(path)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-    return sorted(affected)

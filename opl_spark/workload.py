@@ -49,184 +49,16 @@ def register(name: str, oracle: str | None = None):
     return deco
 
 
-# MAINTENANCE (each round):
-#  1. extend this tuple with the GREEN ids of the newest
-#     CORRECTNESS_r*.json (hash_match true), so the next
-#     never-audited ids rotate into the driver's 50-id window;
-#  2. move any hash-RED ids into _RETRY_FIRST below instead — they
-#     stay at the head of queries() until a driver round confirms
-#     their fix, then graduate into this tuple;
-#  3. if an already-audited id's CHECK TYPE upgrades (rows-only →
-#     oracled), REMOVE it from this tuple so it re-enters the window
-#     under the stronger check (see the r4 comments inline);
-#  4. ids with NO oracle (rows-only, e.g. the DataSketches family)
-#     rotate into this tuple too once the driver has seen sane row
-#     counts — their exactness is pytest-pinned and a `no_oracle` row
-#     is their terminal driver state, so leaving them out would squat
-#     the head of every future window;
-#  5. ids whose code or oracle CHANGED after their last driver audit
-#     go into _AUDIT_PRIORITY below (they stay in this tuple); clear
-#     them from _AUDIT_PRIORITY once the fresh CORRECTNESS row is
-#     green, and move them to the END of this tuple (freshest-last).
-# The driver audits the first 50 ids in ``queries()`` order each
-# round; never-yet-audited ids must come first or they never receive
-# the hard signal.  Within the unaudited block, oracled queries
-# precede rows-only ones (an oracle row is the stronger check).
-# TUPLE ORDER = STALENESS for the audited tail: the regression-check
-# slots at the end of each window follow this tuple's order, so when a
-# round re-confirms old greens, move those ids to the END of the tuple
-# (freshest-confirmed last) — the next window then reaches the next
-# oldest stale greens instead of re-checking the same ones forever.
-# Ids annotated "rows-only" have no DuckDB oracle and can never turn
-# hash-green; they rotate here on rows-match + their pytest exactness
-# / error-bound pins (tests/test_sketches.py) like any other id — do
-# NOT leave them out or they squat the head of every future window.
-_DRIVER_AUDITED: tuple[str, ...] = (
-    # ORDER = STALENESS (oldest driver confirmation first, freshest
-    # last).  Rotated each round: the ids of the latest green window
-    # move to the END in window order.  Per-round history (which ids
-    # entered when, rows-only terminal states, the r3 HUGEINT and r4
-    # scd2 retries) lives in CORRECTNESS_r*.json and git history of
-    # this tuple.  Last rotation: r15, after the 50/50-green r14 window
-    # (CORRECTNESS_r14.json — all 24 r14 _AUDIT_PRIORITY re-entries
-    # confirmed green and cleared, the whole window moved to the tail
-    # in window order).  The mechanical gate on this walk is
-    # tests/test_audit_rotation.py.
-    "q_idempotent_antijoin", "q_agg_median", "q_agg_extrema",
-    "q_dedup_exact", "q_dedup_embedding", "q_knn_batch", "q_lang_id",
-    "q_quality_score", "q_token_count", "q_fingerprint", "q_text_clean",
-    "q_winnow", "q_tfidf", "q_pii_scrub", "q_contamination",
-    "q_events_window", "q_sessionize", "q_salted_agg",
-    "q_embedding_centroid", "q_running_total", "q_top_per_group",
-    "q_pack_sequences", "q_distinct_users", "q_length_quantiles",
-    "q_rollup", "q_minhash_keep_best", "q_dedup_minhash", "q_srp_lsh",
-    "q_simhash", "q_lsh_tuning", "q_bucket_stats", "q_rendezvous_shard",
-    "q_asof_join", "q_interval_join", "q_pivot", "q_cube_sets",
-    "q_pipeline_filter", "q_fact_accessions", "q_fact_general_indexes",
-    "q_fact_patrimonio", "q_meta_fact_tables", "q_meta_measures",
-    "q_mix_sources", "q_contamination_bloom", "q_zorder", "q_quantize",
-    "q_stratified_sample", "q_incremental_dedup", "q_semantic_dedup",
-    "q_unigram_logprob", "q_percentile_filter", "q_heavy_hitters",
-    "q_chunk_docs", "q_ccnet_bucket", "q_budget_sample", "q_bigram_logprob",
-    "q_dup_weights", "q_winnow_pairs", "q_repetition", "q_split_sample",
-    "q_vocab_build", "q_token_entropy", "q_corpus_stats",
-    "q_srp_incremental", "q_ivf_recall_curve", "q_similarity_ivf_kmeans",
-    "q_similarity_topk", "q_similarity_ivf", "q_quantized_topk",
-    "q_pq_topk", "q_ivfpq_topk", "q_pq_rerank", "q_mmr_select",
-    "q_hybrid_search", "q_pagerank_bucketed", "q_label_prop_bucketed",
-    "q_srp_recall_curve", "q_degree_distribution", "q_dominant_matching",
-    "q_gini", "q_lorenz_deciles", "q_cuped", "q_bpe_merges",
-    "q_bpe_segment", "q_funnel", "q_retention", "q_zscore_outliers",
-    "q_bm25_search", "q_soft_dedup_sample", "q_embedding_norms",
-    "q_props_extract", "q_source_overlap", "q_cube_topk", "q_date_spine",
-    "q_substring_dup", "q_event_transitions", "q_correlation",
-    "q_asof_forward", "q_cube_having", "q_histogram", "q_rolling_active",
-    "q_new_returning", "q_snapshot_diff", "q_phrase_search",
-    "q_kendall_tau", "q_mann_whitney", "q_chi2_independence",
-    "q_mutual_information", "q_temperature_mix", "q_meta_dimensions",
-    "q_cut_range", "q_cut_open_range", "q_cut_hierarchy",
-    "q_cut_hierarchy_range", "q_drilldown_cutlevel", "q_drilldown_default",
-    "q_rollup_route", "q_drilldown_week", "q_hll_rollup",
-    "q_theta_audience", "q_kll_quantiles", "q_pmi", "q_gopher_rules",
-    "q_quality_calibrate", "q_salted_join", "q_pca_project", "q_kfold",
-    "q_regional_revenue", "q_top_unshipped", "q_fuzzy_pairs",
-    "q_exact_n_sample", "q_profile", "q_scd2", "q_mask_spans",
-    "q_peak_concurrency", "q_cube_share", "q_yoy_growth",
-    "q_hopping_window", "q_pricing_summary", "q_triangles", "q_winsorized",
-    "q_mode", "q_id_gaps", "q_attribution", "q_ks_drift", "q_benford",
-    "q_variant_extract", "q_unigram_train", "q_unigram_tokenize",
-    "q_negative_pairs", "q_hard_negatives", "q_topk_sketch",
-    "q_drill_across", "q_mad_outliers", "q_lang_confusion",
-    "q_temporal_split", "q_class_separation", "q_session_stats",
-    "q_conversion_time", "q_bootstrap_mean", "q_ab_zstat",
-    "q_value_deciles", "q_pit_lookup", "q_basket_rules", "q_moving_avg",
-    "q_cusum_shift", "q_attribution_linear", "q_drill_across_cut",
-    "q_order_priority", "q_customer_distribution", "q_parts_supplier",
-    "q_big_orders", "q_min_cost_supplier", "q_pagerank",
-    "q_embedding_standardize", "q_kcore", "q_pareto_customers", "q_auc",
-    "q_ece", "q_psi_drift", "q_heldout_perplexity", "q_embedding_outliers",
-    "q_curriculum_order", "q_cohens_kappa", "q_retrieval_eval", "q_mrr",
-    "q_label_noise", "q_kneser_ney", "q_readability", "q_zipf_fit",
-    "q_l_diversity", "q_bitmap_count", "q_feature_hash", "q_cluster_terms",
-    "q_sentence_dedup", "q_volume_shipping", "q_approx_distinct",
-    "q_weighted_sample", "q_market_share", "q_product_profit",
-    "q_returned_items", "q_late_lines", "q_promo_effect", "q_top_supplier",
-    "q_small_qty_revenue", "q_waiting_suppliers", "q_sales_opportunity",
-    "q_dsir_weights", "q_spend_trend", "q_seasonal_naive",
-    "q_forecast_revenue", "q_important_stock", "q_discounted_revenue",
-    "q_dominant_suppliers", "q_ewma_daily", "q_stupid_backoff",
-    "q_user_journey", "q_naive_bayes", "q_pr_curve", "q_line_dedup",
-    "q_churn_cohort", "q_dedup_report", "q_skew_report", "q_vocab_coverage",
-    "q_k_anonymity", "q_doc_keywords", "q_survival_hazard", "q_acf",
-    "q_theil_sen", "q_rfm_segments", "q_periodic_snapshot",
-    "q_seasonality_strength", "q_revenue_concentration", "q_bpe_fertility",
-    "q_activity_heatmap", "q_ship_lag_quantiles", "q_purchase_intervals",
-    "q_setsim_join", "q_krippendorff_alpha", "q_mcnemar",
-    "q_blocklist_filter", "q_entity_resolution", "q_dedup_ngram",
-    "q_dedup_ngram_capped", "q_dedup_clusters", "q_keep_best",
-    "q_containment_pairs", "q_lsh_recall_measured", "q_dup_cluster_sizes",
-    "q_spearman", "q_bfs_hops", "q_data_checks", "q_cms_counts",
-    "q_cdc_chunks", "q_random_projection", "q_bmp_decode", "q_audio_energy",
-    "q_frame_sample", "q_image_dedup", "q_image_phash",
-    "q_multimodal_bytes", "q_multimodal_decode", "q_multimodal_resize",
-    "q_scene_change", "q_vad_segments", "q_distinct_n", "q_source_scan",
-    "q_json_rows", "q_type_cast", "q_audit_columns", "q_output_table",
-    "q_projection", "q_case_bucket", "q_date_arith", "q_filter_or",
-    "q_time_scope", "q_zero_fill", "q_active_users", "q_agg_sum",
-    "q_agg_avg", "q_agg_count", "q_aggregate_all", "q_measure_multi",
-    "q_cut_eq", "q_cut_dice", "q_label_prop", "q_cut_set",
-    "q_drilldown_level", "q_drilldown_top", "q_drilldown_multi",
-    "q_cron_gate",
-)
-
-# Ids that failed a driver hash check and carry a fix awaiting driver
-# confirmation: always first in queries() order so they re-enter the
-# 50-id audit window next round.  Remove an id once its
-# CORRECTNESS_r*.json row is green (then add it to _DRIVER_AUDITED).
-_RETRY_FIRST: tuple[str, ...] = (
-    # (empty — no outstanding driver reds after round 5's 50/50 green.)
-)
-
-# Ids whose implementation OR oracle changed since their last driver
-# audit: they jump to the head of the window (right after _RETRY_FIRST)
-# REGARDLESS of whether they already sit in _DRIVER_AUDITED — a local
-# re-verification is not a driver audit, and changed code re-earns its
-# hard signal.  Clear an id once its fresh CORRECTNESS row is green.
-# Round-15 state: all 24 r14 priority ids (star-CC dedup, shingle
-# sizes on the postings, spearman, frontier BFS, validate_contract,
-# one-pass cms and the widened map tiers with every with_media_column
-# consumer) went green in the r14 window (CORRECTNESS_r14.json, 50/50)
-# and rotated to the tuple tail.
-_AUDIT_PRIORITY: tuple[str, ...] = (
-    # (empty — no id changed since its last audit.)
-)
-
-
-def _audit_order(names) -> list[str]:
-    retry = [n for n in _RETRY_FIRST if n in names]
-    # Changed-since-audit ids re-enter at the head even when already
-    # in _DRIVER_AUDITED: a local re-verification is not a driver audit.
-    prio = [n for n in _AUDIT_PRIORITY if n in names and n not in retry]
-    skip = set(_DRIVER_AUDITED) | set(retry) | set(prio)
-    fresh_oracled = [n for n in names if n not in skip and n in _ORACLES]
-    fresh_rowsonly = [n for n in names if n not in skip and n not in _ORACLES]
-    # Audited tail follows _DRIVER_AUDITED tuple order == staleness
-    # (oldest-confirmed first), so regression slots rotate through the
-    # backlog instead of re-checking the same oldest greens each round.
-    head = set(retry) | set(prio)
-    tail = [n for n in _DRIVER_AUDITED if n in names and n not in head]
-    return retry + prio + fresh_oracled + fresh_rowsonly + tail
-
-
 def queries() -> dict[str, QueryFn]:
+    """Every registered query, in registration order (the driver's
+    audit order is derived in ``__spark_entry__``)."""
     _load_extensions()
-    return {n: _QUERIES[n] for n in _audit_order(_QUERIES)}
+    return dict(_QUERIES)
 
 
 def oracle_sql() -> dict[str, str]:
     _load_extensions()
-    order = _audit_order(_QUERIES)
-    return {n: _ORACLES[n] for n in order if n in _ORACLES}
+    return dict(_ORACLES)
 
 
 def _load_extensions() -> None:

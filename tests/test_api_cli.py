@@ -652,6 +652,36 @@ def test_memo_invalidation(spark, sf_dir, tmp_path):
         served = fresh
 
 
+def test_cached_plan_retires_when_the_lattice_is_rewritten(spark, sf_dir, tmp_path):
+    """A lattice re-materialized from different data over the SAME fact
+    files (same fact_version, so the staleness guard still routes) must
+    not be answered by a plan cached over the old lattice: plans are
+    keyed by the lattice version too."""
+    from pyspark.sql import functions as F
+
+    from opl_spark.rollups import RollupStore
+
+    eng = CubeEngine(default_catalog())
+    full = build_loans_fact(spark, sf_dir)
+    eng.register_fact("loans2", full)
+    store = RollupStore(spark, str(tmp_path / "lattice"))
+    store.materialize(eng, "loans2", [["year", "month"]])
+    api = OlapApi(eng, rollups=store)
+    params = {"drilldown": "date:month", "measure": "loans"}
+    before = api.handle(AGG, params)
+
+    filtered = CubeEngine(default_catalog())
+    filtered.register_fact("loans2", full.filter(F.col("year") >= 1996))
+    store.materialize(filtered, "loans2", [["year", "month"]])
+    fresh = OlapApi(eng, rollups=store, plan_cache_size=0).handle(AGG, params)
+    assert len(fresh["data"]) < len(before["data"])
+    assert api.handle(AGG, params) == fresh
+    # /explain shares the plan built over the new lattice
+    hits = api.cache_stats()["plan_hits"]
+    api.handle("/olap/loans2/explain", params)
+    assert api.cache_stats()["plan_hits"] == hits + 1
+
+
 def test_cache_stats_count_every_path(spark, sf_dir, tmp_path):
     import shutil
 

@@ -8,7 +8,13 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from opl_spark.rollup import GRAINS, build_time_rollup, grain_col, route, rollup_answer
+from opl_spark.rollup import (
+    GRAINS,
+    grain_col,
+    lineitem_day_rollup_table,
+    rollup_answer,
+    route,
+)
 from opl_spark.sources import load_table
 
 
@@ -32,21 +38,10 @@ def test_routed_answer_equals_direct_fact_aggregation(spark, sf_dir):
     li = load_table(spark, sf_dir, "lineitem").withColumn(
         "ship_ts", F.col("l_shipdate").cast("timestamp")
     )
-    build_time_rollup(
-        li,
-        "ship_ts",
-        ["l_returnflag"],
-        {"revenue_dec": F.sum(F.col("l_extendedprice").cast("decimal(18,2)"))},
-        table="opl_rollup_test_day",
-        grain="day",
-    )
+    table = lineitem_day_rollup_table(spark, sf_dir)
     for requested in ("month", "quarter", "year"):
         routed = rollup_answer(
-            spark,
-            {"day": "opl_rollup_test_day"},
-            requested,
-            ["l_returnflag"],
-            ["revenue_dec"],
+            spark, {"day": table}, requested, ["l_returnflag"], ["revenue_dec"]
         )
         direct = li.groupBy(
             grain_col(F.col("ship_ts"), requested).alias("bucket"), "l_returnflag"
@@ -65,26 +60,17 @@ def test_routed_answer_equals_direct_fact_aggregation(spark, sf_dir):
 def test_routed_plan_scans_rollup_not_fact(spark, sf_dir):
     """The whole point: the routed query's scan reads the summary
     table, not the lineitem fact files."""
+    import os
+
     from opl_spark.plans import formatted_plan
 
-    li = load_table(spark, sf_dir, "lineitem").withColumn(
-        "ship_ts", F.col("l_shipdate").cast("timestamp")
-    )
-    build_time_rollup(
-        li,
-        "ship_ts",
-        ["l_returnflag"],
-        {"revenue_dec": F.sum(F.col("l_extendedprice").cast("decimal(18,2)"))},
-        table="opl_rollup_test_day2",
-        grain="day",
-    )
+    table = lineitem_day_rollup_table(spark, sf_dir)
     routed = rollup_answer(
-        spark, {"day": "opl_rollup_test_day2"}, "month",
-        ["l_returnflag"], ["revenue_dec"],
+        spark, {"day": table}, "month", ["l_returnflag"], ["revenue_dec"]
     )
     plan = formatted_plan(routed)
-    assert "opl_rollup_test_day2" in plan
-    assert "lineitem" not in plan.lower()
+    assert table in plan
+    assert os.path.join(sf_dir, "lineitem") not in plan
 
 
 def test_rollup_answer_raises_without_servable_grain(spark):
@@ -124,77 +110,6 @@ def test_bitmap_words_stay_positive(spark):
     # every id accounted for exactly once
     total = sum(bin(r["bits"]).count("1") for r in rows)
     assert total == 200
-
-
-@pytest.mark.slow  # r14 slow tier
-def test_incremental_refresh_equals_full_rebuild(spark, sf_dir, tmp_path):
-    """Append-only maintenance: base build + delta refresh must equal
-    a full rebuild over base+delta, and the refresh must rewrite ONLY
-    the delta's month partitions."""
-    import os
-
-    from opl_spark.rollup import (
-        build_partitioned_rollup,
-        refresh_partitioned_rollup,
-    )
-
-    li = load_table(spark, sf_dir, "lineitem").withColumn(
-        "ship_ts", F.col("l_shipdate").cast("timestamp")
-    )
-    sums = {"revenue_dec": F.sum(F.col("l_extendedprice").cast("decimal(18,2)"))}
-    cut = F.lit("1995-06-01").cast("timestamp")
-    base, delta = li.filter(F.col("ship_ts") < cut), li.filter(
-        F.col("ship_ts") >= cut
-    )
-    inc_path = str(tmp_path / "inc")
-    full_path = str(tmp_path / "full")
-    build_partitioned_rollup(base, "ship_ts", ["l_returnflag"], sums, inc_path)
-    # snapshot unaffected partition mtimes before the refresh
-    pre = {
-        d: os.path.getmtime(os.path.join(inc_path, d))
-        for d in os.listdir(inc_path)
-        if d.startswith("part=")
-    }
-    touched = refresh_partitioned_rollup(
-        spark, delta, "ship_ts", ["l_returnflag"], sums, inc_path
-    )
-    assert touched and all(t >= "1995-06" for t in touched)
-    build_partitioned_rollup(li, "ship_ts", ["l_returnflag"], sums, full_path)
-
-    key = lambda r: (str(r["bucket"]), r["l_returnflag"])
-    got = {
-        key(r): (r["n_rows"], float(r["revenue_dec"]))
-        for r in spark.read.parquet(inc_path).collect()
-    }
-    want = {
-        key(r): (r["n_rows"], float(r["revenue_dec"]))
-        for r in spark.read.parquet(full_path).collect()
-    }
-    assert got == want
-    # untouched month directories were not rewritten
-    for d, m in pre.items():
-        part = d.split("=")[1]
-        if part not in touched:
-            assert os.path.getmtime(os.path.join(inc_path, d)) == m, d
-
-
-def test_refresh_with_empty_delta_is_noop(spark, sf_dir, tmp_path):
-    from opl_spark.rollup import (
-        build_partitioned_rollup,
-        refresh_partitioned_rollup,
-    )
-
-    li = load_table(spark, sf_dir, "lineitem").withColumn(
-        "ship_ts", F.col("l_shipdate").cast("timestamp")
-    )
-    sums = {"revenue_dec": F.sum(F.col("l_extendedprice").cast("decimal(18,2)"))}
-    p = str(tmp_path / "r")
-    build_partitioned_rollup(li, "ship_ts", ["l_returnflag"], sums, p)
-    before = spark.read.parquet(p).count()
-    assert refresh_partitioned_rollup(
-        spark, li.filter(F.lit(False)), "ship_ts", ["l_returnflag"], sums, p
-    ) == []
-    assert spark.read.parquet(p).count() == before
 
 
 def test_rollup_route_query_memoizes_build_per_data_dir(spark, sf_dir):

@@ -14,8 +14,6 @@ Usage: python tools/gen_survey_inventory.py      # rewrites SURVEY.md
        python tools/gen_survey_inventory.py --check   # verify only
 """
 
-import glob
-import json
 import os
 import re
 import sys
@@ -23,18 +21,6 @@ import sys
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 BEGIN = "<!-- BEGIN GENERATED QUERY INVENTORY (tools/gen_survey_inventory.py) -->"
 END = "<!-- END GENERATED QUERY INVENTORY -->"
-
-
-def _ledger() -> dict[str, tuple[int, bool]]:
-    last: dict[str, tuple[int, bool]] = {}
-    for path in sorted(glob.glob(os.path.join(REPO, "CORRECTNESS_r*.json"))):
-        rnd = int(re.search(r"r(\d+)", os.path.basename(path)).group(1))
-        with open(path) as fh:
-            for qid, row in json.load(fh).items():
-                prev = last.get(qid, (0, False))
-                if rnd >= prev[0]:
-                    last[qid] = (rnd, bool(row.get("hash_match")))
-    return last
 
 
 def _summary(fn) -> str:
@@ -53,7 +39,7 @@ def build_table() -> str:
     sys.path.insert(0, REPO)
     import __spark_entry__ as e
 
-    qs, osql, ledger = e.queries(), e.oracle_sql(), _ledger()
+    qs, osql, ledger = e.queries(), e.oracle_sql(), e.audit_ledger()
     lines = [
         "| id | registered at | check | last driver audit | summary |",
         "|---|---|---|---|---|",
@@ -68,7 +54,7 @@ def build_table() -> str:
         )
         check = "oracle" if name in osql else "rows-only"
         if name in ledger:
-            rnd, green = ledger[name]
+            rnd, _, green = ledger[name]
             audit = f"r{rnd} {'green' if green else 'RED'}"
         else:
             audit = "pending (leads next window)"

@@ -6,7 +6,7 @@ bench.py:run_set), reporting wall seconds and the number of Spark jobs
 the query scheduled (sequential-action shapes show up as job count).
 
 Usage:
-    python tools/profile.py --plans r14 [--tag before|after] [--runs 2] q_a q_b ...
+    python tools/plan_profile.py --plans r14 [--tag before|after] [--runs 2] q_a q_b ...
 
 ``--plans`` names the subdirectory of plans/ the captured plans go to
 (one per optimization round: plans/r13, plans/r14, ...).
@@ -26,11 +26,7 @@ import time
 from contextlib import redirect_stdout
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-if __name__ == "__main__":
-    # replace (not prepend to) this script's own directory on the path:
-    # tools/profile.py would otherwise shadow the stdlib ``profile``
-    # module that cProfile — imported by pyspark — loads
-    sys.path[0] = REPO
+sys.path.insert(0, REPO)
 
 _DRIVER_MEM = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "4g")
 os.environ.setdefault(
