@@ -18,7 +18,7 @@ Usage:
     migration-period byte diffing;
 4.  serve cube queries over the warehoused fact — including the
     iso_week hierarchy, whose ISO week-year boundaries a calendar
-    cut would get wrong — through the plan-cached API surface;
+    cut would get wrong — through the response-cached API surface;
 5.  snapshot INTO a second database via ``JdbcSink`` (r12) — the
     reference's exact write topology (two connections: read the ILS,
     write the OLAP DB; OLAP.php:128-164) with auto-create, the E4

@@ -90,9 +90,9 @@ def main(argv: list[str] | None = None) -> int:
     p.add_argument("--port", type=int, default=8080, help="bind port (serve)")
     p.add_argument(
         "--plan-cache", type=int, default=128,
-        help="serve: LRU size of the request cache: built aggregate plans, "
-        "each with its memoized responses, so a repeated request runs no "
-        "Spark job (0 disables both)",
+        help="serve: LRU size of the aggregate response cache: a repeated "
+        "request returns its cached payload and runs no Spark job "
+        "(0 disables)",
     )
     p.add_argument("-d", "--date", help="pivot date YYYY-MM-DD (add)")
     p.add_argument("-f", "--fact", help="restrict to one fact table")

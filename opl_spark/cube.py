@@ -115,8 +115,8 @@ class CubeEngine:
     def __init__(self, catalog, fact_frames: dict[str, DataFrame] | None = None):
         self.catalog = catalog
         self._frames: dict[str, DataFrame] = dict(fact_frames or {})
-        #: bumped on every (re-)registration — consumers caching plans
-        #: built over a frame (OlapApi's request plan cache) key on
+        #: bumped on every (re-)registration — consumers caching results
+        #: computed over a frame (OlapApi's response cache) key on
         #: this so a swapped frame invalidates them structurally
         self._versions: dict[str, int] = {n: 1 for n in self._frames}
 
@@ -126,7 +126,7 @@ class CubeEngine:
 
     def frame_version(self, name: str) -> int:
         """Monotonic per-fact registration counter (0 = never
-        registered); part of any plan-cache key over this fact."""
+        registered); part of any response-cache key over this fact."""
         return self._versions.get(name, 0)
 
     def frame(self, name: str) -> DataFrame:

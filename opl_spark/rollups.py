@@ -45,6 +45,21 @@ def _grouping_key(cols: list[str]) -> str:
     return "__".join(re.sub(r"[^A-Za-z0-9_]", "_", c) for c in cols)
 
 
+def _partials(measures) -> list:
+    """The lattice's four partials per measure (``materialize`` and
+    ``refresh`` both aggregate the fact with these)."""
+    out = []
+    for m in measures:
+        col = F.col(m.physical)
+        out += [
+            F.sum(col).alias(f"__sum_{m.name}"),
+            F.count(col).alias(f"__cnt_{m.name}"),
+            F.min(col).alias(f"__min_{m.name}"),
+            F.max(col).alias(f"__max_{m.name}"),
+        ]
+    return out
+
+
 def _fact_version(frame: DataFrame) -> str:
     """Content fingerprint of a fact frame's backing files: md5 over
     the sorted input-file list.  The snapshot model is append-only
@@ -153,18 +168,11 @@ class RollupStore:
         the lattice incrementally instead."""
         meta = engine.catalog.fact(fact)
         base = engine.frame(fact)
-        partials = []
+        partials = _partials(meta.measures)
         measures_info = {}
         for m in meta.measures:
-            col = F.col(m.physical)
             frac = isinstance(base.schema[m.physical].dataType, T.FractionalType)
             measures_info[m.name] = {"fractional": frac, "physical": m.physical}
-            partials += [
-                F.sum(col).alias(f"__sum_{m.name}"),
-                F.count(col).alias(f"__cnt_{m.name}"),
-                F.min(col).alias(f"__min_{m.name}"),
-                F.max(col).alias(f"__max_{m.name}"),
-            ]
         manifest = self._load_manifest(fact)
         manifest["measures"] = measures_info
         # staleness guard: record WHICH fact files these rollups were
@@ -506,15 +514,7 @@ class RollupStore:
         """
         meta = engine.catalog.fact(fact)
         manifest = self._load_manifest(fact)
-        delta_partials = []
-        for m in meta.measures:
-            col = F.col(m.physical)
-            delta_partials += [
-                F.sum(col).alias(f"__sum_{m.name}"),
-                F.count(col).alias(f"__cnt_{m.name}"),
-                F.min(col).alias(f"__min_{m.name}"),
-                F.max(col).alias(f"__max_{m.name}"),
-            ]
+        delta_partials = _partials(meta.measures)
         re_reduce = []
         for m in meta.measures:
             re_reduce += [

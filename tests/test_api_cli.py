@@ -420,96 +420,46 @@ def test_cli_srp_probe_closes_build_probe_append_loop(spark, sf_dir, tmp_path, c
 
 
 def test_aggregate_plan_cache_reuses_and_invalidates(spark, sf_dir):
-    """The request plan cache (r11): identical aggregate requests
-    reuse the built DataFrame (no re-analysis), different params build
-    fresh plans, re-registering the fact invalidates structurally, and
-    results are identical cached or not."""
+    """The response cache: an identical aggregate request returns the
+    stored payload, different params and output kinds get their own
+    entries, junk params share one, re-registering the fact
+    invalidates structurally, and results are identical cached or
+    not."""
     from pyspark.sql import functions as F
 
     eng = CubeEngine(default_catalog())
     eng.register_fact("loans2", build_loans_fact(spark, sf_dir))
     api = OlapApi(eng)
+    agg = "/olap/loans2/aggregate"
     p = {"cut": "date:1997", "drilldown": "date", "measure": "loans"}
 
-    d1 = api._build_aggregate_df("loans2", p)
-    d2 = api._build_aggregate_df("loans2", p)
-    assert d1 is d2  # cache hit: same analyzed plan object
-    # output=table vs json share the plan (output excluded from key)
-    assert api._build_aggregate_df("loans2", {**p, "output": "table"}) is d1
-    d3 = api._build_aggregate_df("loans2", {**p, "measure": "value"})
-    assert d3 is not d1
+    r1 = api.handle(agg, p)
+    assert api.handle(agg, p) is r1  # cache hit: the stored payload
+    # unknown/ignored params must not mint new LRU slots (ADVICE r12)
+    assert api.handle(agg, {**p, "junk": "1"}) is r1
+    assert len(api._cache) == 1
+    table = api.handle(agg, {**p, "output": "table"})
+    r3 = api.handle(agg, {**p, "measure": "value"})
+    assert len(api._cache) == 3 and r3 != r1 and table[0] == ["month", "loans"]
 
     # served results equal an uncached engine's
     uncached = OlapApi(eng, plan_cache_size=0)
-    assert uncached._build_aggregate_df(
-        "loans2", p
-    ) is not uncached._build_aggregate_df("loans2", p)
-    assert api.handle("/olap/loans2/aggregate", p) == uncached.handle(
-        "/olap/loans2/aggregate", p
-    )
+    assert uncached.handle(agg, p) == r1
 
-    # re-registration bumps the frame version -> fresh plan over the
-    # new frame (here: a filtered frame, so the answer changes too)
-    before = api.handle("/olap/loans2/aggregate", p)
+    # re-registration bumps the frame version -> a miss that builds
+    # over the new frame (here: a filtered frame, so the answer changes)
     eng.register_fact(
         "loans2", build_loans_fact(spark, sf_dir).filter(F.col("month") <= 6)
     )
-    d4 = api._build_aggregate_df("loans2", p)
-    assert d4 is not d1
-    after = api.handle("/olap/loans2/aggregate", p)
-    assert before != after  # stale cache would have answered 'before'
+    after = api.handle(agg, p)
+    assert after != r1  # a stale cache would have answered r1
+    assert after == uncached.handle(agg, p)
 
     # malformed requests are not cached and still raise each time
     bad = {"cut": "date", "drilldown": "date"}
     for _ in range(2):
         with pytest.raises(ValueError):
-            api.handle("/olap/loans2/aggregate", bad)
-
-
-def test_poisoned_cached_plan_evicts_and_retries(spark, sf_dir, tmp_path):
-    """The cache's execution-failure recovery path (code review r11):
-    a cached plan whose scanned files vanished (in-place rollup
-    re-materialization on an object store; files GC'd between listing
-    and read) must be evicted and rebuilt once — not served as a
-    permanent 400.  Poison injected white-box: the local-FS overwrite
-    happens to re-resolve listings, so the failure is planted
-    directly to pin the branch deterministically."""
-    import shutil
-
-    from pyspark.sql import functions as F
-
-    eng = CubeEngine(default_catalog())
-    eng.register_fact("loans2", build_loans_fact(spark, sf_dir))
-    api = OlapApi(eng)
-    p = {"cut": "date:1997", "drilldown": "date", "measure": "loans"}
-    good = api.handle("/olap/loans2/aggregate", p)
-
-    # a df whose EXECUTION fails: parquet read whose files are deleted
-    doomed_dir = str(tmp_path / "doomed")
-    spark.range(5).select(
-        F.col("id").alias("month"), F.col("id").alias("loans")
-    ).write.parquet(doomed_dir)
-    doomed = spark.read.parquet(doomed_dir)
-    shutil.rmtree(doomed_dir)
-    # unknown/ignored params must not mint new LRU slots (ADVICE r12)
-    assert api._cache_key("loans2", p) == api._cache_key(
-        "loans2", {**p, "junk": "1", "output": "table"}
-    )
-    key = api._cache_key("loans2", p)
-    with api._plan_cache_lock:
-        api._plan_cache[key] = doomed
-    # fails on execution -> evict -> rebuild -> correct answer
-    assert api.handle("/olap/loans2/aggregate", p) == good
-    with api._plan_cache_lock:
-        assert api._plan_cache[key] is not doomed
-    # with the cache disabled, the same execution failure raises
-    u = OlapApi(eng, plan_cache_size=0)
-    spark.range(3).write.parquet(doomed_dir)
-    doomed2 = spark.read.parquet(doomed_dir)
-    shutil.rmtree(doomed_dir)
-    u._build_aggregate_df = lambda fact, params: doomed2
-    with pytest.raises(Exception):
-        u.handle("/olap/loans2/aggregate", p)
+            api.handle(agg, bad)
 
 
 # -- response memo: a repeated /aggregate returns the payload it already
@@ -543,7 +493,7 @@ def test_repeated_aggregate_runs_no_spark_job(spark, sf_dir):
     assert jobs1 >= 1 and jobs2 == 0
     assert again is first  # the shared payload itself
     assert again == OlapApi(api.engine, plan_cache_size=0).handle(AGG, P)
-    assert api.cache_stats()["response_hits"] == 1
+    assert api.cache_stats()["hits"] == 1
 
 
 def test_output_kinds_memoized_separately(spark, sf_dir):
@@ -552,11 +502,11 @@ def test_output_kinds_memoized_separately(spark, sf_dir):
     rows = api.handle(AGG, P)
     table = api.handle(AGG, table_p)
     assert "data" in rows and table[0] == ["month", "loans"]
-    # one plan, two responses; each repeat gets its own kind back
-    assert len(api._plan_cache) == 1 and len(api._responses) == 2
+    # two entries; each repeat gets its own kind back
+    assert len(api._cache) == 2
     assert api.handle(AGG, table_p) is table
     assert api.handle(AGG, P) is rows
-    assert api.cache_stats()["response_hits"] == 2
+    assert api.cache_stats()["hits"] == 2
 
 
 def test_errors_are_not_memoized(spark, sf_dir, tmp_path):
@@ -568,18 +518,17 @@ def test_errors_are_not_memoized(spark, sf_dir, tmp_path):
             api.handle(AGG, {"cut": "date", "drilldown": "date"})
         with pytest.raises(KeyError):  # 404: unknown fact
             api.handle("/olap/no_such_fact/aggregate", P)
-    # 500: every build yields a plan whose execution fails, so the
-    # evict-and-retry fails too
+    # 500: every build yields a plan whose execution fails
     doomed_dir = str(tmp_path / "doomed")
     spark.range(3).write.parquet(doomed_dir)
     doomed = spark.read.parquet(doomed_dir)
     shutil.rmtree(doomed_dir)
-    api._build_aggregate_df_uncached = lambda fact, params: doomed
+    api._build_aggregate_df = lambda fact, params: doomed
     for _ in range(2):
         with pytest.raises(Exception):
             api.handle(AGG, P)
-    assert api._responses == {}
-    assert api.cache_stats()["response_hits"] == 0
+    assert api._cache == {}
+    assert api.cache_stats()["hits"] == 0
 
 
 def test_plan_cache_size_zero_memoizes_nothing(spark, sf_dir):
@@ -588,7 +537,7 @@ def test_plan_cache_size_zero_memoizes_nothing(spark, sf_dir):
     again, jobs = _jobs_during(spark, "memo-off", lambda: api.handle(AGG, P))
     assert again == first and again is not first
     assert jobs >= 1
-    assert api._plan_cache == {} and api._responses == {}
+    assert api._cache == {}
     assert set(api.cache_stats().values()) == {0}
 
 
@@ -602,13 +551,9 @@ def test_memo_entries_never_exceed_the_lru_bound(spark, sf_dir):
     for params in shapes + shapes[:1]:
         for kind in ({}, {"output": "table"}):
             api.handle(AGG, {**params, **kind})
-            assert len(api._plan_cache) <= 2
-            assert len(api._responses) <= 2 * len(api._plan_cache)
-            # every response belongs to a plan still in the LRU
-            assert {k for k, _ in api._responses} <= set(api._plan_cache)
-    # the wrap-around to shapes[0] found it evicted: no response hit
-    stats = api.cache_stats()
-    assert stats["evictions"] == 3 and stats["response_hits"] == 0
+            assert len(api._cache) <= 2
+    # the wrap-around to shapes[0] found it evicted: no hit
+    assert api.cache_stats() == {"hits": 0, "misses": 10, "evictions": 8}
 
 
 def test_memo_invalidation(spark, sf_dir, tmp_path):
@@ -648,15 +593,15 @@ def test_memo_invalidation(spark, sf_dir, tmp_path):
             spark, f"memo-{name}-again", lambda: api.handle(AGG, P)
         )
         assert jobs == 0 and again is fresh, name
-        assert api.cache_stats()["response_hits"] == i + 1, name
+        assert api.cache_stats()["hits"] == i + 1, name
         served = fresh
 
 
 def test_cached_plan_retires_when_the_lattice_is_rewritten(spark, sf_dir, tmp_path):
     """A lattice re-materialized from different data over the SAME fact
     files (same fact_version, so the staleness guard still routes) must
-    not be answered by a plan cached over the old lattice: plans are
-    keyed by the lattice version too."""
+    not be answered by a payload cached over the old lattice: the
+    cache key includes the lattice version."""
     from pyspark.sql import functions as F
 
     from opl_spark.rollups import RollupStore
@@ -676,47 +621,31 @@ def test_cached_plan_retires_when_the_lattice_is_rewritten(spark, sf_dir, tmp_pa
     fresh = OlapApi(eng, rollups=store, plan_cache_size=0).handle(AGG, params)
     assert len(fresh["data"]) < len(before["data"])
     assert api.handle(AGG, params) == fresh
-    # /explain shares the plan built over the new lattice
-    hits = api.cache_stats()["plan_hits"]
-    api.handle("/olap/loans2/explain", params)
-    assert api.cache_stats()["plan_hits"] == hits + 1
 
 
-def test_cache_stats_count_every_path(spark, sf_dir, tmp_path):
-    import shutil
-
-    api = _loans_api(spark, sf_dir)
-    good = api.handle(AGG, P)  # plan miss
-    api.handle(AGG, P)  # response hit
-    api.handle("/olap/loans2/explain", P)  # plan hit
-    assert api.cache_stats() == {
-        "plan_hits": 1, "plan_misses": 1, "response_hits": 1,
-        "evictions": 0, "self_heals": 0,
-    }
-    # a replaced plan takes its responses along: the planted plan runs,
-    # fails, is evicted and rebuilt once
-    doomed_dir = str(tmp_path / "doomed")
-    spark.range(3).write.parquet(doomed_dir)
-    doomed = spark.read.parquet(doomed_dir)
-    shutil.rmtree(doomed_dir)
-    key = api._cache_key("loans2", P)
-    with api._plan_cache_lock:
-        api._plan_cache[key] = doomed
-    healed = api.handle(AGG, P)
-    assert healed == good and healed is not good
-    assert api.handle(AGG, P) is healed
-    assert api.cache_stats() == {
-        "plan_hits": 2, "plan_misses": 2, "response_hits": 2,
-        "evictions": 0, "self_heals": 1,
-    }
+def test_cache_stats_count_every_path(spark, sf_dir):
+    """Every /aggregate request for a known fact counts once, as a hit
+    or a miss; /explain and unknown facts count nothing; a failed
+    request is a miss that stores nothing."""
+    api = _loans_api(spark, sf_dir, plan_cache_size=1)
+    good = api.handle(AGG, P)  # miss
+    assert api.handle(AGG, P) is good  # hit
+    api.handle("/olap/loans2/explain", P)
+    with pytest.raises(KeyError):
+        api.handle("/olap/no_such_fact/aggregate", P)
+    with pytest.raises(ValueError):  # miss, not stored
+        api.handle(AGG, {"cut": "date", "drilldown": "date"})
+    assert api.cache_stats() == {"hits": 1, "misses": 2, "evictions": 0}
+    api.handle(AGG, {**P, "output": "table"})  # miss, evicts P
+    assert api.handle(AGG, P) == good  # miss, evicts the table
+    assert api.cache_stats() == {"hits": 1, "misses": 4, "evictions": 2}
 
 
 def test_memo_under_concurrent_churn(spark, sf_dir):
     """More threads than cores hammer an LRU far smaller than the shape
     mix, with a short switch interval: every answer stays correct, the
-    bound holds, and every request is counted exactly once (a response
-    hit or one plan lookup) — a lost update under the lock breaks the
-    sum."""
+    bound holds, and every request is counted exactly once (a hit or
+    a miss) — a lost update under the lock breaks the sum."""
     import sys
     from concurrent.futures import ThreadPoolExecutor
 
@@ -745,11 +674,7 @@ def test_memo_under_concurrent_churn(spark, sf_dir):
     finally:
         sys.setswitchinterval(old)
     assert done == [per_thread] * n_threads
-    with api._plan_cache_lock:
-        assert len(api._plan_cache) <= 2
-        assert {k for k, _ in api._responses} <= set(api._plan_cache)
+    with api._lock:
+        assert len(api._cache) <= 2
     s = api.cache_stats()
-    assert s["response_hits"] + s["plan_hits"] + s["plan_misses"] == (
-        n_threads * per_thread
-    ), s
-    assert s["self_heals"] == 0
+    assert s["hits"] + s["misses"] == n_threads * per_thread, s

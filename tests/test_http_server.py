@@ -155,6 +155,19 @@ def test_bad_parameter_is_400_unknown_fact_is_404(server):
     assert exc.value.code == 404
 
 
+@pytest.mark.parametrize("within", [{}, {"top_within": "consortia_id"}])
+def test_negative_top_n_is_400(server, within):
+    """A negative top_n is a malformed request: 400, both for the plain
+    limit (Spark would reject it as a 500) and under top_within (where
+    the rank filter would answer an empty 200)."""
+    with pytest.raises(urllib.error.HTTPError) as exc:
+        _get(server, "/olap/loans2/aggregate",
+             {"drilldown": "organization_level:library_id",
+              "measure": "value", "top_n": "-1", **within})
+    assert exc.value.code == 400
+    assert "top_n" in json.loads(exc.value.read())["error"]
+
+
 def test_share_params_over_http(server):
     """share/share_within ride the HTTP surface like top_n/having."""
     status, body = _get(
@@ -234,15 +247,10 @@ def test_aggregate_routes_through_lattice_and_breaking_it_shows(routed_server):
     orig = store.route
     try:
         store.route = lambda *a, **k: None  # deliberately broken routing
-        # out-of-band routing change: the plan cache can't see it (the
-        # cache key covers fact/frame-version/params — results would be
-        # identical either way), so this white-box probe clears it
-        api.clear_plan_cache()
         broken = api._build_aggregate_df("loans2", dict(AGG_PARAMS))
         assert "latency_lattice" not in formatted_plan(broken)
     finally:
         store.route = orig
-        api.clear_plan_cache()
 
 
 def test_http_aggregate_latency_guard(routed_server):
@@ -288,7 +296,7 @@ def test_repeated_request_is_served_from_the_response_memo(routed_server):
             "/olap/loans2/aggregate", params
         )
     )
-    hits0 = api.cache_stats()["response_hits"]
+    hits0 = api.cache_stats()["hits"]
     status, first = _get(srv, "/olap/loans2/aggregate", params)
     assert status == 200 and first == expected
     with ThreadPoolExecutor(max_workers=4) as pool:
@@ -296,7 +304,7 @@ def test_repeated_request_is_served_from_the_response_memo(routed_server):
             lambda _: _get(srv, "/olap/loans2/aggregate", params), range(8)
         ))
     assert repeats == [(200, expected)] * 8
-    assert api.cache_stats()["response_hits"] - hits0 == 8
+    assert api.cache_stats()["hits"] - hits0 == 8
 
 
 def test_aggregate_concurrent_requests_match_sequential(server):
@@ -378,11 +386,12 @@ def test_explain_concurrent_requests_get_their_own_plans(server):
 def test_cached_plan_survives_inplace_rollup_rematerialization(
     spark, sf_dir, tmp_path
 ):
-    """Poisoned-plan self-heal (code review r11): `-c materialize`
-    from another process overwrites the lattice parquet IN PLACE,
-    deleting the part files a cached plan's index lists.  The next
-    request for that shape must evict, rebuild (the rollup path lists
-    files fresh per build), and answer — not 400 until restart."""
+    """`-c materialize` from another process overwrites the lattice
+    parquet IN PLACE, deleting the part files an earlier plan listed.
+    The rewrite changes the lattice version, so the next request for
+    that shape misses the response cache and builds over the new files
+    (the rollup path lists them fresh per manifest) — it answers, not
+    an error until restart."""
     from opl_spark.rollups import RollupStore
 
     engine = CubeEngine(default_catalog())
@@ -404,10 +413,10 @@ def test_serve_daemon_endurance_soak(sf_dir, tmp_path):
     """r11 verdict task 4, run in its OWN subprocess (tests/
     soak_worker.py): 8 client threads × 500 mixed aggregate /
     drill_across / explain requests against a warm rollup-routed
-    warehouse, plan cache sized below the shape mix so every cycle
+    warehouse, response cache sized below the shape mix so every cycle
     churns evictions.  The worker asserts (a) byte-identity of all
     4000 responses vs serial answers, (b) the LRU entry bound (the
-    cache pins DataFrames — an unbounded map is a leak by
+    cache pins payloads — an unbounded map is a leak by
     construction), (c) python-RSS and JVM post-GC used-heap growth
     bounds.  Subprocess isolation is deliberate, twice over: leak
     bounds are only meaningful against a quiescent fresh-JVM
