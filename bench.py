@@ -642,9 +642,9 @@ def latency_main() -> None:
     ``value`` is the ROUTED pinned mix (r12 verdict task 5): the same
     10 shapes answered through an advise→materialize rollup lattice,
     with a per-shape routedness receipt in ``mix_receipts``.  Also
-    times the rollup-router leg: the same monthly rollup question
-    answered 100× from the day-grain materialization vs directly from
-    the fact — the router's answer-time win is the reason the store
+    times the day-rollup leg: the same monthly rollup question
+    answered 100× by re-aggregating the day-grain store vs directly
+    from the fact — that answer-time win is the reason the store
     exists.  Writes a JSON line; analysis lives in BENCH_NOTES.md."""
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     import tempfile
@@ -742,14 +742,15 @@ def latency_main() -> None:
     a50, a95 = _pcts(api_lat["cached"])
     u50, u95 = _pcts(api_lat["uncached"])
 
-    # rollup-router leg: the SHARED day-grain store (one build
-    # definition in rollup.py — the content-addressed store dedupes by
-    # name+dir, so duplicated build bodies could silently drift apart)
+    # day-rollup leg: the SHARED day-grain store re-aggregated to
+    # months (one build definition in rollup.py — the content-addressed
+    # store dedupes by name+dir, so duplicated build bodies could
+    # silently drift apart)
     table = lineitem_day_rollup_table(spark, sf_dir)
 
     def routed():
         return rollup_answer(
-            spark, {"day": table}, "month", ["l_returnflag"], ["revenue_dec"]
+            spark, table, "month", ["l_returnflag"], ["revenue_dec"]
         )
 
     def direct():

@@ -146,7 +146,6 @@ class CubeEngine:
     ) -> tuple[Column, int]:
         """One cut term → (filter condition, cut depth in hierarchy levels)."""
         cols = self._level_cols(df, dim, hierarchy)
-        dtypes = dict(df.dtypes)
         first = F.col(cols[0])
         first_numeric = _is_numeric(df.schema[cols[0]].dataType)
 
@@ -202,8 +201,12 @@ class CubeEngine:
             lo_s, hi_s = lo_s.strip(), hi_s.strip()
             if "," in lo_s or "," in hi_s:
                 # C7 — hierarchy tuple range: (y,m[,d]) BETWEEN bounds,
-                # compiled as a composite struct comparison (sortable by
-                # Catalyst; prunes on the leading level's min/max stats).
+                # compiled as a composite struct comparison.  Catalyst
+                # derives no partition filter from a struct comparison,
+                # so a tuple range does NOT prune partitions today — it
+                # reads every (year, month) partition (ROADMAP direction
+                # 1, finding 2); C1/C6 equality and C3/C4 flat-range
+                # cuts on a partition column do prune.
                 lo = [_atom(v, True) for v in lo_s.split(",")] if lo_s else []
                 hi = [_atom(v, True) for v in hi_s.split(",")] if hi_s else []
                 # bounds deeper than the hierarchy are truncated to its
@@ -386,8 +389,10 @@ class CubeEngine:
         """``GET /olap/<fact>/aggregate`` → DataFrame.
 
         The emitted plan is a single filter→groupBy→agg→orderBy chain;
-        cut conditions land on the fact's scope/partition columns so
-        partition pruning fires (SURVEY.md §4).
+        cut conditions land on the fact's scope/partition columns.  An
+        equality, level-path or flat-range cut prunes partitions; a C7
+        tuple range (the connector's ``date:Y,M,D-Y,M,D`` window) does
+        not today (ROADMAP direction 1, finding 2).
 
         ``top_n`` is an extension beyond the reference surface: keep
         only the N highest rows by the (first) measure.  With
@@ -415,6 +420,34 @@ class CubeEngine:
         to 6; applied before ``having``/``top_n`` so both can filter
         on them.
         """
+        q, group_cols = self._plan(
+            fact, cut, drilldown, measure, aggregate, hierarchy
+        )
+        df = self.frame(fact)
+        return self._answer(
+            df, q, group_cols, self._agg_exprs(df, q),
+            top_n=top_n, top_within=top_within, having=having,
+            share=share, share_within=share_within,
+        )
+
+    # -- the one aggregation path: plan, then answer ------------------------
+
+    def _plan(
+        self,
+        fact: str,
+        cut: str | None = None,
+        drilldown: str | None = None,
+        measure: str | None = None,
+        aggregate: str | None = None,
+        hierarchy: str | None = None,
+    ) -> tuple[CubeQuery, list[str]]:
+        """Plan step shared by every cube answer (``aggregate``,
+        ``drill_across``, ``RollupStore``): parse the request, compile
+        each cut term ONCE against the fact frame, and resolve the
+        drilldown to group columns (cut depths feed the below-cut
+        rule).  The compiled conditions cast their literals to the
+        fact's column types; a rollup carries the same columns with
+        the same types, so the same conditions filter it unchanged."""
         meta = self.catalog.fact(fact)
         df = self.frame(fact)
         q = CubeQuery(
@@ -425,22 +458,36 @@ class CubeEngine:
             aggregate=aggregate,
             hierarchy=hierarchy,
         )
-
         for t in q.cut_terms:
             dim = meta.dimension(t.dimension)
             t.condition, t.depth = self._compile_cut(
                 df, dim, t.spec, q.hierarchy_by_dim.get(t.dimension)
             )
-        for t in q.cut_terms:
-            df = df.filter(t.condition)
+        return q, self._resolve_drilldown(df, q)
 
-        group_cols = self._resolve_drilldown(df, q)
-        aggs = self._agg_exprs(df, q)
+    def _answer(
+        self,
+        src: DataFrame,
+        q: CubeQuery,
+        group_cols: list[str],
+        aggs: list[Column],
+        top_n: int | None = None,
+        top_within: str | None = None,
+        having: str | None = None,
+        share: bool = False,
+        share_within: str | None = None,
+    ) -> DataFrame:
+        """Answer step over ``src`` (the fact, or a rollup with
+        partial-derived ``aggs``): the planned cut filters, then
+        groupBy/agg, then share → having → top_n, then the
+        deterministic ordering."""
+        for t in q.cut_terms:
+            src = src.filter(t.condition)
         # the no-drilldown grand total flows through the SAME
         # post-processing: having/share/top_n are well-defined on the
         # one-row result, and silently dropping request parameters is
         # worse than either honoring or rejecting them
-        out = df.groupBy(*group_cols).agg(*aggs) if group_cols else df.agg(*aggs)
+        out = src.groupBy(*group_cols).agg(*aggs) if group_cols else src.agg(*aggs)
         if share or share_within:
             out = self._apply_share(out, len(group_cols), share_within)
         if having:
@@ -486,27 +533,14 @@ class CubeEngine:
         joined: DataFrame | None = None
         keys: list[str] | None = None
         for f in facts:
-            out = self.aggregate(
+            q, gcols = self._plan(
                 f, cut=cut, drilldown=drilldown, measure=measure,
                 hierarchy=hierarchy,
             )
-            # the group-column count must be derived EXACTLY the way
-            # aggregate() derived it — including cut depths, which
-            # change where a drilldown resolves (below-cut rule)
-            meta = self.catalog.fact(f)
             df = self.frame(f)
-            q = CubeQuery(
-                fact=meta, cut=cut, drilldown=drilldown, hierarchy=hierarchy
-            )
-            for t in q.cut_terms:
-                dim = meta.dimension(t.dimension)
-                t.condition, t.depth = self._compile_cut(
-                    df, dim, t.spec, q.hierarchy_by_dim.get(t.dimension)
-                )
-            n_groups = len(self._resolve_drilldown(df, q))
-            gcols = out.columns[:n_groups]
+            out = self._answer(df, q, gcols, self._agg_exprs(df, q))
             renamed = out
-            for m in out.columns[n_groups:]:
+            for m in out.columns[len(gcols):]:
                 renamed = renamed.withColumnRenamed(m, f"{m}_{f}")
             if joined is None:
                 joined, keys = renamed, gcols

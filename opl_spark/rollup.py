@@ -1,24 +1,23 @@
-"""Materialized time-grain rollups with query routing — the classic
-OLAP accelerator for the reference's cube surface (OLAP.php serves one
-grain per fact; at 100 TB a year-grain dashboard query must never
-rescan the event-level fact).
+"""The day-grain lineitem rollup store — the time-grain OLAP
+accelerator behind ``q_rollup_route`` (OLAP.php serves one grain per
+fact; at 100 TB a month-grain dashboard query must never rescan the
+event-level fact).
 
-Build once: aggregate the fact to its finest useful grain (usually
-day) and save it as a catalog table (:func:`lineitem_day_rollup_table`,
-one table per data directory; a new directory gets a new table, so
-nothing here refreshes in place — incremental maintenance of the
-served lattice is ``rollups.RollupStore.refresh``).  Route per query:
-a request at grain g is answered by the FINEST materialization that is still
-coarse enough to roll up into g — day answers month/quarter/year by
-re-aggregating day rows (calendar grains nest exactly), and only a
-request finer than every materialization falls through to the fact.
-The routed scan is summary-sized: |days × keys| instead of |facts|.
+Build once: aggregate the fact to the day grain and save it as a
+content-addressed catalog table (:func:`lineitem_day_rollup_table`,
+one table per data directory, published atomically across processes;
+a new directory gets a new table, so nothing here refreshes in place
+— the served lattice, its router and its incremental maintenance are
+``rollups.RollupStore``).  Answer: :func:`rollup_answer` re-truncates
+the stored day bucket to a coarser calendar grain and re-sums the
+partials (calendar grains nest exactly).  The scan is summary-sized:
+|days × keys| instead of |facts|.
 
-Additivity contract: only ALGEBRAIC measures route (sum / count — and
-min/max, which re-aggregate as min-of-min / max-of-max); avg must be
-carried as (sum, count) pairs and divided at the edge.  This mirrors
-the reference's measure list (`OLAP.php` measures are sums and
-counts), so every cube measure is routable.
+Additivity contract: only ALGEBRAIC measures re-aggregate (sum / count
+— and min/max, which re-aggregate as min-of-min / max-of-max); avg
+must be carried as (sum, count) pairs and divided at the edge.  This
+mirrors the reference's measure list (`OLAP.php` measures are sums and
+counts).
 """
 
 from __future__ import annotations
@@ -26,12 +25,11 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-#: calendar grains, finest first; each nests exactly into every
-#: coarser one (a month is whole days, a year whole months), which is
-#: what makes re-aggregation exact.  "week" is deliberately ABSENT:
-#: ISO weeks straddle month/year boundaries, so a week grain neither
-#: answers nor is answered by month/year — it would need its own
-#: materialization chain.
+#: calendar grains a day bucket re-truncates to; each nests exactly
+#: into every coarser one (a month is whole days, a year whole
+#: months), which is what makes re-aggregating the day store exact.
+#: "week" is deliberately ABSENT: ISO weeks straddle month/year
+#: boundaries, so week buckets would not re-sum into months or years.
 GRAINS = ("day", "month", "quarter", "year")
 
 _TRUNC = {"day": "dd", "month": "mon", "quarter": "quarter", "year": "year"}
@@ -44,47 +42,14 @@ def grain_col(ts: Column, grain: str) -> Column:
     return F.date_trunc(_TRUNC[grain], ts).cast("date")
 
 
-def route(requested: str, available: list[str]) -> str | None:
-    """The materialized grain that should answer a ``requested``-grain
-    query: the COARSEST available grain at-or-below the request (fewer
-    rows to re-aggregate = cheaper), or None when every
-    materialization is too coarse (caller falls back to the fact).
-    """
-    if requested not in GRAINS:
-        raise ValueError(f"unknown grain {requested!r}")
-    limit = GRAINS.index(requested)
-    candidates = [g for g in available if GRAINS.index(g) <= limit]
-    if not candidates:
-        return None
-    return max(candidates, key=GRAINS.index)
-
-
-def time_rollup_frame(
-    fact: DataFrame,
-    ts_col: str,
-    keys: list[str],
-    sums: dict[str, Column],
-    grain: str = "day",
-) -> DataFrame:
-    """The (grain bucket, keys) → partial-sum frame a rollup table
-    stores.  ``sums`` maps output column name → its AGGREGATE
-    expression (keep money in DECIMAL so partials re-sum exactly); a
-    row count ``n_rows`` is always carried so downstream COUNT/AVG stay
-    routable."""
-    return fact.groupBy(
-        grain_col(F.col(ts_col), grain).alias("bucket"), *[F.col(k) for k in keys]
-    ).agg(
-        F.count(F.lit(1)).alias("n_rows"),
-        *[expr.alias(name) for name, expr in sums.items()],
-    )
-
-
 def lineitem_day_rollup_table(spark: SparkSession, sf_dir: str) -> str:
     """The shared day-grain lineitem revenue rollup store: (ship day,
-    returnflag) partial sums as a content-addressed bucketed catalog
-    table (``sources.bucketing.bucketed_table_atomic`` — safe under
+    returnflag) → row count ``n_rows`` and DECIMAL revenue partial sum
+    ``revenue_dec`` (DECIMAL so partials re-sum exactly), as a
+    content-addressed bucketed catalog table
+    (``sources.bucketing.bucketed_table_atomic`` — safe under
     concurrent sessions).  ONE definition serves every consumer
-    (``q_rollup_route``, the latency bench's router leg): the store
+    (``q_rollup_route``, the latency bench's day-rollup leg): the store
     dedupes by (name, sf_dir) only, so two call sites with drifting
     build bodies would silently serve whichever ran first — the build
     lives here precisely so that cannot happen (code review r11).
@@ -94,16 +59,14 @@ def lineitem_day_rollup_table(spark: SparkSession, sf_dir: str) -> str:
 
     def build() -> DataFrame:
         li = load_table(spark, sf_dir, "lineitem")
-        return time_rollup_frame(
-            li.withColumn("ship_ts", F.col("l_shipdate").cast("timestamp")),
-            "ship_ts",
-            ["l_returnflag"],
-            {
-                "revenue_dec": F.sum(
-                    F.col("l_extendedprice").cast("decimal(18,2)")
-                )
-            },
-            grain="day",
+        ship_ts = F.col("l_shipdate").cast("timestamp")
+        return li.groupBy(
+            grain_col(ship_ts, "day").alias("bucket"), F.col("l_returnflag")
+        ).agg(
+            F.count(F.lit(1)).alias("n_rows"),
+            F.sum(F.col("l_extendedprice").cast("decimal(18,2)")).alias(
+                "revenue_dec"
+            ),
         )
 
     return bucketed_table_atomic(
@@ -118,26 +81,17 @@ def lineitem_day_rollup_table(spark: SparkSession, sf_dir: str) -> str:
 
 def rollup_answer(
     spark: SparkSession,
-    table_by_grain: dict[str, str],
-    requested: str,
+    table: str,
+    grain: str,
     keys: list[str],
     sums: list[str],
 ) -> DataFrame:
-    """Answer a (grain, keys, sum-measures) cube query through the
-    routed materialization: re-truncate the stored bucket to the
-    requested grain and re-sum partials.  Raises if no materialization
-    can serve (callers then query the fact directly — loud, so a
-    missing rollup is an operability signal, not a silent full scan).
-    """
-    src_grain = route(requested, list(table_by_grain))
-    if src_grain is None:
-        raise ValueError(
-            f"no materialization at or below grain {requested!r}: "
-            f"{sorted(table_by_grain)} — query the fact table instead"
-        )
-    t = spark.table(table_by_grain[src_grain])
+    """Answer a (grain, keys, sum-measures) cube query from the
+    day-grain rollup ``table``: re-truncate the stored bucket to
+    ``grain`` and re-sum the partials."""
+    t = spark.table(table)
     return t.groupBy(
-        grain_col(F.col("bucket").cast("timestamp"), requested).alias("bucket"),
+        grain_col(F.col("bucket").cast("timestamp"), grain).alias("bucket"),
         *[F.col(k) for k in keys],
     ).agg(
         F.sum("n_rows").alias("n_rows"),

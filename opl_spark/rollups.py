@@ -30,15 +30,21 @@ from __future__ import annotations
 import json
 import os
 import re
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from opl_spark.cube import CubeEngine, CubeQuery
+from opl_spark.cube import CubeEngine
+from opl_spark.snapshot import swap_in
 
 #: Aggregates derivable from (sum, count, min, max) partials.
 _DERIVABLE = ("sum", "avg", "count", "min", "max")
+
+#: The request params that decide routing (post-aggregation params ride
+#: the routed result and never block it).
+_CORE = ("cut", "drilldown", "measure", "aggregate", "hierarchy")
 
 
 def _grouping_key(cols: list[str]) -> str:
@@ -165,7 +171,11 @@ class RollupStore:
         are PHYSICAL fact columns — include every hierarchy level you
         want cuttable/drillable through the rollup).  Re-running
         overwrites; for append-only deltas :meth:`refresh` maintains
-        the lattice incrementally instead."""
+        the lattice incrementally instead.  Rollups not listed in
+        ``groupings`` stay in the lattice only while the fact's files
+        are unchanged since they were built; otherwise they are
+        dropped and their files deleted (stale partials never answer
+        a request)."""
         meta = engine.catalog.fact(fact)
         base = engine.frame(fact)
         partials = _partials(meta.measures)
@@ -173,12 +183,19 @@ class RollupStore:
         for m in meta.measures:
             frac = isinstance(base.schema[m.physical].dataType, T.FractionalType)
             measures_info[m.name] = {"fractional": frac, "physical": m.physical}
-        manifest = self._load_manifest(fact)
-        manifest["measures"] = measures_info
         # staleness guard: record WHICH fact files these rollups were
         # aggregated from; route() refuses the lattice when the live
-        # fact has since gained files (see aggregate below)
-        manifest["fact_version"] = _fact_version(base)
+        # fact has since gained files.  A rollup this call does not
+        # rebuild is kept only if it was aggregated from the same files
+        # — the new stamp must not vouch for a pre-append rollup
+        version = _fact_version(base)
+        old = self._load_manifest(fact)
+        kept = old["rollups"] if old.get("fact_version") == version else {}
+        manifest = {
+            "measures": measures_info,
+            "fact_version": version,
+            "rollups": dict(kept),
+        }
         for cols in groupings:
             key = _grouping_key(cols)
             rolled = base.groupBy(*cols).agg(*partials)
@@ -189,27 +206,23 @@ class RollupStore:
         os.makedirs(self._fact_dir(fact), exist_ok=True)
         with open(self._manifest_path(fact), "w") as fh:
             json.dump(manifest, fh, indent=1, sort_keys=True)
+        # best-effort delete of the dropped stale rollups' files, once
+        # no manifest lists them
+        for key in old["rollups"].keys() - manifest["rollups"].keys():
+            shutil.rmtree(os.path.join(self._fact_dir(fact), key), ignore_errors=True)
         return manifest
 
-    def _needed_cols(self, engine, meta, q) -> tuple[list[str], set[str]]:
-        """The physical columns a cube query needs a rollup to carry:
-        compiled cut hierarchy columns plus resolved drilldown group
-        columns.  Cuts compile against the (lazy) base frame — cut
-        depths feed the below-cut drilldown-resolution rule, exactly
-        as in CubeEngine.aggregate; the compiled conditions stay on
-        the query's cut terms for recompilation after routing."""
-        base_frame = engine.frame(meta.name)
-        cut_cols: set[str] = set()
+    @staticmethod
+    def _needed_cols(q, group_cols: list[str]) -> set[str]:
+        """The physical columns a planned cube query needs a rollup to
+        carry: the planned group columns plus every level of each cut
+        dimension's hierarchy (the compiled cut filters the rollup)."""
+        needed = set(group_cols)
         for t in q.cut_terms:
-            dim = meta.dimension(t.dimension)
-            t.condition, t.depth = engine._compile_cut(
-                base_frame, dim, t.spec, q.hierarchy_by_dim.get(t.dimension)
-            )
-            order = dim.hierarchy_order(q.hierarchy_by_dim.get(t.dimension))
-            for lv in order:
-                cut_cols.add(dim.level(lv).physical)
-        group_cols = engine._resolve_drilldown(base_frame, q)
-        return group_cols, set(group_cols) | cut_cols
+            dim = q.fact.dimension(t.dimension)
+            for lv in dim.hierarchy_order(q.hierarchy_by_dim.get(t.dimension)):
+                needed.add(dim.level(lv).physical)
+        return needed
 
     def advise(
         self,
@@ -243,22 +256,13 @@ class RollupStore:
         plan); the trim is explicit, not silent: trimmed shapes still
         COUNT toward the covers/benefit of any kept candidate that
         contains them, they just can't be recommended themselves."""
-        meta = engine.catalog.fact(fact)
         shapes: dict[frozenset, int] = {}
         for params in query_log:
-            q = CubeQuery(
-                fact=meta,
-                cut=params.get("cut"),
-                drilldown=params.get("drilldown"),
-                measure=params.get("measure"),
-                aggregate=params.get("aggregate"),
-                hierarchy=params.get("hierarchy"),
-            )
             agg = params.get("aggregate")
             if agg is not None and agg not in _DERIVABLE:
                 continue  # can never route — no rollup helps it
-            _, needed = self._needed_cols(engine, meta, q)
-            key = frozenset(needed)
+            q, group_cols = engine._plan(fact, *(params.get(k) for k in _CORE))
+            key = frozenset(self._needed_cols(q, group_cols))
             shapes[key] = shapes.get(key, 0) + 1
         ranked_shapes = sorted(
             (s for s in shapes if s), key=lambda s: -shapes[s]
@@ -343,20 +347,13 @@ class RollupStore:
         aggregate: str | None,
         hierarchy: str | None,
     ):
-        """Shared routing decision: ``(q, plan, group_cols, hit)`` when
+        """Shared routing decision: ``(plan, q, group_cols, hit)`` when
         a rollup covers the core of the request and every aggregate
-        derives from partials, else ``(q, None, None, reason)`` —
+        derives from partials, else ``(None, None, None, reason)`` —
         consumed by :meth:`aggregate` (to answer) and
-        :meth:`route_report` (to explain)."""
+        :meth:`route_report` (to explain).  ``q``/``group_cols`` are
+        the engine's own plan of the request."""
         meta = engine.catalog.fact(fact)
-        q = CubeQuery(
-            fact=meta,
-            cut=cut,
-            drilldown=drilldown,
-            measure=measure,
-            aggregate=aggregate,
-            hierarchy=hierarchy,
-        )
         names = (
             [n.strip() for n in measure.split("|")]
             if measure
@@ -369,15 +366,18 @@ class RollupStore:
             agg = aggregate or m.default_aggregate
             info = manifest["measures"].get(m.name)
             if agg not in _DERIVABLE or agg not in m.aggregates or info is None:
-                return q, None, None, f"aggregate {agg!r} not derivable"
+                return None, None, None, f"aggregate {agg!r} not derivable"
             plan.append((m, agg, info["fractional"]))
-        group_cols, needed = self._needed_cols(engine, meta, q)
+        q, group_cols = engine._plan(
+            fact, cut, drilldown, measure, aggregate, hierarchy
+        )
+        needed = self._needed_cols(q, group_cols)
         hit = self.route(
             fact, needed, self._fact_version_cached(engine.frame(fact))
         )
         if hit is None:
-            return q, None, None, f"no rollup covers {sorted(needed)}"
-        return q, plan, group_cols, hit
+            return None, None, None, f"no rollup covers {sorted(needed)}"
+        return plan, q, group_cols, hit
 
     def route_report(self, engine: CubeEngine, fact: str, **params) -> dict:
         """Routedness evidence for one request shape: which rollup (if
@@ -386,11 +386,8 @@ class RollupStore:
         Post-aggregation params (top_n/having/share…) never block
         routing (they apply to the report-sized routed result), so
         only the core params participate."""
-        core = {
-            k: params.get(k)
-            for k in ("cut", "drilldown", "measure", "aggregate", "hierarchy")
-        }
-        _, plan, _, hit = self._route_plan(engine, fact, **core)
+        core = {k: params.get(k) for k in _CORE}
+        plan, _, _, hit = self._route_plan(engine, fact, **core)
         if plan is None:
             return {"routed": False, "rollup": None, "reason": hit}
         return {"routed": True, "rollup": hit["key"], "rows": hit["rows"]}
@@ -415,15 +412,16 @@ class RollupStore:
         requested aggregate derives from partials — else the base
         engine, transparently (same output either way).
 
-        Post-aggregation extensions (r12 verdict task 5) ride the
-        routed result: ``share``/``having``/``top_n`` are well-defined
-        on the re-aggregated report (the exact same dims × levels rows
-        the base engine post-processes), so they reuse CubeEngine's
-        post-processing in the same order — share → having → top —
-        instead of forcing the whole request back to the fact scan.
-        Equality with the base engine across the full pinned request
-        mix is asserted in tests/test_rollups.py."""
-        q, plan, group_cols, hit = self._route_plan(
+        A routed request runs the engine's own plan and answer steps:
+        the cut compiled against the fact filters the rollup, and the
+        partial-derived aggregates feed the same groupBy → share →
+        having → top_n → orderBy path the base engine uses.  So
+        ``share``/``having``/``top_n`` ride the re-aggregated report
+        (the exact same dims × levels rows) instead of forcing the
+        request back to the fact scan.  Equality with the base engine
+        across the full pinned request mix is asserted in
+        tests/test_rollups.py."""
+        plan, q, group_cols, hit = self._route_plan(
             engine, fact, cut, drilldown, measure, aggregate, hierarchy
         )
         if plan is None:
@@ -440,18 +438,9 @@ class RollupStore:
                 share=share,
                 share_within=share_within,
             )
-        meta = q.fact
-
         rdf = self._rollup_frame(
             fact, hit["key"], self._load_manifest(fact).get("fact_version")
         )
-        for t in q.cut_terms:
-            dim = meta.dimension(t.dimension)
-            cond, _ = engine._compile_cut(
-                rdf, dim, t.spec, q.hierarchy_by_dim.get(t.dimension)
-            )
-            rdf = rdf.filter(cond)
-
         exprs = []
         for m, agg, fractional in plan:
             if agg == "sum":
@@ -475,27 +464,11 @@ class RollupStore:
                 if fractional:
                     e = F.round(e.cast("double"), 2)
             exprs.append(e.alias(m.name))
-        out = (
-            rdf.groupBy(*group_cols).agg(*exprs)
-            if group_cols
-            else rdf.agg(*exprs)
+        return engine._answer(
+            rdf, q, group_cols, exprs,
+            top_n=top_n, top_within=top_within, having=having,
+            share=share, share_within=share_within,
         )
-        # post-processing mirrors CubeEngine.aggregate exactly:
-        # share → having → top_n, then the deterministic ordering
-        if share or share_within:
-            out = CubeEngine._apply_share(out, len(group_cols), share_within)
-        if having:
-            out = out.filter(
-                CubeEngine._compile_having(out, len(group_cols), having)
-            )
-        if top_n is not None:
-            out = CubeEngine._apply_top(
-                out, len(group_cols), int(top_n), top_within
-            )
-        if not group_cols:
-            return out
-        return out.orderBy(*out.columns[: len(group_cols)])
-
 
     # -- maintenance --------------------------------------------------------
 
@@ -523,8 +496,6 @@ class RollupStore:
                 F.min(f"__min_{m.name}").alias(f"__min_{m.name}"),
                 F.max(f"__max_{m.name}").alias(f"__max_{m.name}"),
             ]
-        jvm = self.spark._jvm
-        conf = self.spark._jsc.hadoopConfiguration()
         for key, info in manifest["rollups"].items():
             cols = info["cols"]
             path = os.path.join(self._fact_dir(fact), key)
@@ -535,18 +506,9 @@ class RollupStore:
                 .groupBy(*cols)
                 .agg(*re_reduce)
             )
-            tmp, old = path + "__refreshing", path + "__old"
+            tmp = path + "__refreshing"
             merged.write.mode("overwrite").parquet(tmp)
-            hpath = jvm.org.apache.hadoop.fs.Path(path)
-            fs = hpath.getFileSystem(conf)
-            htmp = jvm.org.apache.hadoop.fs.Path(tmp)
-            hold = jvm.org.apache.hadoop.fs.Path(old)
-            if not fs.rename(hpath, hold):
-                raise IOError(f"rollup refresh: rename {path} -> {old} failed")
-            if not fs.rename(htmp, hpath):
-                fs.rename(hold, hpath)
-                raise IOError(f"rollup refresh: rename {tmp} -> {path} failed")
-            fs.delete(hold, True)
+            swap_in(self.spark, path, tmp, "rollup refresh")
             info["rows"] = self.spark.read.parquet(path).count()
         # the refreshed rollups now cover base ∪ delta: re-stamp the
         # version from the engine's CURRENT fact frame so route()'s

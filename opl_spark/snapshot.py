@@ -142,6 +142,29 @@ def degrade_types_strict(df: DataFrame) -> DataFrame:
     return df.select(*cols)
 
 
+def swap_in(spark: SparkSession, path: str, tmp: str, op: str) -> None:
+    """Replace the directory ``path`` with the fully written ``tmp`` by
+    two renames — path → ``<path>__old``, tmp → path — then delete
+    ``__old``.  A failed second rename puts the original back before
+    raising; a crash between the renames strands the data under
+    ``__old``, which ``SnapshotEngine.vacuum`` leaves for the operator
+    to rename back.  ``compact``, ``upsert`` and
+    ``RollupStore.refresh`` all swap through here; ``op`` names the
+    caller in the error."""
+    jvm = spark._jvm
+    conf = spark._jsc.hadoopConfiguration()
+    old = path + "__old"
+    hpath, htmp, hold = (jvm.org.apache.hadoop.fs.Path(p) for p in (path, tmp, old))
+    fs = hpath.getFileSystem(conf)
+    if not fs.rename(hpath, hold):
+        raise IOError(f"{op}: rename {path} -> {old} failed")
+    if not fs.rename(htmp, hpath):
+        # put the original back before failing — nothing is lost
+        fs.rename(hold, hpath)
+        raise IOError(f"{op}: rename {tmp} -> {path} failed")
+    fs.delete(hold, True)
+
+
 class SnapshotEngine:
     """Runs fact queries against registered source views and maintains
     partitioned parquet fact tables under ``warehouse_dir``.
@@ -350,17 +373,7 @@ class SnapshotEngine:
                 )
             out = df.repartition(*keys)
         out.write.mode("overwrite").partitionBy("year", "month").parquet(tmp)
-        old = path + "__old"
-        fs, hpath = self._fs(path)
-        _, htmp = self._fs(tmp)
-        _, hold = self._fs(old)
-        if not fs.rename(hpath, hold):
-            raise IOError(f"compact: rename {path} -> {old} failed")
-        if not fs.rename(htmp, hpath):
-            # put the original back before failing — nothing is lost
-            fs.rename(hold, hpath)
-            raise IOError(f"compact: rename {tmp} -> {path} failed")
-        fs.delete(hold, True)
+        swap_in(self.spark, path, tmp, "compact")
 
     def expire_partitions(
         self, fact_table: str, before_year: int, before_month: int
@@ -464,16 +477,7 @@ class SnapshotEngine:
         path = self._path(fact_table)
         tmp = path + "__upserting"
         merged.write.mode("overwrite").partitionBy("year", "month").parquet(tmp)
-        old = path + "__old"
-        fs, hpath = self._fs(path)
-        _, htmp = self._fs(tmp)
-        _, hold = self._fs(old)
-        if not fs.rename(hpath, hold):
-            raise IOError(f"upsert: rename {path} -> {old} failed")
-        if not fs.rename(htmp, hpath):
-            fs.rename(hold, hpath)
-            raise IOError(f"upsert: rename {tmp} -> {path} failed")
-        fs.delete(hold, True)
+        swap_in(self.spark, path, tmp, "upsert")
         return {
             "replaced": replaced,
             "inserted": n_in,
@@ -556,63 +560,6 @@ def backfill(
             totals[fact_table] = totals.get(fact_table, 0) + n
         d += _dt.timedelta(days=1)
     return totals
-
-
-def incremental_refresh(
-    spark: SparkSession,
-    agg_path: str,
-    delta: DataFrame,
-    key_cols: list[str],
-    sum_cols: list[str],
-    count_col: str | None = "n",
-) -> None:
-    """Incrementally refresh a persisted additive aggregate
-    (materialized-view maintenance): the delta batch aggregates to its
-    own group rows, unions with the existing table, and re-reduces —
-    sums and counts are reassociative, so the refreshed table equals a
-    full recompute over base ∪ delta (asserted in
-    tests/test_evolution.py) at the cost of ONE delta-sized
-    aggregation + one table-sized re-reduce, never a rescan of
-    history.  Non-additive measures (distinct, medians) need their
-    sketch forms (HLL / t-digest) — documented, not silently wrong.
-
-    Same write-to-temp + rename discipline as ``compact``
-    (single-writer, offline).
-    """
-    from pyspark.errors import AnalysisException
-
-    aggs = [F.sum(c).alias(c) for c in sum_cols]
-    if count_col:
-        aggs.append(F.count(F.lit(1)).alias(count_col))
-    d = delta.groupBy(*key_cols).agg(*aggs)
-    try:
-        existing = spark.read.parquet(agg_path)
-    except AnalysisException:
-        # ONLY path-not-found may mean "first refresh"; any other read
-        # failure (storage hiccup, corrupt footer) must surface —
-        # falling through here would overwrite history with one delta
-        d.write.mode("overwrite").parquet(agg_path)
-        return
-    re_aggs = [F.sum(c).alias(c) for c in sum_cols]
-    if count_col:
-        re_aggs.append(F.sum(count_col).alias(count_col))
-    merged = existing.unionByName(d).groupBy(*key_cols).agg(*re_aggs)
-    # compact's write-to-temp + two-rename swap: a crash mid-write
-    # leaves the live table intact (recover by renaming __old back)
-    tmp, old = agg_path + "__refreshing", agg_path + "__old"
-    merged.write.mode("overwrite").parquet(tmp)
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    hpath = jvm.org.apache.hadoop.fs.Path(agg_path)
-    fs = hpath.getFileSystem(conf)
-    htmp = jvm.org.apache.hadoop.fs.Path(tmp)
-    hold = jvm.org.apache.hadoop.fs.Path(old)
-    if not fs.rename(hpath, hold):
-        raise IOError(f"incremental_refresh: rename {agg_path} -> {old} failed")
-    if not fs.rename(htmp, hpath):
-        fs.rename(hold, hpath)
-        raise IOError(f"incremental_refresh: rename {tmp} -> {agg_path} failed")
-    fs.delete(hold, True)
 
 
 def table_stats(engine: SnapshotEngine, fact_table: str) -> list[dict]:

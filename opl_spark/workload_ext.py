@@ -11011,14 +11011,14 @@ def q_rollup_route(spark: SparkSession, sf_dir: str) -> DataFrame:
     materialized-view accelerator the reference's one-grain-per-fact
     cubes imply at 100 TB).  DECIMAL partials re-sum exactly, so
     routing is invisible to the oracle (the direct fact aggregation).
-    Routing policy + exactness + the routed-plan-never-scans-lineitem
-    contract are pinned by tests/test_rollup_router.py."""
+    Exactness + the routed-plan-never-scans-lineitem contract are
+    pinned by tests/test_rollup_router.py."""
     from opl_spark.rollup import lineitem_day_rollup_table, rollup_answer
 
     table = lineitem_day_rollup_table(spark, sf_dir)
     out = rollup_answer(
         spark,
-        {"day": table},
+        table,
         "month",
         ["l_returnflag"],
         ["revenue_dec"],

@@ -213,32 +213,6 @@ def test_vacuum_removes_stale_staging_but_keeps_crash_backup(registered, tmp_pat
     assert eng.vacuum() == []
 
 
-def test_incremental_refresh_equals_full_recompute(registered, tmp_path):
-    from pyspark.sql import functions as F
-
-    from opl_spark.snapshot import incremental_refresh
-
-    spark = registered
-    base = spark.createDataFrame(
-        [("a", 1.0), ("a", 2.0), ("b", 3.0)], "k string, v double"
-    )
-    delta = spark.createDataFrame(
-        [("a", 4.0), ("c", 5.0)], "k string, v double"
-    )
-    path = str(tmp_path / "agg")
-    incremental_refresh(spark, path, base, ["k"], ["v"])
-    incremental_refresh(spark, path, delta, ["k"], ["v"])
-    got = {r["k"]: (r["v"], r["n"]) for r in spark.read.parquet(path).collect()}
-    full = {
-        r["k"]: (r["v"], r["n"])
-        for r in base.unionByName(delta)
-        .groupBy("k")
-        .agg(F.sum("v").alias("v"), F.count(F.lit(1)).alias("n"))
-        .collect()
-    }
-    assert got == full
-
-
 def test_expire_partitions_drops_only_older_months(registered, tmp_path):
     spark = registered
     eng = SnapshotEngine(spark, str(tmp_path))

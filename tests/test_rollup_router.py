@@ -1,6 +1,6 @@
-"""Materialized time-grain rollup routing (opl_spark/rollup.py) and
-the bitmap index (operators/layout.py) — routing policy, exactness
-against the direct fact aggregation, and the routed plan's scan
+"""The day-grain rollup store (opl_spark/rollup.py) and the bitmap
+index (operators/layout.py) — exactness of the re-aggregated answer
+against the direct fact aggregation, and the answer plan's scan
 source."""
 
 from __future__ import annotations
@@ -8,30 +8,8 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from opl_spark.rollup import (
-    GRAINS,
-    grain_col,
-    lineitem_day_rollup_table,
-    rollup_answer,
-    route,
-)
+from opl_spark.rollup import grain_col, lineitem_day_rollup_table, rollup_answer
 from opl_spark.sources import load_table
-
-
-def test_route_picks_coarsest_servable_grain():
-    assert route("month", ["day"]) == "day"
-    assert route("month", ["day", "month"]) == "month"
-    assert route("year", ["day", "month", "quarter"]) == "quarter"
-    assert route("day", ["day"]) == "day"
-    # everything materialized is too coarse -> fact fallback
-    assert route("day", ["month", "year"]) is None
-    assert route("month", ["quarter"]) is None
-    with pytest.raises(ValueError):
-        route("week", ["day"])
-
-
-def test_grain_lattice_is_finest_first():
-    assert GRAINS == ("day", "month", "quarter", "year")
 
 
 def test_routed_answer_equals_direct_fact_aggregation(spark, sf_dir):
@@ -41,7 +19,7 @@ def test_routed_answer_equals_direct_fact_aggregation(spark, sf_dir):
     table = lineitem_day_rollup_table(spark, sf_dir)
     for requested in ("month", "quarter", "year"):
         routed = rollup_answer(
-            spark, {"day": table}, requested, ["l_returnflag"], ["revenue_dec"]
+            spark, table, requested, ["l_returnflag"], ["revenue_dec"]
         )
         direct = li.groupBy(
             grain_col(F.col("ship_ts"), requested).alias("bucket"), "l_returnflag"
@@ -66,16 +44,11 @@ def test_routed_plan_scans_rollup_not_fact(spark, sf_dir):
 
     table = lineitem_day_rollup_table(spark, sf_dir)
     routed = rollup_answer(
-        spark, {"day": table}, "month", ["l_returnflag"], ["revenue_dec"]
+        spark, table, "month", ["l_returnflag"], ["revenue_dec"]
     )
     plan = formatted_plan(routed)
     assert table in plan
     assert os.path.join(sf_dir, "lineitem") not in plan
-
-
-def test_rollup_answer_raises_without_servable_grain(spark):
-    with pytest.raises(ValueError, match="no materialization"):
-        rollup_answer(spark, {"month": "t"}, "day", [], [])
 
 
 # ---------------------------------------------------------------------------

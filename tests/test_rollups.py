@@ -126,6 +126,40 @@ def test_refresh_equals_rematerialize(spark, sf_dir, tmp_path):
     assert _rows(routed) == _rows(base)
 
 
+def test_partial_rematerialize_drops_stale_rollups(spark, sf_dir, tmp_path):
+    """Re-materializing part of the lattice after an append must not
+    stamp the new fact version over the rollups it did not rebuild:
+    the pre-append ``loan_type`` rollup is dropped with its files and
+    the request falls back to the fact."""
+    import pyspark.sql.functions as F
+
+    full = build_loans_fact(spark, sf_dir)
+    fact_dir = str(tmp_path / "fact")
+    full.filter(F.col("year") < 2000).write.parquet(fact_dir)
+    engine = CubeEngine(default_catalog())
+    engine.register_fact("loans2", spark.read.parquet(fact_dir))
+    store = RollupStore(spark, str(tmp_path / "lattice"))
+    store.materialize(engine, "loans2", [["year", "month"], ["loan_type"]])
+
+    # nightly append, then re-register the fact and rebuild one rollup
+    full.filter(F.col("year") >= 2000).write.mode("append").parquet(fact_dir)
+    engine.register_fact("loans2", spark.read.parquet(fact_dir))
+    store.materialize(engine, "loans2", [["year", "month"]])
+
+    by_type = dict(drilldown="loan_type", measure="value")
+    assert store.route_report(engine, "loans2", **by_type)["routed"] is False
+    assert not (tmp_path / "lattice" / "loans2" / "loan_type").exists()
+    assert _rows(store.aggregate(engine, "loans2", **by_type)) == _rows(
+        engine.aggregate("loans2", **by_type)
+    )
+    # the rebuilt rollup is fresh and still answers
+    by_month = dict(drilldown="date:month", measure="value")
+    assert store.route_report(engine, "loans2", **by_month)["rollup"] == "year__month"
+    assert _rows(store.aggregate(engine, "loans2", **by_month)) == _rows(
+        engine.aggregate("loans2", **by_month)
+    )
+
+
 def test_api_routes_through_lattice_identically(navigator):
     from opl_spark.api import OlapApi
 
