@@ -17,7 +17,7 @@ import threading
 from collections import OrderedDict
 from typing import Any
 
-from opl_spark.cube import CubeEngine, to_table
+from opl_spark.cube import CORE_PARAMS, CubeEngine, to_table
 
 
 class OlapApi:
@@ -139,7 +139,7 @@ class OlapApi:
     # _plan_kwargs, so a future parameter added there without extending
     # this tuple is structurally impossible — the lockstep is pinned by
     # tests/test_http_server.py::test_plan_params_single_source.
-    _CORE_PLAN_PARAMS = ("cut", "drilldown", "measure", "aggregate", "hierarchy")
+    _CORE_PLAN_PARAMS = CORE_PARAMS
     _EXT_PLAN_PARAMS = ("top_n", "top_within", "having", "share", "share_within")
     _PLAN_PARAMS = _CORE_PLAN_PARAMS + _EXT_PLAN_PARAMS
 

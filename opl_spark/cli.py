@@ -308,7 +308,6 @@ def main(argv: list[str] | None = None) -> int:
             raise SystemExit("advise requires -f/--fact and --query-log")
         from opl_spark.cube import CubeEngine
         from opl_spark.facts import default_catalog
-        from opl_spark.rollups import RollupStore
 
         with open(args.query_log) as fh:
             log = json.load(fh)
@@ -317,7 +316,7 @@ def main(argv: list[str] | None = None) -> int:
         engine = SnapshotEngine(spark, args.warehouse)
         cube = CubeEngine(default_catalog())
         cube.register_fact(args.fact, engine.fact_frame(args.fact))
-        store = RollupStore(spark, args.warehouse + "/_lattice")
+        store = _rollup_store(spark, args.warehouse)
         recs = store.advise(cube, args.fact, log, max_rollups=args.max_rollups)
         print(json.dumps({"fact": args.fact, "recommendations": recs}))
         return 0

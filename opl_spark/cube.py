@@ -41,6 +41,11 @@ from pyspark.sql import types as T
 
 from opl_spark.catalog import Dimension, FactMeta, Measure
 
+#: The request params ``CubeEngine._plan`` takes: they decide which rows
+#: aggregate into which groups (so rollup routing keys on them);
+#: post-aggregation params (top_n, having, share…) ride the answer.
+CORE_PARAMS = ("cut", "drilldown", "measure", "aggregate", "hierarchy")
+
 # ---------------------------------------------------------------------------
 # parsing helpers
 # ---------------------------------------------------------------------------
@@ -86,6 +91,8 @@ class CubeQuery:
     hierarchy: str | None = None
     cut_terms: list[_CutTerm] = field(default_factory=list)
     hierarchy_by_dim: dict[str, str] = field(default_factory=dict)
+    #: (measure, aggregate, fractional) per output, set by CubeEngine._plan
+    measures: list[tuple[Measure, str, bool]] = field(default_factory=list)
 
     def __post_init__(self) -> None:
         if self.cut:
@@ -306,23 +313,27 @@ class CubeEngine:
 
     # -- measures / aggregates (A2-A7) --------------------------------------
 
-    # ``avg`` is computed as round(double(exact_sum)/count, 6) instead of
-    # the engine-native AVG: over decimal inputs the sum is exact and
-    # order-independent, so the result is bit-identical across engines
-    # and across shuffle orders — a plain AVG over doubles is neither.
-    # ``sum`` over fractional inputs is likewise canonicalized to
-    # round(double(exact_sum), 2): the sum itself stays an exact
-    # decimal reduction; only the emitted value is re-typed, so the
-    # wire format carries no trailing-zero ambiguity across engines.
-    # ``median`` is an EXTENSION aggregate (the reference's API admits
-    # only sum/avg/count, api-library-olap/README.md:131-137): exact
-    # interpolated percentile, which DuckDB's quantile_cont matches
-    # bit-for-bit after round(6).  At 100 TB swap percentile for
+    # Each derivable aggregate is ONE expression over its (sum, count,
+    # min, max) inputs, fed fact columns here and a rollup's partials
+    # by ``RollupStore``.  ``avg`` is round(double(exact_sum)/count, 6)
+    # instead of the engine-native AVG: over decimal inputs the sum is
+    # exact and order-independent, so the result is bit-identical
+    # across engines and across shuffle orders — a plain AVG over
+    # doubles is neither.  ``sum``/``min``/``max`` over fractional
+    # inputs are likewise canonicalized to round(double(x), 2): the
+    # reduction itself stays exact; only the emitted value is re-typed,
+    # so the wire format carries no trailing-zero ambiguity across
+    # engines.  ``median`` is an EXTENSION aggregate (the reference's
+    # API admits only sum/avg/count, api-library-olap/README.md:131-137):
+    # exact interpolated percentile, which DuckDB's quantile_cont
+    # matches bit-for-bit after round(6).  At 100 TB swap percentile for
     # approx_percentile per-measure — the grammar is unchanged.
-    _AGG_FNS = {
-        "sum": F.sum,
-        "avg": lambda c: F.round(F.sum(c).cast("double") / F.count(c), 6),
-        "count": F.count,
+    #: the fact-column reduction behind each input of a derivable aggregate
+    _INPUTS = {"sum": F.sum, "count": F.count, "min": F.min, "max": F.max}
+    #: aggregates derivable from (sum, count, min, max) inputs
+    DERIVABLE = ("sum", "avg", "count", "min", "max")
+    #: aggregates that need the raw values
+    _RAW_AGGS = {
         "median": lambda c: F.round(F.percentile(c, 0.5).cast("double"), 6),
         # the 100 TB swap-in for median: t-digest-style sketch, one pass,
         # mergeable — not oracle-checkable (approximation is
@@ -330,43 +341,27 @@ class CubeEngine:
         "approx_median": lambda c: F.round(
             F.approx_percentile(c, 0.5, 10000).cast("double"), 6
         ),
-        "min": F.min,
-        "max": F.max,
     }
 
-    def _agg_exprs(self, df: DataFrame, q: CubeQuery) -> list[Column]:
-        names = q.measure.split("|") if q.measure else [q.fact.default_measure.name]
+    @classmethod
+    def _fact_input(cls, m: Measure, kind: str) -> Column:
+        return cls._INPUTS[kind](F.col(m.physical))
+
+    def _agg_exprs(self, q: CubeQuery, part=None) -> list[Column]:
+        """The measure outputs of a planned query.  ``part(measure,
+        kind)`` gives a derivable aggregate's ``kind`` input (sum,
+        count, min or max): by default the fact column's reduction."""
+        part = part or self._fact_input
         exprs = []
-        for name in names:
-            m: Measure = q.fact.measure(name.strip())
-            agg = q.aggregate or m.default_aggregate
-            if agg not in self._AGG_FNS:
-                raise ValueError(
-                    f"unsupported aggregate {agg!r} (sum/avg/count/median/approx_median/min/max)"
-                )
-            # M5 — per-measure allowed-aggregate contract: the metadata
-            # declares which aggregates each measure admits (reference:
-            # api-library-olap/README.md:131-149); anything else is a
-            # client error, not a silent fallback.
-            if agg not in m.aggregates:
-                raise ValueError(
-                    f"measure {m.name!r} does not allow aggregate {agg!r} "
-                    f"(allowed: {', '.join(m.aggregates)})"
-                )
-            col = F.col(m.physical)
-            # DecimalType subclasses FractionalType — this covers
-            # decimal, double, and float measures; integral sums stay
-            # bigint (already canonical on both engines).
-            if agg in ("sum", "min", "max") and isinstance(
-                df.schema[m.physical].dataType, T.FractionalType
-            ):
-                # decimal in, canonical round(double, 2) out — the
-                # reduction itself stays exact; only the emitted value
-                # is re-typed (trailing-zero decimals hash unstably
-                # across engines)
-                expr = F.round(self._AGG_FNS[agg](col).cast("double"), 2)
+        for m, agg, fractional in q.measures:
+            if agg in self._RAW_AGGS:
+                expr = self._RAW_AGGS[agg](F.col(m.physical))
+            elif agg == "avg":
+                expr = F.round(part(m, "sum").cast("double") / part(m, "count"), 6)
             else:
-                expr = self._AGG_FNS[agg](col)
+                expr = part(m, agg)
+                if fractional:
+                    expr = F.round(expr.cast("double"), 2)
             exprs.append(expr.alias(m.name))
         return exprs
 
@@ -423,9 +418,8 @@ class CubeEngine:
         q, group_cols = self._plan(
             fact, cut, drilldown, measure, aggregate, hierarchy
         )
-        df = self.frame(fact)
         return self._answer(
-            df, q, group_cols, self._agg_exprs(df, q),
+            self.frame(fact), q, group_cols,
             top_n=top_n, top_within=top_within, having=having,
             share=share, share_within=share_within,
         )
@@ -442,12 +436,15 @@ class CubeEngine:
         hierarchy: str | None = None,
     ) -> tuple[CubeQuery, list[str]]:
         """Plan step shared by every cube answer (``aggregate``,
-        ``drill_across``, ``RollupStore``): parse the request, compile
-        each cut term ONCE against the fact frame, and resolve the
-        drilldown to group columns (cut depths feed the below-cut
-        rule).  The compiled conditions cast their literals to the
-        fact's column types; a rollup carries the same columns with
-        the same types, so the same conditions filter it unchanged."""
+        ``drill_across``, ``RollupStore``), run once per request: parse
+        the request, compile each cut term against the fact frame,
+        resolve the drilldown to group columns (cut depths feed the
+        below-cut rule), and resolve each measure to ``(measure,
+        aggregate, fractional)`` in ``q.measures`` — the one place the
+        per-measure allowed-aggregate check (M5) runs.  The compiled
+        conditions cast their literals to the fact's column types; a
+        rollup carries the same columns with the same types, so the
+        same conditions filter it unchanged."""
         meta = self.catalog.fact(fact)
         df = self.frame(fact)
         q = CubeQuery(
@@ -463,30 +460,56 @@ class CubeEngine:
             t.condition, t.depth = self._compile_cut(
                 df, dim, t.spec, q.hierarchy_by_dim.get(t.dimension)
             )
-        return q, self._resolve_drilldown(df, q)
+        group_cols = self._resolve_drilldown(df, q)
+        names = measure.split("|") if measure else [meta.default_measure.name]
+        for name in names:
+            m: Measure = meta.measure(name.strip())
+            agg = aggregate or m.default_aggregate
+            if agg not in self.DERIVABLE and agg not in self._RAW_AGGS:
+                raise ValueError(
+                    f"unsupported aggregate {agg!r} (sum/avg/count/median/approx_median/min/max)"
+                )
+            # M5 — per-measure allowed-aggregate contract: the metadata
+            # declares which aggregates each measure admits (reference:
+            # api-library-olap/README.md:131-149); anything else is a
+            # client error, not a silent fallback.
+            if agg not in m.aggregates:
+                raise ValueError(
+                    f"measure {m.name!r} does not allow aggregate {agg!r} "
+                    f"(allowed: {', '.join(m.aggregates)})"
+                )
+            # DecimalType subclasses FractionalType — this covers
+            # decimal, double, and float measures; integral sums stay
+            # bigint (already canonical on both engines).
+            fractional = agg in ("sum", "min", "max") and isinstance(
+                df.schema[m.physical].dataType, T.FractionalType
+            )
+            q.measures.append((m, agg, fractional))
+        return q, group_cols
 
     def _answer(
         self,
         src: DataFrame,
         q: CubeQuery,
         group_cols: list[str],
-        aggs: list[Column],
+        part=None,
         top_n: int | None = None,
         top_within: str | None = None,
         having: str | None = None,
         share: bool = False,
         share_within: str | None = None,
     ) -> DataFrame:
-        """Answer step over ``src`` (the fact, or a rollup with
-        partial-derived ``aggs``): the planned cut filters, then
-        groupBy/agg, then share → having → top_n, then the
-        deterministic ordering."""
+        """Answer step over ``src`` (the fact, or a rollup whose
+        partials ``part`` re-reduces, see :meth:`_agg_exprs`): the
+        planned cut filters, then groupBy/agg, then share → having →
+        top_n, then the deterministic ordering."""
         for t in q.cut_terms:
             src = src.filter(t.condition)
         # the no-drilldown grand total flows through the SAME
         # post-processing: having/share/top_n are well-defined on the
         # one-row result, and silently dropping request parameters is
         # worse than either honoring or rejecting them
+        aggs = self._agg_exprs(q, part)
         out = src.groupBy(*group_cols).agg(*aggs) if group_cols else src.agg(*aggs)
         if share or share_within:
             out = self._apply_share(out, len(group_cols), share_within)
@@ -537,8 +560,7 @@ class CubeEngine:
                 f, cut=cut, drilldown=drilldown, measure=measure,
                 hierarchy=hierarchy,
             )
-            df = self.frame(f)
-            out = self._answer(df, q, gcols, self._agg_exprs(df, q))
+            out = self._answer(self.frame(f), q, gcols)
             renamed = out
             for m in out.columns[len(gcols):]:
                 renamed = renamed.withColumnRenamed(m, f"{m}_{f}")

@@ -9,9 +9,12 @@ point the way warehouse engines do: operators declare a small lattice
 of groupings worth materializing; ``materialize`` writes one
 pre-aggregated parquet table per grouping carrying RE-AGGREGABLE
 partials (sum / non-null count / min / max per measure); ``aggregate``
-answers a cube query from the smallest covering rollup and falls back
-to the base fact when none covers (or the aggregate isn't derivable
-from partials — median needs the raw values or a sketch).
+plans a cube query once with the engine, answers it from the smallest
+covering rollup, and falls back to the base fact when none covers (or
+the aggregate isn't derivable from partials — median needs the raw
+values or a sketch).  Either way the engine's one answer step and its
+one expression per aggregate build the result: over rollup partials
+or over fact columns.
 
 At 100 TB this converts report-latency queries from fact-sized scans
 to rollup-sized ones (dims × levels rows), which is exactly the
@@ -20,9 +23,10 @@ automatically routed.
 
 Correctness: partials re-aggregate exactly for sum/count/min/max over
 integral measures and over the engine's exact-decimal measure
-convention; avg derives as sum/count from the same partials.  The
-routed result is asserted equal to the base-engine result in
-tests/test_rollups.py.
+convention; avg derives as sum/count from the same partials, and the
+output typing (decimal in, round(double, 2) out) follows the fact's
+schema exactly as on the fact path.  The routed result is asserted
+equal to the base-engine result in tests/test_rollups.py.
 """
 
 from __future__ import annotations
@@ -32,19 +36,20 @@ import os
 import re
 import shutil
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
-from opl_spark.cube import CubeEngine
+from opl_spark.cube import CORE_PARAMS, CubeEngine
 from opl_spark.snapshot import swap_in
 
-#: Aggregates derivable from (sum, count, min, max) partials.
-_DERIVABLE = ("sum", "avg", "count", "min", "max")
-
-#: The request params that decide routing (post-aggregation params ride
-#: the routed result and never block it).
-_CORE = ("cut", "drilldown", "measure", "aggregate", "hierarchy")
+#: Each input of a derivable aggregate as a rollup partial: its column
+#: prefix and how partials re-reduce (counts re-add).
+_PARTIALS = {
+    "sum": ("__sum", F.sum),
+    "count": ("__cnt", F.sum),
+    "min": ("__min", F.min),
+    "max": ("__max", F.max),
+}
 
 
 def _grouping_key(cols: list[str]) -> str:
@@ -54,16 +59,18 @@ def _grouping_key(cols: list[str]) -> str:
 def _partials(measures) -> list:
     """The lattice's four partials per measure (``materialize`` and
     ``refresh`` both aggregate the fact with these)."""
-    out = []
-    for m in measures:
-        col = F.col(m.physical)
-        out += [
-            F.sum(col).alias(f"__sum_{m.name}"),
-            F.count(col).alias(f"__cnt_{m.name}"),
-            F.min(col).alias(f"__min_{m.name}"),
-            F.max(col).alias(f"__max_{m.name}"),
-        ]
-    return out
+    return [
+        CubeEngine._fact_input(m, kind).alias(f"{prefix}_{m.name}")
+        for m in measures
+        for kind, (prefix, _) in _PARTIALS.items()
+    ]
+
+
+def _reduced(m, kind: str) -> Column:
+    """A rollup's ``kind`` partial of measure ``m``, re-reduced over a
+    coarser group: the rollup path's input to ``CubeEngine._agg_exprs``."""
+    prefix, reduce = _PARTIALS[kind]
+    return reduce(F.col(f"{prefix}_{m.name}"))
 
 
 def _fact_version(frame: DataFrame) -> str:
@@ -83,8 +90,11 @@ class RollupStore:
 
     Layout: ``<base>/<fact>/<grouping_key>/`` parquet per rollup plus
     ``<base>/<fact>/_LATTICE.json`` recording each rollup's grouping
-    columns, row count, and per-measure fractional-ness (needed to
-    reproduce the engine's canonical sum/min/max emission typing).
+    columns and row count, the fact version the lattice was built
+    from, and the measures it carries partials for.  Output typing
+    comes from the fact schema, as on the fact path, so the
+    ``fractional`` flag older manifests record per measure is not
+    read.
     """
 
     def __init__(self, spark: SparkSession, base_dir: str):
@@ -97,12 +107,13 @@ class RollupStore:
         # manifest cache keys on the file's mtime (a re-materialize —
         # this process or another — rewrites it, invalidating both
         # caches); the frame cache keys on the manifest identity; the
-        # fact-version cache keys on the registered frame OBJECT, whose
-        # resolved file index is immutable (a re-registration is a new
-        # object and SnapshotEngine appends re-register).
+        # fact-version cache holds one entry per fact, valid for the
+        # registered frame OBJECT it pins, whose resolved file index is
+        # immutable (a re-registration is a new object and replaces the
+        # entry; SnapshotEngine appends re-register).
         self._manifest_cache: dict[str, tuple[float, dict]] = {}
         self._frame_cache: dict[tuple, DataFrame] = {}
-        self._version_cache: dict[int, tuple[DataFrame, str]] = {}
+        self._version_cache: dict[str, tuple[DataFrame, str]] = {}
 
     def _fact_dir(self, fact: str) -> str:
         return os.path.join(self.base_dir, fact)
@@ -147,19 +158,16 @@ class RollupStore:
             self._frame_cache[ck] = df
         return df
 
-    def _fact_version_cached(self, frame: DataFrame) -> str:
+    def _fact_version_cached(self, fact: str, frame: DataFrame) -> str:
         # the registered frame is a long-lived object in the engine's
         # registry; a re-registration (how appends become visible) is a
-        # NEW object and naturally misses this cache.  The entry PINS
-        # the frame it describes: an id()-only key could be recycled by
-        # the allocator after the old frame is collected and would then
-        # serve the dead frame's version to an unrelated one
-        key = id(frame)
-        hit = self._version_cache.get(key)
+        # NEW object, fails the identity check and replaces the fact's
+        # one entry, so the cache never outgrows the registered facts
+        hit = self._version_cache.get(fact)
         if hit is not None and hit[0] is frame:
             return hit[1]
         v = _fact_version(frame)
-        self._version_cache[key] = (frame, v)
+        self._version_cache[fact] = (frame, v)
         return v
 
     # -- build --------------------------------------------------------------
@@ -179,10 +187,7 @@ class RollupStore:
         meta = engine.catalog.fact(fact)
         base = engine.frame(fact)
         partials = _partials(meta.measures)
-        measures_info = {}
-        for m in meta.measures:
-            frac = isinstance(base.schema[m.physical].dataType, T.FractionalType)
-            measures_info[m.name] = {"fractional": frac, "physical": m.physical}
+        measures_info = {m.name: {"physical": m.physical} for m in meta.measures}
         # staleness guard: record WHICH fact files these rollups were
         # aggregated from; route() refuses the lattice when the live
         # fact has since gained files.  A rollup this call does not
@@ -258,10 +263,9 @@ class RollupStore:
         contains them, they just can't be recommended themselves."""
         shapes: dict[frozenset, int] = {}
         for params in query_log:
-            agg = params.get("aggregate")
-            if agg is not None and agg not in _DERIVABLE:
+            q, group_cols = engine._plan(fact, *(params.get(k) for k in CORE_PARAMS))
+            if any(agg not in engine.DERIVABLE for _, agg, _ in q.measures):
                 continue  # can never route — no rollup helps it
-            q, group_cols = engine._plan(fact, *(params.get(k) for k in _CORE))
             key = frozenset(self._needed_cols(q, group_cols))
             shapes[key] = shapes.get(key, 0) + 1
         ranked_shapes = sorted(
@@ -337,47 +341,24 @@ class RollupStore:
                     best = {"key": key, **info}
         return best
 
-    def _route_plan(
-        self,
-        engine: CubeEngine,
-        fact: str,
-        cut: str | None,
-        drilldown: str | None,
-        measure: str | None,
-        aggregate: str | None,
-        hierarchy: str | None,
-    ):
-        """Shared routing decision: ``(plan, q, group_cols, hit)`` when
-        a rollup covers the core of the request and every aggregate
-        derives from partials, else ``(None, None, None, reason)`` —
-        consumed by :meth:`aggregate` (to answer) and
-        :meth:`route_report` (to explain).  ``q``/``group_cols`` are
-        the engine's own plan of the request."""
-        meta = engine.catalog.fact(fact)
-        names = (
-            [n.strip() for n in measure.split("|")]
-            if measure
-            else [meta.default_measure.name]
-        )
-        plan = []
+    def _route(
+        self, engine: CubeEngine, fact: str, q, group_cols: list[str]
+    ) -> tuple[dict | None, str]:
+        """The routing step :meth:`aggregate` and :meth:`route_report`
+        share, over the engine's plan of the request: ``(rollup,
+        "")`` when a rollup covers the planned query and every
+        aggregate derives from its partials, else ``(None, reason)``."""
         manifest = self._load_manifest(fact)
-        for n in names:
-            m = meta.measure(n)
-            agg = aggregate or m.default_aggregate
-            info = manifest["measures"].get(m.name)
-            if agg not in _DERIVABLE or agg not in m.aggregates or info is None:
-                return None, None, None, f"aggregate {agg!r} not derivable"
-            plan.append((m, agg, info["fractional"]))
-        q, group_cols = engine._plan(
-            fact, cut, drilldown, measure, aggregate, hierarchy
-        )
+        for m, agg, _ in q.measures:
+            if agg not in engine.DERIVABLE or m.name not in manifest["measures"]:
+                return None, f"aggregate {agg!r} not derivable"
         needed = self._needed_cols(q, group_cols)
         hit = self.route(
-            fact, needed, self._fact_version_cached(engine.frame(fact))
+            fact, needed, self._fact_version_cached(fact, engine.frame(fact))
         )
         if hit is None:
-            return None, None, None, f"no rollup covers {sorted(needed)}"
-        return plan, q, group_cols, hit
+            return None, f"no rollup covers {sorted(needed)}"
+        return hit, ""
 
     def route_report(self, engine: CubeEngine, fact: str, **params) -> dict:
         """Routedness evidence for one request shape: which rollup (if
@@ -386,10 +367,10 @@ class RollupStore:
         Post-aggregation params (top_n/having/share…) never block
         routing (they apply to the report-sized routed result), so
         only the core params participate."""
-        core = {k: params.get(k) for k in _CORE}
-        plan, _, _, hit = self._route_plan(engine, fact, **core)
-        if plan is None:
-            return {"routed": False, "rollup": None, "reason": hit}
+        q, group_cols = engine._plan(fact, *(params.get(k) for k in CORE_PARAMS))
+        hit, reason = self._route(engine, fact, q, group_cols)
+        if hit is None:
+            return {"routed": False, "rollup": None, "reason": reason}
         return {"routed": True, "rollup": hit["key"], "rows": hit["rows"]}
 
     def aggregate(
@@ -409,63 +390,29 @@ class RollupStore:
     ) -> DataFrame:
         """`CubeEngine.aggregate`, answered from the lattice when a
         rollup covers the query's cut + drilldown columns and every
-        requested aggregate derives from partials — else the base
-        engine, transparently (same output either way).
+        requested aggregate derives from partials — else from the base
+        fact, transparently (same output either way).
 
-        A routed request runs the engine's own plan and answer steps:
-        the cut compiled against the fact filters the rollup, and the
-        partial-derived aggregates feed the same groupBy → share →
-        having → top_n → orderBy path the base engine uses.  So
+        The engine plans the request once, and the engine's answer
+        step runs over the rollup or the fact: the cut compiled
+        against the fact filters either, and the aggregates (built
+        from re-reduced partials or from fact columns) feed the same
+        groupBy → share → having → top_n → orderBy path.  So
         ``share``/``having``/``top_n`` ride the re-aggregated report
         (the exact same dims × levels rows) instead of forcing the
         request back to the fact scan.  Equality with the base engine
         across the full pinned request mix is asserted in
         tests/test_rollups.py."""
-        plan, q, group_cols, hit = self._route_plan(
-            engine, fact, cut, drilldown, measure, aggregate, hierarchy
+        q, group_cols = engine._plan(
+            fact, cut, drilldown, measure, aggregate, hierarchy
         )
-        if plan is None:
-            return engine.aggregate(
-                fact,
-                cut=cut,
-                drilldown=drilldown,
-                measure=measure,
-                aggregate=aggregate,
-                hierarchy=hierarchy,
-                top_n=top_n,
-                top_within=top_within,
-                having=having,
-                share=share,
-                share_within=share_within,
-            )
-        rdf = self._rollup_frame(
-            fact, hit["key"], self._load_manifest(fact).get("fact_version")
-        )
-        exprs = []
-        for m, agg, fractional in plan:
-            if agg == "sum":
-                e = F.sum(f"__sum_{m.name}")
-                if fractional:
-                    e = F.round(e.cast("double"), 2)
-            elif agg == "count":
-                e = F.sum(f"__cnt_{m.name}")
-            elif agg == "avg":
-                e = F.round(
-                    F.sum(f"__sum_{m.name}").cast("double")
-                    / F.sum(f"__cnt_{m.name}"),
-                    6,
-                )
-            elif agg == "min":
-                e = F.min(f"__min_{m.name}")
-                if fractional:
-                    e = F.round(e.cast("double"), 2)
-            else:  # max
-                e = F.max(f"__max_{m.name}")
-                if fractional:
-                    e = F.round(e.cast("double"), 2)
-            exprs.append(e.alias(m.name))
+        hit, _ = self._route(engine, fact, q, group_cols)
+        src, part = engine.frame(fact), None
+        if hit is not None:
+            version = self._load_manifest(fact).get("fact_version")
+            src, part = self._rollup_frame(fact, hit["key"], version), _reduced
         return engine._answer(
-            rdf, q, group_cols, exprs,
+            src, q, group_cols, part,
             top_n=top_n, top_within=top_within, having=having,
             share=share, share_within=share_within,
         )
@@ -488,14 +435,11 @@ class RollupStore:
         meta = engine.catalog.fact(fact)
         manifest = self._load_manifest(fact)
         delta_partials = _partials(meta.measures)
-        re_reduce = []
-        for m in meta.measures:
-            re_reduce += [
-                F.sum(f"__sum_{m.name}").alias(f"__sum_{m.name}"),
-                F.sum(f"__cnt_{m.name}").alias(f"__cnt_{m.name}"),
-                F.min(f"__min_{m.name}").alias(f"__min_{m.name}"),
-                F.max(f"__max_{m.name}").alias(f"__max_{m.name}"),
-            ]
+        re_reduce = [
+            _reduced(m, kind).alias(f"{prefix}_{m.name}")
+            for m in meta.measures
+            for kind, (prefix, _) in _PARTIALS.items()
+        ]
         for key, info in manifest["rollups"].items():
             cols = info["cols"]
             path = os.path.join(self._fact_dir(fact), key)

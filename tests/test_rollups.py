@@ -263,17 +263,136 @@ def test_post_processing_rides_the_routed_result(navigator):
 
 
 def test_version_cache_pins_frame_and_checks_identity(navigator):
-    """The request-path version cache keys on id(frame) — the entry
-    must PIN the frame (so a collected frame's id can't be recycled to
-    an unrelated one) and validate identity on hit, serving per-object
-    versions even if two live frames ever shared an id slot."""
+    """The request-path version cache holds one entry per fact name —
+    the entry must PIN the frame it describes and validate identity on
+    hit, so a different frame under the same fact recomputes."""
     engine, store = navigator
     f1 = engine.frame("loans2")
-    v1 = store._fact_version_cached(f1)
-    assert store._fact_version_cached(f1) == v1  # stable on re-ask
-    ent = store._version_cache[id(f1)]
+    v1 = store._fact_version_cached("loans2", f1)
+    assert store._fact_version_cached("loans2", f1) == v1  # stable on re-ask
+    ent = store._version_cache["loans2"]
     assert ent[0] is f1 and ent[1] == v1  # the frame itself is pinned
     # a hit whose stored object is NOT the caller's frame must recompute
     f2 = f1.sparkSession.createDataFrame([(1,)], "x long")
-    store._version_cache[id(f2)] = (f1, "stale-version")
-    assert store._fact_version_cached(f2) != "stale-version"
+    store._version_cache["other"] = (f1, "stale-version")
+    assert store._fact_version_cached("other", f2) != "stale-version"
+    assert store._version_cache["other"][0] is f2
+
+
+def test_version_cache_keeps_one_entry_per_fact(spark, sf_dir, tmp_path):
+    """Re-registering a fact replaces its version-cache entry instead of
+    pinning every frame ever registered, and each route sees the
+    version of the frame registered at the time."""
+    from opl_spark.rollups import _fact_version
+
+    full = build_loans_fact(spark, sf_dir)
+    fact_dir = str(tmp_path / "fact")
+    years = sorted({r["year"] for r in full.select("year").distinct().collect()})
+    engine = CubeEngine(default_catalog())
+    store = RollupStore(spark, str(tmp_path / "lattice"))
+    kwargs = dict(drilldown="date", measure="value")
+    for i in range(3):
+        full.filter(full["year"] == years[i % len(years)]).write.mode(
+            "append"
+        ).parquet(fact_dir)
+        frame = spark.read.parquet(fact_dir)
+        engine.register_fact("loans2", frame)
+        if i == 0:
+            store.materialize(engine, "loans2", [["year", "month"]])
+        assert store.route_report(engine, "loans2", **kwargs)["routed"] is (i == 0)
+        assert [v for f, v in store._version_cache.values() if f is frame] == [
+            _fact_version(frame)
+        ]
+    assert len(store._version_cache) == 1
+
+
+def test_routed_min_max_and_multi_measure_equal_base(navigator):
+    """Decimal min/max partials (round(double, 2) out) and several
+    measures in one request route through a rollup and answer exactly
+    as the base engine."""
+    engine, store = navigator
+    kwargs = dict(drilldown="date", measure="value|min_value|max_value|loans")
+    assert store.route_report(engine, "loans2", **kwargs)["routed"]
+    base = engine.aggregate("loans2", **kwargs)
+    routed = store.aggregate(engine, "loans2", **kwargs)
+    assert routed.columns == base.columns == [
+        "year", "value", "min_value", "max_value", "loans",
+    ]
+    assert routed.dtypes == base.dtypes
+    assert _rows(routed) == _rows(base)
+
+
+def test_manifest_with_fractional_field_still_routes(spark, sf_dir, tmp_path):
+    """A lattice manifest in the earlier format, which records a
+    ``fractional`` flag per measure, routes and answers the same."""
+    import json
+
+    from pyspark.sql import types as T
+
+    engine = CubeEngine(default_catalog())
+    engine.register_fact("loans2", build_loans_fact(spark, sf_dir))
+    store = RollupStore(spark, str(tmp_path / "lattice"))
+    store.materialize(engine, "loans2", [["year", "month"]])
+    path = store._manifest_path("loans2")
+    with open(path) as fh:
+        manifest = json.load(fh)
+    schema = engine.frame("loans2").schema
+    for info in manifest["measures"].values():
+        info["fractional"] = isinstance(
+            schema[info["physical"]].dataType, T.FractionalType
+        )
+    assert any(i["fractional"] for i in manifest["measures"].values())
+    with open(path, "w") as fh:
+        json.dump(manifest, fh, indent=1, sort_keys=True)
+    kwargs = dict(drilldown="date", measure="value|min_value|max_value|loans")
+    assert store.route_report(engine, "loans2", **kwargs)["rollup"] == "year__month"
+    base = engine.aggregate("loans2", **kwargs)
+    routed = store.aggregate(engine, "loans2", **kwargs)
+    assert routed.dtypes == base.dtypes
+    assert _rows(routed) == _rows(base)
+
+
+def test_each_request_is_planned_once(navigator, monkeypatch):
+    """One ``RollupStore.aggregate`` plans its request once, whether it
+    routes, falls back for coverage, or falls back for a non-derivable
+    aggregate; a disallowed aggregate is still a ValueError, which the
+    HTTP API answers with 400."""
+    import json
+    import urllib.error
+    import urllib.parse
+    import urllib.request
+
+    from opl_spark.api import OlapApi
+    from opl_spark.server import OlapHttpServer
+
+    engine, store = navigator
+    calls = []
+    plan = CubeEngine._plan
+
+    def counted(self, *args, **kwargs):
+        calls.append(args)
+        return plan(self, *args, **kwargs)
+
+    monkeypatch.setattr(CubeEngine, "_plan", counted)
+    for kwargs, routed in (
+        (dict(cut="date:1996", drilldown="date", measure="value"), True),
+        (dict(cut="date:1996,3,1-1996,3,28", drilldown="segment"), False),
+        (dict(drilldown="date", measure="value", aggregate="median"), False),
+    ):
+        assert store.route_report(engine, "loans2", **kwargs)["routed"] is routed
+        calls.clear()
+        store.aggregate(engine, "loans2", **kwargs)
+        assert len(calls) == 1, kwargs
+
+    bad = dict(measure="loans", aggregate="sum")
+    with pytest.raises(ValueError, match="does not allow aggregate 'sum'"):
+        store.aggregate(engine, "loans2", **bad)
+    with OlapHttpServer(OlapApi(engine, rollups=store)) as srv:
+        url = (
+            f"http://127.0.0.1:{srv.port}/olap/loans2/aggregate?"
+            + urllib.parse.urlencode(bad)
+        )
+        with pytest.raises(urllib.error.HTTPError) as exc:
+            urllib.request.urlopen(url, timeout=60)
+    assert exc.value.code == 400
+    assert "does not allow" in json.loads(exc.value.read())["error"]
