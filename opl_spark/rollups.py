@@ -43,10 +43,11 @@ from opl_spark.cube import CORE_PARAMS, CubeEngine
 from opl_spark.snapshot import swap_in
 
 #: Each input of a derivable aggregate as a rollup partial: its column
-#: prefix and how partials re-reduce (counts re-add).
+#: prefix and how partials re-reduce (counts re-add; the coalesce keeps
+#: a routed count non-nullable, like the fact path's ``count``).
 _PARTIALS = {
     "sum": ("__sum", F.sum),
-    "count": ("__cnt", F.sum),
+    "count": ("__cnt", lambda c: F.coalesce(F.sum(c), F.lit(0))),
     "min": ("__min", F.min),
     "max": ("__max", F.max),
 }

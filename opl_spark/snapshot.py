@@ -16,9 +16,16 @@ Scale notes (100 TB design):
 - fact tables are parquet directories partitioned by ``(year, month)``
   — cut compilation emits filters on exactly these columns, so API
   queries partition-prune instead of scanning history;
-- idempotence is a metadata-only check against the target scope
-  partition (reference intent of ``alreadyExecuted`` OLAP.php:166-175,
-  minus its NULL-interpolation defect — SURVEY.md §1.4);
+- idempotence is answered from a per-fact scope ledger, one marker
+  file per snapshotted ``(queryId, scope)`` under ``<fact>/_scopes/``:
+  a few filesystem metadata calls and no Spark job, however large the
+  fact (reference intent of ``alreadyExecuted`` OLAP.php:166-175, an
+  indexed lookup, minus its NULL-interpolation defect — SURVEY.md
+  §1.4).  ``run`` marks a scope ``.pending`` before its append and
+  ``.done`` after it commits; a ``.pending`` marker alone is a crashed
+  append, which the probe reports loudly instead of skipping.  Every
+  other change to a fact's files drops the ledger, and the next probe
+  rebuilds it from one scan of the fact's distinct scopes;
 - schema evolution on append (reference ``modifyTableStruct``
   OLAP.php:177-199) maps to parquet ``mergeSchema`` on read: appends
   with new columns are legal, old files read as NULL. Type *narrowing*
@@ -30,6 +37,7 @@ from __future__ import annotations
 
 import datetime as _dt
 import os
+import re
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, Observation, SparkSession
@@ -40,6 +48,22 @@ from opl_spark.timescope import Scope, gate
 #: The six standard audit columns prepended to every snapshot row
 #: (OLAP.php:356-358, library_olap/README.md:51).
 AUDIT_COLUMNS = ("queryId", "year", "month", "week", "day", "executionDate")
+
+#: The scope ledger's directory inside a fact directory.  Spark's file
+#: index skips a name that starts with ``_`` and holds no ``=``, so
+#: fact reads, ``inputFiles()`` and partition discovery never see it.
+LEDGER_DIR = "_scopes"
+
+#: A week label ``gate`` can emit (``timescope.week_label``).
+_WEEK_LABEL = re.compile(r"Y\d+-W\d\d")
+
+
+def _scope_marker(query_id: int, scope: Scope) -> str:
+    """The ledger name stem of one ``(queryId, scope)``:
+    ``q<id>_<year>_<month>_<week>_<day>``, a NULLed field left empty
+    (a monthly scope is ``q2_1998_6__``).  Never contains ``=``."""
+    fields = ("" if v is None else str(v) for v in scope.as_dict().values())
+    return f"q{int(query_id)}_" + "_".join(fields)
 
 
 @dataclass(frozen=True)
@@ -222,6 +246,10 @@ class SnapshotEngine:
         return self.spark.read.option("mergeSchema", "true").parquet(self._path(fact_table))
 
     def exists(self, fact_table: str) -> bool:
+        """Whether the fact holds data files: ``*.parquet`` files or
+        ``year=`` partition directories.  ``_SUCCESS`` and the scope
+        ledger are not data — a fact whose only scope wrote 0 rows has
+        both and nothing to read."""
         if self.jdbc_sink is not None:
             return self.jdbc_sink.exists(self.spark, fact_table)
         fs, hpath = self._fs(self._path(fact_table))
@@ -229,32 +257,104 @@ class SnapshotEngine:
             return False
         for status in fs.listStatus(hpath):
             n = status.getPath().getName()
-            if n.endswith(".parquet") or n.startswith("year=") or n.startswith("_"):
+            if n.endswith(".parquet") or n.startswith("year="):
                 return True
         return False
+
+    def _ledger(self, fact_table: str):
+        """Hadoop FileSystem + path of the fact's scope ledger."""
+        return self._fs(os.path.join(self._path(fact_table), LEDGER_DIR))
+
+    def _markers(self, fact_table: str, query_id: int, scope: Scope):
+        """``(fs, done, pending)`` marker paths of one scope."""
+        fs, ledger = self._ledger(fact_table)
+        stem = _scope_marker(query_id, scope)
+        Path = self.spark._jvm.org.apache.hadoop.fs.Path
+        return fs, Path(ledger, stem + ".done"), Path(ledger, stem + ".pending")
+
+    def _crashed(self, fact_table: str, what: str, pending) -> RuntimeError:
+        return RuntimeError(
+            f"{fact_table}: the snapshot of {what} started but never "
+            "committed (its run crashed or its write raised); the scope "
+            "may hold part of its rows. Remove that scope's rows, delete "
+            f"{pending.toString()} and run again."
+        )
+
+    def _rebuild_ledger(self, fact_table: str) -> None:
+        """Fill a missing ledger from one scan of the fact's distinct
+        ``(queryId, year, month, week, day)`` rows: one ``.done`` marker
+        per scope holding ≥1 row.  Built beside the ledger and renamed
+        into place, so a crash mid-rebuild leaves no partial ledger.
+        Rows no ``gate`` scope can equal (a NULL ``queryId``, a
+        non-label ``week`` from a direct ``write``) get no marker."""
+        fs, ledger = self._ledger(fact_table)
+        Path = self.spark._jvm.org.apache.hadoop.fs.Path
+        tmp = Path(ledger.toString() + "_rebuild")
+        fs.delete(tmp, True)
+        fs.mkdirs(tmp)
+        keys = self.fact_frame(fact_table).select(*AUDIT_COLUMNS[:5]).distinct()
+        for qid, year, month, week, day in keys.collect():
+            if qid is None or (week is not None and not _WEEK_LABEL.fullmatch(str(week))):
+                continue
+            stem = _scope_marker(qid, Scope(year, month, week, day))
+            fs.create(Path(tmp, stem + ".done"), True).close()
+        if not fs.rename(tmp, ledger):
+            raise IOError(f"{fact_table}: rename {tmp.toString()} -> {LEDGER_DIR} failed")
+
+    def _drop_ledger(self, fact_table: str) -> None:
+        """Forget the fact's snapshotted scopes before a change other
+        than ``run``'s scope append (``write``, ``upsert``, ``compact``,
+        ``expire_partitions``); the next probe rebuilds the ledger from
+        the data.  A ``.pending`` marker is refused, not dropped: the
+        rebuild would read a crashed scope's partial rows as done."""
+        fs, ledger = self._ledger(fact_table)
+        if not fs.exists(ledger):
+            return
+        for status in fs.listStatus(ledger):
+            name = status.getPath().getName()
+            if name.endswith(".pending"):
+                raise self._crashed(
+                    fact_table, f"scope {name[: -len('.pending')]}", status.getPath()
+                )
+        fs.delete(ledger, True)
 
     def already_executed(self, fact_table: str, query_id: int, scope: Scope) -> bool:
         """Idempotent re-run guard (E4; intent of OLAP.php:166-175).
 
-        Null-safe scope equality via ``eqNullSafe`` — unlike the
-        reference, NULLed scope fields of weekly/monthly/yearly facts
-        compare correctly.  Partition filters on year/month make this a
-        pruned metadata-sized scan, not a table scan (with a JDBC sink,
-        a predicate-pushed remote probe).
+        Answered from the fact's scope ledger (module docstring), with
+        no Spark job: a ``.done`` marker for ``(query_id, scope)`` means
+        the scope landed; a ``.pending`` marker without one means a run
+        crashed inside that scope's append, and the probe raises naming
+        the fact and the scope — the scope is never skipped as done, and
+        re-running it could double its rows; neither means not executed.
+        NULLed scope fields of weekly/monthly/yearly facts are part of
+        the marker name, so they compare exactly (the reference's
+        ``= NULL`` never matches).
+
+        A fact with data but no ledger (written before the ledger
+        existed, or changed by ``write``/``upsert``/``compact``/
+        ``expire_partitions`` since) costs one scan that refills the
+        ledger; later probes read it.  With a JDBC sink, a
+        predicate-pushed remote probe.
         """
         if self.jdbc_sink is not None:
             return self.jdbc_sink.already_executed(
                 self.spark, fact_table, query_id, scope
             )
-        if not self.exists(fact_table):
-            return False
-        df = self.fact_frame(fact_table)
-        cond = F.col("queryId") == F.lit(query_id)
-        for name, val in scope.as_dict().items():
-            cond = cond & F.col(name).eqNullSafe(F.lit(val))
-        return df.filter(cond).limit(1).count() > 0
+        fs, done, pending = self._markers(fact_table, query_id, scope)
+        if not fs.exists(done.getParent()):
+            if not self.exists(fact_table):
+                return False
+            self._rebuild_ledger(fact_table)
+        if fs.exists(done):
+            return True
+        if fs.exists(pending):
+            raise self._crashed(
+                fact_table, f"queryId {query_id} scope {scope.as_dict()}", pending
+            )
+        return False
 
-    def write(self, df: DataFrame, fact_table: str) -> None:
+    def write(self, df: DataFrame, fact_table: str, *, _in_run: bool = False) -> None:
         """Partitioned append (S6/S7/S8).
 
         Partitioning by ``(year, month)`` bounds partition count
@@ -263,8 +363,14 @@ class SnapshotEngine:
         partition, file count follows the shuffle parallelism — at
         100 TB the write parallelizes across executors with no driver
         involvement.
+
+        A direct append drops the scope ledger (the appended rows may
+        belong to any scope); ``run`` passes ``_in_run`` because it
+        marks its own scope.
         """
         self._require_parquet("write")
+        if not _in_run:
+            self._drop_ledger(fact_table)
         (
             df.write.mode("append")
             .partitionBy("year", "month")
@@ -311,6 +417,7 @@ class SnapshotEngine:
         "rename" there is a copy, making the table-format path the
         better swap on S3-likes."""
         self._require_parquet("compact")
+        self._drop_ledger(fact_table)
         path = self._path(fact_table)
         tmp = path + "__compacting"
         df = self.fact_frame(fact_table)
@@ -402,6 +509,10 @@ class SnapshotEngine:
                     continue
                 month = int(mname.split("=", 1)[1])
                 if (year, month) < (before_year, before_month):
+                    if not removed:
+                        # expired scopes must read as not executed, so
+                        # a re-backfill of the month re-snapshots it
+                        self._drop_ledger(fact_table)
                     fs.delete(mstat.getPath(), True)
                     removed.append(f"{yname}/{mname}")
             if not any(
@@ -462,6 +573,7 @@ class SnapshotEngine:
         every key it mentions.
         """
         self._require_parquet("upsert")
+        self._drop_ledger(fact_table)
         if not self.exists(fact_table):
             self.write(df, fact_table)
             return {"replaced": 0, "inserted": df.count(), "kept": 0}
@@ -527,9 +639,22 @@ class SnapshotEngine:
                 self.jdbc_sink.write_scope(
                     self.spark, observed, fq.fact_table, fq.query_id, scope
                 )
+                rows = obs.get["rows"]
             else:
-                self.write(observed, fq.fact_table)
-            written[fq.fact_table] = written.get(fq.fact_table, 0) + obs.get["rows"]
+                # ledger order: pending → append → done.  A crash (or
+                # a raise) in between leaves the pending marker, which
+                # the next probe reports instead of skipping the scope
+                fs, done, pending = self._markers(fq.fact_table, fq.query_id, scope)
+                fs.create(pending, True).close()
+                self.write(observed, fq.fact_table, _in_run=True)
+                rows = obs.get["rows"]
+                # a 0-row scope stays unmarked and re-runs next time,
+                # as a scan of the data would also find nothing
+                if not rows:
+                    fs.delete(pending, False)
+                elif not fs.rename(pending, done):
+                    raise IOError(f"{fq.fact_table}: rename {pending.toString()} failed")
+            written[fq.fact_table] = written.get(fq.fact_table, 0) + rows
         return written
 
 

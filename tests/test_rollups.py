@@ -318,7 +318,7 @@ def test_routed_min_max_and_multi_measure_equal_base(navigator):
     assert routed.columns == base.columns == [
         "year", "value", "min_value", "max_value", "loans",
     ]
-    assert routed.dtypes == base.dtypes
+    assert routed.schema == base.schema
     assert _rows(routed) == _rows(base)
 
 
