@@ -38,7 +38,19 @@ from opl_spark import workload  # noqa: E402
 #: they lead the next window, right after the red ids.  The one
 #: maintenance rule: add an id when its code or oracle changes, and
 #: remove it once a ledger round newer than the change has it green.
-_AUDIT_PRIORITY: tuple[str, ...] = ()
+_AUDIT_PRIORITY: tuple[str, ...] = (
+    # cut compilation became set / range / path forms over plain
+    # column comparisons: every compiled cut filter changed
+    "q_cut_eq",
+    "q_cut_dice",
+    "q_cut_range",
+    "q_cut_open_range",
+    "q_cut_set",
+    "q_cut_hierarchy",
+    "q_cut_hierarchy_range",
+    "q_drilldown_cutlevel",
+    "q_drilldown_week",
+)
 
 Ledger = dict[str, tuple[int, int, bool | None]]
 

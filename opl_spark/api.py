@@ -125,10 +125,7 @@ class OlapApi:
             )
         except KeyError as exc:
             raise ValueError(str(exc)) from exc
-        if params.get("output") == "table":
-            return to_table(df)
-        rows = [r.asDict() for r in df.collect()]
-        return {"data": rows} if rows else {"message": "empty_dataset"}
+        return self._materialize(df, params)
 
     # the params _build_aggregate_df actually consumes — the cache key
     # must fold in nothing else, or requests differing only in junk

@@ -18,6 +18,10 @@ api-library-olap/README.md:27-51):
 - ``dim:2016,10[,3]``           hierarchy level path      (README.md:44-49)
 - ``dim:2016,10-2017,02``       hierarchy tuple range     (README.md:51)
 
+These compile to three forms (set, range, path) of plain column
+comparisons, so every date cut prunes the fact's ``(year, month)``
+partitions, the connector's ``date:Y,M,D-Y,M,D`` window included.
+
 Drilldown grammar ("equivalent to SQL GROUP BY",
 api-library-olap/README.md:54-79):
 
@@ -33,7 +37,9 @@ api-library-olap/README.md:54-79):
 
 from __future__ import annotations
 
+import operator
 from dataclasses import dataclass, field
+from functools import reduce
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -63,6 +69,20 @@ def _atom(value: str, numeric: bool):
 
 def _is_numeric(dtype: T.DataType) -> bool:
     return isinstance(dtype, T.NumericType)
+
+
+def _tuple_bound(cols: list[str], vals: list, strict, inclusive) -> Column:
+    """``(cols…) >= vals`` (or ``<=``) as lexicographic column
+    comparisons, built from the deepest bound level out:
+    ``y > a OR (y = a AND (m > b OR (m = b AND d >= c)))``.  A NULL
+    level the comparison reaches makes it NULL, so no row passes on it
+    (a MySQL row comparison behaves the same)."""
+    *outer, (c, v) = zip(cols, vals)
+    cond = inclusive(F.col(c), v)
+    for c, v in reversed(outer):
+        col = F.col(c)
+        cond = strict(col, v) | ((col == v) & cond)
+    return cond
 
 
 @dataclass
@@ -143,122 +163,70 @@ class CubeEngine:
 
     # -- grammar compilation ------------------------------------------------
 
-    def _level_cols(
-        self, df: DataFrame, dim: Dimension, hierarchy: str | None = None
-    ) -> list[str]:
-        return [dim.level(lv).physical for lv in dim.hierarchy_order(hierarchy)]
-
     def _compile_cut(
         self, df: DataFrame, dim: Dimension, spec: str, hierarchy: str | None = None
     ) -> tuple[Column, int]:
-        """One cut term → (filter condition, cut depth in hierarchy levels)."""
-        cols = self._level_cols(df, dim, hierarchy)
-        first = F.col(cols[0])
-        first_numeric = _is_numeric(df.schema[cols[0]].dataType)
+        """One cut term → (filter condition, cut depth in hierarchy levels).
+
+        Three forms: a set (C5), a range (C3/C4/C7) and a path (C1/C6).
+        Every literal is typed against the walk's level columns, so a
+        condition is plain column comparisons that Catalyst turns into
+        partition filters on the fact's ``(year, month)`` directories."""
+        cols = [dim.level(lv).physical for lv in dim.hierarchy_order(hierarchy)]
+        numeric = [_is_numeric(df.schema[c].dataType) for c in cols]
+
+        def typed(side: str) -> list:
+            # components beyond the walk's depth are dropped (prefix
+            # semantics): the Data Studio connector sends Y,M,D even to
+            # facts whose date walk stops at month (Codice.gs:336-341)
+            parts = [p.strip() for p in side.split(",")][: len(cols)]
+            return [_atom(p, n) for p, n in zip(parts, numeric)]
 
         # C5 — discrete set: union of independently-compiled members
         if ";" in spec:
-            conds, depth = [], 1
-            for member in spec.split(";"):
-                if not member.strip():
-                    raise ValueError(
-                        f"empty member in cut set {spec!r} on dimension {dim.name!r}"
+            members = spec.split(";")
+            if not all(m.strip() for m in members):
+                raise ValueError(
+                    f"empty member in cut set {spec!r} on dimension {dim.name!r}"
+                )
+            compiled = [self._compile_cut(df, dim, m, hierarchy) for m in members]
+            return (
+                reduce(operator.or_, (c for c, _ in compiled)),
+                max(d for _, d in compiled),
+            )
+
+        # C3/C4/C7 — range, split on the FIRST '-'.  A dash can also live
+        # INSIDE a level value (the ISO week label 'Y1997-W01'), so the
+        # spec is a range only when both bounds type against the levels
+        # (an empty side is an open range): 'date:1997,Y1997-W01' is a
+        # path, because 'W01' is no iso_year (a week-level range is thus
+        # inexpressible: use a set).  A dash on a string first level is a
+        # range separator only inside a tuple spec.
+        lo_s, dash, hi_s = (s.strip() for s in spec.partition("-"))
+        if dash and (numeric[0] or "," in spec) and (lo_s or hi_s):
+            try:
+                bounds = [
+                    (typed(side), strict, inclusive)
+                    for side, strict, inclusive in (
+                        (lo_s, operator.gt, operator.ge),
+                        (hi_s, operator.lt, operator.le),
                     )
-                c, d = self._compile_cut(df, dim, member, hierarchy)
-                conds.append(c)
-                depth = max(depth, d)
-            out = conds[0]
-            for c in conds[1:]:
-                out = out | c
-            return out, depth
+                    if side
+                ]
+            except ValueError:
+                pass  # a dash inside a level value: a path
+            else:
+                return (
+                    reduce(operator.and_, (_tuple_bound(cols, *b) for b in bounds)),
+                    max(len(vals) for vals, _, _ in bounds),
+                )
 
-        # range forms — split on the FIRST '-' that separates two members.
-        # A dash can also live INSIDE a level value (the ISO week label
-        # 'Y1997-W01' as a path component): treat the spec as a range
-        # only when BOTH bound tuples TYPE-CHECK against the hierarchy's
-        # level columns (every component feeding a numeric level parses
-        # as a number; an empty side is an open range).
-        # 'date:1997,Y1997-W01' therefore compiles as a C6 path — its
-        # "hi bound" ('W01') fails the numeric iso_year check — and so
-        # does the deeper 'date:1997,Y1997-W01,5' on a 3-level walk
-        # ('W01,5' puts a non-numeral on a numeric level).  Week-LEVEL
-        # tuple ranges remain inexpressible in this grammar (genuinely
-        # ambiguous string language) — use a C5 set or an
-        # iso_year-level range instead.
-        def _bound_typechecks(side: str) -> bool:
-            if not side:
-                return True  # open range
-            parts = [p.strip() for p in side.split(",")][: len(cols)]
-            for i, v in enumerate(parts):
-                if _is_numeric(df.schema[cols[i]].dataType):
-                    try:
-                        _atom(v, True)
-                    except ValueError:
-                        return False
-            return True
-
-        range_like = "-" in spec and (first_numeric or "," in spec)
-        if range_like and "," in spec:
-            lo_probe, _, hi_probe = spec.partition("-")
-            range_like = _bound_typechecks(
-                lo_probe.strip()
-            ) and _bound_typechecks(hi_probe.strip())
-        if range_like:
-            lo_s, _, hi_s = spec.partition("-")
-            lo_s, hi_s = lo_s.strip(), hi_s.strip()
-            if "," in lo_s or "," in hi_s:
-                # C7 — hierarchy tuple range: (y,m[,d]) BETWEEN bounds,
-                # compiled as a composite struct comparison.  Catalyst
-                # derives no partition filter from a struct comparison,
-                # so a tuple range does NOT prune partitions today — it
-                # reads every (year, month) partition (ROADMAP direction
-                # 1, finding 2); C1/C6 equality and C3/C4 flat-range
-                # cuts on a partition column do prune.
-                lo = [_atom(v, True) for v in lo_s.split(",")] if lo_s else []
-                hi = [_atom(v, True) for v in hi_s.split(",")] if hi_s else []
-                # bounds deeper than the hierarchy are truncated to its
-                # depth (prefix semantics widen each bound to the level
-                # it can express) — the Data Studio connector always
-                # sends Y,M,D ranges (Codice.gs:336-341) even against
-                # facts whose date hierarchy stops at month
-                lo, hi = lo[: len(cols)], hi[: len(cols)]
-                depth = max(len(lo), len(hi), 1)
-
-                def _bound(vals: list) -> Column:
-                    # literals cast to the column types so the struct
-                    # comparison type-checks; prefix-arity compare is
-                    # exactly tuple-order semantics for each bound.
-                    return F.struct(
-                        *[
-                            F.lit(v).cast(df.schema[cols[i]].dataType)
-                            for i, v in enumerate(vals)
-                        ]
-                    )
-
-                cond = F.lit(True)
-                if lo:
-                    cond = cond & (F.struct(*[F.col(c) for c in cols[: len(lo)]]) >= _bound(lo))
-                if hi:
-                    cond = cond & (F.struct(*[F.col(c) for c in cols[: len(hi)]]) <= _bound(hi))
-                return cond, depth
-            # C3/C4 — flat (open) range on the first level
-            if lo_s and hi_s:
-                return first.between(_atom(lo_s, first_numeric), _atom(hi_s, first_numeric)), 1
-            if lo_s:
-                return first >= F.lit(_atom(lo_s, first_numeric)), 1
-            return first <= F.lit(_atom(hi_s, first_numeric)), 1
-
-        # C6 — hierarchy level path: equality down the declared order
-        if "," in spec:
-            parts = spec.split(",")
-            cond = F.lit(True)
-            for col, val in zip(cols, parts):
-                numeric = _is_numeric(df.schema[col].dataType)
-                cond = cond & (F.col(col) == F.lit(_atom(val.strip(), numeric)))
-            return cond, len(parts)
-
-        # C1 — plain equality slice on the first hierarchy level
-        return first == F.lit(_atom(spec, first_numeric)), 1
+        # C1/C6 — path: equality down the walk (C1 is one component)
+        vals = typed(spec)
+        return (
+            reduce(operator.and_, (F.col(c) == v for c, v in zip(cols, vals))),
+            len(vals),
+        )
 
     # -- drilldown resolution (D1-D5) ---------------------------------------
 
@@ -384,10 +352,9 @@ class CubeEngine:
         """``GET /olap/<fact>/aggregate`` → DataFrame.
 
         The emitted plan is a single filter→groupBy→agg→orderBy chain;
-        cut conditions land on the fact's scope/partition columns.  An
-        equality, level-path or flat-range cut prunes partitions; a C7
-        tuple range (the connector's ``date:Y,M,D-Y,M,D`` window) does
-        not today (ROADMAP direction 1, finding 2).
+        cut conditions land on the fact's scope/partition columns, so
+        every cut form on the date walk prunes partitions, the
+        connector's ``date:Y,M,D-Y,M,D`` window included.
 
         ``top_n`` is an extension beyond the reference surface: keep
         only the N highest rows by the (first) measure.  With
@@ -442,9 +409,10 @@ class CubeEngine:
         below-cut rule), and resolve each measure to ``(measure,
         aggregate, fractional)`` in ``q.measures`` — the one place the
         per-measure allowed-aggregate check (M5) runs.  The compiled
-        conditions cast their literals to the fact's column types; a
-        rollup carries the same columns with the same types, so the
-        same conditions filter it unchanged."""
+        conditions compare level columns by name with literals typed
+        against the fact's schema; a rollup carries the same columns
+        with the same types, so the same conditions filter it
+        unchanged."""
         meta = self.catalog.fact(fact)
         df = self.frame(fact)
         q = CubeQuery(

@@ -57,6 +57,9 @@ LEDGER_DIR = "_scopes"
 #: A week label ``gate`` can emit (``timescope.week_label``).
 _WEEK_LABEL = re.compile(r"Y\d+-W\d\d")
 
+#: The directory value a NULL partition column is written under.
+_NULL_PARTITION = "__HIVE_DEFAULT_PARTITION__"
+
 
 def _scope_marker(query_id: int, scope: Scope) -> str:
     """The ledger name stem of one ``(queryId, scope)``:
@@ -238,6 +241,25 @@ class SnapshotEngine:
         jvm = self.spark._jvm
         hpath = jvm.org.apache.hadoop.fs.Path(path)
         return hpath.getFileSystem(self.spark._jsc.hadoopConfiguration()), hpath
+
+    def _partitions(self, fact_table: str):
+        """Hadoop FileSystem + ``[(year dir, [month dirs])]`` for every
+        ``year=*`` directory of the fact, from listings only (no data
+        read); empty when the fact has no directory."""
+        fs, hpath = self._fs(self._path(fact_table))
+        if not fs.exists(hpath):
+            return fs, []
+        out = []
+        for ystat in fs.listStatus(hpath):
+            ypath = ystat.getPath()
+            if ypath.getName().startswith("year="):
+                months = [
+                    st.getPath()
+                    for st in fs.listStatus(ypath)
+                    if st.getPath().getName().startswith("month=")
+                ]
+                out.append((ypath, months))
+        return fs, out
 
     def fact_frame(self, fact_table: str) -> DataFrame:
         """Read a fact table with schema merge across evolved appends."""
@@ -489,37 +511,37 @@ class SnapshotEngine:
         strictly OLDER than the given boundary — directory-level
         deletes through the Hadoop FS (no data scan, no rewrite; the
         whole point of partitioning by the retention dimension).
-        Returns the removed partition names.  Compliance deletions
-        inside a partition are a different operation (rewrite via
-        ``upsert``); this is the cheap calendar-based tier.
+        Returns the removed partition names.  A yearly fact's
+        partition has no month and expires only once its whole year is
+        older than ``before_year``.  Compliance deletions inside a
+        partition are a different operation (rewrite via ``upsert``);
+        this is the cheap calendar-based tier.
         """
         self._require_parquet("expire_partitions")
-        fs, hpath = self._fs(self._path(fact_table))
-        if not fs.exists(hpath):
-            return []
+        fs, partitions = self._partitions(fact_table)
         removed = []
-        for ystat in fs.listStatus(hpath):
-            yname = ystat.getPath().getName()
-            if not yname.startswith("year="):
-                continue
-            year = int(yname.split("=", 1)[1])
-            for mstat in fs.listStatus(ystat.getPath()):
-                mname = mstat.getPath().getName()
-                if not mname.startswith("month="):
-                    continue
-                month = int(mname.split("=", 1)[1])
-                if (year, month) < (before_year, before_month):
+        for ypath, months in partitions:
+            year = int(ypath.getName().split("=", 1)[1])
+            for mpath in months:
+                month = mpath.getName().split("=", 1)[1]
+                # a yearly fact's rows have no month (a NULL partition
+                # value): they expire with their whole year
+                if month == _NULL_PARTITION:
+                    expired = year < before_year
+                else:
+                    expired = (year, int(month)) < (before_year, before_month)
+                if expired:
                     if not removed:
                         # expired scopes must read as not executed, so
                         # a re-backfill of the month re-snapshots it
                         self._drop_ledger(fact_table)
-                    fs.delete(mstat.getPath(), True)
-                    removed.append(f"{yname}/{mname}")
+                    fs.delete(mpath, True)
+                    removed.append(f"{ypath.getName()}/{mpath.getName()}")
             if not any(
                 st.getPath().getName().startswith("month=")
-                for st in fs.listStatus(ystat.getPath())
+                for st in fs.listStatus(ypath)
             ):
-                fs.delete(ystat.getPath(), True)
+                fs.delete(ypath, True)
         return sorted(removed)
 
     def vacuum(self) -> list[str]:
@@ -694,26 +716,18 @@ def table_stats(engine: SnapshotEngine, fact_table: str) -> list[dict]:
     decisions: a partition with hundreds of small files wants
     compaction; one with none wants its retention checked.
     """
-    fs, hpath = engine._fs(engine._path(fact_table))
-    if not fs.exists(hpath):
-        return []
+    fs, partitions = engine._partitions(fact_table)
     out = []
-    for ystat in fs.listStatus(hpath):
-        yname = ystat.getPath().getName()
-        if not yname.startswith("year="):
-            continue
-        for mstat in fs.listStatus(ystat.getPath()):
-            mname = mstat.getPath().getName()
-            if not mname.startswith("month="):
-                continue
+    for ypath, months in partitions:
+        for mpath in months:
             files = [
                 st
-                for st in fs.listStatus(mstat.getPath())
+                for st in fs.listStatus(mpath)
                 if st.getPath().getName().endswith(".parquet")
             ]
             out.append(
                 {
-                    "partition": f"{yname}/{mname}",
+                    "partition": f"{ypath.getName()}/{mpath.getName()}",
                     "n_files": len(files),
                     "bytes": int(sum(st.getLen() for st in files)),
                 }

@@ -520,7 +520,7 @@ GROUP BY 1, 2
 )
 def q_cut_hierarchy_range(spark: SparkSession, sf_dir: str) -> DataFrame:
     """C7 — hierarchy tuple range (cut=date:2016,10-2017,02 analog),
-    compiled to a composite struct comparison."""
+    compiled to lexicographic (year, month) column comparisons."""
     return _cube(
         spark,
         sf_dir,

@@ -126,14 +126,18 @@ def test_audit_priority_follows_the_red_ids(synthetic_ledger, monkeypatch):
 
 def test_no_ledger_gives_registration_order(tmp_path):
     """Every registered id has an oracle, so without ledger files the
-    audit order is the registration order."""
+    audit order is the ``_AUDIT_PRIORITY`` ids, then the registration
+    order."""
     from opl_spark import workload
 
     qs, osql = workload.queries(), workload.oracle_sql()
     assert set(osql) == set(qs)
     ledger = entry.audit_ledger(str(tmp_path))
     assert ledger == {}
-    assert entry.audit_order(qs, osql, ledger) == list(qs)
+    prio = list(entry._AUDIT_PRIORITY)
+    assert entry.audit_order(qs, osql, ledger) == prio + [
+        n for n in qs if n not in prio
+    ]
 
 
 def test_order_does_not_depend_on_the_cwd(tmp_path, order):

@@ -161,6 +161,38 @@ def test_having_parser_rejects_arbitrary_strings_without_injection():
     check()
 
 
+def test_range_never_matches_a_null_level(spark):
+    """A tuple range compares level by level, so a NULL level it has to
+    look at excludes the row, as an equality cut and a MySQL row
+    comparison do.  (A struct comparison sorted NULL first, so
+    ``(1997, NULL)`` passed the upper bound ``1997,3``.)"""
+    rows = [(1996, 12, 1), (1997, None, 1), (1997, 3, 1), (None, 1, 1), (1998, 1, 1)]
+    df = spark.createDataFrame(
+        [(y, m, d, 3, "a") for y, m, d in rows],
+        "year long, month long, day long, lib long, kind string",
+    )
+    eng = CubeEngine(Catalog({"f": META}))
+    eng.register_fact("f", df)
+    out = eng.aggregate(
+        "f",
+        cut="date:1996,1-1997,3",
+        drilldown="date:year|date:month|date:day",
+        measure="value",
+        aggregate="count",
+    )
+    got = {(r["year"], r["month"], r["day"]) for r in out.collect()}
+    assert got == {(1996, 12, 1), (1997, 3, 1)}
+
+
+def test_set_members_are_stripped(engine):
+    """``;`` set members are stripped like path components, so
+    ``kind:a; b`` selects the ``b`` rows too."""
+    out = engine.aggregate(
+        "f", cut="kind:a; b", drilldown="kind", measure="value", aggregate="count"
+    )
+    assert sorted(r["kind"] for r in out.collect()) == ["a", "b"]
+
+
 # ---------------------------------------------------------------------------
 # dash-valued string levels (the iso_week shape) — r11 grammar hardening
 # ---------------------------------------------------------------------------

@@ -231,6 +231,22 @@ def test_expire_partitions_drops_only_older_months(registered, tmp_path):
     assert eng.expire_partitions("f_ttl", 1998, 1) == []
 
 
+def test_expire_partitions_keeps_a_yearly_fact_until_its_year_is_over(
+    registered, tmp_path
+):
+    """A yearly fact's rows have no month, so they sit under Hive's
+    NULL partition directory; they expire with their whole year."""
+    eng = SnapshotEngine(registered, str(tmp_path))
+    sql = "SELECT r_regionkey AS k FROM region"
+    eng.run("1997-12-31", [FactQuery(1, "f_yearly", sql, cron="yearly")])
+    assert eng.expire_partitions("f_yearly", 1997, 12) == []
+    assert eng.fact_frame("f_yearly").count() == 5
+    assert eng.expire_partitions("f_yearly", 1998, 1) == [
+        "year=1997/month=__HIVE_DEFAULT_PARTITION__"
+    ]
+    assert not eng.exists("f_yearly")
+
+
 def test_table_stats_reports_partition_files_and_bytes(registered, tmp_path):
     from opl_spark.snapshot import table_stats
 

@@ -94,10 +94,24 @@ def test_tuple_range_cut_prunes_on_leading_level(warehouse_engine):
         drilldown="date:year|date:month",
         measure="value",
     )
-    # the composite (year, month) struct comparison must still reach
-    # the partition columns so the range prunes directories
+    # the tuple range compiles to plain (year, month) comparisons,
+    # which reach the partition columns so the range prunes directories
     pf = partition_filters(df)
     assert pf and "year" in pf[0], pf
+
+
+def test_connector_day_window_prunes_year_and_month(warehouse_engine):
+    """The connector's ``date:Y,M,D-Y,M,D`` window also compares
+    ``day``, which is no partition column; Catalyst still derives a
+    partition filter from the (year, month) part of each bound."""
+    df = warehouse_engine.aggregate(
+        "loans2",
+        cut="date:1994,12,20-1995,1,16",
+        drilldown="segment",
+        measure="value",
+    )
+    pf = partition_filters(df)
+    assert pf and "year" in pf[0] and "month" in pf[0], pf
 
 
 # ---------------------------------------------------------------------------
