@@ -255,53 +255,6 @@ class Catalog:
                 cat.add(cls._fact_from_dict(fn[: -len(".json")], spec))
         return cat
 
-    @staticmethod
-    def _fact_to_dict(meta: FactMeta) -> dict:
-        """Inverse of :meth:`_fact_from_dict` — the ``<factName>.json``
-        document for one fact."""
-        return {
-            "label": meta.label,
-            "dimensions": [
-                {
-                    "name": d.name,
-                    "label": d.label,
-                    "levels": [
-                        {
-                            "name": lv.name,
-                            **({"column": lv.column} if lv.column else {}),
-                            "attributes": list(lv.attributes),
-                        }
-                        for lv in d.levels
-                    ],
-                    "hierarchies": [
-                        {"name": h.name, "order": list(h.order)} for h in d.hierarchies
-                    ],
-                }
-                for d in meta.dimensions
-            ],
-            "measures": [
-                {
-                    "name": m.name,
-                    "label": m.label,
-                    "column": m.physical,
-                    "aggregates": list(m.aggregates),
-                }
-                for m in meta.measures
-            ],
-            "mappings": dict(meta.mappings),
-        }
-
-    def to_dir(self, path: str) -> None:
-        """Write every fact as ``<factName>.json`` — the per-fact
-        metadata artifact the reference requires next to
-        olapSettings.json (api-library-olap/README.md:90-95); an
-        operator migrating off the reference carries exactly these
-        files."""
-        os.makedirs(path, exist_ok=True)
-        for name, meta in self._facts.items():
-            with open(os.path.join(path, f"{name}.json"), "w") as f:
-                json.dump(self._fact_to_dict(meta), f, indent=2, sort_keys=True)
-                f.write("\n")
 
 
 def conformed_dimensions(catalog: "Catalog", facts: list[str]) -> list[dict]:

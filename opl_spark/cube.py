@@ -2,7 +2,8 @@
 
 Compiles the reference API's query grammar (reference:
 api-library-olap/README.md:16-88) into a single declarative DataFrame
-plan ``df.filter(...).groupBy(...).agg(...).orderBy(...)`` and lets
+plan ``df.filter(...).groupBy(...).agg(...)``, sorted in one
+partition (``coalesce(1).sortWithinPartitions(...)``), and lets
 Catalyst do the rest (predicate pushdown, partition pruning on scope
 columns, AQE).  There is deliberately NO custom physical planning —
 SURVEY.md §4: every rewrite this workload needs is stock Catalyst.
@@ -351,7 +352,7 @@ class CubeEngine:
     ) -> DataFrame:
         """``GET /olap/<fact>/aggregate`` → DataFrame.
 
-        The emitted plan is a single filter→groupBy→agg→orderBy chain;
+        The emitted plan is a single filter→groupBy→agg→sort chain;
         cut conditions land on the fact's scope/partition columns, so
         every cut form on the date walk prunes partitions, the
         connector's ``date:Y,M,D-Y,M,D`` window included.
@@ -487,8 +488,11 @@ class CubeEngine:
             out = self._apply_top(out, len(group_cols), int(top_n), top_within)
         if not group_cols:
             return out
-        # deterministic ordering — required by output=table consumers
-        return out.orderBy(*out.columns[: len(group_cols)])
+        # deterministic ordering — required by output=table consumers.
+        # The result is report-sized, so it is sorted in one partition:
+        # a global orderBy would range-partition it, which costs a
+        # sampling job and an exchange per request
+        return out.coalesce(1).sortWithinPartitions(*out.columns[: len(group_cols)])
 
     def drill_across(
         self,
@@ -541,7 +545,7 @@ class CubeEngine:
                         f"{gcols}, expected conformed {keys}"
                     )
                 joined = joined.join(renamed, keys, "full_outer")
-        return joined.orderBy(*keys)
+        return joined.coalesce(1).sortWithinPartitions(*keys)  # as in _answer
 
     @staticmethod
     def _apply_share(

@@ -380,14 +380,6 @@ def contamination(
 MINHASH_PRIME = 2147483647
 
 
-def portable_hash32_col(c: Column) -> Column:
-    """Engine-portable 32-bit string hash: the first 8 hex chars of
-    md5 as an integer.  DuckDB replays it as
-    ``CAST(('0x' || substr(md5(s), 1, 8)) AS UBIGINT)`` — the same
-    idiom the DSIR oracle uses for its hashed token buckets."""
-    return F.conv(F.substring(F.md5(c), 1, 8), 16, 10).cast("long")
-
-
 def minhash_permutation(i: int) -> tuple[int, int]:
     """The (aᵢ, bᵢ) of portable permutation ``hᵢ(x) = (aᵢ·x + bᵢ) mod
     P`` — Knuth-style multiplicative constants reduced mod P, with

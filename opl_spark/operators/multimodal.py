@@ -210,20 +210,6 @@ def _bmp_tools():
 bmp_decode, bmp_encode, bmp_area_resize = _bmp_tools()
 
 
-def _fake_decode(media_bytes: bytes) -> tuple[int, int, list[float]]:
-    """Deterministic stand-in decoder: dimensions and a feature vector
-    derived from the raw bytes (NOT a real codec — see module doc)."""
-    n = len(media_bytes)
-    width = (n % 64) + 1
-    height = (n % 48) + 1
-    # 8-dim "feature": byte-sum folded per stride bucket, normalized
-    feat = [0.0] * 8
-    for i, by in enumerate(media_bytes):
-        feat[i % 8] += by
-    total = sum(feat) or 1.0
-    return width, height, [round(f / total, 6) for f in feat]
-
-
 def export_tar_shards(
     df: DataFrame,
     path: str,

@@ -17,10 +17,9 @@ Three tiers, per the standard ANN playbook:
   ``nprobe/ncells`` of the store.
 
 The hot loops (pair dots, query dots, centroid assignment) run as
-Arrow-batched numpy kernels (Pandas UDFs); the pure-expression
-``zip_with``/``aggregate`` forms are kept as reference building
-blocks.  All math is double; similarities surface rounded(6), which
-absorbs the ~1e-15 summation-order differences between numpy, Spark
+Arrow-batched numpy kernels (Pandas UDFs).  All math is double;
+similarities surface rounded(6), which absorbs the ~1e-15
+summation-order differences between numpy, Spark
 expressions, and the DuckDB oracle.
 
 Centroid choice here is deterministic seeding (first ``k`` vectors);
@@ -38,14 +37,6 @@ from pyspark.sql.functions import pandas_udf
 from pyspark.sql.window import Window
 
 
-def _as_double(vec: Column) -> Column:
-    return F.transform(vec, lambda x: x.cast("double"))
-
-
-def _lit_vec(vals: list[float]) -> Column:
-    return F.array(*[F.lit(float(v)).cast("double") for v in vals])
-
-
 def dot_col(a: Column, b: Column) -> Column:
     """Sequential-order dot product (index order, double)."""
     return F.aggregate(
@@ -55,14 +46,6 @@ def dot_col(a: Column, b: Column) -> Column:
 
 def norm_col(a: Column) -> Column:
     return F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, x: acc + x * x))
-
-
-def cosine_sim_col(vec: Column, query: list[float]) -> Column:
-    """Cosine similarity of a vector column against a literal query
-    (pure-expression reference path)."""
-    v = _as_double(vec)
-    q = _lit_vec(query)
-    return dot_col(v, q) / (norm_col(v) * norm_col(q))
 
 
 # ---------------------------------------------------------------------------
@@ -84,24 +67,6 @@ def _stack(s: pd.Series) -> np.ndarray:
     # reference to this package, which Python workers launched by an
     # external harness cannot import.
     return np.stack(s.to_numpy()).astype(np.float64, copy=False)
-
-
-def cosine_pair_udf() -> Column:
-    """pandas_udf (va, vb) → cosine similarity, rowwise over a batch."""
-
-    @pandas_udf("double")
-    def cos(va: pd.Series, vb: pd.Series) -> pd.Series:
-        if len(va) == 0:
-            return pd.Series(np.empty(0, dtype=np.float64))
-        stack = lambda s: np.stack(s.to_numpy()).astype(np.float64, copy=False)  # noqa: E731
-        a, b = stack(va), stack(vb)
-        num = np.einsum("ij,ij->i", a, b)
-        den = np.sqrt(np.einsum("ij,ij->i", a, a)) * np.sqrt(
-            np.einsum("ij,ij->i", b, b)
-        )
-        return pd.Series(num / den)
-
-    return cos
 
 
 def cosine_lit_udf(query: list[float]):
@@ -136,17 +101,6 @@ def assign_cell_udf(centroids: list[tuple[int, list[float]]]):
         return pd.Series(ids[np.argmin(d2, axis=1)])
 
     return cell
-
-
-def sqdist_col(a: Column, b: Column) -> Column:
-    """Squared euclidean distance, sequential order (no sqrt — it's
-    only ever compared, and dropping it keeps cross-engine argmins
-    bit-stable)."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
 
 
 def topk_scored(

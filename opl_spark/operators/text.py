@@ -107,28 +107,6 @@ def fingerprint_col(text: Column) -> Column:
     )
 
 
-def winnow_col(text: Column, n: int = 3, window: int = 4) -> Column:
-    """Winnowing fingerprints (Schleimer/Wilkerson/Aiken, SIGMOD'03):
-    hash every positional n-gram shingle, slide a ``window`` over the
-    hash sequence, keep each window's minimum — the distinct minima
-    are the document's fingerprint set (guaranteed to share members
-    with any document overlapping ≥ window+n-1 words).
-
-    The rolling hash is ``md5`` (hex string, min = lexicographic):
-    deterministic and IDENTICAL across engines, so the operator is
-    SQL-oracle-checkable — a numeric xxhash would be Spark-private.
-
-    NOTE: this single-expression form references the hash array once
-    per ``least``-chain link, and duplicated non-cheap subtrees
-    re-evaluate inside interpreted HOF projections — prefer
-    :func:`winnow_fingerprints`, which materializes the hash array as
-    a named column first (~6× faster; CollapseProject is cost-aware
-    and keeps the alias).
-    """
-    hs = hashed_shingles_col(text, n)
-    return _winnow_minima(hs, F.array_size(hs), window)
-
-
 def hashed_shingles_col(text: Column, n: int = 3) -> Column:
     """md5 over each positional n-gram shingle (the winnowing input)."""
     from opl_spark.operators.dedup import shingle_seq_col

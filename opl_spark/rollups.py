@@ -35,6 +35,7 @@ import json
 import os
 import re
 import shutil
+import uuid
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -96,6 +97,11 @@ class RollupStore:
     comes from the fact schema, as on the fact path, so the
     ``fractional`` flag older manifests record per measure is not
     read.
+
+    ``materialize`` and ``refresh`` publish the manifest whole
+    (:meth:`_publish`); a request routes (:meth:`_route`) and reads its
+    rollup from one lattice snapshot (:meth:`_lattice`), so it never
+    mixes two manifests.
     """
 
     def __init__(self, spark: SparkSession, base_dir: str):
@@ -105,15 +111,16 @@ class RollupStore:
         # re-reading the manifest JSON, re-resolving every rollup's
         # parquet file index, and re-listing the fact's input files on
         # EVERY request cost more than the routed scan saved.  The
-        # manifest cache keys on the file's mtime (a re-materialize —
-        # this process or another — rewrites it, invalidating both
-        # caches); the frame cache keys on the manifest identity; the
+        # lattice cache holds one snapshot per fact, (manifest mtime,
+        # manifest, {rollup key: frame}), replaced whole when
+        # lattice_version() changes: a re-materialize or refresh, in
+        # this process or another, publishes a new manifest, and the
+        # frames go with the manifest that listed them.  The
         # fact-version cache holds one entry per fact, valid for the
         # registered frame OBJECT it pins, whose resolved file index is
         # immutable (a re-registration is a new object and replaces the
         # entry; SnapshotEngine appends re-register).
-        self._manifest_cache: dict[str, tuple[float, dict]] = {}
-        self._frame_cache: dict[tuple, DataFrame] = {}
+        self._lattices: dict[str, tuple[int | None, dict, dict]] = {}
         self._version_cache: dict[str, tuple[DataFrame, str]] = {}
 
     def _fact_dir(self, fact: str) -> str:
@@ -125,7 +132,7 @@ class RollupStore:
     def lattice_version(self, fact: str) -> int | None:
         """Identity of ``fact``'s lattice: its manifest's mtime (ns), or
         None when nothing is materialized.  ``materialize`` and
-        ``refresh`` rewrite the manifest — in this process or another
+        ``refresh`` publish a new manifest — in this process or another
         — so any change to the lattice changes this token; response
         caches over routed aggregates key on it."""
         try:
@@ -133,31 +140,36 @@ class RollupStore:
         except FileNotFoundError:
             return None
 
-    def _load_manifest(self, fact: str) -> dict:
-        mtime = self.lattice_version(fact)
-        if mtime is None:
-            return {"rollups": {}, "measures": {}}
-        path = self._manifest_path(fact)
-        hit = self._manifest_cache.get(fact)
-        if hit is not None and hit[0] == mtime:
-            return hit[1]
-        with open(path) as fh:
-            manifest = json.load(fh)
-        self._manifest_cache[fact] = (mtime, manifest)
-        # manifest changed on disk → any cached rollup frames list files
-        # a re-materialize may have replaced
-        self._frame_cache = {
-            k: v for k, v in self._frame_cache.items() if k[0] != fact
-        }
-        return manifest
+    def _lattice(self, fact: str) -> tuple[int | None, dict, dict]:
+        """``fact``'s lattice snapshot ``(version, manifest, {rollup
+        key: frame})``, for one stat of the manifest when it is
+        unchanged.  Otherwise the manifest is read once, and the new
+        snapshot takes its version from the open file, so the version
+        is that of the manifest it holds."""
+        version = self.lattice_version(fact)
+        snap = self._lattices.get(fact)
+        if snap is None or snap[0] != version:
+            snap = (None, {"rollups": {}, "measures": {}}, {})
+            if version is not None:
+                with open(self._manifest_path(fact)) as fh:
+                    snap = (os.fstat(fh.fileno()).st_mtime_ns, json.load(fh), {})
+            self._lattices[fact] = snap
+        return snap
 
-    def _rollup_frame(self, fact: str, key: str, version) -> DataFrame:
-        ck = (fact, key, version)
-        df = self._frame_cache.get(ck)
-        if df is None:
-            df = self.spark.read.parquet(os.path.join(self._fact_dir(fact), key))
-            self._frame_cache[ck] = df
-        return df
+    def _publish(self, fact: str, manifest: dict) -> None:
+        """The one manifest write: a temp file beside ``_LATTICE.json``,
+        then ``os.replace``, so a reader (this process or another) sees
+        the old manifest or the new one, never a partial one."""
+        os.makedirs(self._fact_dir(fact), exist_ok=True)
+        path = self._manifest_path(fact)
+        tmp = f"{path}.{uuid.uuid4().hex}.tmp"
+        try:
+            with open(tmp, "w") as fh:
+                json.dump(manifest, fh, indent=1, sort_keys=True)
+            os.replace(tmp, path)
+        finally:
+            if os.path.exists(tmp):
+                os.unlink(tmp)
 
     def _fact_version_cached(self, fact: str, frame: DataFrame) -> str:
         # the registered frame is a long-lived object in the engine's
@@ -190,12 +202,12 @@ class RollupStore:
         partials = _partials(meta.measures)
         measures_info = {m.name: {"physical": m.physical} for m in meta.measures}
         # staleness guard: record WHICH fact files these rollups were
-        # aggregated from; route() refuses the lattice when the live
+        # aggregated from; _route() refuses the lattice when the live
         # fact has since gained files.  A rollup this call does not
         # rebuild is kept only if it was aggregated from the same files
         # — the new stamp must not vouch for a pre-append rollup
         version = _fact_version(base)
-        old = self._load_manifest(fact)
+        old = self._lattice(fact)[1]
         kept = old["rollups"] if old.get("fact_version") == version else {}
         manifest = {
             "measures": measures_info,
@@ -209,9 +221,7 @@ class RollupStore:
             rolled.write.mode("overwrite").parquet(path)
             rows = self.spark.read.parquet(path).count()
             manifest["rollups"][key] = {"cols": cols, "rows": rows}
-        os.makedirs(self._fact_dir(fact), exist_ok=True)
-        with open(self._manifest_path(fact), "w") as fh:
-            json.dump(manifest, fh, indent=1, sort_keys=True)
+        self._publish(fact, manifest)
         # best-effort delete of the dropped stale rollups' files, once
         # no manifest lists them
         for key in old["rollups"].keys() - manifest["rollups"].keys():
@@ -317,49 +327,38 @@ class RollupStore:
 
     # -- route + answer -----------------------------------------------------
 
-    def route(
-        self, fact: str, needed_cols: set[str], current_version: str | None = None
-    ) -> dict | None:
-        """Smallest (by materialized row count) rollup whose grouping
-        covers every needed column; None when nothing covers.
-
-        ``current_version`` (a :func:`_fact_version` token of the LIVE
-        fact frame) arms the staleness guard: when it differs from the
-        version recorded at materialize/refresh time — new snapshot
-        files appended since — every rollup is stale and nothing
-        routes, so callers transparently fall back to the live engine
-        instead of serving pre-ingest aggregates.  A manifest without
-        a recorded version (pre-guard lattice) is treated as stale for
-        the same reason.  Pass ``None`` to skip the check (trusted
-        contexts, e.g. a freshness-managed refresh loop)."""
-        manifest = self._load_manifest(fact)
-        if current_version is not None and manifest.get("fact_version") != current_version:
-            return None
-        best = None
-        for key, info in manifest["rollups"].items():
-            if needed_cols <= set(info["cols"]):
-                if best is None or info["rows"] < best["rows"]:
-                    best = {"key": key, **info}
-        return best
-
     def _route(
-        self, engine: CubeEngine, fact: str, q, group_cols: list[str]
+        self, engine: CubeEngine, fact: str, q, group_cols: list[str], manifest: dict
     ) -> tuple[dict | None, str]:
-        """The routing step :meth:`aggregate` and :meth:`route_report`
-        share, over the engine's plan of the request: ``(rollup,
-        "")`` when a rollup covers the planned query and every
-        aggregate derives from its partials, else ``(None, reason)``."""
-        manifest = self._load_manifest(fact)
+        """The one router, shared by :meth:`aggregate` and
+        :meth:`route_report`, over the engine's plan of the request and
+        one snapshot's manifest: ``(rollup, "")`` for the smallest (by
+        materialized row count) rollup that covers the planned query
+        when every aggregate derives from its partials, else ``(None,
+        reason)``.
+
+        Staleness guard: the manifest records the version
+        (:func:`_fact_version`) of the fact files the lattice was built
+        from.  When the registered fact frame's version differs (new
+        snapshot files appended since), every rollup is stale and
+        nothing routes, so the request falls back to the live fact
+        instead of serving pre-ingest aggregates.  A manifest without a
+        recorded version (a pre-guard lattice) is stale too."""
         for m, agg, _ in q.measures:
             if agg not in engine.DERIVABLE or m.name not in manifest["measures"]:
                 return None, f"aggregate {agg!r} not derivable"
         needed = self._needed_cols(q, group_cols)
-        hit = self.route(
-            fact, needed, self._fact_version_cached(fact, engine.frame(fact))
+        fresh = manifest.get("fact_version") == self._fact_version_cached(
+            fact, engine.frame(fact)
         )
-        if hit is None:
+        covering = [
+            {"key": key, **info}
+            for key, info in manifest["rollups"].items()
+            if fresh and needed <= set(info["cols"])
+        ]
+        if not covering:
             return None, f"no rollup covers {sorted(needed)}"
-        return hit, ""
+        return min(covering, key=lambda hit: hit["rows"]), ""
 
     def route_report(self, engine: CubeEngine, fact: str, **params) -> dict:
         """Routedness evidence for one request shape: which rollup (if
@@ -369,7 +368,7 @@ class RollupStore:
         routing (they apply to the report-sized routed result), so
         only the core params participate."""
         q, group_cols = engine._plan(fact, *(params.get(k) for k in CORE_PARAMS))
-        hit, reason = self._route(engine, fact, q, group_cols)
+        hit, reason = self._route(engine, fact, q, group_cols, self._lattice(fact)[1])
         if hit is None:
             return {"routed": False, "rollup": None, "reason": reason}
         return {"routed": True, "rollup": hit["key"], "rows": hit["rows"]}
@@ -398,7 +397,7 @@ class RollupStore:
         step runs over the rollup or the fact: the cut compiled
         against the fact filters either, and the aggregates (built
         from re-reduced partials or from fact columns) feed the same
-        groupBy → share → having → top_n → orderBy path.  So
+        groupBy → share → having → top_n → sort path.  So
         ``share``/``having``/``top_n`` ride the re-aggregated report
         (the exact same dims × levels rows) instead of forcing the
         request back to the fact scan.  Equality with the base engine
@@ -407,11 +406,15 @@ class RollupStore:
         q, group_cols = engine._plan(
             fact, cut, drilldown, measure, aggregate, hierarchy
         )
-        hit, _ = self._route(engine, fact, q, group_cols)
+        _, manifest, frames = self._lattice(fact)
+        hit, _ = self._route(engine, fact, q, group_cols, manifest)
         src, part = engine.frame(fact), None
         if hit is not None:
-            version = self._load_manifest(fact).get("fact_version")
-            src, part = self._rollup_frame(fact, hit["key"], version), _reduced
+            key = hit["key"]
+            if key not in frames:
+                path = os.path.join(self._fact_dir(fact), key)
+                frames[key] = self.spark.read.parquet(path)
+            src, part = frames[key], _reduced
         return engine._answer(
             src, q, group_cols, part,
             top_n=top_n, top_within=top_within, having=having,
@@ -430,18 +433,28 @@ class RollupStore:
         tests/test_rollups.py).  Updates/deletes need re-materialize —
         min/max partials are not subtractable.
 
-        Same write-to-temp + two-rename swap as ``snapshot.compact``:
-        a crash mid-write leaves the live rollup intact.
+        Each rollup gets the same write-to-temp + two-rename swap as
+        ``snapshot.compact`` (a crash mid-write leaves the live rollup
+        intact), then one new manifest is published over the old one.
+
+        Contract: refresh runs AFTER the delta landed in the fact table
+        and the engine's registered frame reflects it (register a fresh
+        frame post-append).  The refreshed rollups cover base ∪ delta,
+        so the new manifest stamps the version of the engine's CURRENT
+        fact frame, which the routing staleness guard then accepts; a
+        pre-append frame would stamp the old listing, and requests would
+        fall back to the fact until the next materialize.
         """
         meta = engine.catalog.fact(fact)
-        manifest = self._load_manifest(fact)
+        old = self._lattice(fact)[1]
         delta_partials = _partials(meta.measures)
         re_reduce = [
             _reduced(m, kind).alias(f"{prefix}_{m.name}")
             for m in meta.measures
             for kind, (prefix, _) in _PARTIALS.items()
         ]
-        for key, info in manifest["rollups"].items():
+        rollups = {}
+        for key, info in old["rollups"].items():
             cols = info["cols"]
             path = os.path.join(self._fact_dir(fact), key)
             d = delta.groupBy(*cols).agg(*delta_partials)
@@ -454,15 +467,11 @@ class RollupStore:
             tmp = path + "__refreshing"
             merged.write.mode("overwrite").parquet(tmp)
             swap_in(self.spark, path, tmp, "rollup refresh")
-            info["rows"] = self.spark.read.parquet(path).count()
-        # the refreshed rollups now cover base ∪ delta: re-stamp the
-        # version from the engine's CURRENT fact frame so route()'s
-        # staleness guard accepts them again.  Contract: refresh runs
-        # AFTER the delta landed in the fact table and the engine's
-        # registered frame reflects it (register a fresh frame post-
-        # append) — else the stamp records the pre-append listing and
-        # the guard keeps falling back until the next materialize.
-        manifest["fact_version"] = _fact_version(engine.frame(fact))
-        with open(self._manifest_path(fact), "w") as fh:
-            json.dump(manifest, fh, indent=1, sort_keys=True)
+            rollups[key] = {**info, "rows": self.spark.read.parquet(path).count()}
+        manifest = {
+            **old,
+            "rollups": rollups,
+            "fact_version": _fact_version(engine.frame(fact)),
+        }
+        self._publish(fact, manifest)
         return manifest

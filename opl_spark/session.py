@@ -56,6 +56,13 @@ def get_spark(
         #     a long session of AQE broadcast joins can exhaust the driver
         #     heap before a full GC ever runs (BENCH_r09 crash) ---
         .config("spark.cleaner.periodicGC.interval", "1min")
+        # --- PySpark's DataFrame debugging records the Python call site
+        #     around every Column operator: 11 py4j round trips instead
+        #     of 1.  Off, error messages lose the call-site fragment;
+        #     exception types are unchanged.  PySpark reads this once per
+        #     process from the first active session, so it must be a
+        #     builder config, not a runtime spark.conf.set ---
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     # Driver heap knob for long local sessions.  Only effective when set
     # BEFORE the JVM launches (first pyspark import / getOrCreate) —

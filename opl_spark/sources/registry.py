@@ -186,18 +186,6 @@ def register_jdbc_catalog(
             pass
 
 
-def read_json_rows(spark: SparkSession, path: str) -> DataFrame:
-    """Script-source equivalent: rows as a JSON-lines file.
-
-    The reference shells out and parses stdout as a JSON array of row
-    objects (OLAP.php:73-79 ``initByScript``); distributed-native
-    ingestion reads JSON lines with schema inference over all rows
-    (strictly better than the reference's first-row-only inference,
-    OLAP.php:251-272).
-    """
-    return spark.read.json(path)
-
-
 def _looks_like_date(value: str) -> bool:
     """The reference's ``isDate`` probe (OLAP.php:287-297): a string
     that the date parser accepts makes the column DATETIME.  PHP's

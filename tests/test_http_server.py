@@ -244,13 +244,14 @@ def test_aggregate_routes_through_lattice_and_breaking_it_shows(routed_server):
     assert "latency_lattice" in formatted_plan(df), (
         "core aggregate did not route through the rollup lattice"
     )
-    orig = store.route
+    orig = store._route
     try:
-        store.route = lambda *a, **k: None  # deliberately broken routing
+        # deliberately broken routing
+        store._route = lambda *a, **k: (None, "routing broken")
         broken = api._build_aggregate_df("loans2", dict(AGG_PARAMS))
         assert "latency_lattice" not in formatted_plan(broken)
     finally:
-        store.route = orig
+        store._route = orig
 
 
 def test_http_aggregate_latency_guard(routed_server):

@@ -58,11 +58,46 @@ def test_routed_equals_base_engine(navigator, kwargs):
 
 def test_route_picks_smallest_covering_rollup(navigator):
     engine, store = navigator
-    hit = store.route("loans2", {"year", "month"})
-    assert hit["cols"] == ["year", "month"]  # smallest covering
-    hit2 = store.route("loans2", {"year", "month", "loan_type"})
-    assert hit2["cols"] == ["year", "month", "day", "loan_type"]
-    assert store.route("loans2", {"segment"}) is None
+
+    def report(drilldown):
+        return store.route_report(engine, "loans2", drilldown=drilldown)
+
+    assert report("date:month")["rollup"] == "year__month"  # smallest covering
+    assert report("date:month|loan_type")["rollup"] == "year__month__day__loan_type"
+    assert report("segment")["routed"] is False
+
+
+def test_interrupted_manifest_write_keeps_the_previous_lattice(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """A ``materialize`` whose manifest write dies halfway leaves the
+    published manifest whole: requests keep routing on the previous
+    lattice, and no temp file is left beside it."""
+    import json
+
+    engine = CubeEngine(default_catalog())
+    engine.register_fact("loans2", build_loans_fact(spark, sf_dir))
+    store = RollupStore(spark, str(tmp_path / "lattice"))
+    store.materialize(engine, "loans2", [["year", "month"]])
+    by_month = dict(drilldown="date:month", measure="value")
+    assert store.route_report(engine, "loans2", **by_month)["rollup"] == "year__month"
+
+    def dies_halfway(obj, fh, **kwargs):
+        fh.write(json.dumps(obj, **kwargs)[:40])
+        raise OSError("disk full")
+
+    monkeypatch.setattr("opl_spark.rollups.json.dump", dies_halfway)
+    with pytest.raises(OSError, match="disk full"):
+        store.materialize(engine, "loans2", [["loan_type"]])
+    monkeypatch.undo()
+
+    for s in (store, RollupStore(spark, str(tmp_path / "lattice"))):
+        assert s.route_report(engine, "loans2", **by_month)["rollup"] == "year__month"
+        assert s.route_report(engine, "loans2", drilldown="loan_type")["routed"] is False
+    assert not list((tmp_path / "lattice" / "loans2").glob("_LATTICE.json.*"))
+    assert _rows(store.aggregate(engine, "loans2", **by_month)) == _rows(
+        engine.aggregate("loans2", **by_month)
+    )
 
 
 def test_non_derivable_aggregate_falls_back(navigator):
