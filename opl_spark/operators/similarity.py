@@ -58,15 +58,11 @@ def norm_col(a: Column) -> Column:
 # per ~10k-row batch, ~100× the interpreted throughput, and the 100 TB
 # path (executor-side, no shuffle added, batch size bounded by
 # spark.sql.execution.arrow.maxRecordsPerBatch).
+#
+# Each UDF stacks its batch inline: a module-level helper would make
+# cloudpickle serialize the UDF by reference to this package, which
+# Python workers launched by an external harness cannot import.
 # ---------------------------------------------------------------------------
-
-
-def _stack(s: pd.Series) -> np.ndarray:
-    # NOTE: deliberately re-defined inside each UDF closure below — a
-    # module-level helper would make cloudpickle serialize the UDF by
-    # reference to this package, which Python workers launched by an
-    # external harness cannot import.
-    return np.stack(s.to_numpy()).astype(np.float64, copy=False)
 
 
 def cosine_lit_udf(query: list[float]):

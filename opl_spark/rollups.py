@@ -37,11 +37,12 @@ import re
 import shutil
 import uuid
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from opl_spark.cube import CORE_PARAMS, CubeEngine
 from opl_spark.snapshot import swap_in
+from opl_spark.sources.registry import open_parquet
 
 #: Each input of a derivable aggregate as a rollup partial: its column
 #: prefix and how partials re-reduce (counts re-add; the coalesce keeps
@@ -52,6 +53,15 @@ _PARTIALS = {
     "min": ("__min", F.min),
     "max": ("__max", F.max),
 }
+
+
+def _write_counted(df: DataFrame, path: str, name: str) -> int:
+    """Overwrite ``path`` with ``df`` and return the rows written,
+    observed on the write itself (as ``SnapshotEngine.run`` counts a
+    scope) instead of by re-reading the written files."""
+    obs = Observation(name)
+    df.observe(obs, F.count(F.lit(1)).alias("rows")).write.mode("overwrite").parquet(path)
+    return obs.get["rows"]
 
 
 def _grouping_key(cols: list[str]) -> str:
@@ -218,8 +228,7 @@ class RollupStore:
             key = _grouping_key(cols)
             rolled = base.groupBy(*cols).agg(*partials)
             path = os.path.join(self._fact_dir(fact), key)
-            rolled.write.mode("overwrite").parquet(path)
-            rows = self.spark.read.parquet(path).count()
+            rows = _write_counted(rolled, path, f"rollup_{fact}_{key}")
             manifest["rollups"][key] = {"cols": cols, "rows": rows}
         self._publish(fact, manifest)
         # best-effort delete of the dropped stale rollups' files, once
@@ -413,7 +422,7 @@ class RollupStore:
             key = hit["key"]
             if key not in frames:
                 path = os.path.join(self._fact_dir(fact), key)
-                frames[key] = self.spark.read.parquet(path)
+                frames[key] = open_parquet(self.spark, path)
             src, part = frames[key], _reduced
         return engine._answer(
             src, q, group_cols, part,
@@ -459,15 +468,15 @@ class RollupStore:
             path = os.path.join(self._fact_dir(fact), key)
             d = delta.groupBy(*cols).agg(*delta_partials)
             merged = (
-                self.spark.read.parquet(path)
+                open_parquet(self.spark, path)
                 .unionByName(d)
                 .groupBy(*cols)
                 .agg(*re_reduce)
             )
             tmp = path + "__refreshing"
-            merged.write.mode("overwrite").parquet(tmp)
+            rows = _write_counted(merged, tmp, f"rollup_refresh_{fact}_{key}")
             swap_in(self.spark, path, tmp, "rollup refresh")
-            rollups[key] = {**info, "rows": self.spark.read.parquet(path).count()}
+            rollups[key] = {**info, "rows": rows}
         manifest = {
             **old,
             "rollups": rollups,

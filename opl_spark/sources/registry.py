@@ -9,14 +9,21 @@ filters/projections into the parquet (or JDBC/DSv2) scan.
 For 100 TB deployments these would be catalog tables over partitioned
 cloud storage; the view indirection keeps fact-query SQL identical in
 both worlds.
+
+Registering a parquet source runs no Spark job: :func:`open_parquet`
+reads the schema from one footer on the driver, through Hadoop and
+Spark's own footer converter, and hands it to the reader, so Spark
+skips its schema-inference job.
 """
 
 from __future__ import annotations
 
+import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 #: Synthetic star-schema tables generated by the driver (TESTDATA.md).
 TABLES = (
@@ -33,8 +40,77 @@ TABLES = (
 )
 
 
+def _hidden(name: str) -> bool:
+    """Spark's file-index rule for names it never lists as data:
+    ``_``-prefixed (unless a ``key=value`` partition directory),
+    ``.``-prefixed, and in-flight ``._COPYING_`` uploads."""
+    return (
+        (name.startswith("_") and "=" not in name)
+        or name.startswith(".")
+        or name.endswith("._COPYING_")
+    )
+
+
+def _first_data_file(fs, status):
+    """The first visible file under ``status`` in the order Spark's
+    file index sorts leaves (by full path string), or None.  Children
+    are walked sorted by name with ``/`` appended to directories, which
+    is that order: ``x.parquet`` sorts before the leaves of ``x/``."""
+    if status.isFile():
+        return status
+    children = sorted(
+        (c.getPath().getName() + ("/" if c.isDirectory() else ""), c)
+        for c in fs.listStatus(status.getPath())
+    )
+    for key, child in children:
+        if _hidden(key.rstrip("/")):
+            continue
+        found = _first_data_file(fs, child)
+        if found is not None:
+            return found
+    return None
+
+
+def open_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` without its schema-inference job.
+
+    The schema comes from one footer read on the driver: the file
+    itself, or for a directory its first visible data file in sorted
+    order, the one footer Spark's own non-merging inference reads.
+    Spark's converter (``ParquetFileFormat.readSchemaFromFooter`` with
+    ``ParquetToSparkSchemaConverter`` over the session's SQL conf)
+    turns it into the same schema inference would give, so
+    ``spark.sql.legacy.parquet.nanosAsLong`` and the other parquet
+    read confs apply as they would there.  Summary files
+    (``_metadata``) are not consulted; nothing here writes them.
+
+    A missing path, or one with no data file, goes to the plain
+    reader, which raises Spark's own error for it.
+    """
+    jvm = spark._jvm
+    jss = spark._jsparkSession
+    conf = jss.sessionState().newHadoopConf()
+    hpath = jvm.org.apache.hadoop.fs.Path(path)
+    fs = hpath.getFileSystem(conf)
+    first = _first_data_file(fs, fs.getFileStatus(hpath)) if fs.exists(hpath) else None
+    if first is None:
+        return spark.read.parquet(path)
+    pq = jvm.org.apache.spark.sql.execution.datasources.parquet
+    meta = pq.ParquetFooterReader.readFooter(
+        jvm.org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(first, conf),
+        jvm.org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS,
+    )
+    jschema = pq.ParquetFileFormat.readSchemaFromFooter(
+        jvm.org.apache.parquet.hadoop.Footer(first.getPath(), meta),
+        pq.ParquetToSparkSchemaConverter(jss.sessionState().conf()),
+    )
+    return spark.read.schema(StructType.fromJson(json.loads(jschema.json()))).parquet(path)
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Load one source table (columnar scan; schema from footer).
+    """Load one source table: a columnar scan whose schema comes from
+    one parquet footer read on the driver (:func:`open_parquet`), so
+    the load runs no Spark job.
 
     Parquet TIMESTAMP(NANOS) columns (the ``events.ts`` column) are
     unsupported by the JVM reader; with
@@ -46,9 +122,10 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name == "events":
         # must be set before the first events read in THIS session —
         # runtime-settable, harmless if already set; without it the
-        # TIMESTAMP(NANOS) footer raises PARQUET_TYPE_ILLEGAL
+        # TIMESTAMP(NANOS) footer raises PARQUET_TYPE_ILLEGAL (the
+        # footer converter reads the conf when it is built)
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    df = open_parquet(spark, os.path.join(sf_dir, f"{name}.parquet"))
     if name == "events":
         ts_type = dict(df.dtypes).get("ts")
         if ts_type == "bigint":
@@ -239,7 +316,6 @@ def run_script_source(
     parquet source paths.  Types follow the reference's first-row
     inference (:func:`infer_script_schema`)."""
     import datetime as _dt
-    import json
     import shlex
     import subprocess
 

@@ -4,6 +4,8 @@ path is pre-aggregation, not approximation)."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
 from opl_spark.cube import CubeEngine
@@ -65,6 +67,17 @@ def test_route_picks_smallest_covering_rollup(navigator):
     assert report("date:month")["rollup"] == "year__month"  # smallest covering
     assert report("date:month|loan_type")["rollup"] == "year__month__day__loan_type"
     assert report("segment")["routed"] is False
+
+
+def test_manifest_rows_equal_the_written_rollups(navigator, spark):
+    """``materialize`` counts each rollup on its write (an Observation),
+    not by re-reading it; the count must be the rows on disk."""
+    _, store = navigator
+    rollups = store._lattice("loans2")[1]["rollups"]
+    assert len(rollups) == 3
+    for key, info in rollups.items():
+        path = os.path.join(store._fact_dir("loans2"), key)
+        assert info["rows"] == spark.read.parquet(path).count(), key
 
 
 def test_interrupted_manifest_write_keeps_the_previous_lattice(
@@ -154,6 +167,7 @@ def test_refresh_equals_rematerialize(spark, sf_dir, tmp_path):
             ).collect()
         )
         assert got == want, key
+        assert store._lattice("loans2")[1]["rollups"][key]["rows"] == len(got), key
     # routed answers now include the delta
     engine.register_fact("loans2", full)  # base must match for fallback paths
     routed = store.aggregate(engine, "loans2", drilldown="date", measure="value")
