@@ -867,7 +867,7 @@ def streaming_main() -> None:
     the Structured Streaming legs — the one execution surface the
     throughput/latency/slope recordings never covered.  The sf events
     table replays as a 20-file FileStreamSource (one file per trigger,
-    the production arrival shape read_events_stream stages), through
+    the production arrival shape of a file-stream source), through
     three representative legs:
 
     - ``windowed``: watermark + tumbling-window agg (built-in stateful)

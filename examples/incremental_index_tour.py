@@ -23,9 +23,9 @@ Plus the operational details a real pipeline hits:
 4.  REPLAY SAFETY: exclude_self=True makes a batch's own appended
     signatures invisible to its probe, so an at-least-once replay
     (crash between append and report write) reproduces the ORIGINAL
-    report instead of self-matching at sim/cos 1.0 — the mode the
-    streaming leg (streaming/stateful.py:srp_probe_foreach_batch)
-    always uses.
+    report instead of self-matching at sim/cos 1.0 — the mode any
+    at-least-once caller (a foreachBatch sink, a retried job) should
+    use.
 5.  CLI: the same lifecycle with zero Python —
         opl-spark -c srp-probe --store S --batch B.parquet \\
                   --threshold 0.9 --report-out R

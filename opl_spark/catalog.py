@@ -254,52 +254,3 @@ class Catalog:
                     spec = json.load(f)
                 cat.add(cls._fact_from_dict(fn[: -len(".json")], spec))
         return cat
-
-
-
-def conformed_dimensions(catalog: "Catalog", facts: list[str]) -> list[dict]:
-    """Dimensional-governance check (Kimball's bus-matrix condition,
-    the precondition ``CubeEngine.drill_across`` relies on): for every
-    dimension shared by the facts, classify its grain as
-
-    - ``identical`` — same ordered levels and physical columns;
-    - ``rollup``    — one fact's level list is a PREFIX of the other's
-      (conformed at the coarser grain: drill-across works down to the
-      shallowest fact's depth);
-    - ``divergent`` — neither, with per-fact signatures attached so
-      catalog drift is a report, not a surprise inside a join.
-    """
-    metas = [catalog.fact(f) for f in facts]
-    if len(metas) < 2:
-        raise ValueError("conformed_dimensions: need at least two facts")
-    shared = set(d.name for d in metas[0].dimensions)
-    for m in metas[1:]:
-        shared &= {d.name for d in m.dimensions}
-
-    def signature(meta, dim_name):
-        d = next(x for x in meta.dimensions if x.name == dim_name)
-        return tuple((lv.name, lv.physical) for lv in d.levels)
-
-    def is_prefix_family(sig_set):
-        ordered = sorted(sig_set, key=len)
-        return all(
-            b[: len(a)] == a for a, b in zip(ordered, ordered[1:])
-        )
-
-    out = []
-    for name in sorted(shared):
-        sigs = {m.name: signature(m, name) for m in metas}
-        uniq = set(sigs.values())
-        if len(uniq) == 1:
-            grain = "identical"
-        elif is_prefix_family(uniq):
-            grain = "rollup"
-        else:
-            grain = "divergent"
-        entry = {"dimension": name, "grain": grain}
-        if grain != "identical":
-            entry["signatures"] = {
-                f: [list(t) for t in sig] for f, sig in sigs.items()
-            }
-        out.append(entry)
-    return out

@@ -243,8 +243,9 @@ def main(argv: list[str] | None = None) -> int:
         import os
 
         from opl_spark.operators.similarity import srp_dedup_incremental
+        from opl_spark.sources.registry import open_parquet, write_counted
 
-        batch = spark.read.parquet(args.batch)
+        batch = open_parquet(spark, args.batch)
         if args.vec_col not in batch.columns or args.id_col not in batch.columns:
             raise SystemExit(
                 f"srp-probe: --batch needs columns {args.id_col!r} and "
@@ -262,8 +263,7 @@ def main(argv: list[str] | None = None) -> int:
             exclude_self=args.exclude_self,
         )
         if args.report_out:
-            report.write.mode("overwrite").parquet(args.report_out)
-            n_dups = spark.read.parquet(args.report_out).count()
+            n_dups = write_counted(report, args.report_out, "srp_probe_report")
         else:
             n_dups = report.count()
         print(json.dumps({

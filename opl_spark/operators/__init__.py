@@ -47,10 +47,7 @@ from opl_spark.operators.dedup import (  # noqa: F401
     shingles_col,
 )
 from opl_spark.operators.layout import (  # noqa: F401
-    write_sorted,
-    write_with_bloom,
     zorder_key,
-    zorder_layout,
     zorder_rank_quantize,
     zorder_sql,
 )
@@ -58,7 +55,6 @@ from opl_spark.operators.sampling import (  # noqa: F401
     copies_col,
     budget_sample,
     curriculum_interleave,
-    hash_gate,
     mix_sources,
     rendezvous_shard_col,
     stratified_sample,
@@ -81,7 +77,6 @@ from opl_spark.operators.evaluate import (  # noqa: F401
 from opl_spark.operators.multimodal import (  # noqa: F401
     audio_frame_energy,
     decode_images,
-    export_tar_shards,
     media_metadata,
     resize_images,
     synthetic_bmp_media,
@@ -91,9 +86,6 @@ from opl_spark.operators.multimodal import (  # noqa: F401
 from opl_spark.operators.sketch import (  # noqa: F401
     count_min_build,
     count_min_estimate,
-    count_min_merge,
-    hll_stream_to_table,
-    hll_table_estimate,
 )
 from opl_spark.operators.similarity import (  # noqa: F401
     hybrid_search_rrf,
@@ -115,13 +107,9 @@ from opl_spark.operators.similarity import (  # noqa: F401
     assign_cells_quantized,
     ivf_topk_quantized,
     knn_join,
-    ivfpq_topk,
     ivfpq_topk_quantized,
-    pq_encode,
     pq_encode_quantized,
-    pq_topk,
     pq_topk_quantized,
-    pq_train,
     pq_train_quantized,
     quantize_embeddings,
     quantized_topk,
@@ -167,7 +155,6 @@ from opl_spark.operators.text import (  # noqa: F401
     naive_bayes_scores,
     stupid_backoff_score,
     export_jsonl,
-    export_jsonl_manifest,
     fingerprint_col,
     heavy_hitters,
     lang_id_col,

@@ -18,9 +18,6 @@ Scale shapes:
 
 from __future__ import annotations
 
-import functools
-import operator
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -450,72 +447,4 @@ def pareto_front_2d(
             & (F.col("thr").isNull() | (F.col("y") > F.col("thr")))
         )
         .select("x", "y")
-    )
-
-
-def scd2_apply(
-    current: DataFrame,
-    changes: DataFrame,
-    key_col: str,
-    attr_cols: list[str],
-    eff_col: str,
-) -> DataFrame:
-    """SCD2 MERGE: fold a change batch into an interval-history
-    dimension table (``valid_from``/``valid_to``/``is_current`` as
-    produced by :func:`scd2_intervals`).  For every incoming row whose
-    attributes DIFFER from the key's current open row (or whose key is
-    new), the open interval closes at the effective date and a new
-    open row begins there; incoming rows equal to the current version
-    are no-ops — so re-applying the same batch is idempotent, the
-    property that makes retried loads safe.
-
-    Plan shape: one null-safe attr comparison join of the change batch
-    against ONLY the open rows (broadcast when the batch is small),
-    one semi/anti split of the open set, and a 3-way unionByName —
-    closed history is never touched or rewritten, which is what keeps
-    the merge O(open + batch), not O(history), at 100 TB.  At most one
-    change row per key per batch (enforced: latest ``eff_col`` wins,
-    deterministic) — multi-step same-key histories arrive over
-    successive batches.
-    """
-    from pyspark.sql import Window
-
-    w = Window.partitionBy(key_col).orderBy(F.col(eff_col).desc())
-    latest = (
-        changes.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
-    )
-    open_rows = current.filter(F.col("valid_to").isNull())
-    closed_rows = current.filter(F.col("valid_to").isNotNull())
-    cur_attrs = open_rows.select(
-        F.col(key_col).alias("__k"),
-        *[F.col(c).alias(f"__cur_{c}") for c in attr_cols],
-    )
-    cmp = latest.join(cur_attrs, latest[key_col] == cur_attrs["__k"], "left")
-    same = functools.reduce(
-        operator.and_,
-        [F.col(c).eqNullSafe(F.col(f"__cur_{c}")) for c in attr_cols],
-    )
-    effective = cmp.filter(F.col("__k").isNull() | ~same).select(
-        key_col, *attr_cols, F.col(eff_col).alias("valid_from")
-    )
-    changed_keys = effective.select(key_col).distinct()
-    to_close = open_rows.join(changed_keys, key_col, "semi")
-    untouched_open = open_rows.join(changed_keys, key_col, "left_anti")
-    closing = to_close.alias("o").join(
-        effective.select(key_col, F.col("valid_from").alias("__eff")).alias("e"),
-        key_col,
-    ).select(
-        *[F.col(f"o.{c}") for c in to_close.columns if c not in ("valid_to", "is_current")],
-        F.col("__eff").alias("valid_to"),
-        F.lit(False).alias("is_current"),
-    )
-    opening = effective.withColumn("valid_to", F.lit(None).cast(
-        closing.schema["valid_to"].dataType
-    )).withColumn("is_current", F.lit(True))
-    return (
-        closed_rows.unionByName(untouched_open, allowMissingColumns=True)
-        .unionByName(closing, allowMissingColumns=True)
-        .unionByName(opening, allowMissingColumns=True)
     )

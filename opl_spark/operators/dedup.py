@@ -2072,8 +2072,7 @@ def build_signature_store(
     persistent NEAR-dup index: parquet partitioned by
     ``(band, bucket_shard)`` so an incremental probe reads only the
     partitions its own band keys land in — the near-dup analogue of
-    the exact-dedup hash ledger (``incremental_dedup``) and the IVF
-    cell store (``build_ivf_index``).
+    the exact-dedup hash ledger (``incremental_dedup``).
 
     Store size is bands × corpus rows of (doc, band_key, sig) — the
     signature matrix, NOT the text; at 100 TB of text the store is

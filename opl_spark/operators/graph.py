@@ -51,16 +51,6 @@ def both_directions(
     ).select("__e.src", "__e.dst")
 
 
-def symmetrize(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
-    """Undirected view of an edge list: both directions, self-loops
-    dropped, duplicates removed (so degrees are simple row counts)."""
-    return (
-        both_directions(edges, src, dst)
-        .filter(F.col("src") != F.col("dst"))
-        .distinct()
-    )
-
-
 def bucketize_edges(
     spark,
     edges: DataFrame,
@@ -102,8 +92,8 @@ def pagerank(
     checkpoint: bool = True,
 ) -> DataFrame:
     """Fixed-iteration PageRank over an undirected edge list
-    (``src``/``dst`` long columns, both directions present — use
-    :func:`symmetrize`).  Returns ``(node, pr)`` with ``pr`` the
+    (``src``/``dst`` long columns, both directions present — see
+    :func:`both_directions`).  Returns ``(node, pr)`` with ``pr`` the
     1e12-scaled BIGINT rank after ``iterations`` rounds from a uniform
     start.  Undirected graphs have no dangling nodes (deg >= 1), so no
     teleport-mass correction term is needed.

@@ -94,64 +94,6 @@ def zorder_sql(exprs: list[str], bits: int = 8) -> str:
     return " | ".join(terms)
 
 
-def zorder_layout(
-    df: DataFrame, dims: list[Column], bits: int = 8, key_name: str = "zkey"
-) -> DataFrame:
-    """Attach the Z-key and repartition-by-range + sort on it — the
-    write-side layout step.  `repartitionByRange` samples the key
-    distribution, so output files tile the Z-curve evenly even when
-    the dimensions are skewed."""
-    keyed = df.withColumn(key_name, zorder_key(dims, bits))
-    return keyed.repartitionByRange(key_name).sortWithinPartitions(key_name)
-
-
-def write_sorted(
-    df: DataFrame,
-    path: str,
-    sort_cols: list[str],
-    n_files: int = 8,
-) -> None:
-    """Range-clustered parquet write: repartitionByRange on the sort
-    key (each output file owns a contiguous, non-overlapping key
-    range) + sortWithinPartitions (rows ordered inside each file, so
-    every parquet ROW GROUP's min/max footer stats span a narrow
-    slice).  A point or range filter on the key then skips whole
-    files from the footer alone — the single-dimension complement to
-    the Z-order key (use zorder for multi-dimension cuts).
-
-    Writer-side only: no new storage format, no table metadata — the
-    pruning contract is plain parquet statistics, verified in
-    tests/test_bucketing.py by reading the footers back."""
-    (
-        df.repartitionByRange(n_files, *[F.col(c) for c in sort_cols])
-        .sortWithinPartitions(*sort_cols)
-        .write.mode("overwrite")
-        .parquet(path)
-    )
-
-
-def write_with_bloom(
-    df: DataFrame,
-    path: str,
-    bloom_cols: list[str],
-    ndv: int = 100_000,
-) -> None:
-    """Parquet write with column BLOOM FILTERS: point-lookup pruning
-    for high-cardinality columns whose min/max stats are useless
-    (uuids, hashes — every file spans the whole value range, so range
-    stats skip nothing, but a bloom probe skips files that provably
-    lack the key).  Complements ``write_sorted`` (range keys) and
-    Z-order (multi-dim): bloom is the layout tool for exact-match
-    predicates on unsorted keys.  ``ndv`` sizes the filter
-    (~1.2 bytes/value at the default FPP)."""
-    w = df.write.mode("overwrite")
-    for c in bloom_cols:
-        w = w.option(f"parquet.bloom.filter.enabled#{c}", "true").option(
-            f"parquet.bloom.filter.expected.ndv#{c}", str(ndv)
-        )
-    w.parquet(path)
-
-
 #: Bits per bitmap word.  62, not 64: DuckDB raises on a BIGINT left
 #: shift past bit 62 (1 << 63 overflows the signed range), so a
 #: 62-bit word keeps every shift — and every OR/AND result — valid

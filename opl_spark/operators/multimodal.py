@@ -31,15 +31,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-#: Canonical media column schema: opaque payload + typed metadata.
-MEDIA_SCHEMA = T.StructType(
-    [
-        T.StructField("media_bytes", T.BinaryType()),
-        T.StructField("mime", T.StringType()),
-        T.StructField("media_id", T.LongType()),
-    ]
-)
-
 #: Output schema of the (stubbed) image decode stage.
 DECODED_SCHEMA = T.StructType(
     [
@@ -203,140 +194,6 @@ def _bmp_tools():
         return out / (cnt[..., None] if out.ndim == 3 else cnt)
 
     return decode, encode, area_resize
-
-
-#: Driver-side aliases (tests, fixtures).  Executor closures call
-#: ``_bmp_tools()`` themselves — see the NOTE in ``decode_images``.
-bmp_decode, bmp_encode, bmp_area_resize = _bmp_tools()
-
-
-def export_tar_shards(
-    df: DataFrame,
-    path: str,
-    id_col: str,
-    columns: list[str],
-    shards: int | None = None,
-) -> dict:
-    """WebDataset-style tar-shard export — the interchange layout
-    multimodal training loaders stream (Aizman et al. 2019;
-    github.com/webdataset): each output ``shard-NNNNN.tar`` holds one
-    ``{key}.{column}`` member per (row, payload column), samples
-    contiguous within a shard so a loader reads them with pure
-    sequential I/O.  Binary columns write as-is; anything else writes
-    as UTF-8.  Member mtimes are zeroed, so identical data produces
-    byte-identical shards regardless of when the export ran.
-
-    Executor-parallel: one tar per partition, STREAMED member-by-member
-    straight to the output file inside a ``mapInPandas`` pass (Spark
-    has no tar sink; the Python tarfile module inside the batch
-    iterator is the idiomatic escape hatch for a FORMAT Spark lacks,
-    while partitioning/distribution stay Spark's).  Per-task memory is
-    O(one Arrow batch), NOT O(partition bytes) — the tar is never
-    buffered whole, so partition size is bounded by disk, not worker
-    RAM.  ``shards`` controls file count via repartition, as in
-    ``export_jsonl``.  The driver collects only the shard MANIFEST
-    (one row per shard: file, rows, bytes) and returns it as
-    ``{"total_rows": n, "shards": [...]}`` — never sample data.  The
-    target must be a path every executor can write (shared mount;
-    swap the ``open`` for an object-store client off-cluster).
-
-    Refuses a directory that already holds ``shard-*.tar`` files: a
-    re-export with fewer/different shards would leave stale tars that a
-    loader globbing ``shard-*.tar`` silently mixes into the corpus."""
-    import glob as _glob
-    import os as _os
-
-    _os.makedirs(path, exist_ok=True)
-    stale = sorted(_glob.glob(_os.path.join(path, "shard-*.tar")))
-    if stale:
-        raise ValueError(
-            f"export_tar_shards: {path!r} already contains "
-            f"{len(stale)} shard-*.tar file(s) (first: {stale[0]!r}); "
-            "remove them or export to a fresh directory — a loader "
-            "globbing shard-*.tar would read a mixed corpus"
-        )
-    # sweep temp litter from a previously CRASHED export (complete
-    # shards from it would have been promoted to shard-*.tar and
-    # tripped the refusal above; leftover dot-temps are by definition
-    # incomplete and safe to drop)
-    for leftover in _glob.glob(_os.path.join(path, ".shard-*.tar.*")):
-        _os.remove(leftover)
-    out = df.repartition(shards) if shards else df
-    sel = out.select(F.col(id_col).alias("__key"), *columns)
-    payload_cols = list(columns)
-
-    def write_part(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import io
-        import os
-        import tarfile
-
-        import pandas as _pd
-        from pyspark import TaskContext
-
-        ctx = TaskContext.get()
-        pid = ctx.partitionId()
-        fname = os.path.join(path, f"shard-{pid:05d}.tar")
-        # write-to-temp + atomic rename: streaming straight to the
-        # final name left a window where (a) two speculative attempts
-        # of the same task interleave writes into one file and (b) a
-        # mid-job crash leaves a partial tar indistinguishable from a
-        # complete one (which the stale-shard refusal would then
-        # misreport as a prior successful export).  The dot-prefixed
-        # attempt-unique temp name is invisible to loaders and to the
-        # refusal glob (both match shard-*.tar); os.replace promotes
-        # it atomically after close, so the final name only ever holds
-        # a complete tar — last finished attempt wins, same as any
-        # Spark file sink.
-        tmpname = os.path.join(
-            path, f".shard-{pid:05d}.tar.{ctx.taskAttemptId()}"
-        )
-        rows = 0
-        tar = None  # opened lazily: empty partitions write no file
-        try:
-            for pdf in it:
-                for i in range(len(pdf)):
-                    if tar is None:
-                        tar = tarfile.open(tmpname, mode="w")
-                    key = str(pdf["__key"].iloc[i])
-                    for c in payload_cols:
-                        v = pdf[c].iloc[i]
-                        data = (
-                            bytes(v)
-                            if isinstance(v, (bytes, bytearray, memoryview))
-                            else str(v).encode("utf-8")
-                        )
-                        info = tarfile.TarInfo(f"{key}.{c}")
-                        info.size = len(data)
-                        info.mtime = 0
-                        tar.addfile(info, io.BytesIO(data))
-                    rows += 1
-        except BaseException:
-            if tar is not None:
-                tar.close()
-                os.remove(tmpname)  # never leave temp litter on error
-            raise
-        if tar is not None:
-            tar.close()
-            os.replace(tmpname, fname)
-        if not rows:
-            yield _pd.DataFrame({"shard": [], "rows": [], "bytes": []})
-            return
-        yield _pd.DataFrame(
-            [{"shard": fname, "rows": rows, "bytes": os.path.getsize(fname)}]
-        )
-
-    manifest_rows = sel.mapInPandas(
-        write_part, "shard string, rows long, bytes long"
-    ).collect()
-    shards_out = sorted(
-        ({"shard": r["shard"], "rows": r["rows"], "bytes": r["bytes"]}
-         for r in manifest_rows),
-        key=lambda s: s["shard"],
-    )
-    return {
-        "total_rows": int(sum(s["rows"] for s in shards_out)),
-        "shards": shards_out,
-    }
 
 
 def synthetic_bmp_media(df: DataFrame, text_col: str, id_col: str) -> DataFrame:

@@ -80,17 +80,6 @@ _KNUTH = 2654435761
 _M32 = 1 << 32
 
 
-def hash_gate(id_col: Column, rate: float, salt: int = 0) -> Column:
-    """True for a deterministic ``rate`` fraction of ids — pure int64
-    arithmetic (multiply + modulus), identical on any engine, so the
-    sample is stable across runs, retries, and cluster layouts.
-
-    The id must stay below ~2^31 for the multiply to fit int64; ids
-    wider than that should be pre-folded with a modulus."""
-    bucket = F.pmod(id_col * F.lit(_KNUTH) + F.lit(salt), F.lit(_M32))
-    return bucket < int(rate * _M32)
-
-
 def rendezvous_shard_col(id_col: str, k: int) -> Column:
     """Rendezvous (highest-random-weight) shard assignment: each row
     goes to argmax over shards s of hash(id, s) — the classic HRW rule
@@ -179,8 +168,8 @@ def soft_dedup_sample(
     ``q_dup_weights`` (which keeps everything and attaches the weight;
     this draws the sample when downstream can't consume weights).
 
-    Deterministic: the coin is the same portable multiplicative
-    ``hash_gate`` arithmetic (int64 multiply + modulus, identical on
+    Deterministic: the coin is the same portable multiplicative hash
+    as :func:`stratified_sample` (int64 multiply + modulus, identical on
     any engine), the threshold is the INTEGER floor ``2^32 // copies``
     (no float -> int cast whose rounding could differ across engines),
     so the kept set is stable across runs, retries, and partitionings.
@@ -281,8 +270,8 @@ def dsir_weights(
     corpus pass.  The per-bucket lambda table broadcasts (≤ a few
     KiB); per-doc aggregation is map-side combinable.  Resampling
     itself is then a deterministic gate on the emitted weight (e.g.
-    ``percentile_filter`` or ``hash_gate``), kept out of this operator
-    so callers choose the budget.
+    ``percentile_filter`` or the hash coin of :func:`stratified_sample`),
+    kept out of this operator so callers choose the budget.
     """
     from pyspark import StorageLevel
 

@@ -11,10 +11,8 @@ Three tiers, per the standard ANN playbook:
   one corpus sweep: per-Arrow-batch gemm against the closure-broadcast
   query matrix with per-batch truncation.
 - **IVF (inverted-file) top-k** — the scale path: every vector is
-  assigned to its nearest centroid and the assignment is materialized
-  as a partition column (:func:`build_ivf_index`); queries probe only
-  the ``nprobe`` nearest cells — file-level pruning scans
-  ``nprobe/ncells`` of the store.
+  assigned to its nearest centroid (:func:`ivf_assign`); queries score
+  only the vectors of the ``nprobe`` nearest cells.
 
 The hot loops (pair dots, query dots, centroid assignment) run as
 Arrow-batched numpy kernels (Pandas UDFs).  All math is double;
@@ -31,7 +29,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.window import Window
@@ -355,8 +353,7 @@ def ivf_assign(
     """Assign every vector to its nearest centroid (cell).
 
     One vectorized map pass against the (tiny, closure-broadcast)
-    centroid matrix — no join, no shuffle; at write time the ``cell``
-    column becomes the partition key of the vector store.
+    centroid matrix — no join, no shuffle.
     """
     return df.withColumn("cell", assign_cell_udf(centroids)(F.col(vec_col)))
 
@@ -384,9 +381,8 @@ def ivf_topk(
     centroids: list[tuple[int, list[float]]] | None = None,
 ) -> DataFrame:
     """IVF approximate top-k: restrict the brute-force scan to the
-    ``nprobe`` cells nearest the query.  With the cell as a partition
-    column, the non-probed cells are pruned at the file level — the
-    scan touches ``nprobe/ncells`` of the store."""
+    ``nprobe`` cells nearest the query: only ``nprobe/ncells`` of the
+    vectors are scored."""
     cents = centroids or seed_centroids(df, vec_col, id_col, ncells)
     cells = probe_cells(cents, query, nprobe)
     assigned = ivf_assign(df, vec_col, cents)
@@ -460,59 +456,6 @@ def knn_join(
         .withColumn("rank", F.row_number().over(w).cast("long"))
         .filter(F.col("rank") <= k)
     )
-
-
-def build_ivf_index(
-    df: DataFrame,
-    vec_col: str,
-    id_col: str,
-    index_path: str,
-    ncells: int = 8,
-    centroids: list[tuple[int, list[float]]] | None = None,
-) -> list[tuple[int, list[float]]]:
-    """Materialize the IVF index: vectors written cell-partitioned.
-
-    This is the write-time half of the ANN contract — ``cell`` becomes
-    a physical partition directory, so a probe query's ``cell IN (...)``
-    filter prunes at the FILE level (non-probed cells are never opened,
-    `PartitionFilters` in the scan plan).  Returns the centroid table
-    (metadata-sized; persist next to the index)."""
-    cents = centroids or seed_centroids(df, vec_col, id_col, ncells)
-    ivf_assign(df, vec_col, cents).write.mode("overwrite").partitionBy(
-        "cell"
-    ).parquet(index_path)
-    return cents
-
-
-def ivf_probe_pool(
-    spark: SparkSession,
-    index_path: str,
-    query: list[float],
-    centroids: list[tuple[int, list[float]]],
-    nprobe: int = 2,
-) -> DataFrame:
-    """The lazy probe pool over a materialized index: the ``cell IN
-    (...)`` filter lands in ``PartitionFilters``, so non-probed cells'
-    files are never opened (``nprobe/ncells`` of the store)."""
-    cells = probe_cells(centroids, query, nprobe)
-    return spark.read.parquet(index_path).filter(F.col("cell").isin(cells))
-
-
-def ivf_topk_indexed(
-    spark: SparkSession,
-    index_path: str,
-    vec_col: str,
-    id_col: str,
-    query: list[float],
-    centroids: list[tuple[int, list[float]]],
-    k: int = 10,
-    nprobe: int = 2,
-) -> DataFrame:
-    """Probe a materialized IVF index: scan only the ``nprobe`` nearest
-    cells' partitions — ``nprobe/ncells`` of the store regardless of
-    corpus size."""
-    pool = ivf_probe_pool(spark, index_path, query, centroids, nprobe)
-    return cosine_topk(pool, vec_col, id_col, query, k)
 
 
 def embedding_dup_pairs(
@@ -990,8 +933,7 @@ def build_srp_index(
     persistent EMBEDDING near-dup index: parquet partitioned by
     ``(band, bucket_shard)`` so an incremental probe reads only the
     partitions its own band keys land in — the cosine twin of the
-    banded-MinHash store (``dedup.py:build_signature_store``) beside
-    the IVF cell store (:func:`build_ivf_index`).
+    banded-MinHash store (``dedup.py:build_signature_store``).
 
     Store size is bands × corpus rows of (id, vector, key): the
     vectors ride along because the probe's exact-cosine verify needs
@@ -1151,9 +1093,8 @@ def srp_dedup_incremental(
     it is what makes the probe reproduce the original report instead
     of every vector matching itself at cos 1.0.  The interactive
     default stays False so a deliberate second probe self-detects
-    ("is this already indexed?"); the streaming leg
-    (``streaming/stateful.py:srp_probe_foreach_batch``) always sets
-    it True.
+    ("is this already indexed?"); an at-least-once caller (a
+    foreachBatch sink, a retried job) should set it True.
 
     A missing store (fresh pipeline, :func:`build_srp_index` never
     run) is a valid bootstrap state, not a crash: the batch's
@@ -1364,206 +1305,6 @@ def semantic_dedup(
 # ---------------------------------------------------------------------------
 
 
-def pq_train(
-    df: DataFrame,
-    vec_col: str,
-    id_col: str,
-    m: int = 4,
-    k: int = 16,
-    sample: int = 2048,
-    iters: int = 8,
-) -> list[list[list[float]]]:
-    """Train a product-quantization codebook: split the d dims into
-    ``m`` subspaces and run Lloyd k-means (``k`` centroids) per
-    subspace over a deterministic sample — the IVF-PQ compression
-    stage (Jégou et al., TPAMI 2011): a d-dim float32 vector becomes
-    ``m`` byte codes (64-dim/256 B → 4 B at m=4).
-
-    Only the SAMPLE crosses the driver (``orderBy(id).limit(sample)``
-    — a TakeOrdered, deterministic and metadata-sized, same pattern as
-    the IVF centroid seed); training is numpy on ≤ sample×d floats.
-    Init = first ``k`` distinct subvectors in id order; argmin ties
-    break to the lowest centroid index; empty clusters keep their
-    previous centroid — every step deterministic.
-
-    Returns ``codebook[m][k][d/m]`` (plain lists — closure-friendly).
-    """
-    rows = (
-        df.select(F.col(id_col).alias("i"), F.col(vec_col).alias("v"))
-        .orderBy("i")
-        .limit(sample)
-        .collect()
-    )
-    x = np.array([r["v"] for r in rows], dtype=np.float64)
-    d = x.shape[1]
-    if d % m:
-        raise ValueError(f"dims ({d}) not divisible by m ({m})")
-    sub = d // m
-    book = []
-    for j in range(m):
-        xs = x[:, j * sub : (j + 1) * sub]
-        seen: dict[bytes, np.ndarray] = {}
-        for row in xs:
-            key = row.tobytes()
-            if key not in seen:
-                seen[key] = row
-            if len(seen) == k:
-                break
-        cents = np.array(list(seen.values()), dtype=np.float64)
-        for _ in range(iters):
-            d2 = ((xs[:, None, :] - cents[None, :, :]) ** 2).sum(axis=2)
-            assign = d2.argmin(axis=1)
-            for c in range(len(cents)):
-                members = xs[assign == c]
-                if len(members):
-                    cents[c] = members.mean(axis=0)
-        book.append(cents.tolist())
-    return book
-
-
-def pq_encode(
-    df: DataFrame, vec_col: str, id_col: str, codebook: list[list[list[float]]]
-) -> DataFrame:
-    """Encode vectors to PQ codes: per subspace, the index of the
-    nearest codebook centroid.  Map-only — the codebook travels in the
-    UDF closure (kilobytes), each Arrow batch does m small gemm-shaped
-    distance computations, and only ``(id, m codes)`` survive.
-    """
-    cb = [np.asarray(c, dtype=np.float64) for c in codebook]
-    sub = cb[0].shape[1]
-
-    @pandas_udf("array<int>")
-    def enc(vs: pd.Series) -> pd.Series:
-        if len(vs) == 0:
-            return pd.Series(np.empty(0, dtype=object))
-        a = np.stack(vs.to_numpy()).astype(np.float64, copy=False)
-        codes = np.empty((len(a), len(cb)), dtype=np.int32)
-        for j, cents in enumerate(cb):
-            xs = a[:, j * sub : (j + 1) * sub]
-            # ||x-c||² = ||x||² - 2x·c + ||c||²; ||x||² constant per row
-            d2 = (cents**2).sum(axis=1)[None, :] - 2.0 * (xs @ cents.T)
-            codes[:, j] = d2.argmin(axis=1)
-        return pd.Series(list(codes))
-
-    return df.select(F.col(id_col).alias("id"), enc(F.col(vec_col)).alias("codes"))
-
-
-def pq_topk(
-    df: DataFrame,
-    vec_col: str,
-    id_col: str,
-    query: list[float],
-    codebook: list[list[list[float]]],
-    k: int = 10,
-    rerank: int = 0,
-) -> DataFrame:
-    """Asymmetric-distance top-k over PQ codes: the query stays exact;
-    each corpus vector is scored against its reconstruction through
-    per-subspace LOOKUP TABLES (m table probes + one division per row
-    — no d-dim math on the scan side).
-
-    Scale story: the scan touches m bytes of codes per vector; the
-    lookup tables (m×k doubles) are computed once from the query and
-    travel in the closure.  Selection is the same TakeOrdered shape as
-    `cosine_topk`.  Emits ``(id, psim, rank)``; psim is cosine(query,
-    reconstruction), rounded(6).
-
-    ``rerank > 0`` enables the standard recall remedy: an ADC
-    SHORTLIST of ``rerank·k`` candidates (still TakeOrdered over the
-    code scan), then exact cosine on just those ids — one broadcast
-    semi-join of a shortlist-sized id set against the raw vectors, so
-    the d-dim math runs on rerank·k rows, never the corpus; ``psim``
-    is then the exact cosine.  Measured on the synthetic UNIFORM
-    corpus (PQ's adversarial case — near-orthogonal vectors with tiny
-    similarity gaps, so ADC order decorrelates from true cosine):
-    m=4×16 codes give recall@10 ≈ 0.20 raw, 0.56 at rerank=8, 0.70 at
-    rerank=16; real embedding manifolds (low intrinsic dimension)
-    quantize far better.
-    """
-    cb = [np.asarray(c, dtype=np.float64) for c in codebook]
-    sub = cb[0].shape[1]
-    q = np.asarray(query, dtype=np.float64)
-    qn = float(np.sqrt(q @ q))
-    if qn == 0.0:
-        # cosine is undefined for the zero vector; every psim would be
-        # NaN, and NaN sorts ABOVE all doubles descending — the "top-k"
-        # would be arbitrary rows.  Fail loudly (mirrors the rn2 guard).
-        raise ValueError("pq_topk: query has zero norm — cosine undefined")
-    # per-subspace tables: dot(query_sub, centroid) and ||centroid||²
-    dots = [cb[j] @ q[j * sub : (j + 1) * sub] for j in range(len(cb))]
-    n2s = [(cb[j] ** 2).sum(axis=1) for j in range(len(cb))]
-
-    @pandas_udf("double")
-    def adc(codes: pd.Series) -> pd.Series:
-        if len(codes) == 0:
-            return pd.Series(np.empty(0, dtype=np.float64))
-        c = np.stack(codes.to_numpy()).astype(np.int64, copy=False)
-        num = np.zeros(len(c))
-        rn2 = np.zeros(len(c))
-        for j in range(c.shape[1]):
-            num += dots[j][c[:, j]]
-            rn2 += n2s[j][c[:, j]]
-        with np.errstate(divide="ignore", invalid="ignore"):
-            out = num / (np.sqrt(rn2) * qn)
-        return pd.Series(np.where(rn2 > 0, out, -np.inf))
-
-    from pyspark.sql.types import DoubleType, LongType, StructField, StructType
-
-    scored = pq_encode(df, vec_col, id_col, [c.tolist() for c in cb]).select(
-        "id", F.round(adc(F.col("codes")), 6).alias("psim")
-    )
-    if rerank > 0:
-        short = (
-            scored.orderBy(F.col("psim").desc(), F.col("id"))
-            .limit(rerank * k)
-            .select("id")
-        )
-        pool = df.join(
-            F.broadcast(short), df[id_col] == short.id, "left_semi"
-        )
-        return cosine_topk(pool, vec_col, id_col, query, k).select(
-            "id", F.col("sim").alias("psim"), "rank"
-        )
-    rows = scored.orderBy(F.col("psim").desc(), F.col("id")).limit(k).collect()
-    schema = StructType(
-        [
-            StructField("id", df.schema[id_col].dataType),
-            StructField("psim", DoubleType()),
-            StructField("rank", LongType()),
-        ]
-    )
-    return df.sparkSession.createDataFrame(
-        [(r["id"], r["psim"], i + 1) for i, r in enumerate(rows)], schema
-    )
-
-
-def ivfpq_topk(
-    df: DataFrame,
-    vec_col: str,
-    id_col: str,
-    query: list[float],
-    centroids: list[tuple[int, list[float]]],
-    codebook: list[list[list[float]]],
-    k: int = 10,
-    nprobe: int = 2,
-) -> DataFrame:
-    """IVF-PQ: the full billion-scale ANN composition (coarse inverted
-    file + product-quantized residual scan, Jégou et al.) — probe the
-    ``nprobe`` nearest cells, then ADC-score only the probed pool's
-    PQ codes.
-
-    At 100 TB the two stages multiply: the cell filter prunes the scan
-    to ``nprobe/ncells`` of the store (partition pruning when the index
-    is materialized via :func:`build_ivf_index`) and PQ shrinks what IS
-    scanned to m bytes/vector.  Here the pool filter and the ADC pass
-    compose lazily on the same plan — no intermediate materialization.
-    """
-    assigned = ivf_assign(df, vec_col, centroids)
-    cells = probe_cells(centroids, query, nprobe)
-    pool = assigned.filter(F.col("cell").isin(cells)).drop("cell")
-    return pq_topk(pool, vec_col, id_col, query, codebook, k)
-
-
 def pq_train_quantized(
     df: DataFrame,
     vec_col: str,
@@ -1573,8 +1314,8 @@ def pq_train_quantized(
     sample: int = 2048,
     iters: int = 8,
 ) -> list[list[list[int]]]:
-    """Product-quantization codebook trained in INTEGER arithmetic —
-    the oracle-replayable sibling of :func:`pq_train`.
+    """Product-quantization codebook trained in INTEGER arithmetic, so
+    a SQL oracle can replay it.
 
     Coordinates quantize to the 1e-3 grid; per subspace the seeds are
     the first ``k`` DISTINCT quantized subvectors in id order (== the
@@ -1763,28 +1504,6 @@ def ivfpq_topk_quantized(
     )
     book = pq_train_quantized(df, vec_col, id_col, m=m, k=codebook_k)
     return pq_topk_quantized(pool, vec_col, id_col, query, book, k=k)
-
-
-def ivf_index_append(
-    df: DataFrame,
-    vec_col: str,
-    id_col: str,
-    index_path: str,
-    centroids: list[tuple[int, list[float]]],
-) -> None:
-    """Incremental IVF maintenance: assign a NEW batch of vectors to
-    the existing centroid table and append cell-partitioned — the index
-    grows without rewriting history (each append lands new files inside
-    the touched cells' directories only).
-
-    The centroid table must be the one the index was built with:
-    probes prune by cell id, so re-seeding would orphan old cells.
-    Centroid drift under sustained growth is handled the way IVF
-    systems do — periodic rebuild (``build_ivf_index``) in a
-    maintenance window, not per-append retraining."""
-    ivf_assign(df, vec_col, centroids).write.mode("append").partitionBy(
-        "cell"
-    ).parquet(index_path)
 
 
 def pca_components(

@@ -80,16 +80,6 @@ def count_min_build(
     )
 
 
-def count_min_merge(*sketches: DataFrame) -> DataFrame:
-    """Merge sketches built with the same (width, depth): cellwise sum
-    — the property that makes count-min a streaming/cross-shard
-    structure."""
-    out = sketches[0]
-    for s in sketches[1:]:
-        out = out.unionByName(s)
-    return out.groupBy("row", "bucket").agg(F.sum("c").alias("c"))
-
-
 def count_min_estimate(
     sketch: DataFrame,
     terms: DataFrame,
@@ -115,141 +105,6 @@ def count_min_estimate(
     ).select("term", F.col("cell.row").alias("row"), F.col("cell.bucket").alias("bucket"))
     joined = probes.join(sketch, ["row", "bucket"], "left").na.fill({"c": 0})
     return joined.groupBy("term").agg(F.min("c").alias("est"))
-
-
-def count_min_stream_to_table(
-    stream_df: DataFrame,
-    col: str,
-    sketch_path: str,
-    checkpoint_path: str,
-    width: int = 1024,
-    depth: int = 4,
-    timeout_sec: int = 120,
-) -> None:
-    """Maintain a count-min sketch over a STREAM: per microbatch, build
-    the batch's sketch and cellwise-merge it into a parquet sketch
-    table — the mergeability that makes count-min the right frequency
-    state for unbounded streams (state size stays depth·width counters
-    forever; a per-key exact counter would grow with the keyspace).
-
-    Idempotence: the sink keeps ``(__stream_id, __batch_id)``; a
-    replayed microbatch (foreachBatch is at-least-once) is detected and
-    skipped, so the merged counts are exact — the drained sketch equals
-    the batch-built sketch over the same data (asserted in
-    tests/test_streaming.py).  The replay guard is scoped to the
-    CHECKPOINT identity: a restart with a fresh checkpoint resets batch
-    ids to 0, so comparing raw batch ids across incarnations would
-    silently skip every batch of the new stream — a different
-    ``__stream_id`` therefore always merges.  Overwrite-with-union
-    keeps the table tiny (≤ depth·width rows), so the rewrite is
-    metadata-sized, not data-sized.
-    """
-    stream_id = checkpoint_path  # batch ids are only comparable per checkpoint
-
-    def merge_batch(df: DataFrame, batch_id: int) -> None:
-        from pyspark.errors import AnalysisException
-
-        spark = df.sparkSession
-        batch_sketch = count_min_build(df, col, width, depth)
-        try:
-            old = spark.read.parquet(sketch_path)
-        except AnalysisException:
-            # first batch: the sink does not exist yet.  ONLY this —
-            # any other failure must surface, because falling back to
-            # batch_sketch here would silently overwrite all previously
-            # merged counts with one batch's worth.
-            merged = batch_sketch
-        else:
-            replayed = old.filter(
-                (F.col("__stream_id") == stream_id)
-                & (F.col("__batch_id") >= batch_id)
-            )
-            if replayed.limit(1).count() > 0:
-                return  # replayed batch of THIS stream — already merged
-            merged = (
-                old.select("row", "bucket", "c")
-                .unionByName(batch_sketch)
-                .groupBy("row", "bucket")
-                .agg(F.sum("c").alias("c"))
-            )
-        merged = merged.withColumn("__stream_id", F.lit(stream_id)).withColumn(
-            "__batch_id", F.lit(batch_id)
-        )
-        # tiny table: stage then swap via overwrite — depth*width rows
-        merged.localCheckpoint().write.mode("overwrite").parquet(sketch_path)
-
-    q = (
-        stream_df.writeStream.foreachBatch(merge_batch)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(timeout_sec)
-
-
-def hll_stream_to_table(
-    stream_df: DataFrame,
-    col: str,
-    sketch_path: str,
-    checkpoint_path: str,
-    lgk: int = 12,
-    timeout_sec: int = 120,
-) -> None:
-    """Maintain a DISTINCT-COUNT sketch over a stream: per microbatch,
-    build the batch's HLL sketch (DataSketches built-ins) and union it
-    into a one-row parquet sketch table.  Same mergeable-state story
-    as :func:`count_min_stream_to_table` — distinct state stays ~2^lgk
-    bytes forever where an exact distinct set grows with the keyspace
-    — and the same checkpoint-scoped ``(__stream_id, __batch_id)``
-    replay guard makes the at-least-once foreachBatch effectively
-    exactly-once (drained estimate == batch-built estimate, asserted
-    in tests/test_streaming.py)."""
-    stream_id = checkpoint_path  # batch ids are only comparable per checkpoint
-
-    def merge_batch(df: DataFrame, batch_id: int) -> None:
-        from pyspark.errors import AnalysisException
-
-        spark = df.sparkSession
-        batch_sketch = df.agg(F.hll_sketch_agg(col, F.lit(lgk)).alias("sk"))
-        try:
-            old = spark.read.parquet(sketch_path)
-        except AnalysisException:
-            merged = batch_sketch
-        else:
-            replayed = old.filter(
-                (F.col("__stream_id") == stream_id)
-                & (F.col("__batch_id") >= batch_id)
-            )
-            if replayed.limit(1).count() > 0:
-                return  # replayed batch of THIS stream — already merged
-            merged = (
-                old.select("sk")
-                .unionByName(batch_sketch)
-                .agg(F.hll_union_agg("sk").alias("sk"))
-            )
-        merged = merged.withColumn("__stream_id", F.lit(stream_id)).withColumn(
-            "__batch_id", F.lit(batch_id)
-        )
-        merged.localCheckpoint().write.mode("overwrite").parquet(sketch_path)
-
-    q = (
-        stream_df.writeStream.foreachBatch(merge_batch)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(timeout_sec)
-
-
-def hll_table_estimate(spark, sketch_path: str) -> int:
-    """Read the maintained sketch table and return the distinct
-    estimate (one-row scan + one sketch evaluation)."""
-    df = spark.read.parquet(sketch_path)
-    return int(
-        df.select(F.hll_sketch_estimate("sk").alias("est")).first()["est"]
-    )
 
 
 # ---------------------------------------------------------------------------

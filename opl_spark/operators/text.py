@@ -925,49 +925,6 @@ def gopher_rules(
     )
 
 
-def export_jsonl_manifest(
-    df: DataFrame, path: str, shards: int | None = None
-) -> dict:
-    """Sharded JSONL export + integrity manifest: after the parallel
-    write, ONE distributed pass re-reads the shards grouped by
-    ``input_file_name()`` and records per-shard row counts and an
-    order-insensitive content hash (sum of per-line xxhash64 —
-    reassociative, so partitioning can't change it).  The manifest is
-    what the receiving side verifies before training starts; it is
-    written next to the data as ``_MANIFEST.json``.
-
-    Returns the manifest dict ``{"total_rows": n, "shards": {file:
-    {"rows": r, "content_hash": h}}}``.  Cost: one write + one
-    re-scan (the price of verifying what actually landed on disk, not
-    what the writer intended); shard-count control via ``shards`` as
-    in :func:`export_jsonl`.
-    """
-    import json
-    import os
-
-    export_jsonl(df, path, shards)
-    spark = df.sparkSession
-    back = spark.read.text(path)
-    per_shard = (
-        back.groupBy(F.element_at(F.split(F.input_file_name(), "/"), -1).alias("f"))
-        .agg(
-            F.count(F.lit(1)).alias("rows"),
-            F.sum(F.xxhash64("value").cast("decimal(38,0)")).alias("h"),
-        )
-        .collect()
-    )
-    manifest = {
-        "total_rows": int(sum(r["rows"] for r in per_shard)),
-        "shards": {
-            r["f"]: {"rows": int(r["rows"]), "content_hash": str(r["h"])}
-            for r in per_shard
-        },
-    }
-    with open(os.path.join(path, "_MANIFEST.json"), "w") as fh:
-        json.dump(manifest, fh, indent=1, sort_keys=True)
-    return manifest
-
-
 def stupid_backoff_score(
     train: DataFrame,
     score: DataFrame,

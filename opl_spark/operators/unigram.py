@@ -70,7 +70,14 @@ def quantize_scores(scores: dict[str, float]) -> dict[str, float]:
 
 
 def _make_viterbi(scores: dict[str, float], max_len: int, unk: float = UNK_LOGPROB):
-    """Build a self-contained Viterbi decoder CLOSURE.
+    """Build a self-contained Viterbi decoder CLOSURE: ``viterbi(word)``
+    returns ``(pieces, total_score)``, the best segmentation of ``word``
+    under log-prob ``scores``.  Decoding NEVER fails: a single character
+    absent from the vocabulary scores ``unk``, so every position stays
+    reachable even for out-of-vocabulary alphabets (train on ASCII,
+    segment accented text).  Tie-break: higher score, then LONGER last
+    piece (deterministic); unreachable prefixes (-inf) never propagate
+    backpointers.
 
     Executor closures must not reference module globals: cloudpickle
     serializes module-level functions BY REFERENCE (import path), so a
@@ -110,19 +117,6 @@ def _make_viterbi(scores: dict[str, float], max_len: int, unk: float = UNK_LOGPR
         return pieces[::-1], best[n][0]
 
     return viterbi
-
-
-def _viterbi(word: str, scores: dict[str, float], max_len: int):
-    """Best segmentation of ``word`` under log-prob ``scores`` —
-    driver-side convenience over :func:`_make_viterbi`.
-    Returns (pieces, total_score).  Decoding NEVER fails: a single
-    character absent from the vocabulary scores ``UNK_LOGPROB``, so
-    every position stays reachable even for out-of-vocabulary
-    alphabets (train on ASCII, segment accented text).
-    Tie-break: higher score, then LONGER last piece (deterministic);
-    unreachable prefixes (-inf) never propagate backpointers.
-    """
-    return _make_viterbi(scores, max_len)(word)
 
 
 def _estep_counts(words: DataFrame, scores: dict[str, float], max_len: int):

@@ -2,10 +2,6 @@
 
 from opl_spark.plans.inspect import (  # noqa: F401
     formatted_plan,
-    partition_filters,
-    pushed_filters,
-    read_schemas,
-    partition_profile,
     scale_lint,
     unpartitioned_ordered_windows,
     unpartitioned_unordered_windows,

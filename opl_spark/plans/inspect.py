@@ -37,35 +37,6 @@ def formatted_plan(df: DataFrame) -> str:
     return "\n".join(r[0] for r in rows)
 
 
-def _scan_lines(df: DataFrame, field: str) -> list[str]:
-    pat = re.compile(rf"{field}:\s*\[(.*?)\]")
-    out = []
-    for ln in formatted_plan(df).splitlines():
-        m = pat.search(ln)
-        if m is not None:
-            out.append(m.group(1))
-    return out
-
-
-def partition_filters(df: DataFrame) -> list[str]:
-    """Per-scan partition filter lists (empty string = unpruned scan)."""
-    return _scan_lines(df, "PartitionFilters")
-
-
-def pushed_filters(df: DataFrame) -> list[str]:
-    """Per-scan pushed-down data filter lists."""
-    return _scan_lines(df, "PushedFilters")
-
-
-def read_schemas(df: DataFrame) -> list[str]:
-    """Per-scan read schemas (column-pruning evidence)."""
-    out = []
-    for ln in formatted_plan(df).splitlines():
-        if "ReadSchema:" in ln:
-            out.append(ln.split("ReadSchema:", 1)[1].strip())
-    return out
-
-
 def window_specs(plan: str) -> list[str]:
     """Every ``windowspecdefinition(...)`` argument string in a plan,
     extracted with BALANCED parentheses — sort keys that are
@@ -189,40 +160,6 @@ def scale_lint(
             )
             break
     return findings
-
-
-def partition_profile(df: DataFrame) -> dict:
-    """Physical partition balance diagnostic: rows per partition plus
-    the skew summary planners actually act on — ``max/mean`` row ratio
-    and the count of empty partitions.  A ratio ≫ 1 before a join/agg
-    is the signal to salt, repartition, or let AQE split; empty
-    partitions after a filter are the signal to coalesce before
-    writing.
-
-    Counting stays JVM-side: one ``spark_partition_id`` aggregate
-    (rows never cross into Python — on the wide tables this diagnoses,
-    row pickling would cost more than the scan); empty partitions are
-    inferred from the RDD's partition count, which is metadata.
-    """
-    from pyspark.sql import functions as F
-
-    n = df.rdd.getNumPartitions()
-    counts = [
-        r["c"]
-        for r in df.select(F.spark_partition_id().alias("p"))
-        .groupBy("p")
-        .agg(F.count(F.lit(1)).alias("c"))
-        .collect()
-    ]
-    total = sum(counts)
-    mean = total / n if n else 0.0
-    return {
-        "n_partitions": n,
-        "total_rows": total,
-        "max_rows": max(counts) if counts else 0,
-        "empty_partitions": n - len(counts),
-        "skew_ratio": round(max(counts) / mean, 3) if total else 0.0,
-    }
 
 
 def cost_report(df: DataFrame) -> dict:

@@ -37,12 +37,12 @@ import re
 import shutil
 import uuid
 
-from pyspark.sql import Column, DataFrame, Observation, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from opl_spark.cube import CORE_PARAMS, CubeEngine
 from opl_spark.snapshot import swap_in
-from opl_spark.sources.registry import open_parquet
+from opl_spark.sources.registry import open_parquet, write_counted
 
 #: Each input of a derivable aggregate as a rollup partial: its column
 #: prefix and how partials re-reduce (counts re-add; the coalesce keeps
@@ -53,15 +53,6 @@ _PARTIALS = {
     "min": ("__min", F.min),
     "max": ("__max", F.max),
 }
-
-
-def _write_counted(df: DataFrame, path: str, name: str) -> int:
-    """Overwrite ``path`` with ``df`` and return the rows written,
-    observed on the write itself (as ``SnapshotEngine.run`` counts a
-    scope) instead of by re-reading the written files."""
-    obs = Observation(name)
-    df.observe(obs, F.count(F.lit(1)).alias("rows")).write.mode("overwrite").parquet(path)
-    return obs.get["rows"]
 
 
 def _grouping_key(cols: list[str]) -> str:
@@ -228,7 +219,7 @@ class RollupStore:
             key = _grouping_key(cols)
             rolled = base.groupBy(*cols).agg(*partials)
             path = os.path.join(self._fact_dir(fact), key)
-            rows = _write_counted(rolled, path, f"rollup_{fact}_{key}")
+            rows = write_counted(rolled, path, f"rollup_{fact}_{key}")
             manifest["rollups"][key] = {"cols": cols, "rows": rows}
         self._publish(fact, manifest)
         # best-effort delete of the dropped stale rollups' files, once
@@ -474,7 +465,7 @@ class RollupStore:
                 .agg(*re_reduce)
             )
             tmp = path + "__refreshing"
-            rows = _write_counted(merged, tmp, f"rollup_refresh_{fact}_{key}")
+            rows = write_counted(merged, tmp, f"rollup_refresh_{fact}_{key}")
             swap_in(self.spark, path, tmp, "rollup refresh")
             rollups[key] = {**info, "rows": rows}
         manifest = {

@@ -680,35 +680,6 @@ class SnapshotEngine:
         return written
 
 
-def backfill(
-    engine: SnapshotEngine,
-    start: _dt.date | str,
-    end: _dt.date | str,
-    facts: list[FactQuery],
-) -> dict[str, int]:
-    """Run the snapshot for every pivot date in ``[start, end]`` — the
-    catch-up / bootstrap path for a warehouse that missed cron runs
-    (the reference has no equivalent; an operator re-runs ``-c add``
-    by hand per day).
-
-    Idempotence makes this safe to overlap with past runs: each
-    (fact, scope) that already landed is skipped by the E4 guard, so a
-    backfill over an interval containing existing data appends only
-    the missing scopes.  Cron gating applies per day — weekly facts
-    fire only on the interval's ISO-week boundary days, and so on.
-    Returns total appended rows per fact table."""
-    d = _dt.date.fromisoformat(start) if isinstance(start, str) else start
-    stop = _dt.date.fromisoformat(end) if isinstance(end, str) else end
-    if d > stop:
-        raise ValueError(f"backfill start {d} after end {stop}")
-    totals: dict[str, int] = {}
-    while d <= stop:
-        for fact_table, n in engine.run(d, facts).items():
-            totals[fact_table] = totals.get(fact_table, 0) + n
-        d += _dt.timedelta(days=1)
-    return totals
-
-
 def table_stats(engine: SnapshotEngine, fact_table: str) -> list[dict]:
     """Storage report per (year, month) partition: file count and
     total bytes from Hadoop FS LISTING (metadata only — no data
@@ -733,106 +704,3 @@ def table_stats(engine: SnapshotEngine, fact_table: str) -> list[dict]:
                 }
             )
     return sorted(out, key=lambda d: d["partition"])
-
-
-def ingest_new_files(
-    spark: SparkSession,
-    source_dir: str,
-    ledger_path: str,
-    process,
-    file_format: str = "parquet",
-    suffix: str | None = None,
-) -> dict:
-    """Incremental file ingestion with a processed-file ledger: list
-    the landing directory (FS metadata only), anti-join against the
-    ledger of already-ingested paths, run ``process(df)`` over ONLY the
-    new files, then append their paths to the ledger.
-
-    Semantics are at-least-once: the ledger is written AFTER
-    ``process`` succeeds, so a crash between the two replays the batch
-    on restart (the downstream write must be idempotent — the
-    engine's scope-anti-join / upsert sinks are).  The path diff runs
-    as a Spark anti-join (ledger-sized state never on the driver
-    beyond the new-batch path list, which the reader needs anyway).
-
-    Returns ``{"listed": n, "new": m}``.  Mirrors the cron-driven
-    snapshot loop of the reference (OLAP.php:325-375) transposed to a
-    file-landing-zone source: each nightly drop ingests exactly once.
-    """
-    from pyspark.errors import AnalysisException
-
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    hdir = jvm.org.apache.hadoop.fs.Path(source_dir)
-    fs = hdir.getFileSystem(conf)
-    listed = []
-    if fs.exists(hdir):
-        for st in fs.listStatus(hdir):
-            p = st.getPath().toString()
-            name = st.getPath().getName()
-            if st.isFile() and not name.startswith(("_", ".")):
-                if suffix is None or name.endswith(suffix):
-                    listed.append(p)
-    if not listed:
-        return {"listed": 0, "new": 0}
-    paths_df = spark.createDataFrame([(p,) for p in listed], ["path"])
-    try:
-        ledger = spark.read.parquet(ledger_path).select("path")
-        fresh_df = paths_df.join(ledger, "path", "left_anti")
-    except AnalysisException:
-        fresh_df = paths_df
-    fresh = [r["path"] for r in fresh_df.collect()]
-    if not fresh:
-        return {"listed": len(listed), "new": 0}
-    batch = spark.read.format(file_format).load(fresh)
-    process(batch)
-    spark.createDataFrame(
-        [(p,) for p in sorted(fresh)], ["path"]
-    ).withColumn("ingested_at", F.current_timestamp()).write.mode(
-        "append"
-    ).parquet(ledger_path)
-    return {"listed": len(listed), "new": len(fresh)}
-
-
-def conform_late_dimension(
-    fact: DataFrame, dim: DataFrame, key: str, placeholder: str = "Unknown"
-):
-    """Early-arriving-fact handling (Kimball's 'late-arriving
-    dimension'): fact rows referencing dimension keys the dimension
-    does not know yet get PLACEHOLDER members appended — string
-    attributes become ``placeholder``, everything else null — so the
-    fact loads tonight and the real member upserts over the
-    placeholder when it arrives (SCD1 ``upsert`` on the same key).
-
-    Returns ``(conformed_dim, n_placeholders)``.  One distinct
-    key projection + one LEFT ANTI join against the dimension
-    (broadcast when the dim is small); no fact rewrite, no dropped
-    rows — the alternative, inner-joining facts to the dim, silently
-    loses tonight's business.
-    """
-    from pyspark.sql import functions as F  # noqa: F811
-    from pyspark.sql import types as T
-
-    # NULL keys are NOT conformable: a null-keyed placeholder can
-    # never be equality-joined to or upserted over, so it would
-    # permanently pollute the dimension while fixing nothing —
-    # null-key facts remain the caller's data-quality problem
-    unknown = (
-        fact.select(F.col(key))
-        .filter(F.col(key).isNotNull())
-        .distinct()
-        .join(dim.select(key), key, "left_anti")
-    )
-    cols = [F.col(key)]
-    for f in dim.schema.fields:
-        if f.name == key:
-            continue
-        if isinstance(f.dataType, T.StringType):
-            cols.append(F.lit(placeholder).cast("string").alias(f.name))
-        else:
-            cols.append(F.lit(None).cast(f.dataType).alias(f.name))
-    # one execution of the fact-distinct + anti-join plan: the count
-    # and the union both read the checkpointed placeholders
-    placeholders = unknown.select(*cols).localCheckpoint()
-    n = placeholders.count()
-    return dim.unionByName(placeholders.select(dim.columns)), n

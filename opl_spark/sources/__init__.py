@@ -3,8 +3,3 @@ from opl_spark.sources.registry import (  # noqa: F401
     load_table,
     register_sources,
 )
-from opl_spark.sources.formats import (  # noqa: F401
-    infer_format,
-    load_any,
-    save_any,
-)

@@ -64,20 +64,12 @@ def write_bucketed(
     writer.saveAsTable(table)
 
 
-def bucketed_join(
-    spark: SparkSession, left_table: str, right_table: str, on: list[str]
-) -> DataFrame:
-    """Join two co-bucketed catalog tables on their bucket key — with
-    matching bucket counts Catalyst plans this without any Exchange."""
-    return spark.table(left_table).join(spark.table(right_table), on)
-
-
 def materialize_parquet_atomic(
     spark: SparkSession, name: str, token: str, build
 ) -> DataFrame:
     """Per-snapshot parquet materialization that stays safe under
-    CONCURRENT sessions sharing one warehouse — the export_tar_shards
-    temp+rename discipline applied to memo tables.
+    CONCURRENT sessions sharing one warehouse — a write-to-temp then
+    rename discipline applied to memo tables.
 
     The final location is content-addressed:
     ``<warehouse>/<name>/<sha1(token)[:12]>`` (``token`` is the data

@@ -21,7 +21,7 @@ from __future__ import annotations
 import json
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
@@ -105,6 +105,15 @@ def open_parquet(spark: SparkSession, path: str) -> DataFrame:
         pq.ParquetToSparkSchemaConverter(jss.sessionState().conf()),
     )
     return spark.read.schema(StructType.fromJson(json.loads(jschema.json()))).parquet(path)
+
+
+def write_counted(df: DataFrame, path: str, name: str) -> int:
+    """Overwrite ``path`` with ``df`` as parquet and return the rows
+    written, observed on the write itself (as ``SnapshotEngine.run``
+    counts a scope) instead of by re-reading the written files."""
+    obs = Observation(name)
+    df.observe(obs, F.count(F.lit(1)).alias("rows")).write.mode("overwrite").parquet(path)
+    return obs.get["rows"]
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

@@ -1,10 +1,2 @@
-from opl_spark.streaming.events import (  # noqa: F401
-    read_events_stream,
-    run_to_memory,
-    sessionize,
-    windowed_counts,
-)
-from opl_spark.streaming.stateful import (  # noqa: F401
-    minhash_probe_foreach_batch,
-    srp_probe_foreach_batch,
-)
+"""Structured Streaming tier: window operators that run in batch and
+stream mode (``events``) and per-key stateful dedup (``stateful``)."""

@@ -21,7 +21,6 @@ Scale notes:
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupStateTimeout
 
@@ -73,365 +72,3 @@ def first_seen_stream(
             fn, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
         )
     )
-
-
-def transition_stream(
-    events: DataFrame,
-    user_col: str = "user_id",
-    ts_col: str = "us",
-    type_col: str = "event_type",
-    id_col: str = "event_id",
-) -> DataFrame:
-    """Streaming event-type transitions: per user, emit one
-    ``(prev_type, next_type)`` row for every consecutive event pair —
-    the online feed of the batch transition matrix
-    (``q_event_transitions``); downstream aggregation of the appended
-    pairs gives identical counts.
-
-    State per user is the LAST event seen ``(us, id, type)`` — a few
-    bytes, sharded with the user-key shuffle — so pairs bridge
-    microbatch boundaries.  Within a microbatch the user's events sort
-    by ``(ts, id)``; across batches correctness relies on the source
-    delivering each user's events in time order (true for replayed
-    logs / availableNow over time-ordered files; out-of-order sources
-    need a watermark + sort stage first, which this operator leaves to
-    the caller exactly like the reference batch query leaves it to the
-    table's order columns).
-    """
-    out_schema = T.StructType(
-        [
-            T.StructField("prev_type", T.StringType()),
-            T.StructField("next_type", T.StringType()),
-        ]
-    )
-    state_schema = T.StructType(
-        [
-            T.StructField("last_us", T.LongType()),
-            T.StructField("last_id", T.LongType()),
-            T.StructField("last_type", T.StringType()),
-        ]
-    )
-
-    def fn(key, pdfs, state):
-        import pandas as pd  # self-contained: no engine-package imports
-
-        batch = pd.concat(list(pdfs), ignore_index=True)
-        if not len(batch):
-            return
-        batch = batch.sort_values([ts_col, id_col])
-        types = batch[type_col].tolist()
-        prev0 = state.get[2] if state.exists else None
-        prevs = [prev0] + types[:-1]
-        state.update(
-            (int(batch[ts_col].iloc[-1]), int(batch[id_col].iloc[-1]), types[-1])
-        )
-        rows = [(p, n) for p, n in zip(prevs, types) if p is not None]
-        if rows:
-            yield pd.DataFrame(rows, columns=["prev_type", "next_type"])
-
-    # explicit projection — the python eval node consumes its child's
-    # full schema, so unpruned extra columns would cross Arrow per batch
-    return (
-        events.select(*dict.fromkeys([user_col, ts_col, id_col, type_col]))
-        .groupBy(user_col)
-        .applyInPandasWithState(
-            fn, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
-        )
-    )
-
-
-def funnel_stream(
-    events: DataFrame,
-    steps: list[str],
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    type_col: str = "event_type",
-) -> DataFrame:
-    """Streaming ordered funnel: per user, advance through ``steps``
-    only when the next step's event arrives strictly AFTER the time
-    the previous step was reached (the batch ``funnel`` contract),
-    emitting ``(user, step, step_name)`` each time a user advances.
-
-    Per-user state = the reached-step index + that step's event time
-    (a dozen bytes, sharded with the shuffle).  A user's progression
-    is processed in event-time order WITHIN each microbatch; because
-    the gate is strictly-after on the stored timestamp, replaying
-    batches or splitting them differently cannot advance a user twice
-    for the same event — summing emissions per step therefore equals
-    the batch funnel's step counts (asserted in
-    tests/test_streaming.py).
-    """
-    out_schema = T.StructType(
-        [
-            T.StructField("user", T.LongType()),
-            T.StructField("step", T.IntegerType()),
-            T.StructField("step_name", T.StringType()),
-        ]
-    )
-    state_schema = T.StructType(
-        [
-            T.StructField("reached", T.IntegerType()),
-            T.StructField("at_us", T.LongType()),
-        ]
-    )
-    step_list = list(steps)
-
-    def fn(key, pdfs, state):
-        import pandas as pd
-
-        reached, at_us = (state.get if state.exists else (-1, -1))
-        frames = [
-            pdf[[ts_col, type_col]] for pdf in pdfs
-        ]
-        out_steps = []
-        if frames:
-            ev = pd.concat(frames).sort_values(ts_col, kind="mergesort")
-            for ts, et in zip(ev[ts_col], ev[type_col]):
-                if reached + 1 >= len(step_list):
-                    break
-                nxt = step_list[reached + 1]
-                ts_us = int(ts.value // 1000)
-                if et == nxt and (reached < 0 or ts_us > at_us):
-                    reached += 1
-                    at_us = ts_us
-                    out_steps.append(reached)
-        if out_steps:
-            state.update((reached, at_us))
-            yield pd.DataFrame(
-                {
-                    "user": [key[0]] * len(out_steps),
-                    "step": out_steps,
-                    "step_name": [step_list[i] for i in out_steps],
-                }
-            )
-        elif state.exists:
-            pass  # nothing advanced this batch; keep existing state
-
-    return (
-        events.select(user_col, ts_col, type_col)
-        .groupBy(user_col)
-        .applyInPandasWithState(
-            fn,
-            outputStructType=out_schema,
-            stateStructType=state_schema,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
-
-
-def topk_stream(
-    df: DataFrame, col: str, k: int = 10, counters: int = 200
-) -> DataFrame:
-    """Streaming heavy hitters: a space-saving summary (Metwally et
-    al., ICDT 2005) maintained across microbatches, emitting the
-    current top-``k`` ``(seq, rank, value, est)`` after every batch.
-
-    State is the fixed ``counters``-slot summary — bounded no matter
-    how many distinct values the stream ever carries, which is the
-    reason to sketch instead of `groupBy().count()` (whose state grows
-    with the keyspace).  Each microbatch is pre-reduced to
-    ``(value, weight)`` pairs inside the closure (pandas
-    ``value_counts`` — the map-side combine), then folded into the
-    summary with the weighted space-saving update: tracked values add
-    their weight, new values evict the minimum counter and inherit it.
-    ``est ≥ true`` for every tracked value, error ≤ N/counters —
-    the same guarantee as the batch operator
-    (``operators.sketch.space_saving_topk``), so stream and batch
-    answers agree wherever cardinality ≤ counters.
-
-    The single state group is a deliberate funnel: a summary is
-    GLOBAL state (like the count-min grid), and what crosses the
-    shuffle per batch is the batch's value-count table, not its rows.
-    ``seq`` increments per batch so consumers (and tests) can select
-    the newest emission.
-    """
-    import pandas as pd  # noqa: F401 — closure dependency, imported early
-
-    out_schema = T.StructType(
-        [
-            T.StructField("seq", T.LongType()),
-            T.StructField("rank", T.LongType()),
-            T.StructField("value", T.StringType()),
-            T.StructField("est", T.LongType()),
-        ]
-    )
-    state_schema = T.StructType(
-        [
-            T.StructField("vals", T.ArrayType(T.StringType())),
-            T.StructField("cnts", T.ArrayType(T.LongType())),
-            T.StructField("seq", T.LongType()),
-        ]
-    )
-
-    def fn(key, pdfs, state):
-        import pandas as pd
-
-        if state.exists:
-            vals, cnts, seq = state.get
-            slots = dict(zip(list(vals), list(cnts)))
-        else:
-            slots, seq = {}, 0
-        for pdf in pdfs:
-            for v, w in pdf[col].astype(str).value_counts().sort_index().items():
-                w = int(w)
-                if v in slots:
-                    slots[v] += w
-                elif len(slots) < counters:
-                    slots[v] = w
-                else:
-                    mn_key = min(slots, key=lambda s: (slots[s], s))
-                    mn = slots.pop(mn_key)
-                    slots[v] = mn + w
-        seq += 1
-        state.update((list(slots.keys()), [int(c) for c in slots.values()], seq))
-        top = sorted(slots.items(), key=lambda kv: (-kv[1], kv[0]))[:k]
-        yield pd.DataFrame(
-            {
-                "seq": seq,
-                "rank": range(1, len(top) + 1),
-                "value": [v for v, _ in top],
-                "est": [int(c) for _, c in top],
-            }
-        )
-
-    from pyspark.sql import functions as F
-
-    return (
-        df.select(F.col(col).cast("string").alias(col))
-        .withColumn("__g", F.lit(0))
-        .groupBy("__g")
-        .applyInPandasWithState(
-            fn, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
-        )
-    )
-
-
-def dedup_within_watermark_stream(
-    events: DataFrame, key_cols: list[str], ts_col: str = "ts", delay: str = "1 hour"
-) -> DataFrame:
-    """Bounded-state streaming dedup: suppress repeats of a key seen
-    within the watermark horizon, via Spark's built-in
-    ``dropDuplicatesWithinWatermark`` — the production complement to
-    :func:`first_seen_stream`.
-
-    The trade-off between the two IS the operator choice:
-    ``first_seen_stream`` guarantees exactly-once per key forever but
-    its state grows with the keyspace (unbounded on an infinite
-    stream); this one's state is bounded by the watermark window —
-    keys older than ``delay`` are forgotten, so a key recurring after
-    the horizon is emitted again.  For ingest pipelines where
-    duplicates arrive in bursts (retried producers, replayed
-    partitions), bounded state is the 100 TB-safe default.
-    """
-    return events.withWatermark(ts_col, delay).dropDuplicatesWithinWatermark(
-        key_cols
-    )
-
-
-def minhash_probe_foreach_batch(
-    store_path: str,
-    out_path: str,
-    text_col: str,
-    id_col: str,
-    bands: int = 16,
-    rows_per_band: int = 4,
-    threshold: float = 0.5,
-):
-    """The STREAMING leg of the persisted MinHash signature store
-    (operators/dedup.py:near_dedup_incremental) — the TEXT twin of
-    :func:`srp_probe_foreach_batch`: each arriving document
-    micro-batch probes the ``(band, bucket_shard)``-partitioned store,
-    appends its dup report ``(doc, dup_of, sim)`` to ``out_path``
-    (parquet), and appends its own banded signatures to the store, so
-    a document in micro-batch N detects a near-dup from micro-batch
-    N−1 and the index survives restarts.  Batch 0 against a
-    never-built store bootstraps the index (empty report, signatures
-    written).
-
-    Delivery semantics match the SRP leg exactly: the store is
-    idempotent under replay (the candidate ``distinct`` collapses
-    duplicate signature rows), and the probe runs with
-    ``exclude_self=True`` so a replayed micro-batch reproduces its
-    ORIGINAL report — at-least-once with byte-equal duplicates;
-    readers needing exactly-once de-duplicate on the full row
-    ``(doc, dup_of, sim, batch_id)``.  Per-batch work is partition-
-    pruned to the batch's own (band, shard) keys."""
-    from opl_spark.operators.dedup import near_dedup_incremental
-
-    def fn(batch_df: DataFrame, batch_id: int) -> None:
-        dups = near_dedup_incremental(
-            batch_df.sparkSession,
-            store_path,
-            batch_df,
-            text_col,
-            id_col,
-            bands=bands,
-            rows_per_band=rows_per_band,
-            threshold=threshold,
-            append=True,
-            exclude_self=True,
-        )
-        dups.withColumn("batch_id", F.lit(batch_id)).write.mode(
-            "append"
-        ).parquet(out_path)
-
-    return fn
-
-
-def srp_probe_foreach_batch(
-    store_path: str,
-    out_path: str,
-    vec_col: str,
-    id_col: str,
-    dims: int,
-    n_bits: int | None = None,
-    bands: int | None = None,
-    threshold: float = 0.8,
-):
-    """The STREAMING leg of the persisted SRP-LSH index
-    (operators/similarity.py:srp_dedup_incremental): a ``foreachBatch``
-    function that probes each arriving embedding micro-batch against
-    the ``(band, bucket_shard)``-partitioned store, appends the dup
-    report ``(vec_id, dup_of, cos)`` to ``out_path`` (parquet), and
-    appends the batch's banded signatures to the store — so a vector
-    arriving in micro-batch N detects a near-dup that arrived in
-    micro-batch N−1, and the index survives stream restarts (it IS the
-    checkpointable state, not executor memory).  Batch 0 against a
-    not-yet-built store bootstraps the index (empty report, signatures
-    written) rather than crashing — :func:`srp_dedup_incremental`'s
-    missing-store path.
-
-    Delivery semantics, stated plainly: a replayed micro-batch (crash
-    between the two appends) can append its signatures and its report
-    twice.  The STORE stays correct — the probe's candidate
-    ``distinct`` collapses duplicate signature rows — and the REPLAYED
-    REPORT matches the original: the probe runs with
-    ``exclude_self=True``, so the batch's own already-appended
-    signatures are invisible to it and a replay cannot self-match at
-    cos 1.0.  The report is therefore at-least-once with byte-equal
-    duplicates; readers that need exactly-once de-duplicate on the
-    full row (``vec_id, dup_of, cos, batch_id``).  Per-batch work is
-    batch-sized × bands partitions of the store (partition-pruned
-    probe), never a full-store scan."""
-    from opl_spark.operators.similarity import srp_dedup_incremental
-
-    def fn(batch_df: DataFrame, batch_id: int) -> None:
-        dups = srp_dedup_incremental(
-            batch_df.sparkSession,
-            store_path,
-            batch_df,
-            vec_col,
-            id_col,
-            dims,
-            n_bits=n_bits,
-            bands=bands,
-            threshold=threshold,
-            append=True,
-            exclude_self=True,
-        )
-        dups.withColumn("batch_id", F.lit(batch_id)).write.mode(
-            "append"
-        ).parquet(out_path)
-
-    return fn

@@ -2360,7 +2360,7 @@ def q_ccnet_bucket(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _pq_m(emb) -> int:
     """Largest subspace count in (8, 4, 2, 1) dividing the embedding
     dim — keeps the PQ queries running if the generated testdata ever
-    changes dimensionality (pq_train requires d % m == 0)."""
+    changes dimensionality (pq_train_quantized requires d % m == 0)."""
     d = len(emb.select("embedding").first()["embedding"])
     return next(m for m in (8, 4, 2, 1) if d % m == 0)
 

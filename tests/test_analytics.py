@@ -262,58 +262,6 @@ def test_zscore_overflow_raises_instead_of_undercounting(spark):
         zscore_outliers(df, "grp", "value", z=3, value_decimals=2).collect()
 
 
-@pytest.mark.slow  # r14 slow tier
-def test_scd2_apply_merge_and_idempotence(spark):
-    """SCD2 merge contract: a change batch closes the open interval at
-    the effective date and opens a new current row for keys whose
-    attributes changed or are new; no-op rows leave the table
-    untouched; re-applying the SAME batch changes nothing
-    (idempotence); closed history is byte-identical before and
-    after."""
-    from pyspark.sql import functions as F
-
-    from opl_spark.operators.analytics import scd2_apply
-
-    current = spark.createDataFrame(
-        [
-            # key 1: one closed + one open interval
-            (1, "bronze", "2020-01-01", "2021-01-01", False),
-            (1, "silver", "2021-01-01", None, True),
-            # key 2: open only
-            (2, "gold", "2020-06-01", None, True),
-        ],
-        "k int, tier string, valid_from string, valid_to string, is_current boolean",
-    )
-    changes = spark.createDataFrame(
-        [
-            (1, "gold", "2022-03-01"),   # real change → close + open
-            (2, "gold", "2022-03-01"),   # same attrs → no-op
-            (3, "bronze", "2022-03-01"), # brand-new key
-        ],
-        "k int, tier string, eff string",
-    )
-    merged = scd2_apply(current, changes, "k", ["tier"], "eff")
-    rows = {(r["k"], r["tier"], r["valid_from"], r["valid_to"]): r for r in merged.collect()}
-    # key 1: silver closed at eff, gold open from eff
-    assert (1, "silver", "2021-01-01", "2022-03-01") in rows
-    assert (1, "gold", "2022-03-01", None) in rows
-    assert rows[(1, "gold", "2022-03-01", None)]["is_current"] is True
-    # key 2 untouched open row
-    assert (2, "gold", "2020-06-01", None) in rows
-    # key 3 new open row
-    assert (3, "bronze", "2022-03-01", None) in rows
-    # closed history intact
-    assert (1, "bronze", "2020-01-01", "2021-01-01") in rows
-    assert merged.count() == 5
-    # idempotence: same batch again → no change
-    again = scd2_apply(merged, changes, "k", ["tier"], "eff")
-    key = lambda r: (r["k"], r["tier"], r["valid_from"], r["valid_to"], r["is_current"])  # noqa: E731
-    assert sorted(map(key, again.collect())) == sorted(map(key, merged.collect()))
-    # exactly one current row per key
-    cur = merged.filter(F.col("is_current")).groupBy("k").count().collect()
-    assert all(r["count"] == 1 for r in cur)
-
-
 def test_ewma_62_step_window_no_overflow(spark):
     """A 200-step series stays finite and correct: the EWMA matches
     the full-history float recursion to rounding (62 trailing steps

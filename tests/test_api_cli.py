@@ -419,6 +419,33 @@ def test_cli_srp_probe_closes_build_probe_append_loop(spark, sf_dir, tmp_path, c
                   str(sf_dir) + "/documents.parquet"])
 
 
+def test_cli_srp_probe_prints_the_report_row_count(spark, sf_dir, tmp_path, capsys):
+    """With --report-out the printed ``dups`` is the row count observed
+    on the report write; it must equal the rows the report holds."""
+    from opl_spark.sources import load_table
+
+    emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+    store = str(tmp_path / "srp_store")
+    b0_path = str(tmp_path / "batch0")
+    b1_path = str(tmp_path / "batch1")
+    emb.orderBy("vec_id").limit(5).write.parquet(b0_path)
+    spark.createDataFrame(
+        [(900000 + r["vec_id"], [float(v) for v in r["embedding"]])
+         for r in emb.orderBy("vec_id").limit(2).collect()],
+        "vec_id long, embedding array<double>",
+    ).write.parquet(b1_path)
+    assert cli_main(["-c", "srp-probe", "--store", store, "--batch", b0_path]) == 0
+    capsys.readouterr()
+
+    rep = str(tmp_path / "report")
+    assert cli_main([
+        "-c", "srp-probe", "--store", store, "--batch", b1_path,
+        "--threshold", "0.95", "--report-out", rep,
+    ]) == 0
+    out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert out["dups"] == spark.read.parquet(rep).count() >= 2
+
+
 def test_aggregate_plan_cache_reuses_and_invalidates(spark, sf_dir):
     """The response cache: an identical aggregate request returns the
     stored payload, different params and output kinds get their own

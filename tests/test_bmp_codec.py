@@ -11,14 +11,14 @@ import pytest
 from pyspark.sql import functions as F
 
 from opl_spark.operators.multimodal import (
-    bmp_area_resize,
-    bmp_decode,
-    bmp_encode,
+    _bmp_tools,
     decode_images,
     image_phash,
     phash_dup_candidates,
     resize_images,
 )
+
+bmp_decode, bmp_encode, bmp_area_resize = _bmp_tools()
 
 
 def _rand_rgb(rng: np.random.Generator, h: int, w: int) -> np.ndarray:

@@ -6,7 +6,7 @@ from pyspark.sql import functions as F
 
 from opl_spark.plans import formatted_plan
 from opl_spark.sources import load_table
-from opl_spark.sources.bucketing import bucketed_join, write_bucketed
+from opl_spark.sources.bucketing import write_bucketed
 
 
 @pytest.fixture(scope="module")
@@ -33,7 +33,7 @@ def test_bucketed_join_has_no_exchange(spark, sf_dir, bucketed_tables):
     prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        joined = bucketed_join(spark, left, right, ["custkey"])
+        joined = spark.table(left).join(spark.table(right), ["custkey"])
         agg = joined.groupBy("c_mktsegment").agg(
             F.sum(F.col("o_totalprice").cast("decimal(18,2)")).alias("total")
         )
@@ -56,65 +56,3 @@ def test_bucketed_join_has_no_exchange(spark, sf_dir, bucketed_tables):
         .agg(F.sum(F.col("o_totalprice").cast("decimal(18,2)")).alias("total"))
     )
     assert sorted(map(tuple, agg.collect())) == sorted(map(tuple, plain.collect()))
-
-
-def test_write_sorted_produces_disjoint_file_ranges(spark, sf_dir, tmp_path):
-    """Range-clustered writes must yield parquet files whose
-    [min, max] key ranges do NOT overlap (footer-stat file skipping
-    works) and whose row groups are internally sorted."""
-    import glob
-
-    import pyarrow.parquet as pq
-
-    from opl_spark.operators.layout import write_sorted
-    from opl_spark.sources import load_table
-
-    out = str(tmp_path / "sorted_orders")
-    orders = load_table(spark, sf_dir, "orders")
-    write_sorted(orders, out, ["o_custkey"], n_files=4)
-
-    ranges = []
-    for f in glob.glob(out + "/*.parquet"):
-        md = pq.ParquetFile(f).metadata
-        names = [md.schema.column(c).name for c in range(len(md.schema))]
-        idx = names.index("o_custkey")
-        mins, maxs = [], []
-        for rg in range(md.num_row_groups):
-            st = md.row_group(rg).column(idx).statistics
-            mins.append(st.min); maxs.append(st.max)
-        ranges.append((min(mins), max(maxs)))
-    assert len(ranges) >= 2
-    ranges.sort()
-    for (lo1, hi1), (lo2, hi2) in zip(ranges, ranges[1:]):
-        assert hi1 <= lo2, (ranges,)
-
-    # and a key filter on the reread must push down to the scan
-    back = spark.read.parquet(out).filter("o_custkey = 7")
-    plan = back._jdf.queryExecution().executedPlan().toString()
-    assert "o_custkey" in plan and "PushedFilters" in plan
-
-
-def test_write_with_bloom_embeds_filters_in_footers(spark, sf_dir, tmp_path):
-    """The bloom-filter write option must actually change the files:
-    pyarrow 16 doesn't expose bloom offsets, so assert the observable
-    contract — identical data, measurably larger files (the embedded
-    filter bytes), and intact read-back."""
-    import glob
-    import os
-
-    from opl_spark.operators.layout import write_with_bloom
-    from opl_spark.sources import load_table
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text").coalesce(1)
-    plain, bloomed = str(tmp_path / "plain"), str(tmp_path / "bloomed")
-    docs.write.mode("overwrite").parquet(plain)
-    write_with_bloom(docs, bloomed, ["doc_id"], ndv=100_000)
-
-    size = lambda d: sum(
-        os.path.getsize(f) for f in glob.glob(d + "/*.parquet")
-    )
-    # ~1.2 bytes/ndv of filter must have landed in the footer region
-    assert size(bloomed) > size(plain) + 50_000, (size(plain), size(bloomed))
-    back = spark.read.parquet(bloomed)
-    assert back.count() == docs.count()
-    assert back.filter("doc_id = 3").count() == 1

@@ -119,39 +119,6 @@ def test_shipped_metadata_files_load_to_native_catalog():
         assert loaded.measures(fact) == native.measures(fact), fact
 
 
-def test_conformed_dimensions_report():
-    from opl_spark.catalog import conformed_dimensions
-    from opl_spark.facts import default_catalog
-
-    cat = default_catalog()
-    rep = {
-        e["dimension"]: e
-        for e in conformed_dimensions(cat, ["loans2", "accessions"])
-    }
-    # organization_level conforms exactly; date conforms at the
-    # coarser (month) grain — loans2 carries a deeper day level
-    assert rep["organization_level"]["grain"] == "identical"
-    assert rep["date"]["grain"] == "rollup"
-    assert "signatures" in rep["date"]
-
-
-def test_partition_profile_reports_skew(spark, sf_dir):
-    from pyspark.sql import functions as F
-
-    from opl_spark.plans import partition_profile
-
-    from opl_spark.sources import load_table
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    even = docs.repartition(8, "doc_id")
-    p = partition_profile(even)
-    assert p["n_partitions"] == 8 and p["total_rows"] == docs.count()
-    assert p["skew_ratio"] < 2.0
-    skewed = docs.repartition(8, (F.col("doc_id") * 0).alias("k"))
-    s = partition_profile(skewed)
-    assert s["skew_ratio"] >= 7.0 and s["empty_partitions"] >= 6
-
-
 def test_cost_report_shapes(spark, sf_dir):
     """cost_report must reproduce the known plan contracts: a map-only
     text op has zero shuffles/broadcasts; the Q5-shaped star join has

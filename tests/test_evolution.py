@@ -1,17 +1,12 @@
 """Schema evolution on fact-table append (S7; reference
-modifyTableStruct OLAP.php:177-199) and the materialized IVF index's
-partition-pruned probe path."""
+modifyTableStruct OLAP.php:177-199) and fact-table maintenance
+(compact, upsert, vacuum, expiry)."""
 
 import pytest
 from pyspark.sql import functions as F
 
-from opl_spark.operators.similarity import (
-    build_ivf_index,
-    ivf_topk,
-    ivf_topk_indexed,
-)
 from opl_spark.snapshot import FactQuery, SnapshotEngine
-from opl_spark.sources import load_table, register_sources
+from opl_spark.sources import register_sources
 
 
 @pytest.fixture(scope="module")
@@ -75,29 +70,6 @@ def test_compact_bounds_files_and_preserves_rows(registered, tmp_path):
     assert sorted(map(tuple, eng.fact_frame("f_compact").collect())) == rows_before
 
 
-def test_ivf_index_probe_prunes_partitions(spark, sf_dir, tmp_path):
-    """The materialized IVF probe must (a) return exactly what the
-    on-the-fly IVF returns and (b) show the cell filter as a partition
-    filter on the lazy probe pool — file-level pruning, the point of
-    writing the index (the ranked top-k itself is a collected local
-    relation, so the scan evidence lives in the pool's plan)."""
-    from opl_spark.operators.similarity import ivf_probe_pool, topk_scored
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    query = [float(x) for x in emb.filter(F.col("vec_id") == 0).first()["embedding"]]
-    index = str(tmp_path / "ivf")
-    cents = build_ivf_index(emb, "embedding", "vec_id", index)
-    got = ivf_topk_indexed(spark, index, "embedding", "vec_id", query, cents)
-    want = ivf_topk(emb, "embedding", "vec_id", query, centroids=cents)
-    assert [tuple(r) for r in got.collect()] == [tuple(r) for r in want.collect()]
-
-    from opl_spark.plans import partition_filters
-
-    pool = ivf_probe_pool(spark, index, query, cents)
-    pf = partition_filters(topk_scored(pool, "embedding", "vec_id", query, 10))
-    assert pf and "cell" in pf[0], pf
-
-
 def test_attach_audit_rejects_colliding_columns(spark):
     """A fact query that emits its own year/month/... columns would bind
     ambiguously against the audit scope columns — the engine must fail
@@ -108,32 +80,6 @@ def test_attach_audit_rejects_colliding_columns(spark):
     df = spark.range(1).selectExpr("id", "2020 AS year")
     with pytest.raises(ValueError, match="audit columns"):
         attach_audit(df, 1, make_scope("2020-01-01"))
-
-
-def test_backfill_runs_range_and_is_idempotent(registered, tmp_path):
-    from opl_spark.facts import ACTIVE_USERS_SQL
-    from opl_spark.snapshot import FactQuery, SnapshotEngine, backfill
-
-    eng = SnapshotEngine(registered, str(tmp_path))
-    facts = [FactQuery(1, "f_bf", ACTIVE_USERS_SQL, cron="daily")]
-    first = backfill(eng, "1998-06-01", "1998-06-03", facts)
-    assert first["f_bf"] > 0
-    n = eng.fact_frame("f_bf").count()
-    assert eng.fact_frame("f_bf").select("day").distinct().count() == 3
-    # overlapping backfill appends nothing new
-    again = backfill(eng, "1998-06-02", "1998-06-04", facts)
-    assert eng.fact_frame("f_bf").count() == n + again.get("f_bf", 0)
-    assert eng.fact_frame("f_bf").select("day").distinct().count() == 4
-
-
-def test_backfill_rejects_inverted_range(registered, tmp_path):
-    import pytest as _pytest
-
-    from opl_spark.snapshot import SnapshotEngine, backfill
-
-    eng = SnapshotEngine(registered, str(tmp_path))
-    with _pytest.raises(ValueError):
-        backfill(eng, "1998-06-05", "1998-06-01", [])
 
 
 def test_upsert_replaces_matched_keys_and_appends_new(registered, tmp_path):
@@ -267,45 +213,6 @@ def test_table_stats_reports_partition_files_and_bytes(registered, tmp_path):
     assert all(s["n_files"] == 1 for s in after.values())
 
 
-def test_ingest_new_files_processes_each_drop_once(spark, tmp_path):
-    from opl_spark.snapshot import ingest_new_files
-
-    land = str(tmp_path / "landing")
-    ledger = str(tmp_path / "ledger")
-    seen = []
-
-    def process(df):
-        seen.append(df.count())
-
-    spark.range(0, 10).write.mode("overwrite").parquet(land + "/d1")
-    # landing zone holds FILES; move part-files up into the flat dir
-    import glob
-    import shutil
-
-    flat = str(tmp_path / "flat")
-    import os
-
-    os.makedirs(flat, exist_ok=True)
-    for i, f in enumerate(glob.glob(land + "/d1/part-*.parquet")):
-        shutil.copy(f, f"{flat}/drop1_{i}.parquet")
-
-    r1 = ingest_new_files(spark, flat, ledger, process, suffix=".parquet")
-    assert r1["new"] == r1["listed"] > 0
-    assert sum(seen) == 10
-
-    # nothing new → process not called again
-    r2 = ingest_new_files(spark, flat, ledger, process, suffix=".parquet")
-    assert r2["new"] == 0 and len(seen) == 1
-
-    # second drop: only the fresh file is read
-    spark.range(100, 105).write.mode("overwrite").parquet(land + "/d2")
-    for i, f in enumerate(glob.glob(land + "/d2/part-*.parquet")):
-        shutil.copy(f, f"{flat}/drop2_{i}.parquet")
-    r3 = ingest_new_files(spark, flat, ledger, process, suffix=".parquet")
-    assert r3["new"] == r3["listed"] - r1["listed"]
-    assert seen[-1] == 5
-
-
 def test_compact_cluster_by_sorts_row_groups(registered, tmp_path):
     """compact(cluster_by=[k]) must preserve data exactly AND leave
     each rewritten file internally sorted on k, so parquet row-group
@@ -398,28 +305,6 @@ def test_upsert_patch_derived_from_target(registered, tmp_path):
     assert res["replaced"] == 1 and res["inserted"] == 1
     got = {r["k"]: r["name"] for r in eng.fact_frame("f_rmw").collect()}
     assert got[0] == got[0].upper()
-
-
-def test_conform_late_dimension_placeholders(registered):
-    """Unknown fact keys get placeholder dim members (string attrs =
-    'Unknown', others null); known keys never duplicate; the real
-    member later replaces the placeholder via SCD1 upsert semantics
-    (unionByName column order preserved)."""
-    from opl_spark.snapshot import conform_late_dimension
-
-    spark = registered
-    dim = spark.createDataFrame(
-        [(1, "alpha", 10.0), (2, "beta", 20.0)], ["k", "name", "weight"]
-    )
-    fact = spark.createDataFrame([(1,), (3,), (3,), (4,)], ["k"])
-    conformed, n = conform_late_dimension(fact, dim, "k")
-    assert n == 2
-    rows = {r["k"]: r for r in conformed.collect()}
-    assert set(rows) == {1, 2, 3, 4}
-    assert rows[3]["name"] == "Unknown" and rows[3]["weight"] is None
-    assert rows[1]["name"] == "alpha"
-    # fact joins now lose nothing
-    assert fact.join(conformed, "k").count() == fact.count()
 
 
 def test_strict_type_parity_mode_degrades_like_reference(registered, tmp_path):

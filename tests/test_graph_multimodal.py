@@ -11,13 +11,25 @@ from __future__ import annotations
 import numpy as np
 import pytest
 
-from opl_spark.operators.graph import PR_SCALE, pagerank, symmetrize
+from pyspark.sql import functions as F
+
+from opl_spark.operators.graph import PR_SCALE, both_directions, pagerank
 from opl_spark.operators.multimodal import (
     image_phash,
     phash_dup_candidates,
     video_scene_changes,
     with_media_column,
 )
+
+
+def symmetrize(edges, src="src", dst="dst"):
+    """Undirected view of an edge list: both directions, self-loops
+    dropped, duplicates removed (so degrees are simple row counts)."""
+    return (
+        both_directions(edges, src, dst)
+        .filter(F.col("src") != F.col("dst"))
+        .distinct()
+    )
 
 
 def _local_pagerank(edges, iterations=3, damping_pct=85):
@@ -261,72 +273,6 @@ def test_vad_segment_mean_is_half_up_at_boundary(spark):
     r = vad_segments(df, threshold=1.0).collect()[0]
     # (1000001 + 2000002) / 2 = 1500001.5 micro -> 1500002
     assert r["mean_energy"] == 1.500002
-
-
-def test_export_tar_shards_roundtrip_and_determinism(spark, tmp_path):
-    """WebDataset export: every (row, column) lands as one {key}.{col}
-    tar member with exact payload bytes, the returned manifest matches
-    what is on disk, and a re-export of identical data is
-    byte-identical (zeroed mtimes)."""
-    import tarfile
-
-    from opl_spark.operators.multimodal import export_tar_shards
-
-    rows = [(i, f"text {i}", bytes([i, 255 - i, 7])) for i in range(20)]
-    df = spark.createDataFrame(rows, "doc_id long, text string, media binary")
-    out = str(tmp_path / "wds")
-    man = export_tar_shards(df, out, "doc_id", ["text", "media"], shards=3)
-    assert man["total_rows"] == 20
-    assert 1 <= len(man["shards"]) <= 3
-
-    got = {}
-    for s in man["shards"]:
-        with tarfile.open(s["shard"]) as tar:
-            for m in tar.getmembers():
-                assert m.mtime == 0
-                got[m.name] = tar.extractfile(m).read()
-    assert len(got) == 40  # 20 rows x 2 payload columns
-    for i, text, media in rows:
-        assert got[f"{i}.text"] == text.encode()
-        assert got[f"{i}.media"] == media
-
-    out2 = str(tmp_path / "wds2")
-    export_tar_shards(df, out2, "doc_id", ["text", "media"], shards=3)
-    for s in man["shards"]:
-        twin = s["shard"].replace(out, out2)
-        assert open(s["shard"], "rb").read() == open(twin, "rb").read()
-
-    # more shards than rows: empty partitions contribute no manifest
-    # rows and no zero-row tar files
-    sparse = export_tar_shards(
-        df.limit(2), str(tmp_path / "sparse"), "doc_id", ["text"], shards=8
-    )
-    assert sparse["total_rows"] == 2
-    assert all(s["rows"] > 0 for s in sparse["shards"])
-
-    # re-export into a directory with existing shard-*.tar refuses
-    # loudly (stale tars would silently mix into a globbing loader)
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="already contains"):
-        export_tar_shards(df, out, "doc_id", ["text"], shards=1)
-
-    # crashed-export temp litter (.shard-*.tar.<attempt>) must NOT
-    # trip the refusal — it's swept at export start, and the export
-    # itself writes via temp + atomic os.replace so final names only
-    # ever hold complete tars
-    import os as _os
-
-    out3 = str(tmp_path / "wds3")
-    _os.makedirs(out3)
-    litter = _os.path.join(out3, ".shard-00001.tar.42")
-    open(litter, "wb").write(b"partial")
-    man3 = export_tar_shards(df, out3, "doc_id", ["text"], shards=2)
-    assert man3["total_rows"] == 20
-    assert not _os.path.exists(litter)
-    assert not [
-        f for f in _os.listdir(out3) if f.startswith(".shard-")
-    ], "export left temp litter behind"
 
 
 def test_dominant_edge_matching_hand_example(spark):

@@ -17,7 +17,7 @@ from opl_spark.operators.dedup import (
     build_bloom,
     contamination,
 )
-from opl_spark.operators.layout import zorder_key, zorder_layout, zorder_sql
+from opl_spark.operators.layout import zorder_key, zorder_sql
 from opl_spark.operators.sampling import mix_sources
 from opl_spark.operators.similarity import quantize_embeddings
 from opl_spark.sources import load_table
@@ -104,20 +104,6 @@ def test_zorder_sql_matches_column_expr(spark):
     )
 
 
-def test_zorder_layout_sorts_within_partitions(spark):
-    df = spark.createDataFrame(
-        [(i % 50, (i * 13) % 50) for i in range(400)], "x long, y long"
-    )
-    out = zorder_layout(df, [F.col("x"), F.col("y")], bits=6)
-    ordered = out.withColumn("pid", F.spark_partition_id())
-    rows = ordered.select("pid", "zkey").collect()
-    by_pid: dict[int, list[int]] = {}
-    for r in rows:
-        by_pid.setdefault(r["pid"], []).append(r["zkey"])
-    for keys in by_pid.values():
-        assert keys == sorted(keys)
-
-
 # ---------------------------------------------------------------------------
 # quantization
 # ---------------------------------------------------------------------------
@@ -149,16 +135,6 @@ def test_quantize_drops_zero_vectors(spark):
 # ---------------------------------------------------------------------------
 # stratified sampling / incremental dedup / quantized search
 # ---------------------------------------------------------------------------
-
-
-def test_hash_gate_rate_and_determinism(spark):
-    from opl_spark.operators.sampling import hash_gate
-
-    df = spark.range(0, 10_000)
-    kept = df.filter(hash_gate(F.col("id"), 0.3)).count()
-    # well-mixed gate: close to the nominal rate
-    assert abs(kept / 10_000 - 0.3) < 0.03
-    assert df.filter(hash_gate(F.col("id"), 0.3)).count() == kept
 
 
 def test_stratified_sample_respects_zero_and_full_rates(spark):
@@ -415,25 +391,29 @@ def _pq_lossless_df(spark):
 
 
 def test_pq_encode_deterministic_and_bounded(spark):
-    from opl_spark.operators.similarity import pq_encode, pq_train
+    from opl_spark.operators.similarity import pq_encode_quantized, pq_train_quantized
 
     df = _pq_lossless_df(spark)
-    book = pq_train(df, "embedding", "vec_id", m=4, k=2, sample=32)
-    a = {r["id"]: tuple(r["codes"]) for r in pq_encode(df, "embedding", "vec_id", book).collect()}
-    b = {r["id"]: tuple(r["codes"]) for r in pq_encode(df, "embedding", "vec_id", book).collect()}
+    book = pq_train_quantized(df, "embedding", "vec_id", m=4, k=2, sample=32)
+    a = {r["id"]: tuple(r["codes"]) for r in pq_encode_quantized(df, "embedding", "vec_id", book).collect()}
+    b = {r["id"]: tuple(r["codes"]) for r in pq_encode_quantized(df, "embedding", "vec_id", book).collect()}
     assert a == b
     assert all(0 <= c < 2 for codes in a.values() for c in codes)
     assert all(len(codes) == 4 for codes in a.values())
 
 
 def test_pq_topk_exact_on_lossless_data(spark):
-    from opl_spark.operators.similarity import cosine_topk, pq_topk, pq_train
+    from opl_spark.operators.similarity import (
+        cosine_topk,
+        pq_topk_quantized,
+        pq_train_quantized,
+    )
 
     df = _pq_lossless_df(spark)
-    book = pq_train(df, "embedding", "vec_id", m=4, k=2, sample=32)
+    book = pq_train_quantized(df, "embedding", "vec_id", m=4, k=2, sample=32)
     q = [0.0, 1.0, 1.0, 0.0, 0.0, 1.0, 1.0, 0.0]
     exact = [(r["id"], r["sim"]) for r in cosine_topk(df, "embedding", "vec_id", q, k=5).collect()]
-    pq = [(r["id"], r["psim"]) for r in pq_topk(df, "embedding", "vec_id", q, book, k=5).collect()]
+    pq = [(r["id"], r["psim"]) for r in pq_topk_quantized(df, "embedding", "vec_id", q, book, k=5).collect()]
     # codebook represents the data exactly -> ADC score == true cosine
     assert pq == exact
 
@@ -441,11 +421,11 @@ def test_pq_topk_exact_on_lossless_data(spark):
 def test_pq_train_rejects_indivisible_dims(spark):
     import pytest as _pytest
 
-    from opl_spark.operators.similarity import pq_train
+    from opl_spark.operators.similarity import pq_train_quantized
 
     df = spark.createDataFrame([(0, [1.0, 2.0, 3.0])], "vec_id long, embedding array<double>")
     with _pytest.raises(ValueError):
-        pq_train(df, "embedding", "vec_id", m=2, k=2)
+        pq_train_quantized(df, "embedding", "vec_id", m=2, k=2)
 
 
 def test_pq_topk_rejects_zero_norm_query(spark):
@@ -454,12 +434,53 @@ def test_pq_topk_rejects_zero_norm_query(spark):
     arbitrary top-k rows."""
     import pytest as _pytest
 
-    from opl_spark.operators.similarity import pq_topk, pq_train
+    from opl_spark.operators.similarity import pq_topk_quantized, pq_train_quantized
 
     df = _pq_lossless_df(spark)
-    book = pq_train(df, "embedding", "vec_id", m=4, k=2, sample=32)
+    book = pq_train_quantized(df, "embedding", "vec_id", m=4, k=2, sample=32)
     with _pytest.raises(ValueError, match="zero norm"):
-        pq_topk(df, "embedding", "vec_id", [0.0] * 8, book, k=3)
+        pq_topk_quantized(df, "embedding", "vec_id", [0.0] * 8, book, k=3)
+
+
+def test_ivfpq_self_hit_and_pool_pruning(spark, sf_dir):
+    from opl_spark.operators.similarity import (
+        ivfpq_topk_quantized,
+        pq_topk_quantized,
+        pq_train_quantized,
+    )
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    probe = [float(x) for x in emb.filter(F.col("vec_id") == 0).first()["embedding"]]
+    got = ivfpq_topk_quantized(
+        emb, "embedding", "vec_id", probe, k=10, nprobe=4, m=4, codebook_k=16
+    ).collect()
+    assert len(got) == 10
+    # probing all cells must equal plain PQ over the whole corpus
+    full = ivfpq_topk_quantized(
+        emb, "embedding", "vec_id", probe, k=10, nprobe=8, m=4, codebook_k=16
+    ).collect()
+    book = pq_train_quantized(emb, "embedding", "vec_id", m=4, k=16)
+    plain = pq_topk_quantized(emb, "embedding", "vec_id", probe, book, k=10).collect()
+    assert [(r["id"], r["psim"]) for r in full] == [(r["id"], r["psim"]) for r in plain]
+
+
+def test_pq_rerank_full_shortlist_equals_exact(spark, sf_dir):
+    from opl_spark.operators.similarity import (
+        cosine_topk,
+        pq_topk_quantized,
+        pq_train_quantized,
+    )
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    probe = [float(x) for x in emb.filter(F.col("vec_id") == 0).first()["embedding"]]
+    book = pq_train_quantized(emb, "embedding", "vec_id", m=4, k=16, sample=256, iters=3)
+    n = emb.count()
+    # shortlist covering the whole corpus -> rerank IS exact top-k
+    full = pq_topk_quantized(emb, "embedding", "vec_id", probe, book, k=10, rerank=(n // 10) + 1)
+    exact = cosine_topk(emb, "embedding", "vec_id", probe, k=10)
+    assert [(r["id"], r["psim"], r["rank"]) for r in full.collect()] == [
+        (r["id"], r["sim"], r["rank"]) for r in exact.collect()
+    ]
 
 
 def test_budget_sample_exact_counts_and_determinism(spark):
@@ -508,38 +529,14 @@ def test_token_entropy_extremes(spark):
     assert out[2] == (4, round(math.log(4), 6))
 
 
-def test_ivfpq_self_hit_and_pool_pruning(spark, sf_dir):
-    from opl_spark.operators.similarity import (
-        ivfpq_topk,
-        pq_topk,
-        pq_train,
-        seed_centroids,
-    )
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    probe = [float(x) for x in emb.filter(F.col("vec_id") == 0).first()["embedding"]]
-    cents = seed_centroids(emb, "embedding", "vec_id", ncells=8)
-    book = pq_train(emb, "embedding", "vec_id", m=4, k=16, sample=512, iters=4)
-    got = ivfpq_topk(emb, "embedding", "vec_id", probe, cents, book, k=10, nprobe=4).collect()
-    assert len(got) == 10
-    # probing all cells must equal plain PQ over the whole corpus
-    full = ivfpq_topk(emb, "embedding", "vec_id", probe, cents, book, k=10, nprobe=8).collect()
-    plain = pq_topk(emb, "embedding", "vec_id", probe, book, k=10).collect()
-    assert [(r["id"], r["psim"]) for r in full] == [(r["id"], r["psim"]) for r in plain]
-
-
 # ---------------------------------------------------------------------------
 # count-min sketch
 # ---------------------------------------------------------------------------
 
 
 @pytest.mark.slow  # r14 slow tier
-def test_cms_never_undercounts_and_merges(spark):
-    from opl_spark.operators.sketch import (
-        count_min_build,
-        count_min_estimate,
-        count_min_merge,
-    )
+def test_cms_never_undercounts(spark):
+    from opl_spark.operators.sketch import count_min_build, count_min_estimate
 
     rows = [(f"t{i % 17}",) for i in range(600)] + [("hot",)] * 200
     df = spark.createDataFrame(rows, "tok string")
@@ -552,27 +549,6 @@ def test_cms_never_undercounts_and_merges(spark):
     assert set(est) == set(truth)
     for t, n in truth.items():
         assert est[t] >= n  # overcount-only guarantee
-    # merging two disjoint half-sketches equals sketching the whole stream
-    h1 = count_min_build(df.filter(F.col("tok") != "hot"), "tok", 64, 4)
-    h2 = count_min_build(df.filter(F.col("tok") == "hot"), "tok", 64, 4)
-    merged = count_min_merge(h1, h2)
-    est2 = {r["term"]: r["est"] for r in count_min_estimate(merged, terms, "tok", 64, 4).collect()}
-    assert est2 == est
-
-
-def test_pq_rerank_full_shortlist_equals_exact(spark, sf_dir):
-    from opl_spark.operators.similarity import cosine_topk, pq_topk, pq_train
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    probe = [float(x) for x in emb.filter(F.col("vec_id") == 0).first()["embedding"]]
-    book = pq_train(emb, "embedding", "vec_id", m=4, k=16, sample=256, iters=3)
-    n = emb.count()
-    # shortlist covering the whole corpus -> rerank IS exact top-k
-    full = pq_topk(emb, "embedding", "vec_id", probe, book, k=10, rerank=(n // 10) + 1)
-    exact = cosine_topk(emb, "embedding", "vec_id", probe, k=10)
-    assert [(r["id"], r["psim"], r["rank"]) for r in full.collect()] == [
-        (r["id"], r["sim"], r["rank"]) for r in exact.collect()
-    ]
 
 
 def test_chunk_documents_no_fully_contained_tail(spark):
@@ -625,29 +601,6 @@ def test_minhash_keep_best_subsets_exact_composition(spark, sf_dir):
     assert lsh  # nonempty at sf0.001
     assert lsh <= exact
     assert len(lsh) >= len(exact) * 0.8
-
-
-def test_ivf_index_append_grows_cells_without_rewrite(spark, sf_dir, tmp_path):
-    from opl_spark.operators.similarity import (
-        build_ivf_index,
-        ivf_index_append,
-        ivf_topk_indexed,
-    )
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    base = emb.filter(F.col("vec_id") < 150)
-    newer = emb.filter(F.col("vec_id") >= 150)
-    path = str(tmp_path / "ivf")
-    cents = build_ivf_index(base, "embedding", "vec_id", path, ncells=4)
-    n_base = spark.read.parquet(path).count()
-    ivf_index_append(newer, "embedding", "vec_id", path, cents)
-    assert spark.read.parquet(path).count() == n_base + newer.count()
-    # a probe against the grown index can surface an appended vector:
-    # query WITH one of the new vectors -> it is its own top hit
-    probe_id = newer.agg(F.min("vec_id")).first()[0]
-    probe = [float(x) for x in emb.filter(F.col("vec_id") == probe_id).first()["embedding"]]
-    top = ivf_topk_indexed(spark, path, "embedding", "vec_id", probe, cents, k=1, nprobe=4)
-    assert top.first()["id"] == probe_id
 
 
 # ---------------------------------------------------------------------------
@@ -904,12 +857,15 @@ def test_unigram_learns_frequent_pieces_and_loss_decreases(spark):
     assert vocab2 == vocab
 
 
+def _viterbi(word, scores, max_len):
+    """Driver-side decode of one word: (pieces, total_score)."""
+    from opl_spark.operators.unigram import _make_viterbi
+
+    return _make_viterbi(scores, max_len)(word)
+
+
 def test_unigram_segment_counts_per_type(spark, sf_dir):
-    from opl_spark.operators.unigram import (
-        _viterbi,
-        unigram_segment,
-        unigram_train,
-    )
+    from opl_spark.operators.unigram import unigram_segment, unigram_train
     from opl_spark.sources import load_table
 
     docs = load_table(spark, sf_dir, "documents").limit(50)
@@ -930,38 +886,17 @@ def test_unigram_segment_counts_per_type(spark, sf_dir):
 
 
 def test_unigram_viterbi_prefers_longer_pieces_on_ties(spark):
-    from opl_spark.operators.unigram import _viterbi
-
     scores = {"a": -1.0, "b": -1.0, "ab": -2.0}
     pieces, sc = _viterbi("ab", scores, 4)
     # equal total score (-2.0): the longer piece wins deterministically
     assert pieces == ["ab"] and sc == -2.0
 
 
-def test_export_manifest_counts_and_hash_are_partition_invariant(spark, sf_dir, tmp_path):
-    from opl_spark.operators.text import export_jsonl_manifest
-    from opl_spark.sources import load_table
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    m4 = export_jsonl_manifest(docs, str(tmp_path / "e4"), shards=4)
-    m2 = export_jsonl_manifest(docs, str(tmp_path / "e2"), shards=2)
-    assert m4["total_rows"] == m2["total_rows"] == docs.count()
-    assert len(m4["shards"]) == 4 and len(m2["shards"]) == 2
-    assert all(s["rows"] > 0 for s in m4["shards"].values())
-    # content hash is a reassociative sum — shard layout can't change it
-    tot4 = sum(int(s["content_hash"]) for s in m4["shards"].values())
-    tot2 = sum(int(s["content_hash"]) for s in m2["shards"].values())
-    assert tot4 == tot2
-    import json, os
-    on_disk = json.load(open(os.path.join(str(tmp_path / "e4"), "_MANIFEST.json")))
-    assert on_disk == m4
-
-
 def test_unigram_segments_out_of_vocab_characters(spark):
     """Applying a trained vocab to text with characters the corpus
     never contained must DECODE (UNK single-char fallback), not hang
     or crash — the train-here/segment-there deployment case."""
-    from opl_spark.operators.unigram import UNK_LOGPROB, _viterbi, unigram_train
+    from opl_spark.operators.unigram import UNK_LOGPROB, unigram_train
 
     rows = [(i, "abab abab xy") for i in range(10)]
     df = spark.createDataFrame(rows, "doc_id long, text string")

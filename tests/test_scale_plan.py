@@ -7,7 +7,7 @@ import pytest
 
 from opl_spark.cube import CubeEngine
 from opl_spark.facts import build_loans_fact, default_catalog
-from opl_spark.plans import partition_filters, pushed_filters, read_schemas
+from plan_helpers import partition_filters, pushed_filters, read_schemas
 
 
 @pytest.fixture(scope="module")
@@ -189,12 +189,12 @@ def test_vocab_build_plans_take_ordered(spark, sf_dir):
 def test_pq_encode_is_map_only(spark, sf_dir):
     """PQ encoding is one Arrow-batched map pass — no shuffle; only
     (id, m codes) survive the scan."""
-    from opl_spark.operators.similarity import pq_encode, pq_train
+    from opl_spark.operators.similarity import pq_encode_quantized, pq_train_quantized
     from opl_spark.sources import load_table
 
     emb = load_table(spark, sf_dir, "embeddings")
-    book = pq_train(emb, "embedding", "vec_id", m=4, k=8, sample=256, iters=2)
-    assert _exchanges(pq_encode(emb, "embedding", "vec_id", book)) == 0
+    book = pq_train_quantized(emb, "embedding", "vec_id", m=4, k=8, sample=256, iters=2)
+    assert _exchanges(pq_encode_quantized(emb, "embedding", "vec_id", book)) == 0
 
 
 def test_pack_sequences_window_is_sharded(spark, sf_dir):
@@ -539,7 +539,7 @@ def test_round10_new_query_plan_shapes(spark, sf_dir):
     join); degree distribution aggregates by hash with no cartesian
     anywhere."""
     from opl_spark import workload
-    from opl_spark.plans import formatted_plan, pushed_filters
+    from opl_spark.plans import formatted_plan
 
     qs = workload.queries()
     curve = qs["q_srp_recall_curve"](spark, sf_dir)

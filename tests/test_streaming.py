@@ -6,14 +6,9 @@ import pytest
 from pyspark.sql import functions as F
 
 from opl_spark.sources import load_table
-from opl_spark.streaming.events import (
-    read_events_stream,
-    run_to_memory,
-    sessionize,
-    stream_to_fact,
-    windowed_counts,
-)
+from opl_spark.streaming.events import stream_to_fact, windowed_counts
 from opl_spark.streaming.stateful import first_seen_stream
+from stream_helpers import read_events_stream, run_to_memory
 
 
 def _sorted_rows(df):
@@ -25,13 +20,6 @@ def test_windowed_counts_stream_equals_batch(spark, sf_dir):
     stream = windowed_counts(read_events_stream(spark, sf_dir))
     assert stream.isStreaming
     got = run_to_memory(stream, "t_windowed")
-    assert _sorted_rows(got) == _sorted_rows(batch)
-
-
-def test_sessionize_stream_equals_batch(spark, sf_dir):
-    batch = sessionize(load_table(spark, sf_dir, "events"))
-    stream = sessionize(read_events_stream(spark, sf_dir))
-    got = run_to_memory(stream, "t_sessions")
     assert _sorted_rows(got) == _sorted_rows(batch)
 
 
@@ -136,82 +124,6 @@ def test_first_seen_emits_exactly_once_per_key(spark, sf_dir):
     assert joined.filter(F.col("first_id") == F.col("event_id")).count() == got.count()
 
 
-def test_streaming_cms_equals_batch_sketch(spark, sf_dir, tmp_path):
-    """Draining the events stream through the incremental count-min
-    maintenance must produce EXACTLY the sketch a single batch build
-    yields — cellwise-sum merge is lossless."""
-    from pyspark.sql import functions as F
-
-    from opl_spark.operators.sketch import (
-        count_min_build,
-        count_min_estimate,
-        count_min_stream_to_table,
-    )
-
-    stream = read_events_stream(spark, sf_dir).select("event_type")
-    count_min_stream_to_table(
-        stream,
-        "event_type",
-        str(tmp_path / "sketch"),
-        str(tmp_path / "ckpt"),
-        width=64,
-        depth=4,
-    )
-    streamed = spark.read.parquet(str(tmp_path / "sketch")).select("row", "bucket", "c")
-    batch = count_min_build(
-        load_table(spark, sf_dir, "events").select("event_type"), "event_type", 64, 4
-    )
-    assert sorted(map(tuple, streamed.collect())) == sorted(map(tuple, batch.collect()))
-    # and the estimates respect the overcount-only guarantee
-    types = load_table(spark, sf_dir, "events").select("event_type").distinct()
-    truth = {
-        r["event_type"]: r["n"]
-        for r in load_table(spark, sf_dir, "events")
-        .groupBy("event_type")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
-    }
-    est = {
-        r["term"]: r["est"]
-        for r in count_min_estimate(streamed, types, "event_type", 64, 4).collect()
-    }
-    for t, n in truth.items():
-        assert est[t] >= n
-
-
-def test_streaming_cms_fresh_checkpoint_merges_not_skips(spark, sf_dir, tmp_path):
-    """A restart with a FRESH checkpoint resets batch ids to 0; the
-    replay guard is scoped to the checkpoint identity, so the new
-    stream's batches must MERGE into an existing sketch table, never be
-    skipped as replays of the old stream."""
-    from opl_spark.operators.sketch import count_min_build, count_min_stream_to_table
-
-    sketch = str(tmp_path / "sketch")
-    stream = read_events_stream(spark, sf_dir).select("event_type")
-    count_min_stream_to_table(
-        stream, "event_type", sketch, str(tmp_path / "ckpt1"), width=64, depth=4
-    )
-    # second incarnation: same sketch table, brand-new checkpoint
-    stream2 = read_events_stream(spark, sf_dir).select("event_type")
-    count_min_stream_to_table(
-        stream2, "event_type", sketch, str(tmp_path / "ckpt2"), width=64, depth=4
-    )
-    merged = spark.read.parquet(sketch).select("row", "bucket", "c")
-    once = count_min_build(
-        load_table(spark, sf_dir, "events").select("event_type"), "event_type", 64, 4
-    )
-    # every cell holds exactly TWICE the single-pass count
-    doubled = sorted((r, b, 2 * c) for r, b, c in map(tuple, once.collect()))
-    assert sorted(map(tuple, merged.collect())) == doubled
-    # and a genuine replay within ONE checkpoint still skips (unchanged)
-    count_min_stream_to_table(
-        stream2, "event_type", sketch, str(tmp_path / "ckpt2"), width=64, depth=4
-    )
-    assert sorted(
-        map(tuple, spark.read.parquet(sketch).select("row", "bucket", "c").collect())
-    ) == doubled
-
-
 @pytest.mark.slow  # r14 slow tier
 def test_interval_join_stream_stream(spark, sf_dir, tmp_path):
     """interval_join's condition IS a Spark stream-stream interval
@@ -250,38 +162,6 @@ def test_interval_join_stream_stream(spark, sf_dir, tmp_path):
     assert expect.count() > 0
 
 
-def test_streaming_transitions_equal_batch_matrix(spark, sf_dir):
-    """Draining the per-user stateful transition stream and counting
-    the emitted pairs must equal the batch lag-window transition
-    matrix (q_event_transitions) exactly."""
-    from opl_spark.streaming.stateful import transition_stream
-    from opl_spark import workload
-
-    events = read_events_stream(spark, sf_dir).select(
-        "user_id", F.unix_micros("ts").alias("us"), "event_type", "event_id"
-    )
-    pairs = transition_stream(events)
-    q = (
-        pairs.writeStream.format("memory")
-        .queryName("t_transitions")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    streamed = {
-        (r["prev_type"], r["next_type"]): r["n"]
-        for r in spark.sql(
-            "SELECT prev_type, next_type, COUNT(*) AS n FROM t_transitions GROUP BY 1, 2"
-        ).collect()
-    }
-    batch = {
-        (r["prev_type"], r["next_type"]): r["n"]
-        for r in workload.queries()["q_event_transitions"](spark, sf_dir).collect()
-    }
-    assert streamed == batch
-
-
 def test_hopping_counts_stream_equals_batch(spark, sf_dir):
     """The hopping (overlapping) window aggregate must produce the
     identical result streamed with availableNow replay — including the
@@ -293,29 +173,6 @@ def test_hopping_counts_stream_equals_batch(spark, sf_dir):
     assert stream.isStreaming
     got = run_to_memory(stream, "t_hopping")
     assert _sorted_rows(got) == _sorted_rows(batch)
-
-
-def test_streaming_hll_equals_batch_estimate(spark, sf_dir, tmp_path):
-    """Draining the event stream through the HLL sketch maintainer
-    must produce the same distinct-user estimate as one batch sketch
-    over the same data (microbatch unions are lossless)."""
-    from opl_spark.operators.sketch import hll_stream_to_table, hll_table_estimate
-
-    sketch = str(tmp_path / "hll_sketch")
-    ckpt = str(tmp_path / "hll_ckpt")
-    hll_stream_to_table(
-        read_events_stream(spark, sf_dir), "user_id", sketch, ckpt
-    )
-    got = hll_table_estimate(spark, sketch)
-    want = (
-        load_table(spark, sf_dir, "events")
-        .agg(F.hll_sketch_estimate(F.hll_sketch_agg("user_id", F.lit(12))).alias("e"))
-        .first()["e"]
-    )
-    assert got == int(want)
-    # exact distinct for scale sanity — estimate within 5%
-    exact = load_table(spark, sf_dir, "events").select("user_id").distinct().count()
-    assert abs(got - exact) <= max(1, 0.05 * exact)
 
 
 def test_watermark_drops_late_rows_deterministically(spark, tmp_path):
@@ -390,30 +247,6 @@ def test_watermark_drops_late_rows_deterministically(spark, tmp_path):
     assert emitted_1200 == {1}, got2
 
 
-def test_funnel_stream_counts_equal_batch_funnel(spark, sf_dir):
-    """Summing streaming funnel advancement emissions per step must
-    reproduce the batch funnel's user counts (strictly-after gating,
-    first qualifying occurrence)."""
-    from opl_spark.operators.analytics import funnel
-    from opl_spark.streaming.stateful import funnel_stream
-
-    steps = ["view", "click", "purchase"]
-    batch = {
-        r["step"]: r["n_users"]
-        for r in funnel(
-            load_table(spark, sf_dir, "events"), "user_id", "ts", "event_type", steps
-        ).collect()
-    }
-    stream = funnel_stream(read_events_stream(spark, sf_dir), steps)
-    assert stream.isStreaming
-    got = run_to_memory(stream, "t_funnel_stream", output_mode="append")
-    by_step = {
-        r["step"]: r["n"]
-        for r in got.groupBy("step").agg(F.count("*").alias("n")).collect()
-    }
-    assert by_step == {k: v for k, v in batch.items() if v > 0}
-
-
 def test_streamed_fact_serves_cube_queries(spark, sf_dir, tmp_path):
     """End-to-end: stream → maintained fact table → CubeEngine
     aggregate with having/share — the streaming leg feeding the same
@@ -459,40 +292,6 @@ def test_streamed_fact_serves_cube_queries(spark, sf_dir, tmp_path):
     }
     assert {k: v["n_events"] for k, v in rows.items()} == want
     assert abs(sum(v["n_events_share"] for v in rows.values()) - 1.0) < 1e-6
-
-
-def test_topk_stream_matches_exact_counts(spark, sf_dir):
-    """Draining the events stream through the streaming space-saving
-    summary: event_type cardinality is far below the counter budget,
-    so the final emission must equal the EXACT top-k counts (the
-    sketch degrades to exact when nothing is ever evicted)."""
-    from opl_spark.streaming.stateful import topk_stream
-
-    stream = read_events_stream(spark, sf_dir)
-    q = (
-        topk_stream(stream, "event_type", k=5, counters=200)
-        .writeStream.format("memory")
-        .queryName("t_topk_stream")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = spark.sql(
-        "SELECT rank, value, est FROM t_topk_stream "
-        "WHERE seq = (SELECT MAX(seq) FROM t_topk_stream) ORDER BY rank"
-    ).collect()
-    exact = (
-        load_table(spark, sf_dir, "events")
-        .groupBy("event_type")
-        .agg(F.count(F.lit(1)).alias("c"))
-        .orderBy(F.desc("c"), F.asc("event_type"))
-        .limit(5)
-        .collect()
-    )
-    assert [(r["value"], r["est"]) for r in got] == [
-        (r["event_type"], r["c"]) for r in exact
-    ]
 
 
 @pytest.mark.slow  # r14 slow tier
@@ -576,208 +375,6 @@ def test_interval_join_left_outer_stream_stream(spark, sf_dir, tmp_path):
     must_emit = {key(r) for r in outer_nulls if r["click_ts"] < horizon}
     assert must_emit, "test data gives the watermark nothing to evict"
     assert must_emit <= set(map(key, got_nulls))
-
-
-def test_dedup_within_watermark_bounds_state_not_correctness(spark, sf_dir):
-    """Within-watermark dedup drained over the bounded events table
-    must emit at most one row per (user, event_type) key — with the
-    whole table inside one microbatch nothing outlives the horizon, so
-    the result equals exact distinct-key count (the bounded-state
-    operator degrades to exact dedup when the stream fits the
-    window)."""
-    from opl_spark.streaming.stateful import dedup_within_watermark_stream
-
-    stream = read_events_stream(spark, sf_dir)
-    out = dedup_within_watermark_stream(
-        stream, ["user_id", "event_type"], "ts", "40 days"
-    )
-    q = (
-        out.writeStream.format("memory")
-        .queryName("t_wm_dedup")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = spark.sql("SELECT user_id, event_type FROM t_wm_dedup")
-    exact = (
-        load_table(spark, sf_dir, "events")
-        .select("user_id", "event_type")
-        .distinct()
-    )
-    assert got.count() == exact.count()
-    assert got.distinct().count() == got.count()
-
-
-@pytest.mark.slow  # r14 slow tier
-def test_srp_probe_stream_detects_across_microbatches(spark, sf_dir, tmp_path):
-    """The streaming leg of the persisted SRP index: arriving embedding
-    micro-batches probe the store and append their own signatures, so
-    (a) store matches agree with the batch probe of the ORIGINAL store
-    (subset, order-free), (b) an exact-dup pair SPLIT across
-    micro-batches is caught — whichever half arrives second reports
-    the first (cos 1.0), which a store-only batch probe cannot do —
-    and (c) the store grew by bands x arriving rows."""
-    from pyspark.sql import functions as F
-
-    from opl_spark.operators.similarity import (
-        build_srp_index,
-        srp_dedup_incremental,
-        srp_probe,
-        _read_srp_meta,
-        _srp_store_rows,
-    )
-    from opl_spark.sources import load_table
-    from opl_spark.streaming.stateful import srp_probe_foreach_batch
-
-    emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    dims = len(emb.first()["embedding"])
-    store = str(tmp_path / "srp_store")
-    stored = emb.filter(F.col("vec_id") % 2 == 0)
-    build_srp_index(stored, "embedding", "vec_id", store, dims)
-    n_store0 = spark.read.parquet(store).count()
-
-    # arriving stream: the odd vectors plus a planted exact-dup pair
-    # (two copies of a NOVEL direction — scaling a stored vector would
-    # tie with its store original at cos 1.0 and lose the min-id
-    # tie-break) forced into DIFFERENT micro-batches via two parquet
-    # files + maxFilesPerTrigger=1
-    probe_vec = [
-        (1.0 if i % 2 == 0 else -1.0) * (1.0 + i / dims) for i in range(dims)
-    ]
-    arr_dir = str(tmp_path / "arrivals")
-    base = emb.filter(F.col("vec_id") % 2 == 1).limit(20)
-    half_a = base.limit(10).unionByName(
-        spark.createDataFrame([(900001, probe_vec)],
-                              "vec_id long, embedding array<double>")
-    )
-    half_b = (
-        base.subtract(base.limit(10))
-        .unionByName(
-            spark.createDataFrame([(900002, probe_vec)],
-                                  "vec_id long, embedding array<double>")
-        )
-    )
-    half_a.coalesce(1).write.parquet(arr_dir + "/f=a")
-    half_b.coalesce(1).write.parquet(arr_dir + "/f=b")
-    n_arrived = spark.read.parquet(arr_dir).count()
-
-    out = str(tmp_path / "dups_out")
-    stream = (
-        spark.readStream.schema("vec_id long, embedding array<double>, f string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(arr_dir)
-        .drop("f")
-    )
-    q = (
-        stream.writeStream.foreachBatch(
-            srp_probe_foreach_batch(store, out, "embedding", "vec_id",
-                                    dims, threshold=0.95)
-        )
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    # really micro-batched: the checkpoint committed >= 2 offsets (the
-    # corpus has no >=0.95 store matches, so only the planted-pair
-    # batch EMITS rows — count batches from the log, not the output)
-    import os
-
-    assert len(os.listdir(str(tmp_path / "ckpt" / "offsets"))) >= 2
-    got = spark.read.parquet(out)
-    rows = {r["vec_id"]: r for r in got.collect()}
-
-    # (b) the split dup pair: exactly one half reports the other at 1.0
-    pair_hits = [i for i in (900001, 900002) if i in rows
-                 and rows[i]["dup_of"] in (900001, 900002)]
-    assert len(pair_hits) == 1
-    assert rows[pair_hits[0]]["cos"] == 1.0
-
-    # (a) store-matched reports agree with the one-shot batch probe of
-    # the ORIGINAL store (same banding, same threshold) — the store's
-    # _srp_meta manifest is the banding source of truth (r13: derived
-    # defaults), so the reference probe reads it rather than hard-coding
-    meta = _read_srp_meta(spark, store)
-    batch_ref = {
-        (r["vec_id"], r["dup_of"])
-        for r in srp_probe(
-            spark.read.parquet(store).filter(F.col("vec_id") % 2 == 0),
-            _srp_store_rows(spark.read.parquet(arr_dir).drop("f"),
-                            "embedding", "vec_id", dims,
-                            meta["n_bits"], meta["bands"]),
-            threshold=0.95,
-        ).collect()
-    }
-    stream_store_matches = {
-        (v, r["dup_of"]) for v, r in rows.items() if r["dup_of"] % 2 == 0
-        and r["dup_of"] < 900000
-    }
-    assert stream_store_matches <= batch_ref
-
-    # (c) the index stayed current: bands x arriving rows appended
-    assert (
-        spark.read.parquet(store).count()
-        == n_store0 + meta["bands"] * n_arrived
-    )
-
-
-@pytest.mark.slow  # r14 slow tier
-def test_minhash_probe_stream_bootstrap_and_cross_batch(spark, sf_dir, tmp_path):
-    """The TEXT streaming leg (r10, twin of the SRP test above) run
-    from NOTHING: no build step — batch 0 bootstraps the store (empty
-    report), and an exact-dup pair split across micro-batches is
-    caught, whichever half arrives second reporting the first at
-    sim 1.0.  The store grows by bands x arriving rows and survives
-    as the stream's only state."""
-    from pyspark.sql import functions as F
-
-    from opl_spark.sources import load_table
-    from opl_spark.streaming.stateful import minhash_probe_foreach_batch
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    planted = "unmistakable planted duplicate zebra " * 20
-    arr_dir = str(tmp_path / "arrivals")
-    base = docs.limit(20)
-    half_a = base.limit(10).unionByName(
-        spark.createDataFrame([(900001, planted)], "doc_id long, text string")
-    )
-    half_b = base.subtract(base.limit(10)).unionByName(
-        spark.createDataFrame([(900002, planted)], "doc_id long, text string")
-    )
-    half_a.coalesce(1).write.parquet(arr_dir + "/f=a")
-    half_b.coalesce(1).write.parquet(arr_dir + "/f=b")
-    n_arrived = spark.read.parquet(arr_dir).count()
-
-    store = str(tmp_path / "sig_store")  # never built — bootstrap path
-    out = str(tmp_path / "dups_out")
-    stream = (
-        spark.readStream.schema("doc_id long, text string, f string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(arr_dir)
-        .drop("f")
-    )
-    q = (
-        stream.writeStream.foreachBatch(
-            minhash_probe_foreach_batch(store, out, "text", "doc_id",
-                                        threshold=0.9)
-        )
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    import os
-
-    assert len(os.listdir(str(tmp_path / "ckpt" / "offsets"))) >= 2
-    rows = {r["doc"]: r for r in spark.read.parquet(out).collect()}
-    # the split dup pair: exactly one half reports the other at 1.0
-    pair_hits = [i for i in (900001, 900002) if i in rows
-                 and rows[i]["dup_of"] in (900001, 900002)]
-    assert len(pair_hits) == 1
-    assert rows[pair_hits[0]]["sim"] == 1.0
-    # the bootstrapped store holds bands x arriving rows
-    assert spark.read.parquet(store).count() == 16 * n_arrived
 
 
 @pytest.mark.slow  # r14 slow tier

@@ -1,8 +1,9 @@
 """The driver's generated events.parquet has shipped ts as
-TIMESTAMP(NANOS) (round 1) and TIMESTAMP(MICROS) (round 2).  Both the
-batch and the streaming reader detect the unit; these tests pin that
-behavior against future testdata flips by synthesizing a file in each
-unit and asserting identical values out."""
+TIMESTAMP(NANOS) (round 1) and TIMESTAMP(MICROS) (round 2).  The batch
+reader and the tests' streaming reader (``stream_helpers``) both detect
+the unit; these tests pin that behavior against future testdata flips
+by synthesizing a file in each unit and asserting identical values
+out."""
 
 import os
 
@@ -11,7 +12,7 @@ import pyarrow.parquet as pq
 import pytest
 
 from opl_spark.sources import load_table
-from opl_spark.streaming.events import read_events_stream, run_to_memory
+from stream_helpers import read_events_stream, run_to_memory
 
 _ROWS = {
     "event_id": [1, 2],
