@@ -69,8 +69,9 @@ class OlapApi:
         #: cache key -> payload, least recently used first
         self._cache: OrderedDict[tuple, Any] = OrderedDict()
         self._stats = dict.fromkeys(self._STATS, 0)
-        # the server is ThreadingHTTPServer: concurrent requests mutate
-        # the LRU (move_to_end / popitem) — guard the compound ops
+        # the server answers concurrent requests on parallel worker
+        # threads, which mutate the LRU (move_to_end / popitem) — guard
+        # the compound ops
         self._lock = threading.Lock()
 
     def cache_stats(self) -> dict[str, int]:

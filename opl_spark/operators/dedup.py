@@ -25,6 +25,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from opl_spark.sources.registry import open_parquet
+
 
 def exact_dedup(df: DataFrame, key_cols: list[str], id_col: str) -> DataFrame:
     """Exact dedup: one surviving row id per duplicate group + group
@@ -2131,7 +2133,7 @@ def near_dedup_incremental(
     sigs = minhash_signatures(new_batch, text_col, id_col, n_hashes)
     banded = _banded_sigs(sigs, bands, rows_per_band).localCheckpoint(eager=True)
     try:
-        store_raw = spark.read.parquet(store_path)
+        store_raw = open_parquet(spark, store_path)
     except AnalysisException:
         # bootstrap: no index yet — seed it with this batch, report nothing
         if append:

@@ -34,6 +34,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.window import Window
 
+from opl_spark.sources.registry import open_parquet
+
 
 def dot_col(a: Column, b: Column) -> Column:
     """Sequential-order dot product (index order, double)."""
@@ -913,7 +915,7 @@ def _read_srp_meta(spark, store_path: str) -> dict | None:
     if not fs.exists(meta_path):
         return None  # legacy store (pre-manifest) or no store at all
     try:
-        row = spark.read.parquet(f"{store_path}/_srp_meta").first()
+        row = open_parquet(spark, f"{store_path}/_srp_meta").first()
     except AnalysisException:
         return None
     return None if row is None else row.asDict()
@@ -1134,7 +1136,7 @@ def srp_dedup_incremental(
         new_batch, vec_col, id_col, dims, n_bits, bands
     ).localCheckpoint(eager=True)
     try:
-        store = spark.read.parquet(store_path)
+        store = open_parquet(spark, store_path)
     except AnalysisException:
         # bootstrap: no index yet — seed it with this batch, report nothing
         if append:

@@ -18,6 +18,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from opl_spark.sources.registry import open_parquet
+
 
 def drop_table_and_location(spark, table: str) -> None:
     """Make a managed-table rewrite idempotent ACROSS sessions: a
@@ -118,7 +120,7 @@ def materialize_parquet_atomic(
                     f"materialize_parquet_atomic: rename to {final_str} "
                     "failed and no winner exists"
                 )
-    return spark.read.parquet(final_str)
+    return open_parquet(spark, final_str)
 
 
 def bucketed_table_atomic(

@@ -140,6 +140,8 @@ def read_stream_fact(
     consumer of a streamed fact should go through."""
     from pyspark.sql.window import Window
 
+    # not open_parquet: the sink's _spark_metadata log decides which
+    # files are visible, which one footer of a listed file cannot know
     raw = spark.read.parquet(fact_path)
     w = Window.partitionBy(*keys).orderBy(F.col("__batch_id").desc())
     return (

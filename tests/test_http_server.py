@@ -5,7 +5,10 @@ to the direct library call — the five recorded Data Studio getData
 traces (DataStudio-connector/Codice.gs:239-254) included."""
 
 import json
+import logging
 import os
+import socket
+import threading
 import urllib.error
 import urllib.parse
 import urllib.request
@@ -474,3 +477,152 @@ def test_plan_params_single_source():
     assert api._cache_key("f", base) == api._cache_key("f", base | {"junk": "x"})
     for k in OlapApi._PLAN_PARAMS:
         assert api._cache_key("f", base) != api._cache_key("f", base | {k: "zz"}), k
+
+
+# ---- transport contract: raw sockets, stub APIs (no Spark job) ----
+
+
+class _EchoApi:
+    """Answers every route with its path and params; ``/boom`` is an
+    engine failure, ``/missing`` an unknown route, ``/bad`` a bad
+    parameter."""
+
+    def handle(self, path, params):
+        if path == "/boom":
+            raise RuntimeError("engine down")
+        if path == "/missing":
+            raise KeyError(path)
+        if path == "/bad":
+            raise ValueError("bad cut")
+        return {"path": path, "params": params}
+
+
+def _raw(port, request: bytes):
+    """Send ``request`` and read until the server closes the
+    connection (a server that kept it open fails on the timeout).
+    Returns (status line, headers, body)."""
+    with socket.create_connection(("127.0.0.1", port), timeout=30) as sock:
+        sock.sendall(request)
+        chunks = []
+        while chunk := sock.recv(65536):
+            chunks.append(chunk)
+    head, _, body = b"".join(chunks).partition(b"\r\n\r\n")
+    status, *lines = head.decode("latin-1").split("\r\n")
+    headers = dict(line.split(": ", 1) for line in lines)
+    return status, headers, body
+
+
+@pytest.fixture(scope="module")
+def echo_server():
+    with OlapHttpServer(_EchoApi()) as srv:
+        yield srv
+
+
+@pytest.mark.parametrize("request_line", [
+    b"GARBAGE", b"GET /olap/fact_tables", b"GET / HTTP/1.0 extra",
+    b"GET / FTP/1.0", b"GET / HTTP/one.zero",
+])
+def test_malformed_request_line_is_400(echo_server, request_line):
+    status, _, body = _raw(echo_server.port, request_line + b"\r\n\r\n")
+    assert status == "HTTP/1.0 400 Bad Request"
+    assert "Bad request" in json.loads(body)["error"]
+
+
+@pytest.mark.parametrize("method", [b"POST", b"HEAD"])
+def test_methods_other_than_get_are_501(echo_server, method):
+    request = method + b" /olap/fact_tables HTTP/1.1\r\n\r\n"
+    status, _, body = _raw(echo_server.port, request)
+    assert status == "HTTP/1.0 501 Not Implemented"
+    assert "error" in json.loads(body)
+
+
+def test_more_than_100_header_lines_is_431(echo_server):
+    def request(n):
+        return (b"GET /olap/fact_tables HTTP/1.1\r\n"
+                + b"".join(b"X-H%d: v\r\n" % i for i in range(n)) + b"\r\n")
+
+    assert _raw(echo_server.port, request(100))[0] == "HTTP/1.0 200 OK"
+    status, _, body = _raw(echo_server.port, request(101))
+    assert status == "HTTP/1.0 431 Request Header Fields Too Large"
+    assert json.loads(body) == {"error": "Too many headers"}
+
+
+def test_keep_alive_request_gets_one_http10_reply_then_close(echo_server):
+    status, headers, body = _raw(
+        echo_server.port,
+        b"GET /olap/fact_tables HTTP/1.1\r\nHost: x\r\nConnection: keep-alive\r\n\r\n",
+    )
+    assert status == "HTTP/1.0 200 OK"
+    assert set(headers) == {"Content-Type", "Content-Length", "Date"}
+    assert headers["Content-Type"] == "application/json"
+    assert int(headers["Content-Length"]) == len(body)
+    assert json.loads(body) == {"path": "/olap/fact_tables", "params": {}}
+
+
+def test_percent_encoded_query_byte_identical(api, server):
+    params = {"cut": "loan_type:O|date:1996,1,1-1996,6,30",
+              "drilldown": "date|organization_level", "measure": "value"}
+    query = urllib.parse.urlencode(params, quote_via=urllib.parse.quote)
+    status, headers, body = _raw(
+        server.port, f"GET /olap/loans2/aggregate?{query} HTTP/1.1\r\n\r\n".encode()
+    )
+    assert "%3A" in query and "%7C" in query and "%2C" in query
+    assert status == "HTTP/1.0 200 OK"
+    assert body == encode_response(api.handle("/olap/loans2/aggregate", params))
+    assert json.loads(body)["data"]
+    assert int(headers["Content-Length"]) == len(body)
+
+
+def test_5xx_is_logged_with_its_route_and_nothing_else_is(echo_server, caplog):
+    caplog.set_level(logging.DEBUG, logger="opl_spark.server")
+    for path, code in (("/olap/x", 200), ("/missing", 404), ("/bad", 400)):
+        status = _raw(echo_server.port, f"GET {path} HTTP/1.0\r\n\r\n".encode())[0]
+        assert status.startswith(f"HTTP/1.0 {code} ")
+    assert _raw(echo_server.port, b"POST / HTTP/1.0\r\n\r\n")[0].startswith("HTTP/1.0 501 ")
+    assert caplog.records == []
+    status, _, body = _raw(echo_server.port, b"GET /boom?x=1 HTTP/1.0\r\n\r\n")
+    assert status == "HTTP/1.0 500 Internal Server Error"
+    assert json.loads(body) == {"error": "RuntimeError: engine down"}
+    (record,) = caplog.records
+    assert record.name == "opl_spark.server" and record.levelno == logging.ERROR
+    assert "/boom" in record.getMessage()
+    assert record.exc_info[0] is RuntimeError
+
+
+def test_concurrent_slow_requests_reuse_workers_and_stop_ends_them():
+    """8 requests held inside the API until all 8 are there: each is
+    answered (concurrency is not capped below 8), the server never
+    runs more workers than the 8 connections open at once, sequential
+    requests afterwards reuse them, and stop() leaves no thread."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    class SlowApi(_EchoApi):
+        barrier = threading.Barrier(8, timeout=30)  # all 8 inside at once
+
+        def handle(self, path, params):
+            self.barrier.wait()
+            return super().handle(path, params)
+
+    def workers(port):
+        return [t for t in threading.enumerate() if t.name.startswith(f"olap-http-{port}-")]
+
+    api = SlowApi()
+    srv = OlapHttpServer(api).start()
+    port = srv.port
+    try:
+        with ThreadPoolExecutor(max_workers=8) as pool:
+            replies = list(pool.map(
+                lambda i: _raw(port, f"GET /olap/{i} HTTP/1.0\r\n\r\n".encode()), range(8)
+            ))
+        assert [json.loads(body)["path"] for _, _, body in replies] == [
+            f"/olap/{i}" for i in range(8)
+        ]
+        assert all(status == "HTTP/1.0 200 OK" for status, _, _ in replies)
+        assert len(workers(port)) == 8
+        api.barrier = threading.Barrier(1)
+        for i in range(20):
+            assert _raw(port, b"GET /olap/again HTTP/1.0\r\n\r\n")[0] == "HTTP/1.0 200 OK"
+        assert len(workers(port)) <= 8
+    finally:
+        srv.stop()
+    assert not [t.name for t in threading.enumerate() if t.name.startswith(f"olap-http-{port}")]
