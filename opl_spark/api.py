@@ -38,7 +38,7 @@ class OlapApi:
       every fact re-registration bumps;
     - the lattice version is :meth:`RollupStore.lattice_version` (the
       manifest's mtime; ``None`` without a lattice), which every
-      ``materialize``/``refresh`` changes;
+      ``materialize`` changes;
     - the plan params are the ``_PLAN_PARAMS`` present, so junk params
       share a slot;
     - the output kind is ``output=table`` vs JSON rows.

@@ -41,7 +41,6 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from opl_spark.cube import CORE_PARAMS, CubeEngine
-from opl_spark.snapshot import swap_in
 from opl_spark.sources.registry import open_parquet, write_counted
 
 #: Each input of a derivable aggregate as a rollup partial: its column
@@ -60,13 +59,20 @@ def _grouping_key(cols: list[str]) -> str:
 
 
 def _partials(measures) -> list:
-    """The lattice's four partials per measure (``materialize`` and
-    ``refresh`` both aggregate the fact with these)."""
+    """The lattice's four partials per measure (``materialize``
+    aggregates the fact with these)."""
     return [
         CubeEngine._fact_input(m, kind).alias(f"{prefix}_{m.name}")
         for m in measures
         for kind, (prefix, _) in _PARTIALS.items()
     ]
+
+
+def _rollup_dirs(manifest: dict) -> set[str]:
+    """The rollup directories (names under ``<base>/<fact>/``) a
+    manifest lists.  An entry written before rollups got a fresh
+    directory per write has no ``dir`` and lives under its key."""
+    return {info.get("dir", key) for key, info in manifest["rollups"].items()}
 
 
 def _reduced(m, kind: str) -> Column:
@@ -91,18 +97,29 @@ def _fact_version(frame: DataFrame) -> str:
 class RollupStore:
     """Materialized-rollup registry for one warehouse directory.
 
-    Layout: ``<base>/<fact>/<grouping_key>/`` parquet per rollup plus
-    ``<base>/<fact>/_LATTICE.json`` recording each rollup's grouping
-    columns and row count, the fact version the lattice was built
-    from, and the measures it carries partials for.  Output typing
-    comes from the fact schema, as on the fact path, so the
+    Layout: ``<base>/<fact>/_LATTICE.json`` plus one parquet directory
+    per rollup write, ``<base>/<fact>/<grouping_key>.<gen>/``, where
+    ``gen`` is fresh for every write and never reused.  The manifest
+    records each rollup's grouping columns, row count and directory
+    (``dir``; an entry written before that field existed reads
+    ``<base>/<fact>/<grouping_key>/``), the fact version the lattice
+    was built from, and the measures it carries partials for.  Output
+    typing comes from the fact schema, as on the fact path, so the
     ``fractional`` flag older manifests record per measure is not
     read.
 
-    ``materialize`` and ``refresh`` publish the manifest whole
-    (:meth:`_publish`); a request routes (:meth:`_route`) and reads its
-    rollup from one lattice snapshot (:meth:`_lattice`), so it never
-    mixes two manifests.
+    Publishing the manifest (:meth:`_publish`, one ``os.replace``) is
+    the lattice's only commit: ``materialize`` never writes into a
+    directory a manifest lists, so a failed or crashed write leaves the
+    published lattice serving.  A request routes (:meth:`_route`) and
+    reads its rollup from one lattice snapshot (:meth:`_lattice`), so
+    it never mixes two manifests, and its files get one publish of
+    grace: a directory is deleted only once neither the published
+    manifest nor the one it replaced lists it.
+
+    Single writer: one ``materialize`` at a time per fact, across
+    processes.  A second writer's unpublished directories are not
+    listed by any manifest, and the first writer's sweep deletes them.
     """
 
     def __init__(self, spark: SparkSession, base_dir: str):
@@ -114,8 +131,8 @@ class RollupStore:
         # EVERY request cost more than the routed scan saved.  The
         # lattice cache holds one snapshot per fact, (manifest mtime,
         # manifest, {rollup key: frame}), replaced whole when
-        # lattice_version() changes: a re-materialize or refresh, in
-        # this process or another, publishes a new manifest, and the
+        # lattice_version() changes: a re-materialize, in this
+        # process or another, publishes a new manifest, and the
         # frames go with the manifest that listed them.  The
         # fact-version cache holds one entry per fact, valid for the
         # registered frame OBJECT it pins, whose resolved file index is
@@ -132,9 +149,9 @@ class RollupStore:
 
     def lattice_version(self, fact: str) -> int | None:
         """Identity of ``fact``'s lattice: its manifest's mtime (ns), or
-        None when nothing is materialized.  ``materialize`` and
-        ``refresh`` publish a new manifest — in this process or another
-        — so any change to the lattice changes this token; response
+        None when nothing is materialized.  ``materialize`` publishes
+        a new manifest — in this process or another — so any change to
+        the lattice changes this token; response
         caches over routed aggregates key on it."""
         try:
             return os.stat(self._manifest_path(fact)).st_mtime_ns
@@ -191,13 +208,18 @@ class RollupStore:
     ) -> dict:
         """Write one partial-aggregate parquet per grouping (columns
         are PHYSICAL fact columns — include every hierarchy level you
-        want cuttable/drillable through the rollup).  Re-running
-        overwrites; for append-only deltas :meth:`refresh` maintains
-        the lattice incrementally instead.  Rollups not listed in
-        ``groupings`` stay in the lattice only while the fact's files
-        are unchanged since they were built; otherwise they are
-        dropped and their files deleted (stale partials never answer
-        a request)."""
+        want cuttable/drillable through the rollup), each into a fresh
+        directory, then publish one manifest listing them.  Re-running
+        a grouping replaces its manifest entry, not its files.  Rollups
+        not listed in ``groupings`` stay in the lattice only while the
+        fact's files are unchanged since they were built; otherwise
+        they are dropped (stale partials never answer a request).
+
+        After the publish, every directory under ``<base>/<fact>/``
+        that neither the new manifest nor the one it replaced lists is
+        deleted: dropped rollups one publish late, and whatever a
+        failed or crashed earlier write left.  Rollups are written one
+        after another, by one writer (see :class:`RollupStore`)."""
         meta = engine.catalog.fact(fact)
         base = engine.frame(fact)
         partials = _partials(meta.measures)
@@ -218,14 +240,15 @@ class RollupStore:
         for cols in groupings:
             key = _grouping_key(cols)
             rolled = base.groupBy(*cols).agg(*partials)
-            path = os.path.join(self._fact_dir(fact), key)
+            name = f"{key}.{uuid.uuid4().hex}"
+            path = os.path.join(self._fact_dir(fact), name)
             rows = write_counted(rolled, path, f"rollup_{fact}_{key}")
-            manifest["rollups"][key] = {"cols": cols, "rows": rows}
+            manifest["rollups"][key] = {"cols": cols, "rows": rows, "dir": name}
         self._publish(fact, manifest)
-        # best-effort delete of the dropped stale rollups' files, once
-        # no manifest lists them
-        for key in old["rollups"].keys() - manifest["rollups"].keys():
-            shutil.rmtree(os.path.join(self._fact_dir(fact), key), ignore_errors=True)
+        listed = _rollup_dirs(old) | _rollup_dirs(manifest)
+        for entry in os.scandir(self._fact_dir(fact)):
+            if entry.is_dir() and entry.name not in listed:
+                shutil.rmtree(entry.path, ignore_errors=True)
         return manifest
 
     @staticmethod
@@ -412,7 +435,7 @@ class RollupStore:
         if hit is not None:
             key = hit["key"]
             if key not in frames:
-                path = os.path.join(self._fact_dir(fact), key)
+                path = os.path.join(self._fact_dir(fact), hit.get("dir", key))
                 frames[key] = open_parquet(self.spark, path)
             src, part = frames[key], _reduced
         return engine._answer(
@@ -420,58 +443,3 @@ class RollupStore:
             top_n=top_n, top_within=top_within, having=having,
             share=share, share_within=share_within,
         )
-
-    # -- maintenance --------------------------------------------------------
-
-    def refresh(self, engine: CubeEngine, fact: str, delta: DataFrame) -> dict:
-        """Incremental lattice maintenance for APPEND-ONLY deltas (the
-        engine's snapshot model): each rollup gets the delta's partials
-        unioned in and re-reduced — sums/counts re-add, min/min and
-        max/max re-reduce, all reassociative, so the refreshed rollup
-        equals a full re-materialize over base ∪ delta at the cost of
-        one delta-sized aggregation per rollup (asserted in
-        tests/test_rollups.py).  Updates/deletes need re-materialize —
-        min/max partials are not subtractable.
-
-        Each rollup gets the same write-to-temp + two-rename swap as
-        ``snapshot.compact`` (a crash mid-write leaves the live rollup
-        intact), then one new manifest is published over the old one.
-
-        Contract: refresh runs AFTER the delta landed in the fact table
-        and the engine's registered frame reflects it (register a fresh
-        frame post-append).  The refreshed rollups cover base ∪ delta,
-        so the new manifest stamps the version of the engine's CURRENT
-        fact frame, which the routing staleness guard then accepts; a
-        pre-append frame would stamp the old listing, and requests would
-        fall back to the fact until the next materialize.
-        """
-        meta = engine.catalog.fact(fact)
-        old = self._lattice(fact)[1]
-        delta_partials = _partials(meta.measures)
-        re_reduce = [
-            _reduced(m, kind).alias(f"{prefix}_{m.name}")
-            for m in meta.measures
-            for kind, (prefix, _) in _PARTIALS.items()
-        ]
-        rollups = {}
-        for key, info in old["rollups"].items():
-            cols = info["cols"]
-            path = os.path.join(self._fact_dir(fact), key)
-            d = delta.groupBy(*cols).agg(*delta_partials)
-            merged = (
-                open_parquet(self.spark, path)
-                .unionByName(d)
-                .groupBy(*cols)
-                .agg(*re_reduce)
-            )
-            tmp = path + "__refreshing"
-            rows = write_counted(merged, tmp, f"rollup_refresh_{fact}_{key}")
-            swap_in(self.spark, path, tmp, "rollup refresh")
-            rollups[key] = {**info, "rows": rows}
-        manifest = {
-            **old,
-            "rollups": rollups,
-            "fact_version": _fact_version(engine.frame(fact)),
-        }
-        self._publish(fact, manifest)
-        return manifest

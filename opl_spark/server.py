@@ -15,7 +15,9 @@ path and query), and sends the status line, headers and body in one
 write as ``HTTP/1.0``, then closes the connection.  Accepted
 connections go through a queue to idle worker threads; a new daemon
 worker starts only when none is idle, so concurrency is unbounded and
-a repeat request reuses a thread instead of starting one.
+a repeat request reuses a thread instead of starting one.  A client
+that stays silent holds its worker for at most ``_IDLE_TIMEOUT_S``,
+and ``stop()`` ends every read still waiting on a client.
 
 Scale shape: the server is a DRIVER-side component.  Each request
 delegates to ``CubeEngine.aggregate`` (distributed; the response is
@@ -31,6 +33,7 @@ from __future__ import annotations
 import json
 import logging
 import queue
+import socket
 import socketserver
 import threading
 import time
@@ -48,6 +51,8 @@ _log = logging.getLogger(__name__)
 #: http.server's bounds: longest request or header line, most headers
 _MAX_LINE = 65536
 _MAX_HEADERS = 100
+#: longest wait on a silent client: each socket read, and the reply write
+_IDLE_TIMEOUT_S = 10
 
 
 def json_default(obj: Any) -> Any:
@@ -113,21 +118,32 @@ def _reply(code: int, payload: Any) -> bytes:
 class _Handler(socketserver.StreamRequestHandler):
     """One request per connection: request line in, one reply out."""
 
+    timeout = _IDLE_TIMEOUT_S
+
     def handle(self) -> None:
-        line = self.rfile.readline(_MAX_LINE + 1)
-        if not line.strip():
-            return  # closed or blank before a request: nothing to answer
         try:
-            if len(line) > _MAX_LINE:
-                raise _BadRequest(HTTPStatus.REQUEST_URI_TOO_LONG,
-                                  "Request line too long")
-            target = _request_target(line)
-            self._skip_headers()
+            target = self._read_request()
+        except TimeoutError:
+            return  # silent past the bound: nothing to answer
         except _BadRequest as exc:
             reply = _reply(exc.code, {"error": str(exc)})
         else:
+            if target is None:
+                return  # closed or blank before a request: nothing to answer
             reply = self._answer(target)
         self.wfile.write(reply)
+
+    def _read_request(self) -> str | None:
+        """The request line's target, with the header lines read past;
+        None when the connection closes or a blank line comes first."""
+        line = self.rfile.readline(_MAX_LINE + 1)
+        if not line.strip():
+            return None
+        if len(line) > _MAX_LINE:
+            raise _BadRequest(HTTPStatus.REQUEST_URI_TOO_LONG, "Request line too long")
+        target = _request_target(line)
+        self._skip_headers()
+        return target
 
     def _skip_headers(self) -> None:
         """Read the header lines up to the blank line, unparsed."""
@@ -160,7 +176,8 @@ class _Server(socketserver.TCPServer):
     reused worker threads.  ``_idle`` counts workers done with their
     connection and not yet handed another; a connection arriving when
     it is 0 starts a new worker, so the pool never outgrows the peak
-    number of connections open at once."""
+    number of connections open at once.  ``_open`` holds the accepted
+    connections not yet closed, queued or in a worker."""
 
     allow_reuse_address = True
 
@@ -171,9 +188,11 @@ class _Server(socketserver.TCPServer):
         self._lock = threading.Lock()
         self._idle = 0
         self._workers: list[threading.Thread] = []
+        self._open: set[socket.socket] = set()
 
     def process_request(self, request, client_address) -> None:
         with self._lock:
+            self._open.add(request)
             if self._idle:
                 self._idle -= 1
             else:
@@ -195,15 +214,23 @@ class _Server(socketserver.TCPServer):
             finally:
                 with self._lock:
                     self._idle += 1
+                    self._open.discard(request)
                 self.shutdown_request(request)
 
     def server_close(self) -> None:
-        """Close the listening socket, then wake every worker with a
-        stop marker and wait, 10 s in all, for each to finish its
-        connection."""
+        """Close the listening socket and shut the reading side of every
+        open connection, so a read still waiting on a client ends at
+        once (a reply being written still goes out).  Then wake every
+        worker with a stop marker and wait, 10 s in all, for each to
+        finish its connection."""
         super().server_close()
         with self._lock:
             workers, self._workers = self._workers, []
+            for conn in self._open:
+                try:
+                    conn.shutdown(socket.SHUT_RD)
+                except OSError:
+                    pass  # the client has already gone
         for _ in workers:
             self._jobs.put(None)
         deadline = time.monotonic() + 10
@@ -237,12 +264,16 @@ class OlapHttpServer:
     def __init__(self, api: OlapApi, host: str = "127.0.0.1", port: int = 0):
         self._server = _Server(api, (host, port))
         self._thread: threading.Thread | None = None
+        # a serve_forever loop runs or is starting: only then can
+        # shutdown() return, because it waits for that loop to end
+        self._looping = False
 
     @property
     def port(self) -> int:
         return self._server.server_address[1]
 
     def start(self) -> "OlapHttpServer":
+        self._looping = True
         self._thread = threading.Thread(
             target=self._server.serve_forever, name=f"olap-http-{self.port}",
             daemon=True,
@@ -251,7 +282,9 @@ class OlapHttpServer:
         return self
 
     def stop(self) -> None:
-        self._server.shutdown()
+        if self._looping:
+            self._server.shutdown()
+            self._looping = False
         self._server.server_close()
         if self._thread is not None:
             self._thread.join(timeout=10)
@@ -259,6 +292,7 @@ class OlapHttpServer:
 
     def serve_forever(self) -> None:
         """Foreground serving for the CLI ``serve`` command."""
+        self._looping = True
         self._server.serve_forever()
 
     def __enter__(self) -> "OlapHttpServer":

@@ -175,9 +175,8 @@ def swap_in(spark: SparkSession, path: str, tmp: str, op: str) -> None:
     ``__old``.  A failed second rename puts the original back before
     raising; a crash between the renames strands the data under
     ``__old``, which ``SnapshotEngine.vacuum`` leaves for the operator
-    to rename back.  ``compact``, ``upsert`` and
-    ``RollupStore.refresh`` all swap through here; ``op`` names the
-    caller in the error."""
+    to rename back.  ``compact`` and ``upsert`` swap through here;
+    ``op`` names the caller in the error."""
     jvm = spark._jvm
     conf = spark._jsc.hadoopConfiguration()
     old = path + "__old"

@@ -584,7 +584,7 @@ def test_memo_entries_never_exceed_the_lru_bound(spark, sf_dir):
 
 
 def test_memo_invalidation(spark, sf_dir, tmp_path):
-    """A lattice rewrite (materialize, refresh), fact re-registration
+    """A lattice rewrite (materialize), fact re-registration
     and clear_plan_cache() each retire the memoized response: the next
     request runs Spark again, and the request after it is answered
     from the fresh memo."""
@@ -603,14 +603,13 @@ def test_memo_invalidation(spark, sf_dir, tmp_path):
 
     changes = {
         "materialize": lambda: store.materialize(eng, "loans2", groupings),
-        "refresh": lambda: store.refresh(eng, "loans2", full.limit(0)),
         "register_fact": lambda: eng.register_fact("loans2", full),
         "clear_plan_cache": api.clear_plan_cache,
     }
     for i, (name, change) in enumerate(changes.items()):
         version = store.lattice_version("loans2")
         change()
-        if name in ("materialize", "refresh"):
+        if name == "materialize":
             assert store.lattice_version("loans2") != version, name
         fresh, jobs = _jobs_during(
             spark, f"memo-{name}", lambda: api.handle(AGG, P)

@@ -390,12 +390,12 @@ def test_explain_concurrent_requests_get_their_own_plans(server):
 def test_cached_plan_survives_inplace_rollup_rematerialization(
     spark, sf_dir, tmp_path
 ):
-    """`-c materialize` from another process overwrites the lattice
-    parquet IN PLACE, deleting the part files an earlier plan listed.
-    The rewrite changes the lattice version, so the next request for
-    that shape misses the response cache and builds over the new files
-    (the rollup path lists them fresh per manifest) — it answers, not
-    an error until restart."""
+    """`-c materialize` from another process re-materializes the
+    lattice: new rollup files under a new manifest.  The rewrite
+    changes the lattice version, so the next request for that shape
+    misses the response cache and builds over the new files (the
+    rollup path lists them fresh per manifest) — it answers, not an
+    error until restart."""
     from opl_spark.rollups import RollupStore
 
     engine = CubeEngine(default_catalog())
@@ -407,7 +407,7 @@ def test_cached_plan_survives_inplace_rollup_rematerialization(
 
     before = api.handle("/olap/loans2/aggregate", dict(AGG_PARAMS))
     assert before.get("data")
-    # the in-place overwrite another session would run
+    # the re-materialize another session would run
     store.materialize(engine, "loans2", groupings)
     after = api.handle("/olap/loans2/aggregate", dict(AGG_PARAMS))
     assert after == before
@@ -626,3 +626,37 @@ def test_concurrent_slow_requests_reuse_workers_and_stop_ends_them():
     finally:
         srv.stop()
     assert not [t.name for t in threading.enumerate() if t.name.startswith(f"olap-http-{port}")]
+
+
+def test_stop_ends_a_worker_waiting_on_a_silent_client():
+    """A client that connects and sends nothing does not hold stop():
+    it returns within 1 s and leaves no worker thread."""
+    import time
+
+    srv = OlapHttpServer(_EchoApi()).start()
+    port = srv.port
+
+    def workers():
+        return [t for t in threading.enumerate() if t.name.startswith(f"olap-http-{port}-")]
+
+    with socket.create_connection(("127.0.0.1", port), timeout=30):
+        deadline = time.monotonic() + 10
+        while not workers():
+            assert time.monotonic() < deadline, "no worker took the connection"
+            time.sleep(0.01)
+        t0 = time.monotonic()
+        srv.stop()
+        assert time.monotonic() - t0 < 1
+        assert not workers()
+
+
+def test_stop_on_a_server_that_never_served_returns():
+    """stop() without start() returns and releases the port."""
+    srv = OlapHttpServer(_EchoApi())
+    port = srv.port
+    stopper = threading.Thread(target=srv.stop, daemon=True)
+    stopper.start()
+    stopper.join(timeout=3)
+    assert not stopper.is_alive()
+    with socket.socket() as sock:
+        sock.bind(("127.0.0.1", port))

@@ -4,6 +4,7 @@ path is pre-aggregation, not approximation)."""
 
 from __future__ import annotations
 
+import json
 import os
 
 import pytest
@@ -32,6 +33,34 @@ def navigator(spark, sf_dir, tmp_path_factory):
 
 def _rows(df):
     return sorted(tuple(r) for r in df.collect())
+
+
+def _listed(manifest_path) -> set[str]:
+    """The rollup directory names a published manifest lists."""
+    with open(manifest_path) as fh:
+        rollups = json.load(fh)["rollups"]
+    return {info.get("dir", key) for key, info in rollups.items()}
+
+
+def _fails_on_write(monkeypatch):
+    """Make every rollup write job fail on its executors: the written
+    frame gets an ``assert_true`` that no constant folding can decide
+    before the job runs."""
+    from pyspark.sql import functions as F
+
+    import opl_spark.rollups as rollups
+
+    write = rollups.write_counted
+
+    def failing(df, path, name):
+        return write(df.where(F.assert_true(F.spark_partition_id() < 0).isNull()), path, name)
+
+    monkeypatch.setattr(rollups, "write_counted", failing)
+
+
+def _dies_halfway(obj, fh, **kwargs):
+    fh.write(json.dumps(obj, **kwargs)[:40])
+    raise OSError("disk full")
 
 
 @pytest.mark.parametrize(
@@ -76,7 +105,7 @@ def test_manifest_rows_equal_the_written_rollups(navigator, spark):
     rollups = store._lattice("loans2")[1]["rollups"]
     assert len(rollups) == 3
     for key, info in rollups.items():
-        path = os.path.join(store._fact_dir("loans2"), key)
+        path = os.path.join(store._fact_dir("loans2"), info["dir"])
         assert info["rows"] == spark.read.parquet(path).count(), key
 
 
@@ -86,8 +115,6 @@ def test_interrupted_manifest_write_keeps_the_previous_lattice(
     """A ``materialize`` whose manifest write dies halfway leaves the
     published manifest whole: requests keep routing on the previous
     lattice, and no temp file is left beside it."""
-    import json
-
     engine = CubeEngine(default_catalog())
     engine.register_fact("loans2", build_loans_fact(spark, sf_dir))
     store = RollupStore(spark, str(tmp_path / "lattice"))
@@ -95,11 +122,7 @@ def test_interrupted_manifest_write_keeps_the_previous_lattice(
     by_month = dict(drilldown="date:month", measure="value")
     assert store.route_report(engine, "loans2", **by_month)["rollup"] == "year__month"
 
-    def dies_halfway(obj, fh, **kwargs):
-        fh.write(json.dumps(obj, **kwargs)[:40])
-        raise OSError("disk full")
-
-    monkeypatch.setattr("opl_spark.rollups.json.dump", dies_halfway)
+    monkeypatch.setattr("opl_spark.rollups.json.dump", _dies_halfway)
     with pytest.raises(OSError, match="disk full"):
         store.materialize(engine, "loans2", [["loan_type"]])
     monkeypatch.undo()
@@ -132,54 +155,11 @@ def test_uncovered_query_falls_back(navigator):
     assert _rows(routed) == _rows(base)
 
 
-def test_refresh_equals_rematerialize(spark, sf_dir, tmp_path):
-    import pyspark.sql.functions as F
-
-    from opl_spark.facts import build_loans_fact
-
-    engine = CubeEngine(default_catalog())
-    full = build_loans_fact(spark, sf_dir)
-    old = full.filter(F.col("year") < 2000)
-    delta = full.filter(F.col("year") >= 2000)
-
-    engine.register_fact("loans2", old)
-    store = RollupStore(spark, str(tmp_path / "lattice"))
-    store.materialize(engine, "loans2", [["year", "month"], ["loan_type"]])
-    store.refresh(engine, "loans2", delta)
-
-    # reference: a lattice materialized from the full fact
-    engine_full = CubeEngine(default_catalog())
-    engine_full.register_fact("loans2", full)
-    ref = RollupStore(spark, str(tmp_path / "lattice_full"))
-    ref.materialize(engine_full, "loans2", [["year", "month"], ["loan_type"]])
-
-    for key in ("year__month", "loan_type"):
-        got = sorted(
-            tuple(r)
-            for r in spark.read.parquet(
-                str(tmp_path / "lattice" / "loans2" / key)
-            ).collect()
-        )
-        want = sorted(
-            tuple(r)
-            for r in spark.read.parquet(
-                str(tmp_path / "lattice_full" / "loans2" / key)
-            ).collect()
-        )
-        assert got == want, key
-        assert store._lattice("loans2")[1]["rollups"][key]["rows"] == len(got), key
-    # routed answers now include the delta
-    engine.register_fact("loans2", full)  # base must match for fallback paths
-    routed = store.aggregate(engine, "loans2", drilldown="date", measure="value")
-    base = engine_full.aggregate("loans2", drilldown="date", measure="value")
-    assert _rows(routed) == _rows(base)
-
-
 def test_partial_rematerialize_drops_stale_rollups(spark, sf_dir, tmp_path):
     """Re-materializing part of the lattice after an append must not
     stamp the new fact version over the rollups it did not rebuild:
-    the pre-append ``loan_type`` rollup is dropped with its files and
-    the request falls back to the fact."""
+    the pre-append ``loan_type`` rollup is dropped, the request falls
+    back to the fact, and the rollup's files go one publish later."""
     import pyspark.sql.functions as F
 
     full = build_loans_fact(spark, sf_dir)
@@ -188,7 +168,8 @@ def test_partial_rematerialize_drops_stale_rollups(spark, sf_dir, tmp_path):
     engine = CubeEngine(default_catalog())
     engine.register_fact("loans2", spark.read.parquet(fact_dir))
     store = RollupStore(spark, str(tmp_path / "lattice"))
-    store.materialize(engine, "loans2", [["year", "month"], ["loan_type"]])
+    first = store.materialize(engine, "loans2", [["year", "month"], ["loan_type"]])
+    loan_type_dir = tmp_path / "lattice" / "loans2" / first["rollups"]["loan_type"]["dir"]
 
     # nightly append, then re-register the fact and rebuild one rollup
     full.filter(F.col("year") >= 2000).write.mode("append").parquet(fact_dir)
@@ -197,7 +178,7 @@ def test_partial_rematerialize_drops_stale_rollups(spark, sf_dir, tmp_path):
 
     by_type = dict(drilldown="loan_type", measure="value")
     assert store.route_report(engine, "loans2", **by_type)["routed"] is False
-    assert not (tmp_path / "lattice" / "loans2" / "loan_type").exists()
+    assert "loan_type" not in store._lattice("loans2")[1]["rollups"]
     assert _rows(store.aggregate(engine, "loans2", **by_type)) == _rows(
         engine.aggregate("loans2", **by_type)
     )
@@ -207,6 +188,74 @@ def test_partial_rematerialize_drops_stale_rollups(spark, sf_dir, tmp_path):
     assert _rows(store.aggregate(engine, "loans2", **by_month)) == _rows(
         engine.aggregate("loans2", **by_month)
     )
+    assert loan_type_dir.exists()  # the replaced manifest still lists it
+    store.materialize(engine, "loans2", [["year", "month"]])
+    assert not loan_type_dir.exists()
+
+
+def test_held_rollup_frame_outlives_a_rematerialize(spark, sf_dir, tmp_path):
+    """A routed answer planned before a re-materialize of the same
+    groupings and collected after it reads the files it was planned
+    over: a directory outlives the publish that drops it."""
+    engine = CubeEngine(default_catalog())
+    engine.register_fact("loans2", build_loans_fact(spark, sf_dir))
+    store = RollupStore(spark, str(tmp_path / "lattice"))
+    store.materialize(engine, "loans2", [["year", "month"]])
+    by_month = dict(drilldown="date:month", measure="value")
+    held = store.aggregate(engine, "loans2", **by_month)
+    store.materialize(engine, "loans2", [["year", "month"]])
+    assert _rows(held) == _rows(engine.aggregate("loans2", **by_month))
+
+
+def test_failed_rollup_write_keeps_the_previous_lattice(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """A re-materialize whose rollup write job fails publishes nothing
+    and touches no listed directory: the previous lattice keeps routing
+    and answering, in this store and in a fresh one."""
+    engine = CubeEngine(default_catalog())
+    engine.register_fact("loans2", build_loans_fact(spark, sf_dir))
+    store = RollupStore(spark, str(tmp_path / "lattice"))
+    store.materialize(engine, "loans2", [["year", "month"]])
+    by_month = dict(drilldown="date:month", measure="value")
+
+    _fails_on_write(monkeypatch)
+    with pytest.raises(Exception, match="is not true"):
+        store.materialize(engine, "loans2", [["year", "month"]])
+    monkeypatch.undo()
+
+    want = _rows(engine.aggregate("loans2", **by_month))
+    for s in (store, RollupStore(spark, str(tmp_path / "lattice"))):
+        assert s.route_report(engine, "loans2", **by_month)["rollup"] == "year__month"
+        assert _rows(s.aggregate(engine, "loans2", **by_month)) == want
+
+
+@pytest.mark.parametrize("failure", ["rollup_write", "manifest_write"])
+def test_next_publish_deletes_what_a_failed_materialize_left(
+    spark, sf_dir, tmp_path, monkeypatch, failure
+):
+    """After a materialize fails at its rollup write or at its manifest
+    write, the next successful one leaves no directory that neither its
+    manifest nor the one it replaced lists."""
+    engine = CubeEngine(default_catalog())
+    engine.register_fact("loans2", build_loans_fact(spark, sf_dir))
+    store = RollupStore(spark, str(tmp_path / "lattice"))
+    store.materialize(engine, "loans2", [["year", "month"]])
+
+    if failure == "rollup_write":
+        _fails_on_write(monkeypatch)
+    else:
+        monkeypatch.setattr("opl_spark.rollups.json.dump", _dies_halfway)
+    with pytest.raises(Exception):
+        store.materialize(engine, "loans2", [["loan_type"]])
+    monkeypatch.undo()
+
+    manifest = store._manifest_path("loans2")
+    replaced = _listed(manifest)
+    store.materialize(engine, "loans2", [["year", "month"]])
+    fact_dir = tmp_path / "lattice" / "loans2"
+    on_disk = {p.name for p in fact_dir.iterdir() if p.is_dir()}
+    assert on_disk <= replaced | _listed(manifest)
 
 
 def test_api_routes_through_lattice_identically(navigator):

@@ -50,8 +50,9 @@ def test_footer_schema_equals_inferred_on_spark_written_dirs(spark, sf_dir, tmp_
     engine = CubeEngine(default_catalog())
     engine.register_fact("loans2", build_loans_fact(spark, sf_dir))
     store = RollupStore(spark, str(tmp_path / "lattice"))
-    store.materialize(engine, "loans2", [["year", "month", "loan_type"]])
-    _assert_same_schema(spark, str(tmp_path / "lattice" / "loans2" / "year__month__loan_type"))
+    manifest = store.materialize(engine, "loans2", [["year", "month", "loan_type"]])
+    rollup_dir = manifest["rollups"]["year__month__loan_type"]["dir"]
+    _assert_same_schema(spark, str(tmp_path / "lattice" / "loans2" / rollup_dir))
 
     # several part files, and a partitioned layout whose partition
     # column Spark takes from the directory names
