@@ -656,6 +656,7 @@ def latency_main() -> None:
     from opl_spark.rollup import lineitem_day_rollup_table, rollup_answer
     from opl_spark.session import get_spark
     from opl_spark.sources import load_table
+    from opl_spark.sources.registry import open_parquet
 
     spark = get_spark(app_name="opl-bench-latency")
     # warm warehouse: the fact materialized once (a server session
@@ -671,7 +672,7 @@ def latency_main() -> None:
         os.path.join(wh, "loans2")
     )
     eng = CubeEngine(default_catalog())
-    eng.register_fact("loans2", spark.read.parquet(os.path.join(wh, "loans2")))
+    eng.register_fact("loans2", open_parquet(spark, os.path.join(wh, "loans2")))
 
     for kw in _LATENCY_SHAPES:  # warm-up: codegen + file listing
         eng.aggregate("loans2", **kw).collect()
@@ -721,9 +722,10 @@ def latency_main() -> None:
     # "routed+cached" is the production server configuration — lattice
     # routing for rollup-sized scans AND the response cache; it is the
     # leg the <120 ms pinned-mix target (r12 verdict task 5) is judged
-    # on.  Both cached legs time cache hits; the unrouted legs isolate
-    # the cache's own win.
+    # on.  Both cached legs time cache hits (their cache_stats, recorded
+    # per leg, show it); the unrouted legs isolate the cache's own win.
     api_lat: dict[str, list[float]] = {}
+    api_cache: dict[str, dict[str, int]] = {}
     for mode, size, rollups in (
         ("routed_cached", 128, store),
         ("cached", 128, None),
@@ -738,6 +740,7 @@ def latency_main() -> None:
             t0 = time.perf_counter()
             api.handle("/olap/loans2/aggregate", _api_params(kw))
             api_lat[mode].append(time.perf_counter() - t0)
+        api_cache[mode] = api.cache_stats()
     s50, s95 = _pcts(api_lat["routed_cached"])
     a50, a95 = _pcts(api_lat["cached"])
     u50, u95 = _pcts(api_lat["uncached"])
@@ -793,6 +796,7 @@ def latency_main() -> None:
         "mix_receipts": receipts,
         "api_cached_p50_ms": a50, "api_cached_p95_ms": a95,
         "api_uncached_p50_ms": u50, "api_uncached_p95_ms": u95,
+        "api_cache_stats": api_cache,
         "routed_p50_ms": r50, "routed_p95_ms": r95,
         "direct_p50_ms": d50, "direct_p95_ms": d95,
     }))
@@ -885,6 +889,7 @@ def streaming_main() -> None:
     from pyspark.sql import functions as F
 
     from opl_spark.session import get_spark
+    from opl_spark.sources.registry import open_parquet
     from opl_spark.streaming.events import (
         _events_schema,
         read_stream_fact,
@@ -910,7 +915,7 @@ def streaming_main() -> None:
 
     atexit.register(shutil.rmtree, scratch, ignore_errors=True)
 
-    batch = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
+    batch = open_parquet(spark, os.path.join(sf_dir, "events.parquet"))
     n_rows = batch.count()
     ts_nanos = dict(batch.dtypes).get("ts") == "bigint"
     # time-ordered replay staging: a shuffled replay advances the

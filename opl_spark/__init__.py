@@ -7,7 +7,7 @@ OLAP cube HTTP API; see SURVEY.md):
 - ``timescope``  — snapshot time-scope derivation + cron gating
   (reference: library_olap/OLAP.php:3-45).
 - ``catalog``    — fact metadata: dimensions / levels / hierarchies /
-  measures / aggregates / mappings (reference:
+  measures / aggregates, declared per fact in ``facts`` (reference:
   api-library-olap/README.md:90-161).
 - ``cube``       — the OLAP query surface: cut (slice/dice), drilldown,
   measure/aggregate compilation to DataFrame plans (reference:

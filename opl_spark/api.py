@@ -83,14 +83,6 @@ class OlapApi:
         with self._lock:
             return dict(self._stats)
 
-    def clear_plan_cache(self) -> None:
-        """Drop every cached payload.  Fact re-registration and lattice
-        rewrites invalidate structurally (see the class docstring);
-        call this for out-of-band changes the key can't see — e.g.
-        re-configuring the rollup lattice's routing."""
-        with self._lock:
-            self._cache.clear()
-
     def handle(self, path: str, params: dict[str, str] | None = None) -> Any:
         params = params or {}
         parts = [p for p in path.split("/") if p]

@@ -1,11 +1,12 @@
 """Fact metadata catalog: dimensions, levels, hierarchies, measures.
 
-Mirrors the reference's per-fact metadata contract — every fact exposes
-a ``<factName>.json`` describing dimensions (flat or leveled, with
-hierarchies and level attributes), measures (with allowed aggregates),
-and logical→physical column mappings (reference:
-api-library-olap/README.md:90-161; consumed by the connector,
-DataStudio-connector/Codice.gs:84-137).
+Mirrors the reference's per-fact metadata contract — dimensions (flat
+or leveled, with hierarchies and level attributes) and measures (with
+allowed aggregates) per fact (reference: api-library-olap/README.md:
+90-161; consumed by the connector, DataStudio-connector/
+Codice.gs:84-137).  Where the reference reads one ``<factName>.json``
+per fact, the facts here are declared in Python (``opl_spark.facts``);
+each level and measure names its physical column directly.
 
 The catalog is plain metadata — hierarchies are NOT a Spark construct;
 they drive which physical columns the cube compiler's cut/drilldown
@@ -14,9 +15,7 @@ touch (SURVEY.md §1.1).
 
 from __future__ import annotations
 
-import json
-import os
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 
 @dataclass(frozen=True)
@@ -26,7 +25,7 @@ class Level:
     Codice.gs:87-99)."""
 
     name: str
-    column: str | None = None  # physical column; defaults to name via mappings
+    column: str | None = None  # physical column; defaults to name
     attributes: tuple[str, ...] = ()
 
     @property
@@ -109,15 +108,12 @@ class Measure:
 
 @dataclass(frozen=True)
 class FactMeta:
-    """Complete metadata for one fact table (the ``<factName>.json``)."""
+    """Complete metadata for one fact table."""
 
     name: str
     label: str = ""
     dimensions: tuple[Dimension, ...] = ()
     measures: tuple[Measure, ...] = ()
-    #: logical name → "<fact_table>.<column>" (README.md:151-160); we only
-    #: keep the column part — the fact is a single DataFrame/view.
-    mappings: dict[str, str] = field(default_factory=dict)
 
     def dimension(self, name: str) -> Dimension:
         for d in self.dimensions:
@@ -138,14 +134,6 @@ class FactMeta:
         if not self.measures:
             raise ValueError(f"fact {self.name!r} declares no measures")
         return self.measures[0]
-
-    def physical_column(self, logical: str) -> str:
-        """Resolve a logical name through mappings → physical column."""
-        mapped = self.mappings.get(logical)
-        if mapped is None:
-            return logical
-        # "<fact_table>.<column>" or bare "<column>"
-        return mapped.split(".", 1)[-1]
 
 
 class Catalog:
@@ -200,57 +188,3 @@ class Catalog:
             }
             for m in self.fact(fact).measures
         ]
-
-    # ---- JSON (de)serialization of the metadata contract ----
-
-    @staticmethod
-    def _fact_from_dict(name: str, spec: dict) -> FactMeta:
-        dims = []
-        for dspec in spec.get("dimensions", []):
-            levels = tuple(
-                Level(
-                    name=l["name"] if isinstance(l, dict) else l,
-                    column=l.get("column") if isinstance(l, dict) else None,
-                    attributes=tuple(l.get("attributes", [])) if isinstance(l, dict) else (),
-                )
-                for l in dspec.get("levels", [])
-            )
-            hiers = tuple(
-                Hierarchy(name=h["name"], order=tuple(h["order"]))
-                for h in dspec.get("hierarchies", [])
-            )
-            dims.append(
-                Dimension(
-                    name=dspec["name"],
-                    label=dspec.get("label", ""),
-                    levels=levels,
-                    hierarchies=hiers,
-                )
-            )
-        measures = tuple(
-            Measure(
-                name=m["name"],
-                label=m.get("label", ""),
-                column=m.get("column"),
-                aggregates=tuple(m.get("aggregates", ["sum"])),
-            )
-            for m in spec.get("measures", [])
-        )
-        return FactMeta(
-            name=name,
-            label=spec.get("label", ""),
-            dimensions=tuple(dims),
-            measures=measures,
-            mappings=dict(spec.get("mappings", {})),
-        )
-
-    @classmethod
-    def from_dir(cls, path: str) -> "Catalog":
-        """Load every ``<factName>.json`` in a metadata directory."""
-        cat = cls()
-        for fn in sorted(os.listdir(path)):
-            if fn.endswith(".json"):
-                with open(os.path.join(path, fn)) as f:
-                    spec = json.load(f)
-                cat.add(cls._fact_from_dict(fn[: -len(".json")], spec))
-        return cat

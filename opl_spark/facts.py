@@ -282,7 +282,6 @@ ACCESSIONS_META = FactMeta(
         Measure("accessions", column="accessions", aggregates=("sum", "avg")),
         Measure("target", column="target", aggregates=("sum",)),
     ),
-    mappings={"accessions": "accessions.accessions", "target": "accessions.target"},
 )
 
 

@@ -53,6 +53,9 @@ _MAX_LINE = 65536
 _MAX_HEADERS = 100
 #: longest wait on a silent client: each socket read, and the reply write
 _IDLE_TIMEOUT_S = 10
+#: how often the serve loop looks for a stop (socketserver's default is
+#: 0.5 s): the longest ``stop()`` waits for the loop to end
+_POLL_S = 0.05
 
 
 def json_default(obj: Any) -> Any:
@@ -275,8 +278,8 @@ class OlapHttpServer:
     def start(self) -> "OlapHttpServer":
         self._looping = True
         self._thread = threading.Thread(
-            target=self._server.serve_forever, name=f"olap-http-{self.port}",
-            daemon=True,
+            target=self._server.serve_forever, args=(_POLL_S,),
+            name=f"olap-http-{self.port}", daemon=True,
         )
         self._thread.start()
         return self
@@ -293,7 +296,7 @@ class OlapHttpServer:
     def serve_forever(self) -> None:
         """Foreground serving for the CLI ``serve`` command."""
         self._looping = True
-        self._server.serve_forever()
+        self._server.serve_forever(_POLL_S)
 
     def __enter__(self) -> "OlapHttpServer":
         return self.start()

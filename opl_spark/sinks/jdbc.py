@@ -205,27 +205,6 @@ class JdbcSink:
             cond = cond & F.col(name).eqNullSafe(F.lit(val))
         return df.filter(cond).limit(1).count() > 0
 
-    def delete_scope(
-        self, spark: SparkSession, table: str, query_id: int, scope: Scope
-    ) -> int:
-        """Idempotence half of delete+insert: drop the (queryId, scope)
-        slice in one driver-side statement (the slice is report-sized
-        by construction).  Returns rows deleted."""
-        conn = self._connect(spark)
-        try:
-            stored = self._resolve_table(conn, table)
-            if stored is None:
-                return 0
-            st = conn.createStatement()
-            try:
-                return st.executeUpdate(
-                    self._delete_sql(spark, stored, query_id, scope)
-                )
-            finally:
-                st.close()
-        finally:
-            conn.close()
-
     def ensure_columns(
         self, spark: SparkSession, df: DataFrame, table: str
     ) -> list[str]:

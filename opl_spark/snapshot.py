@@ -57,9 +57,6 @@ LEDGER_DIR = "_scopes"
 #: A week label ``gate`` can emit (``timescope.week_label``).
 _WEEK_LABEL = re.compile(r"Y\d+-W\d\d")
 
-#: The directory value a NULL partition column is written under.
-_NULL_PARTITION = "__HIVE_DEFAULT_PARTITION__"
-
 
 def _scope_marker(query_id: int, scope: Scope) -> str:
     """The ledger name stem of one ``(queryId, scope)``:
@@ -206,7 +203,7 @@ class SnapshotEngine:
     OLAP.php:128-164) as auto-create + ALTER-on-drift + idempotent
     per-scope delete+insert.  Reads (``fact_frame``/``exists``) and the
     E4 guard follow the sink; the parquet-layout maintenance surface
-    (``compact``/``upsert``/``expire_partitions``) stays parquet-only —
+    (``compact``/``upsert``) stays parquet-only —
     a database delegates layout to its own storage engine."""
 
     def __init__(
@@ -324,10 +321,10 @@ class SnapshotEngine:
 
     def _drop_ledger(self, fact_table: str) -> None:
         """Forget the fact's snapshotted scopes before a change other
-        than ``run``'s scope append (``write``, ``upsert``, ``compact``,
-        ``expire_partitions``); the next probe rebuilds the ledger from
-        the data.  A ``.pending`` marker is refused, not dropped: the
-        rebuild would read a crashed scope's partial rows as done."""
+        than ``run``'s scope append (``write``, ``upsert``, ``compact``);
+        the next probe rebuilds the ledger from the data.  A
+        ``.pending`` marker is refused, not dropped: the rebuild would
+        read a crashed scope's partial rows as done."""
         fs, ledger = self._ledger(fact_table)
         if not fs.exists(ledger):
             return
@@ -353,10 +350,9 @@ class SnapshotEngine:
         ``= NULL`` never matches).
 
         A fact with data but no ledger (written before the ledger
-        existed, or changed by ``write``/``upsert``/``compact``/
-        ``expire_partitions`` since) costs one scan that refills the
-        ledger; later probes read it.  With a JDBC sink, a
-        predicate-pushed remote probe.
+        existed, or changed by ``write``/``upsert``/``compact`` since)
+        costs one scan that refills the ledger; later probes read it.
+        With a JDBC sink, a predicate-pushed remote probe.
         """
         if self.jdbc_sink is not None:
             return self.jdbc_sink.already_executed(
@@ -502,46 +498,6 @@ class SnapshotEngine:
             out = df.repartition(*keys)
         out.write.mode("overwrite").partitionBy("year", "month").parquet(tmp)
         swap_in(self.spark, path, tmp, "compact")
-
-    def expire_partitions(
-        self, fact_table: str, before_year: int, before_month: int
-    ) -> list[str]:
-        """Retention TTL: drop every ``(year, month)`` partition
-        strictly OLDER than the given boundary — directory-level
-        deletes through the Hadoop FS (no data scan, no rewrite; the
-        whole point of partitioning by the retention dimension).
-        Returns the removed partition names.  A yearly fact's
-        partition has no month and expires only once its whole year is
-        older than ``before_year``.  Compliance deletions inside a
-        partition are a different operation (rewrite via ``upsert``);
-        this is the cheap calendar-based tier.
-        """
-        self._require_parquet("expire_partitions")
-        fs, partitions = self._partitions(fact_table)
-        removed = []
-        for ypath, months in partitions:
-            year = int(ypath.getName().split("=", 1)[1])
-            for mpath in months:
-                month = mpath.getName().split("=", 1)[1]
-                # a yearly fact's rows have no month (a NULL partition
-                # value): they expire with their whole year
-                if month == _NULL_PARTITION:
-                    expired = year < before_year
-                else:
-                    expired = (year, int(month)) < (before_year, before_month)
-                if expired:
-                    if not removed:
-                        # expired scopes must read as not executed, so
-                        # a re-backfill of the month re-snapshots it
-                        self._drop_ledger(fact_table)
-                    fs.delete(mpath, True)
-                    removed.append(f"{ypath.getName()}/{mpath.getName()}")
-            if not any(
-                st.getPath().getName().startswith("month=")
-                for st in fs.listStatus(ypath)
-            ):
-                fs.delete(ypath, True)
-        return sorted(removed)
 
     def vacuum(self) -> list[str]:
         """Remove stale maintenance staging left by a crashed

@@ -584,8 +584,8 @@ def test_memo_entries_never_exceed_the_lru_bound(spark, sf_dir):
 
 
 def test_memo_invalidation(spark, sf_dir, tmp_path):
-    """A lattice rewrite (materialize), fact re-registration
-    and clear_plan_cache() each retire the memoized response: the next
+    """A lattice rewrite (materialize) and fact re-registration each
+    retire the memoized response: the next
     request runs Spark again, and the request after it is answered
     from the fresh memo."""
     from opl_spark.rollups import RollupStore
@@ -604,7 +604,6 @@ def test_memo_invalidation(spark, sf_dir, tmp_path):
     changes = {
         "materialize": lambda: store.materialize(eng, "loans2", groupings),
         "register_fact": lambda: eng.register_fact("loans2", full),
-        "clear_plan_cache": api.clear_plan_cache,
     }
     for i, (name, change) in enumerate(changes.items()):
         version = store.lattice_version("loans2")

@@ -159,40 +159,6 @@ def test_vacuum_removes_stale_staging_but_keeps_crash_backup(registered, tmp_pat
     assert eng.vacuum() == []
 
 
-def test_expire_partitions_drops_only_older_months(registered, tmp_path):
-    spark = registered
-    eng = SnapshotEngine(spark, str(tmp_path))
-    rows = [
-        (1, 1997, 11), (2, 1997, 12), (3, 1998, 1), (4, 1998, 2),
-    ]
-    df = spark.createDataFrame(rows, "k long, year int, month int")
-    eng.write(df, "f_ttl")
-    removed = eng.expire_partitions("f_ttl", 1998, 1)
-    assert removed == ["year=1997/month=11", "year=1997/month=12"]
-    kept = sorted(
-        (r["year"], r["month"]) for r in eng.fact_frame("f_ttl").collect()
-    )
-    assert kept == [(1998, 1), (1998, 2)]
-    # idempotent; boundary month itself survives
-    assert eng.expire_partitions("f_ttl", 1998, 1) == []
-
-
-def test_expire_partitions_keeps_a_yearly_fact_until_its_year_is_over(
-    registered, tmp_path
-):
-    """A yearly fact's rows have no month, so they sit under Hive's
-    NULL partition directory; they expire with their whole year."""
-    eng = SnapshotEngine(registered, str(tmp_path))
-    sql = "SELECT r_regionkey AS k FROM region"
-    eng.run("1997-12-31", [FactQuery(1, "f_yearly", sql, cron="yearly")])
-    assert eng.expire_partitions("f_yearly", 1997, 12) == []
-    assert eng.fact_frame("f_yearly").count() == 5
-    assert eng.expire_partitions("f_yearly", 1998, 1) == [
-        "year=1997/month=__HIVE_DEFAULT_PARTITION__"
-    ]
-    assert not eng.exists("f_yearly")
-
-
 def test_table_stats_reports_partition_files_and_bytes(registered, tmp_path):
     from opl_spark.snapshot import table_stats
 

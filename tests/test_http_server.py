@@ -650,6 +650,19 @@ def test_stop_ends_a_worker_waiting_on_a_silent_client():
         assert not workers()
 
 
+def test_stop_after_a_request_returns_within_the_poll_interval():
+    """stop() right after a served request waits at most for one poll of
+    the serve loop, not socketserver's default 0.5 s."""
+    import time
+
+    srv = OlapHttpServer(_EchoApi()).start()
+    status, _, _ = _raw(srv.port, b"GET /olap/x HTTP/1.0\r\n\r\n")
+    assert status == "HTTP/1.0 200 OK"
+    t0 = time.monotonic()
+    srv.stop()
+    assert time.monotonic() - t0 < 0.2
+
+
 def test_stop_on_a_server_that_never_served_returns():
     """stop() without start() returns and releases the port."""
     srv = OlapHttpServer(_EchoApi())

@@ -9,7 +9,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from opl_spark.snapshot import LEDGER_DIR, FactQuery, SnapshotEngine, bind_date
+from opl_spark.snapshot import LEDGER_DIR, FactQuery, SnapshotEngine
 from opl_spark.sources import register_sources
 from opl_spark.timescope import gate
 
@@ -141,12 +141,11 @@ def test_fact_without_ledger_is_scanned_once(registered, tmp_path):
     assert frame("f_old").count() == 15
 
 
-@pytest.mark.parametrize("op", ["compact", "upsert", "write", "expire_partitions"])
+@pytest.mark.parametrize("op", ["compact", "upsert", "write"])
 def test_fact_changes_drop_the_ledger(registered, tmp_path, op):
     """Every change to a fact's files other than ``run``'s own append
     drops the ledger; the next run rebuilds it and still skips every
-    scope that holds rows.  After ``expire_partitions`` the expired
-    day's scope is gone, so its re-run writes its rows again."""
+    scope that holds rows."""
     spark = registered
     eng = SnapshotEngine(spark, str(tmp_path))
     fq = [FactQuery(1, "f_chg", REGION)]
@@ -158,19 +157,10 @@ def test_fact_changes_drop_the_ledger(registered, tmp_path, op):
     elif op == "upsert":
         patch = eng.fact_frame("f_chg").filter(F.col("day") == 181)
         eng.upsert(patch.withColumn("name", F.lower("name")), "f_chg", ["day", "k"])
-    elif op == "write":
+    else:
         eng.write(eng.fact_frame("f_chg").filter(F.col("day") == 182), "f_chg")
-    else:
-        assert eng.expire_partitions("f_chg", 1998, 7) == ["year=1998/month=6"]
     assert not _ledger(tmp_path, "f_chg").exists()
-    rerun = [eng.run(d, fq) for d in DAYS]
-    if op == "expire_partitions":
-        direct = spark.sql(bind_date(REGION, DAYS[0])).count()
-        assert rerun == [{"f_chg": direct}, {}]
-        stored = eng.fact_frame("f_chg").filter(F.col("day") == 181).count()
-        assert stored == direct
-    else:
-        assert rerun == [{}, {}]
+    assert [eng.run(d, fq) for d in DAYS] == [{}, {}]
     assert len(_markers(tmp_path, "f_chg")) == 2
 
 
