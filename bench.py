@@ -624,13 +624,15 @@ def _pcts(samples: list[float]) -> tuple[float, float]:
     """(p50, p95) in ms by the nearest-rank method: the k-th order
     statistic with k = ceil(p·n) — for n=100 that is s[49]/s[94],
     not s[50]/s[95] (int(p·n) indexes one rank too high; code review
-    r11 for p95, ADVICE r12 for the same off-by-one in p50)."""
+    r11 for p95, ADVICE r12 for the same off-by-one in p50).  Rounded
+    to the microsecond: a response-cache hit takes well under 0.1 ms,
+    so coarser rounding reads 0.0 on working code."""
     import math
 
     s = sorted(samples)
     p50 = s[max(0, math.ceil(0.5 * len(s)) - 1)]
     p95 = s[max(0, math.ceil(0.95 * len(s)) - 1)]
-    return (round(p50 * 1000, 1), round(p95 * 1000, 1))
+    return (round(p50 * 1000, 3), round(p95 * 1000, 3))
 
 
 def latency_main() -> None:

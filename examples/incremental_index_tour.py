@@ -20,10 +20,11 @@ Plus the operational details a real pipeline hits:
 3.  BOOTSTRAP: the first probe against a never-built store seeds the
     index (empty report) instead of crashing — batch 0 of a stream
     needs no separate build step.
-4.  REPLAY SAFETY: exclude_self=True makes a batch's own appended
-    signatures invisible to its probe, so an at-least-once replay
-    (crash between append and report write) reproduces the ORIGINAL
-    report instead of self-matching at sim/cos 1.0 — the mode any
+4.  REPLAY SAFETY: srp_dedup_incremental's exclude_self=True makes a
+    batch's own appended signatures invisible to its probe, so an
+    at-least-once replay (crash between append and report write)
+    reproduces the ORIGINAL report instead of self-matching at cos
+    1.0 — the mode any
     at-least-once caller (a foreachBatch sink, a retried job) should
     use.
 5.  CLI: the same lifecycle with zero Python —

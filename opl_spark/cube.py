@@ -140,13 +140,13 @@ class CubeQuery:
 class CubeEngine:
     """Compiles CubeQuery → DataFrame plan over a registered fact DF."""
 
-    def __init__(self, catalog, fact_frames: dict[str, DataFrame] | None = None):
+    def __init__(self, catalog):
         self.catalog = catalog
-        self._frames: dict[str, DataFrame] = dict(fact_frames or {})
+        self._frames: dict[str, DataFrame] = {}
         #: bumped on every (re-)registration — consumers caching results
         #: computed over a frame (OlapApi's response cache) key on
         #: this so a swapped frame invalidates them structurally
-        self._versions: dict[str, int] = {n: 1 for n in self._frames}
+        self._versions: dict[str, int] = {}
 
     def register_fact(self, name: str, df: DataFrame) -> None:
         self._frames[name] = df

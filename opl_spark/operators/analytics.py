@@ -390,9 +390,7 @@ def validate_contract(
     )
 
 
-def pareto_front_2d(
-    df: DataFrame, x_col: str, y_col: str, bucket_width: int = 100_000
-) -> DataFrame:
+def pareto_front_2d(df: DataFrame, x_col: str, y_col: str) -> DataFrame:
     """2-D skyline (Pareto front, maximizing both integer dimensions):
     the distinct ``(x, y)`` pairs not dominated by any pair that is >=
     in both dimensions and > in at least one.
@@ -408,6 +406,7 @@ def pareto_front_2d(
     """
     from pyspark.sql import Window
 
+    bucket_width = 100_000
     pts = (
         df.groupBy(F.col(x_col).alias("x"))
         .agg(F.max(F.col(y_col)).alias("y"))

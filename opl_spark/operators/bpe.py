@@ -118,7 +118,6 @@ def learn_bpe_merges(
     df: DataFrame,
     text_col: str,
     num_merges: int = 10,
-    max_vocab_words: int | None = 4_000_000,
 ) -> list[tuple[int, str, str, int]]:
     """Learn ``num_merges`` BPE merges over the corpus.  Returns
     ``[(rank, left, right, weighted_count), ...]`` — the merge table a
@@ -130,12 +129,13 @@ def learn_bpe_merges(
     sizes by keeping the most frequent types (freq-desc, word-asc —
     deterministic); rare singleton types cannot win a merge anyway
     until far beyond realistic ``num_merges``."""
-    vocab = _word_freqs(df, text_col)
-    if max_vocab_words is not None:
-        vocab = vocab.orderBy(F.col("freq").desc(), F.col("w")).limit(
-            max_vocab_words
-        )
-    rows = vocab.collect()
+    max_vocab_words = 4_000_000
+    rows = (
+        _word_freqs(df, text_col)
+        .orderBy(F.col("freq").desc(), F.col("w"))
+        .limit(max_vocab_words)
+        .collect()
+    )
     return _learn_merges_local(
         [(r["w"], int(r["freq"])) for r in rows], num_merges
     )

@@ -119,7 +119,7 @@ def widen_narrow_scan(
 # ---------------------------------------------------------------------------
 
 
-def bucket_pairs(buckets: DataFrame, docs_col: str = "ds") -> DataFrame:
+def bucket_pairs(buckets: DataFrame) -> DataFrame:
     """Per-key candidate-pair expansion: ``(…, ds sorted array<doc>)``
     → one row per unordered pair ``(id_a < id_b)`` within each key's
     bucket, all other columns dropped.
@@ -151,8 +151,9 @@ def bucket_pairs(buckets: DataFrame, docs_col: str = "ds") -> DataFrame:
     nested higher-order build of the full pair array — peak row width
     stays O(bucket), and both generators pipeline inside the same
     stage as the upstream aggregation."""
-    ds = F.col(docs_col)
-    return buckets.select(ds.alias("__ds"), F.posexplode(docs_col).alias("__i", "id_a")).select(
+    return buckets.select(
+        F.col("ds").alias("__ds"), F.posexplode("ds").alias("__i", "id_a")
+    ).select(
         "id_a",
         F.explode(
             F.slice(F.col("__ds"), F.col("__i") + F.lit(2), F.size("__ds"))
@@ -559,31 +560,16 @@ def minhash_bucket_stats(
     bands: int = 16,
     rows_per_band: int = 4,
     portable: bool = False,
-    sample: float | None = None,
 ) -> DataFrame:
     """The advisor's measured half: ONE distributed pass over the
-    (optionally sampled) signature frame returning per-band bucket
-    occupancy — ``(band, n_buckets, max_bucket, est_candidate_pairs)``
-    where est_candidate_pairs = Σ k·(k−1)/2 over that band's bucket
-    sizes, the exact pair fan-out :func:`bucket_pairs` would expand
-    (scaled by 1/sample² per bucket when sampling — collision counts
-    shrink quadratically under uniform doc sampling).  Read it next to
+    signature frame returning per-band bucket occupancy — ``(band,
+    n_buckets, max_bucket, est_candidate_pairs)`` where
+    est_candidate_pairs = Σ k·(k−1)/2 over that band's bucket sizes,
+    the exact pair fan-out :func:`bucket_pairs` would expand.  Read it next to
     :func:`lsh_banding_advise`'s S-curve: the curve says what recall a
     banding buys, this says what the candidate bill will be on YOUR
     corpus (boilerplate-heavy corpora blow up low-rows bandings long
     before the curve suggests)."""
-    if sample is not None:
-        sigs = sigs.sample(fraction=sample, seed=7)
-    # under uniform doc sampling, a bucket of true size k retains
-    # ~k·sample docs, so pair counts shrink by sample² and the widest
-    # bucket by sample — BOTH are rescaled to estimates of the true
-    # values (an unscaled sampled max_bucket would read as "under the
-    # hot-bucket cap" for buckets the full run drops).  n_buckets stays
-    # the RAW sampled count: small buckets vanish entirely under
-    # sampling, so no per-band rescale is unbiased — read it as a
-    # lower bound when sampling.
-    pair_scale = 1.0 if sample is None else 1.0 / (sample * sample)
-    max_scale = 1.0 if sample is None else 1.0 / sample
     band_structs = _band_structs_sql(bands, rows_per_band, portable)
     return (
         sigs.select("doc", F.expr(f"explode(array({band_structs}))").alias("bk"))
@@ -592,10 +578,10 @@ def minhash_bucket_stats(
         .groupBy(F.col("band"))
         .agg(
             F.count(F.lit(1)).alias("n_buckets"),
-            (F.max("k") * F.lit(max_scale)).cast("long").alias("max_bucket"),
-            F.round(
-                F.sum(F.col("k") * (F.col("k") - 1) / 2) * F.lit(pair_scale), 1
-            ).alias("est_candidate_pairs"),
+            F.max("k").alias("max_bucket"),
+            F.round(F.sum(F.col("k") * (F.col("k") - 1) / 2), 1).alias(
+                "est_candidate_pairs"
+            ),
         )
         .orderBy("band")
     )
@@ -724,12 +710,7 @@ def minhash_dedup_pairs(
     text_col: str,
     id_col: str,
     threshold: float = 0.5,
-    num_hashes: int = 64,
-    bands: int = 16,
-    n: int = 3,
-    max_bucket: int | None = 1000,
     portable: bool = False,
-    checkpoint: bool = True,
     band_skip: bool = False,
 ) -> DataFrame:
     """LSH candidates verified with exact Jaccard on the shingle sets
@@ -760,17 +741,19 @@ def minhash_dedup_pairs(
     approximation.  Pair-SET equality with the full verify is pinned
     by ``test_minhash_band_skip_same_pair_set``.
 
-    Resource note: ``checkpoint=True`` (default) lazily
-    ``localCheckpoint``s the hashed-shingle frame so the verify join's
-    two aliases compute it once instead of twice.  The checkpointed
+    Signatures are ``num_hashes`` = 64 minhashes of word 3-grams,
+    banded 16 × 4, with a hot-bucket cap of 1000 docs.
+
+    Resource note: the hashed-shingle frame is lazily
+    ``localCheckpoint``ed so the verify join's two aliases compute it
+    once instead of twice.  The checkpointed
     blocks are corpus-sized and stay pinned until BOTH the Python
     DataFrame objects are garbage-collected AND the JVM GC runs
     (Spark's ContextCleaner frees checkpoint blocks on RDD
     finalization) — a long-lived session calling this repeatedly will
     accumulate them between GC cycles (see BENCH_NOTES.md for the
-    measured effect and bench.py for the explicit-GC mitigation).
-    Pass ``checkpoint=False`` to trade one extra text-scan pass for
-    zero retained blocks."""
+    measured effect and bench.py for the explicit-GC mitigation)."""
+    num_hashes, bands, n, max_bucket = 64, 16, 3, 1000
     rows = num_hashes // bands
     sigs = minhash_signatures(df, text_col, id_col, num_hashes, n, portable)
     if band_skip:
@@ -780,8 +763,7 @@ def minhash_dedup_pairs(
         # one lazy checkpoint on the (pair, n_bands) stream: the pair
         # output and the needed-doc semi-join both read it — without
         # it the whole signature pipeline would re-plan twice
-        if checkpoint:
-            cand = cand.localCheckpoint(eager=False)
+        cand = cand.localCheckpoint(eager=False)
         need = cand.filter(F.col("n_bands") < bands)
         need_docs = need.select(F.col("id_a").alias("__nd")).unionByName(
             need.select(F.col("id_b").alias("__nd"))
@@ -806,8 +788,7 @@ def minhash_dedup_pairs(
                 shingles_col(F.col(text_col), n), lambda s: F.xxhash64(s)
             ).alias("sh"),
         )
-        if checkpoint:
-            sh = sh.localCheckpoint(eager=False)  # need-docs-sized, read twice
+        sh = sh.localCheckpoint(eager=False)  # need-docs-sized, read twice
         a = sh.select(F.col("doc").alias("id_a"), F.col("sh").alias("sh_a"))
         b = sh.select(F.col("doc").alias("id_b"), F.col("sh").alias("sh_b"))
         inter = F.array_size(F.array_intersect("sh_a", "sh_b"))
@@ -842,9 +823,7 @@ def minhash_dedup_pairs(
     # persist is corpus-sized (doc id + hashed shingle array, spilling
     # to local disk), bought back by skipping a full second pass over
     # the text; retention contract in the docstring above
-    )
-    if checkpoint:
-        sh = sh.localCheckpoint(eager=False)
+    ).localCheckpoint(eager=False)
     a = sh.select(F.col("doc").alias("id_a"), F.col("sh").alias("sh_a"))
     b = sh.select(F.col("doc").alias("id_b"), F.col("sh").alias("sh_b"))
     inter = F.array_size(F.array_intersect("sh_a", "sh_b"))
@@ -858,7 +837,7 @@ def minhash_dedup_pairs(
     )
 
 
-def dedup_clusters(pairs: DataFrame, max_iter: int = 20) -> DataFrame:
+def dedup_clusters(pairs: DataFrame) -> DataFrame:
     """Resolve near-dup pairs into clusters: every document maps to its
     connected component's minimum id (the canonical keeper) —
     ``(doc, keeper)``, one row per document that appears in any
@@ -899,6 +878,7 @@ def dedup_clusters(pairs: DataFrame, max_iter: int = 20) -> DataFrame:
         .withColumn("label", F.col("node"))
         .localCheckpoint(eager=False)
     )
+    max_iter = 20
     for _ in range(max_iter):
         neighbor_min = (
             edges.join(labels, edges.dst == labels.node)
@@ -988,10 +968,12 @@ def simhash(
     return ex.groupBy("doc").agg(F.expr(packed).alias("simhash"))
 
 
-def simhash_candidates(sim: DataFrame, chunks: int = 4) -> DataFrame:
-    """Near-dup candidates by the pigeonhole principle: hamming ≤
-    chunks-1 guarantees at least one equal 16-bit chunk — join on chunk
+def simhash_candidates(sim: DataFrame) -> DataFrame:
+    """Near-dup candidates by the pigeonhole principle: the 64-bit
+    simhash splits into ``chunks`` = 4 chunks of 16 bits, and hamming
+    ≤ chunks-1 guarantees at least one equal chunk — join on chunk
     equality, then exact hamming via ``bit_count(xor)``."""
+    chunks = 4
     chunked = sim.select(
         "doc",
         "simhash",
@@ -1095,12 +1077,11 @@ def bloom_contamination(
     text_col: str,
     id_col: str,
     n: int = 5,
-    m_bits: int = 1 << 16,
-    k: int = 5,
 ) -> DataFrame:
     """`contamination` for a benchmark set too large to broadcast as
     raw shingles: the corpus shingle stream is pre-filtered through a
-    constant-size Bloom filter of the bench shingles, and only the
+    constant-size Bloom filter of the bench shingles (``m_bits`` = 2¹⁶
+    bits, ``k`` = 5 hashes), and only the
     survivors (true overlaps + the filter's ~1e-5 false-positive tail)
     reach the exact join.  The join then discards false positives, so
     the OUTPUT IS EXACT — identical to `contamination` — while the
@@ -1116,6 +1097,7 @@ def bloom_contamination(
     """
     # ONE corpus scan with the shingle count carried through the probe
     # (see _shingles_with_size for the plan-shape rationale, r13)
+    m_bits, k = 1 << 16, 5
     c_sh = _shingles_with_size(corpus, text_col, id_col, n)
     b_sh = bench.select(
         F.col(id_col).alias("bdoc"),
@@ -1229,7 +1211,6 @@ def source_overlap(
     text_col: str,
     group_col: str,
     n: int = 3,
-    max_group_freq: int | None = None,
 ) -> DataFrame:
     """Cross-source contamination matrix: exact shingle-set Jaccard
     between every pair of sources — the corpus-composition diagnostic
@@ -1240,11 +1221,7 @@ def source_overlap(
     per-source set sizes, then shingle-keyed grouped-bucket pair
     expansion (:func:`bucket_pairs`) whose fan-out is bounded by
     sources-per-shingle², NOT docs² — the output is the
-    source×source triangle.  ``max_group_freq`` drops shingles present
-    in more than that many sources (the stop-shingle guard for corpora
-    with thousands of sources, mirroring ``ngram_jaccard_pairs``'s
-    ``max_doc_freq``); a shingle in (nearly) every source contributes
-    ~uniformly to every cell anyway.
+    source×source triangle.
     """
     # postings shuffle as 8-byte shingle hashes, not strings (the
     # ngram_jaccard_pairs convention; collision odds ~|S|²/2⁶⁴ ≈ 0)
@@ -1256,20 +1233,14 @@ def source_overlap(
         .select("src", F.xxhash64("s").alias("sh"))
         .distinct()
     )
-    # grouped-bucket index (see bucket_pairs): the stop-shingle guard
-    # becomes a bucket-size filter, and sizes are derived from the
-    # SURVIVING buckets — intersection and set sizes must describe the
-    # same (filtered) shingle sets or the Jaccard is the ratio of two
-    # different universes (the same documented approximation as
-    # ngram_jaccard_pairs' max_doc_freq)
-    buckets = sh.groupBy("sh").agg(
-        F.sort_array(F.collect_list("src")).alias("ds")
+    # grouped-bucket index (see bucket_pairs); two consumers (sizes +
+    # pair expansion): materialize it once instead of re-shingling the
+    # corpus per branch (r13)
+    buckets = (
+        sh.groupBy("sh")
+        .agg(F.sort_array(F.collect_list("src")).alias("ds"))
+        .localCheckpoint(eager=False)
     )
-    if max_group_freq is not None:
-        buckets = buckets.filter(F.size("ds") <= max_group_freq)
-    # two consumers (sizes + pair expansion): materialize the bucket
-    # index once instead of re-shingling the corpus per branch (r13)
-    buckets = buckets.localCheckpoint(eager=False)
     sizes = (
         buckets.select(F.explode("ds").alias("src"))
         .groupBy("src")
@@ -1367,9 +1338,7 @@ def _symspell_keyed(df: DataFrame, str_col: str) -> DataFrame:
     ).select("w", F.col("p.pos").alias("pos"), F.xxhash64("p.k").alias("k"))
 
 
-def fuzzy_pairs(
-    df: DataFrame, str_col: str, max_dist: int = 1
-) -> DataFrame:
+def fuzzy_pairs(df: DataFrame, str_col: str) -> DataFrame:
     """All DISTINCT value pairs within Levenshtein distance 1, via
     symmetric-delete blocking (the SymSpell candidate scheme): every
     value emits itself plus each single-character deletion as a
@@ -1393,11 +1362,9 @@ def fuzzy_pairs(
 
     Keys cross the shuffle as 8-byte xxhash64 longs (collision odds
     ~keys²/2⁶⁴ ≈ 0, same convention as the shingle index).  Emits
-    ``(a, b)`` with ``a < b``.  Only ``max_dist=1`` is supported —
+    ``(a, b)`` with ``a < b``.  Only distance 1 is supported —
     deeper neighborhoods need recursive deletes, which grow the key
     set combinatorially (SymSpell's documented trade)."""
-    if max_dist != 1:
-        raise ValueError("fuzzy_pairs: only max_dist=1 is supported")
     keyed = _symspell_keyed(df, str_col)
     # grouped-bucket pair expansion on the delete-key (see
     # bucket_pairs): sort by (w, pos) so expansion yields w_a <= w_b;
@@ -1427,13 +1394,11 @@ def setsim_join(
     text_col: str,
     id_col: str,
     threshold: float = 0.5,
-    n: int = 3,
-    max_bucket: int | None = None,
 ) -> DataFrame:
     """Exact set-similarity self-join — all unordered doc pairs whose
-    DISTINCT word ``n``-gram shingle sets have Jaccard ≥ ``threshold``
-    — via PREFIX FILTERING (Chaudhuri et al., ICDE 2006; PPJoin, Xiao
-    et al., WWW 2008): ``(id_a, id_b, jaccard)``.
+    DISTINCT word ``n``-gram (``n`` = 3) shingle sets have Jaccard ≥
+    ``threshold`` — via PREFIX FILTERING (Chaudhuri et al., ICDE 2006;
+    PPJoin, Xiao et al., WWW 2008): ``(id_a, id_b, jaccard)``.
 
     Where the full inverted index (:func:`ngram_jaccard_pairs`)
     generates a candidate from EVERY shared shingle, prefix filtering
@@ -1447,11 +1412,9 @@ def setsim_join(
     the corpus's rare tail instead of its boilerplate, so the
     O(bucket²) pair expansion concentrates where buckets are
     naturally tiny, WITHOUT the ``max_doc_freq`` recall trade the
-    capped full index makes; ``max_bucket`` stays available as a
-    belt-and-braces cap but is not load-bearing.  (Set elements must
-    come from a large sparse vocabulary for the frequency skew to
-    exist — shingles, not raw words; ``n=1`` degenerates exactly the
-    way a stop-word-only corpus would.)
+    capped full index makes.  (Set elements must come from a large
+    sparse vocabulary for the frequency skew to exist — shingles, not
+    raw words.)
 
     Execution shape: shingles hash to 8-byte longs at the source (the
     output is ORDER-INDEPENDENT — any common total order yields the
@@ -1466,6 +1429,7 @@ def setsim_join(
     as the MinHash verify)."""
     from pyspark.sql import Window
 
+    n = 3
     tok = widen_narrow_scan(df).select(
         F.col(id_col).alias("doc"),
         F.transform(
@@ -1506,8 +1470,6 @@ def setsim_join(
             F.collect_list(F.struct("doc", (F.col("pos") + 1).alias("pos"), "sz"))
         ).alias("ds")
     )
-    if max_bucket is not None:
-        buckets = buckets.filter(F.size("ds") <= max_bucket)
     t = float(threshold)
     pa, pb = F.col("id_a"), F.col("id_b")
     # PPJoin candidate filters, applied BEFORE the distinct and the
@@ -1550,7 +1512,7 @@ def setsim_join(
     )
 
 
-def fuzzy_link_edges(df: DataFrame, str_col: str, max_dist: int = 1) -> DataFrame:
+def fuzzy_link_edges(df: DataFrame, str_col: str) -> DataFrame:
     """Connectivity-preserving SymSpell linkage edges: a SUBSET of
     :func:`fuzzy_pairs` with identical connected components but
     O(bucket) edges per delete-key bucket instead of O(bucket²) — the
@@ -1578,8 +1540,6 @@ def fuzzy_link_edges(df: DataFrame, str_col: str, max_dist: int = 1) -> DataFram
     map-side HOF over the already-grouped array (the same single
     exchange fuzzy_pairs pays).  Measured at sf0.1 on the customer
     linkage graph: 262.5k pairs → 58.5k edges."""
-    if max_dist != 1:
-        raise ValueError("fuzzy_link_edges: only max_dist=1 is supported")
     keyed = _symspell_keyed(df, str_col)
     buckets = (
         keyed.groupBy("k")
@@ -1688,7 +1648,7 @@ def mask_repeated_spans(
     )
 
 
-def dedup_clusters_star(pairs: DataFrame, max_iter: int = 30) -> DataFrame:
+def dedup_clusters_star(pairs: DataFrame) -> DataFrame:
     """Connected components by alternating large-star / small-star
     rounds (Kiveris et al. 2014, "Connected Components in MapReduce
     and Beyond") — same ``(doc, keeper)`` contract as
@@ -1796,8 +1756,7 @@ def dedup_clusters_star(pairs: DataFrame, max_iter: int = 30) -> DataFrame:
         out = nb.withColumn("m", F.least(F.min("v").over(_w_u), F.col("u")))
         return out.withColumn("mx", F.max("v").over(_w_u)) if mx else out
 
-    if max_iter < 1:
-        raise ValueError("dedup_clusters_star: max_iter must be >= 1")
+    max_iter = 30
     edges = undirected.select(F.col("lo").alias("a"), F.col("hi").alias("b"))
     nb = None
     for _r in range(max_iter):
@@ -2029,6 +1988,10 @@ def sentence_dedup(
 #: only the partitions its own band keys hash into.
 STORE_BUCKET_SHARDS = 8
 
+#: The store's banding (bands × rows per band), shared by the build and
+#: every probe so their band keys agree.
+STORE_BANDS, STORE_ROWS_PER_BAND = 16, 4
+
 
 def _banded_sigs(
     sigs: DataFrame, bands: int, rows_per_band: int
@@ -2067,8 +2030,6 @@ def build_signature_store(
     text_col: str,
     id_col: str,
     store_path: str,
-    bands: int = 16,
-    rows_per_band: int = 4,
 ) -> None:
     """Materialize the corpus's banded MinHash signatures as the
     persistent NEAR-dup index: parquet partitioned by
@@ -2080,6 +2041,7 @@ def build_signature_store(
     signature matrix, NOT the text; at 100 TB of text the store is
     ~3 orders smaller and is the only thing history ever re-reads.
     """
+    bands, rows_per_band = STORE_BANDS, STORE_ROWS_PER_BAND
     sigs = minhash_signatures(df, text_col, id_col, bands * rows_per_band)
     _banded_sigs(sigs, bands, rows_per_band).write.partitionBy(
         "band", "bucket_shard"
@@ -2092,26 +2054,17 @@ def near_dedup_incremental(
     new_batch: DataFrame,
     text_col: str,
     id_col: str,
-    bands: int = 16,
-    rows_per_band: int = 4,
     threshold: float = 0.5,
-    append: bool = True,
-    exclude_self: bool = False,
 ) -> DataFrame:
     """Probe a new ingest batch against the persisted signature store:
     emits ``(doc, dup_of, sim)`` for every new document whose MinHash
     similarity to some stored document reaches ``threshold`` (sim =
     fraction of agreeing minhashes, the unbiased Jaccard estimate).
 
-    ``exclude_self=True`` makes the batch's own ids invisible to the
-    probe (the replay-safe mode of the SRP twin,
-    ``similarity.py:srp_dedup_incremental`` — an at-least-once replay
-    then reproduces its original report instead of self-matching at
-    sim 1.0); the interactive default stays False so a deliberate
-    second probe self-detects.  A missing store (fresh pipeline,
+    The batch's own ids stay visible to the probe, so a second probe
+    of the same batch self-detects.  A missing store (fresh pipeline,
     :func:`build_signature_store` never run) bootstraps: the batch's
-    signatures become the store's first rows (when ``append``) and
-    the report is empty.
+    signatures become the store's first rows and the report is empty.
 
     Scale shape: the batch's banded keys join the store on
     ``(band, bucket_shard, band_key)`` — the partition columns lead,
@@ -2129,6 +2082,7 @@ def near_dedup_incremental(
     from pyspark.errors import AnalysisException
     from pyspark.sql.types import DoubleType, StructField, StructType
 
+    bands, rows_per_band = STORE_BANDS, STORE_ROWS_PER_BAND
     n_hashes = bands * rows_per_band
     sigs = minhash_signatures(new_batch, text_col, id_col, n_hashes)
     banded = _banded_sigs(sigs, bands, rows_per_band).localCheckpoint(eager=True)
@@ -2136,10 +2090,9 @@ def near_dedup_incremental(
         store_raw = open_parquet(spark, store_path)
     except AnalysisException:
         # bootstrap: no index yet — seed it with this batch, report nothing
-        if append:
-            banded.write.partitionBy("band", "bucket_shard").mode(
-                "append"
-            ).parquet(store_path)
+        banded.write.partitionBy("band", "bucket_shard").mode("append").parquet(
+            store_path
+        )
         id_type = banded.schema["doc"].dataType
         return spark.createDataFrame(
             [],
@@ -2168,12 +2121,6 @@ def near_dedup_incremental(
     cand = banded.join(store, ["band", "bucket_shard", "band_key"]).select(
         "doc", "old_doc", "sig", "old_sig"
     )
-    if exclude_self:
-        cand = cand.join(
-            F.broadcast(banded.select(F.col("doc").alias("old_doc")).distinct()),
-            "old_doc",
-            "left_anti",
-        )
     agree = F.aggregate(
         F.zip_with("sig", "old_sig", lambda a, b: (a == b).cast("int")),
         F.lit(0),
@@ -2189,10 +2136,9 @@ def near_dedup_incremental(
         .select("doc", (-F.col("b.no")).alias("dup_of"), F.col("b.sim").alias("sim"))
     )
     dups = dups.localCheckpoint(eager=True)  # pin before the store mutates
-    if append:
-        banded.write.partitionBy("band", "bucket_shard").mode("append").parquet(
-            store_path
-        )
+    banded.write.partitionBy("band", "bucket_shard").mode("append").parquet(
+        store_path
+    )
     return dups
 
 
@@ -2201,96 +2147,58 @@ def containment_pairs(
     text_col: str,
     id_col: str,
     n: int = 3,
-    threshold_num: int = 4,
-    threshold_den: int = 5,
-    max_doc_freq: int | None = None,
 ) -> DataFrame:
     """Asymmetric shingle CONTAINMENT pairs: directed (a → b) with
-    ``|A∩B| / |A| ≥ threshold`` — the quote/subset detector Jaccard
-    misses (a short doc wholly embedded in a long one scores near-zero
-    Jaccard but containment 1.0).  Broder's resemblance-vs-containment
-    distinction (SEQUENCES '97).
+    ``|A∩B| / |A| ≥ threshold`` (4/5) — the quote/subset detector
+    Jaccard misses (a short doc wholly embedded in a long one scores
+    near-zero Jaccard but containment 1.0).  Broder's
+    resemblance-vs-containment distinction (SEQUENCES '97).
 
     Same inverted-index scale shape as :func:`ngram_jaccard_pairs`
-    (8-byte shingle-hash index keys, optional ``max_doc_freq``
-    stop-shingle cap bounding per-key fan-out), but containment is
-    directional, so the intersection count — computed ONCE per
-    unordered pair via grouped-bucket expansion (:func:`bucket_pairs`)
-    — is mirrored into both orientations after the pair aggregation
-    (half the pair-stream shuffle of the old a ≠ b self-join).  The
-    threshold test is integer cross-multiplied (``inter · den ≥ |A| ·
-    num``) so boundary pairs can't flip across engines; the reported
-    score is round(6) from exact counts.
+    (8-byte shingle-hash index keys), but containment is directional,
+    so the intersection count — computed ONCE per unordered pair via
+    grouped-bucket expansion (:func:`bucket_pairs`) — is mirrored into
+    both orientations after the pair aggregation (half the pair-stream
+    shuffle of the old a ≠ b self-join).  The threshold test is
+    integer cross-multiplied (``inter · den ≥ |A| · num``) so boundary
+    pairs can't flip across engines; the reported score is round(6)
+    from exact counts.
 
     Emits ``(id_a, id_b, containment)`` = fraction of A's shingles
     also in B.
     """
-    buckets, sizes = _shingle_buckets(df, text_col, id_col, n, max_doc_freq)
-    if sizes is None:
-        # sizes ride the postings (see _shingle_buckets): the mirror
-        # explode carries the NEW a-side's size, so the threshold test
-        # and score are map-side — no sizes join, no second corpus scan
-        und = (
-            bucket_pairs(buckets)
-            .groupBy(
-                F.col("id_a.doc").alias("id_a"),
-                F.col("id_a.n_sh").alias("na"),
-                F.col("id_b.doc").alias("id_b"),
-                F.col("id_b.n_sh").alias("nb"),
-            )
-            .agg(F.count(F.lit(1)).alias("inter"))
-        )
-        inter = und.select(
-            F.explode(
-                F.array(
-                    F.struct("id_a", "id_b", "inter", "na"),
-                    F.struct(
-                        F.col("id_b").alias("id_a"),
-                        F.col("id_a").alias("id_b"),
-                        F.col("inter"),
-                        F.col("nb").alias("na"),
-                    ),
-                )
-            ).alias("p")
-        ).select("p.id_a", "p.id_b", "p.inter", "p.na")
-        return (
-            inter.filter(
-                F.col("inter") * threshold_den >= F.col("na") * threshold_num
-            )
-            .select(
-                "id_a",
-                "id_b",
-                F.round(F.col("inter").cast("double") / F.col("na"), 6).alias(
-                    "containment"
-                ),
-            )
-        )
+    threshold_num, threshold_den = 4, 5
+    buckets, _ = _shingle_buckets(df, text_col, id_col, n, None)
+    # sizes ride the postings (see _shingle_buckets): the mirror
+    # explode carries the NEW a-side's size, so the threshold test
+    # and score are map-side — no sizes join, no second corpus scan
     und = (
         bucket_pairs(buckets)
-        .groupBy("id_a", "id_b")
+        .groupBy(
+            F.col("id_a.doc").alias("id_a"),
+            F.col("id_a.n_sh").alias("na"),
+            F.col("id_b.doc").alias("id_b"),
+            F.col("id_b.n_sh").alias("nb"),
+        )
         .agg(F.count(F.lit(1)).alias("inter"))
     )
     inter = und.select(
         F.explode(
             F.array(
-                F.struct("id_a", "id_b", "inter"),
+                F.struct("id_a", "id_b", "inter", "na"),
                 F.struct(
                     F.col("id_b").alias("id_a"),
                     F.col("id_a").alias("id_b"),
                     F.col("inter"),
+                    F.col("nb").alias("na"),
                 ),
             )
         ).alias("p")
-    ).select("p.id_a", "p.id_b", "p.inter")
-    sa = sizes.select(F.col("doc").alias("id_a"), F.col("n_sh").alias("na"))
-    return (
-        inter.join(sa, "id_a")
-        .filter(F.col("inter") * threshold_den >= F.col("na") * threshold_num)
-        .select(
-            "id_a",
-            "id_b",
-            F.round(F.col("inter").cast("double") / F.col("na"), 6).alias(
-                "containment"
-            ),
-        )
+    ).select("p.id_a", "p.id_b", "p.inter", "p.na")
+    return inter.filter(
+        F.col("inter") * threshold_den >= F.col("na") * threshold_num
+    ).select(
+        "id_a",
+        "id_b",
+        F.round(F.col("inter").cast("double") / F.col("na"), 6).alias("containment"),
     )

@@ -33,12 +33,12 @@ def roc_auc_binned(
     df: DataFrame,
     score_col: Column,
     label_col: Column,
-    scale: float = 1_000_000.0,
 ) -> DataFrame:
     """ROC-AUC of ``score_col`` against binary ``label_col`` via the
     histogram-binned Mann-Whitney U statistic.
 
-    Scores are quantized to ``floor(s·scale + 0.5)`` integer bins, the
+    Scores are quantized to ``floor(s·scale + 0.5)`` integer bins
+    (``scale`` = 10⁶), the
     bin table (bounded by the score range × scale, NOT the row count)
     gets one cumulative pass, and
 
@@ -51,6 +51,7 @@ def roc_auc_binned(
     BIN SUMMARY, not the fact stream.  Emits one row
     ``(n_pos, n_neg, auc)``.
     """
+    scale = 1_000_000.0
     bins = (
         df.select(
             F.floor(score_col.cast("double") * F.lit(scale) + F.lit(0.5))
@@ -681,9 +682,6 @@ def label_noise(
     vec_col: str,
     id_col: str,
     label_col: str,
-    n_queries: int = 100,
-    k: int = 5,
-    min_disagree: int = 4,
 ) -> DataFrame:
     """Neighborhood-vote mislabel screen (the confident-learning
     heuristic): a vector whose ``k`` nearest neighbors mostly carry a
@@ -693,12 +691,13 @@ def label_noise(
     other).
 
     Same scale machinery as the retrieval metrics: knn_join shortlists
-    for the ``n_queries`` lowest ids, per-query k-sized windows, all
-    integer counts.  Emits ``(vec_id, label, n_disagree)`` for
-    candidates with ≥ ``min_disagree`` disagreeing neighbors.
+    for the ``n_queries`` (100) lowest ids, per-query ``k``-sized (5)
+    windows, all integer counts.  Emits ``(vec_id, label, n_disagree)``
+    for candidates with ≥ ``min_disagree`` (4) disagreeing neighbors.
     """
     from opl_spark.operators.similarity import knn_join
 
+    n_queries, k, min_disagree = 100, 5, 4
     qrows = (
         df.select(F.col(id_col), F.col(vec_col), F.col(label_col))
         .orderBy(id_col)

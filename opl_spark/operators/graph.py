@@ -31,9 +31,7 @@ from pyspark.sql import functions as F
 PR_SCALE = 1_000_000_000_000
 
 
-def both_directions(
-    edges: DataFrame, src: str = "src", dst: str = "dst"
-) -> DataFrame:
+def both_directions(edges: DataFrame) -> DataFrame:
     """Both orientations of every edge in ONE pass over the input —
     ``explode(array(struct(s,d), struct(d,s)))``, the same multiset a
     ``union`` of the frame with its swapped self emits, but planned as
@@ -44,8 +42,8 @@ def both_directions(
     return edges.select(
         F.explode(
             F.array(
-                F.struct(F.col(src).alias("src"), F.col(dst).alias("dst")),
-                F.struct(F.col(dst).alias("src"), F.col(src).alias("dst")),
+                F.struct(F.col("src"), F.col("dst")),
+                F.struct(F.col("dst").alias("src"), F.col("src").alias("dst")),
             )
         ).alias("__e")
     ).select("__e.src", "__e.dst")
@@ -88,7 +86,6 @@ def bucketize_edges(
 def pagerank(
     edges: DataFrame,
     iterations: int = 3,
-    damping_pct: int = 85,
     checkpoint: bool = True,
 ) -> DataFrame:
     """Fixed-iteration PageRank over an undirected edge list
@@ -113,6 +110,7 @@ def pagerank(
     deg = e.groupBy(F.col("src").alias("node")).agg(
         F.count(F.lit(1)).alias("deg")
     )
+    damping_pct = 85
     base = int(round((100 - damping_pct) / 100 * PR_SCALE))
     pr = deg.select("node", "deg", F.lit(PR_SCALE).alias("pr"))
     for _ in range(iterations):
@@ -161,7 +159,7 @@ def kcore_prune(edges: DataFrame, k: int, rounds: int) -> DataFrame:
     )
 
 
-def kcore(edges: DataFrame, k: int, max_iter: int = 50) -> DataFrame:
+def kcore(edges: DataFrame, k: int) -> DataFrame:
     """k-core to convergence: repeat :func:`kcore_prune` rounds until
     no node falls below ``k`` (every survivor then has degree >= k in
     the surviving subgraph — the classical k-core).  Driver state per
@@ -169,6 +167,7 @@ def kcore(edges: DataFrame, k: int, max_iter: int = 50) -> DataFrame:
     truncated each round so the DAG stays flat over long prune chains.
     """
     e = edges.select("src", "dst").localCheckpoint(eager=False)
+    max_iter = 50
     for _ in range(max_iter):
         deg = e.groupBy(F.col("src").alias("node")).agg(
             F.count(F.lit(1)).alias("deg")
@@ -189,8 +188,6 @@ def kcore(edges: DataFrame, k: int, max_iter: int = 50) -> DataFrame:
 def label_propagation(
     edges: DataFrame,
     rounds: int = 3,
-    src: str = "src",
-    dst: str = "dst",
     checkpoint: bool = True,
 ) -> DataFrame:
     """Deterministic synchronous label propagation (Raghavan et al.,
@@ -201,7 +198,7 @@ def label_propagation(
     engine, every partitioning, every run, which is what lets a SQL
     oracle unroll the identical rounds.
 
-    Expects a symmetric edge list.  Per round the plan is one
+    Expects a symmetric ``src``/``dst`` edge list.  Per round the plan is one
     edge⋈label hash join + one (node, label) count + one struct-max
     per node — all shuffling on the node key, so a bucketed edge list
     co-locates every round (same shape as :func:`pagerank`).  Label
@@ -218,7 +215,7 @@ def label_propagation(
     that keeps the per-round edge side exchange-free (same contract as
     :func:`pagerank`).
     """
-    e = edges.select(F.col(src).alias("s"), F.col(dst).alias("d"))
+    e = edges.select(F.col("src").alias("s"), F.col("dst").alias("d"))
     if checkpoint:
         e = e.localCheckpoint(eager=False)
     labels = e.select(F.col("s").alias("node")).distinct().withColumn(

@@ -35,7 +35,7 @@ def zorder_key(cols: list[Column], bits: int = 8) -> Column:
 
 
 def zorder_rank_quantize(
-    df: DataFrame, cols: list[str], bits: int = 8, rel_err: float = 0.001
+    df: DataFrame, cols: list[str], bits: int = 8
 ) -> tuple[DataFrame, list[str]]:
     """Equi-depth quantization of each cluster column to the
     ``bits``-wide domain ``0..2^bits-1`` — the range-quantize step
@@ -46,7 +46,8 @@ def zorder_rank_quantize(
     byte is effectively random, so interleaving raw values yields
     near-zero row-group min/max pruning.  This helper maps each value
     to its rank bucket first: ONE ``approxQuantile`` pass over all
-    columns (sampled, driver-bounded: 2^bits−1 cutpoints per column)
+    columns (sampled at relative error 0.001, driver-bounded: 2^bits−1
+    cutpoints per column)
     and then a codegen'd higher-order fold that counts cutpoints ≤
     value — equivalent to a 2^bits-bucket percent_rank WITHOUT the
     single-partition global window an exact rank would need.
@@ -58,6 +59,7 @@ def zorder_rank_quantize(
     """
     nq = (1 << bits) - 1
     qs = [i / float(1 << bits) for i in range(1, 1 << bits)]
+    rel_err = 0.001
     cuts = df.stat.approxQuantile(cols, qs, rel_err)
     names: list[str] = []
 

@@ -71,11 +71,11 @@ def with_media_column(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     )
 
 
-def media_metadata(df: DataFrame, media_col: str = "media") -> DataFrame:
+def media_metadata(df: DataFrame) -> DataFrame:
     """Cheap metadata pass — byte length + content hash — as built-in
     expressions (no Python): the dedup/bookkeeping columns every media
     pipeline wants before any decode."""
-    m = F.col(media_col)
+    m = F.col("media")
     return df.select(
         m["media_id"].alias("media_id"),
         m["mime"].alias("mime"),
@@ -252,9 +252,7 @@ def synthetic_bmp_media(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     )
 
 
-def decode_images(
-    df: DataFrame, media_col: str = "media", codec: str = "fake"
-) -> DataFrame:
+def decode_images(df: DataFrame, codec: str = "fake") -> DataFrame:
     """Decode / feature-extract stage over Arrow batches.
 
     ``codec="real"`` decodes through Pillow (optional import; raises
@@ -273,9 +271,9 @@ def decode_images(
                 "this environment; use codec='fake' for the plumbing path "
                 "or codec='bmp' for the dependency-free real decode"
             ) from exc
-        return _decode_images_real(df, media_col)
+        return _decode_images_real(df)
     if codec == "bmp":
-        return _decode_images_bmp(df, media_col)
+        return _decode_images_bmp(df)
     if codec != "fake":
         raise ValueError(f"unknown codec {codec!r}")
 
@@ -298,7 +296,7 @@ def decode_images(
             return width, height, [round(f / total, 6) for f in feat]
 
         for pdf in it:
-            media = pdf[media_col]
+            media = pdf["media"]
             rows = []
             for rec in media:
                 by = bytes(rec["media_bytes"])
@@ -318,7 +316,7 @@ def decode_images(
     return df.mapInPandas(batches, schema=DECODED_SCHEMA)
 
 
-def _decode_images_real(df: DataFrame, media_col: str) -> DataFrame:
+def _decode_images_real(df: DataFrame) -> DataFrame:
     """Pillow decode over the same mapInPandas plan as the stub codec:
     real (width, height) from the image header and an 8-dim feature —
     per-channel mean + std of a 16×16 RGBA thumbnail (a deterministic,
@@ -337,7 +335,7 @@ def _decode_images_real(df: DataFrame, media_col: str) -> DataFrame:
 
         for pdf in it:
             rows = []
-            for rec in pdf[media_col]:
+            for rec in pdf["media"]:
                 by = bytes(rec["media_bytes"])
                 img = Image.open(io.BytesIO(by))
                 width, height = img.size
@@ -362,7 +360,7 @@ def _decode_images_real(df: DataFrame, media_col: str) -> DataFrame:
     return df.mapInPandas(batches, schema=DECODED_SCHEMA)
 
 
-def _decode_images_bmp(df: DataFrame, media_col: str) -> DataFrame:
+def _decode_images_bmp(df: DataFrame) -> DataFrame:
     """Dependency-free real decode over the same mapInPandas plan:
     true (width, height) from the BMP header and the same 8-dim
     channel-statistics feature as the Pillow codec — per-channel mean
@@ -377,7 +375,7 @@ def _decode_images_bmp(df: DataFrame, media_col: str) -> DataFrame:
 
         for pdf in it:
             rows = []
-            for rec in pdf[media_col]:
+            for rec in pdf["media"]:
                 by = bytes(rec["media_bytes"])
                 width, height, rgba = decode(by)
                 a = rgba.astype(_np.float64) / 255.0
@@ -400,22 +398,11 @@ def _decode_images_bmp(df: DataFrame, media_col: str) -> DataFrame:
     return df.mapInPandas(batches, schema=DECODED_SCHEMA)
 
 
-def resize_images(
-    df: DataFrame, media_col: str = "media", max_dim: int = 32,
-    codec: str = "fake",
-) -> DataFrame:
-    """Resize stage.  ``codec="fake"`` (default) recomputes target
-    dimensions with aspect preserved and re-emits the payload
-    unchanged (shape-only stand-in).  ``codec="bmp"`` is a TRUE
-    transcode for BMP payloads: decode → box-filter downscale with
-    aspect preserved (no-op when already within ``max_dim``) →
-    re-encode as 24-bit BMP.  Either way the Spark shape is the real
-    one — map-only mapInPandas, media bytes never touching the
-    driver."""
-    if codec == "bmp":
-        return _resize_images_bmp(df, media_col, max_dim)
-    if codec != "fake":
-        raise ValueError(f"unknown codec {codec!r}")
+def resize_images(df: DataFrame, max_dim: int = 32) -> DataFrame:
+    """Resize stage: recomputes target dimensions with aspect preserved
+    and re-emits the payload unchanged (shape-only stand-in).  The
+    Spark shape is the real one — map-only mapInPandas, media bytes
+    never touching the driver."""
     schema = T.StructType(
         [
             T.StructField("media_id", T.LongType()),
@@ -431,7 +418,7 @@ def resize_images(
 
         for pdf in it:
             rows = []
-            for rec in pdf[media_col]:
+            for rec in pdf["media"]:
                 by = bytes(rec["media_bytes"])
                 n = len(by)
                 w, h = (n % 64) + 1, (n % 48) + 1  # fake-decode dims
@@ -451,59 +438,7 @@ def resize_images(
     return df.mapInPandas(batches, schema=schema)
 
 
-def _resize_images_bmp(
-    df: DataFrame, media_col: str, max_dim: int
-) -> DataFrame:
-    """True BMP transcode twin of the fake resize: same output schema,
-    but ``media_bytes`` really are the resized image re-encoded."""
-    schema = T.StructType(
-        [
-            T.StructField("media_id", T.LongType()),
-            T.StructField("width", T.IntegerType()),
-            T.StructField("height", T.IntegerType()),
-            T.StructField("media_bytes", T.BinaryType()),
-        ]
-    )
-    cap = int(max_dim)
-    decode, encode, area_resize = _bmp_tools()
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as _np
-        import pandas as _pd
-
-        for pdf in it:
-            rows = []
-            for rec in pdf[media_col]:
-                by = bytes(rec["media_bytes"])
-                w, h, rgba = decode(by)
-                scale = min(1.0, cap / max(w, h))
-                ow = max(1, int(w * scale))
-                oh = max(1, int(h * scale))
-                if (ow, oh) != (w, h):
-                    resized = area_resize(rgba[..., :3], oh, ow)
-                    by = encode(
-                        _np.clip(_np.rint(resized), 0, 255).astype(_np.uint8)
-                    )
-                else:
-                    ow, oh = w, h
-                rows.append(
-                    {
-                        "media_id": rec["media_id"],
-                        "width": ow,
-                        "height": oh,
-                        "media_bytes": by,
-                    }
-                )
-            yield _pd.DataFrame(
-                rows, columns=["media_id", "width", "height", "media_bytes"]
-            )
-
-    return df.mapInPandas(batches, schema=schema)
-
-
-def frame_sample(
-    df: DataFrame, media_col: str = "media", every_n_bytes: int = 1024
-) -> DataFrame:
+def frame_sample(df: DataFrame, every_n_bytes: int = 1024) -> DataFrame:
     """Video-frame-sampling stand-in: emits one row per sampled offset
     (the real implementation samples decoded frames; the shape —
     one-to-many mapInPandas with bounded batches — is identical)."""
@@ -520,7 +455,7 @@ def frame_sample(
 
         for pdf in it:
             rows = []
-            for rec in pdf[media_col]:
+            for rec in pdf["media"]:
                 n = len(bytes(rec["media_bytes"]))
                 for i, off in enumerate(range(0, n, every_n_bytes)):
                     rows.append(
@@ -531,14 +466,10 @@ def frame_sample(
     return df.mapInPandas(batches, schema=schema)
 
 
-def audio_frame_energy(
-    df: DataFrame,
-    media_col: str = "media",
-    frame_bytes: int = 256,
-    hop_bytes: int = 128,
-) -> DataFrame:
+def audio_frame_energy(df: DataFrame) -> DataFrame:
     """Audio feature extraction shape: framed short-time energy over
-    the payload — one output row per (media, frame) with the frame's
+    the payload (``frame_bytes`` = 256-byte frames every ``hop_bytes``
+    = 128 bytes) — one output row per (media, frame) with the frame's
     mean-square "energy" and a silence flag.  The codec is the
     deterministic byte-level stand-in (samples = raw bytes centered at
     128; a real pipeline decodes PCM first — same integration point as
@@ -551,6 +482,7 @@ def audio_frame_energy(
     import numpy as np
     import pandas as pd
 
+    frame_bytes, hop_bytes = 256, 128
     out_schema = (
         "media_id long, frame int, energy double, is_silence boolean"
     )
@@ -559,8 +491,8 @@ def audio_frame_energy(
         for pdf in it:
             ids, frames, energies = [], [], []
             for mid, payload in zip(
-                pdf[media_col].apply(lambda m: m["media_id"]),
-                pdf[media_col].apply(lambda m: m["media_bytes"]),
+                pdf["media"].apply(lambda m: m["media_id"]),
+                pdf["media"].apply(lambda m: m["media_bytes"]),
             ):
                 x = np.frombuffer(bytes(payload), dtype=np.uint8).astype(
                     np.float64
@@ -590,65 +522,25 @@ def audio_frame_energy(
     return df.mapInPandas(batches, out_schema)
 
 
-def image_phash(
-    df: DataFrame, media_col: str = "media", codec: str = "fake", bits: int = 63
-) -> DataFrame:
+def image_phash(df: DataFrame) -> DataFrame:
     """Perceptual hash per image: 63-bit average-hash (aHash) — a grid
     of brightness cells thresholded at the grid mean, packed into a
     signed BIGINT (63 bits so the value stays positive, mirroring
     ``operators.dedup.simhash``).
 
-    ``codec="fake"`` derives the 64-cell grid deterministically from
-    the payload bytes (position-mod-64 byte fold — the stand-in
-    "image"); ``codec="real"`` builds it from an 8×8 grayscale Pillow
-    thumbnail; ``codec="bmp"`` builds it dependency-free from a real
-    BMP decode — BT.601 luma, box-filtered to 8×8 (scale-invariant:
-    an area-downscaled copy of an image box-filters to the same 8×8
-    grid, so its aHash matches — pinned by test).  Identical
-    mapInPandas plan all three ways; identical downstream
-    banding/hamming machinery as text SimHash — near-dup *image*
-    dedup reuses the text dedup scale path unchanged.
+    The 64-cell grid is derived deterministically from the payload
+    bytes (position-mod-64 byte fold — the stand-in "image").  The
+    downstream banding/hamming machinery is the text SimHash one —
+    near-dup *image* dedup reuses the text dedup scale path unchanged.
     """
-    if codec == "real":
-        try:
-            import PIL.Image  # noqa: F401
-        except ImportError as exc:
-            raise NotImplementedError(
-                "codec='real' requires Pillow; use codec='fake' for the "
-                "plumbing path or codec='bmp' for the dependency-free "
-                "real decode"
-            ) from exc
-
     out_schema = "media_id long, phash long"
-    use_real = codec == "real"
-    use_bmp = codec == "bmp"
-    if codec not in ("fake", "real", "bmp"):
-        raise ValueError(f"unknown codec {codec!r}")
-    n_bits = int(bits)
-    bmp_decode_fn, _enc, bmp_resize_fn = _bmp_tools() if use_bmp else (
-        None, None, None,
-    )
+    n_bits = 63
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import numpy as _np
         import pandas as _pd
 
         def grid_of(by: bytes) -> "_np.ndarray":
-            if use_real:
-                import io
-
-                from PIL import Image
-
-                img = Image.open(io.BytesIO(by)).convert("L").resize((8, 8))
-                return _np.asarray(img, dtype=_np.float64).reshape(64)
-            if use_bmp:
-                _w, _h, rgba = bmp_decode_fn(by)
-                luma = (
-                    0.299 * rgba[..., 0]
-                    + 0.587 * rgba[..., 1]
-                    + 0.114 * rgba[..., 2]
-                )
-                return bmp_resize_fn(luma, 8, 8).reshape(64)
             x = _np.frombuffer(by, dtype=_np.uint8).astype(_np.float64)
             if len(x) == 0:
                 return _np.zeros(64)
@@ -658,7 +550,7 @@ def image_phash(
 
         for pdf in it:
             ids, hashes = [], []
-            for rec in pdf[media_col]:
+            for rec in pdf["media"]:
                 g = grid_of(bytes(rec["media_bytes"]))
                 above = g > g.mean()
                 h = 0
@@ -701,7 +593,6 @@ def phash_dup_candidates(hashes: DataFrame, max_hamming: int = 8) -> DataFrame:
 
 def video_scene_changes(
     df: DataFrame,
-    media_col: str = "media",
     frame_bytes: int = 256,
     threshold: float = 8.0,
 ) -> DataFrame:
@@ -725,7 +616,7 @@ def video_scene_changes(
 
         for pdf in it:
             ids, frames, lumas = [], [], []
-            for rec in pdf[media_col]:
+            for rec in pdf["media"]:
                 x = _np.frombuffer(
                     bytes(rec["media_bytes"]), dtype=_np.uint8
                 ).astype(_np.float64)
@@ -768,15 +659,13 @@ def video_scene_changes(
     )
 
 
-def vad_segments(
-    frames: DataFrame, threshold: float = 1.0, id_col: str = "media_id"
-) -> DataFrame:
+def vad_segments(frames: DataFrame) -> DataFrame:
     """Voice-activity segments from framed energies: consecutive
-    frames at-or-above ``threshold`` merge into one segment per run
+    frames at-or-above ``threshold`` (1.0) merge into one segment per run
     (gaps-and-islands: ``frame − row_number`` is constant within a
     run) — the silence-trimming step an audio training pipeline runs
     between feature extraction and chunking.  Input is
-    :func:`audio_frame_energy` output (or any ``(id, frame, energy)``
+    :func:`audio_frame_energy` output (or any ``(media_id, frame, energy)``
     frame table, batch or foreachBatch micro-batch).
 
     Exactness: energies arrive round-6 quantized, so re-quantizing to
@@ -787,6 +676,7 @@ def vad_segments(
     """
     from pyspark.sql.window import Window
 
+    threshold, id_col = 1.0, "media_id"
     act = frames.filter(F.col("energy") >= threshold).select(
         F.col(id_col),
         F.col("frame"),

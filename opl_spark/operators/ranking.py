@@ -39,11 +39,7 @@ from pyspark.sql import functions as F
 _BIG = "decimal(38,0)"
 
 
-def avg_rank2(
-    df: DataFrame,
-    value_col: str,
-    partitions: int | None = None,
-) -> DataFrame:
+def avg_rank2(df: DataFrame, value_col: str) -> DataFrame:
     """Exact tie-averaged ranks of ``value_col``, doubled to stay
     integral: returns one row per DISTINCT non-null value with columns
     ``(v, c, rank2)`` where ``c`` is the tie-group size and
@@ -54,7 +50,7 @@ def avg_rank2(
 
     1. ``groupBy(value)`` — one hash shuffle over distinct values;
     2. ``repartitionByRange`` on the value — distinct values spread
-       over ``partitions`` range buckets, materialized once via a lazy
+       over P range buckets, materialized once via a lazy
        ``localCheckpoint`` so the partition ids the two consumers see
        are the SAME physical exchange (range sampling re-runs could
        otherwise disagree between branches);
@@ -68,10 +64,7 @@ def avg_rank2(
     the rank frame is |distinct|-sized, so Spark/AQE picks broadcast
     vs shuffle join on real cardinality.
     """
-    spark = df.sparkSession
-    n_part = int(
-        partitions or spark.conf.get("spark.sql.shuffle.partitions", "32")
-    )
+    n_part = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
     vals = (
         df.select(F.col(value_col).alias("v"))
         .filter(F.col("v").isNotNull())
@@ -125,14 +118,14 @@ def _prefix_offsets(totals: DataFrame, pid_col: str) -> DataFrame:
     )
 
 
-def _null_safe_ratio(num, den, decimals: int = 6):
-    """ROUND(num/den, d) with a NULL (not a crash) on a zero
+def _null_safe_ratio(num, den):
+    """ROUND(num/den, 6) with a NULL (not a crash) on a zero
     denominator: Spark 4 sessions run ANSI mode by default, where a
     double division by zero raises DIVIDE_BY_ZERO — but a degenerate
     input (zero variance, empty group, all-tied column) is a
     well-defined 'statistic undefined' case, not an error."""
     return F.when(den == 0, F.lit(None).cast("double")).otherwise(
-        F.round(num / den, decimals)
+        F.round(num / den, 6)
     )
 
 
@@ -549,7 +542,6 @@ def row_rank2(
     df: DataFrame,
     value_col: str,
     out_col: str,
-    partitions: int | None = None,
     ties_col: str | None = None,
 ) -> DataFrame:
     """Attach the doubled tie-averaged rank of ``value_col`` to EVERY
@@ -603,10 +595,7 @@ def row_rank2(
             f"row_rank2: {value_col} must be integral (got {dtype}); "
             "scale fixed-point values to integers first"
         )
-    spark = df.sparkSession
-    n_part = int(
-        partitions or spark.conf.get("spark.sql.shuffle.partitions", "32")
-    )
+    n_part = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
     # internal names guaranteed absent from the caller's columns
     taken = set(df.columns) | {out_col, ties_col or ""}
     pid_c, lt_c, eq_c, off_c = (

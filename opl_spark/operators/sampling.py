@@ -23,12 +23,11 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def copies_col(
-    id_col: Column, weight: Column, resolution: int = 100
-) -> Column:
+def copies_col(id_col: Column, weight: Column) -> Column:
     """Number of copies of a row under ``weight``: ``floor(w)`` whole
     epochs plus one more for the deterministic ``frac(w)`` share of
-    ids (chosen by ``id mod resolution``)."""
+    ids (chosen by ``id mod resolution``, ``resolution`` = 100)."""
+    resolution = 100
     whole = F.floor(weight).cast("long")
     frac_gate = F.pmod(id_col, F.lit(resolution)) < F.round(
         (weight - F.floor(weight)) * resolution
@@ -41,23 +40,21 @@ def mix_sources(
     source_col: str,
     id_col: str,
     weights: dict[str, float],
-    default_weight: float = 1.0,
-    resolution: int = 100,
 ) -> DataFrame:
     """Materialize a weighted domain mix: each input row appears
-    ``copies_col(id, weight(source))`` times, tagged with a 1-based
-    ``epoch`` column.
+    ``copies_col(id, weight(source))`` times (weight 1.0 for a source
+    not in ``weights``), tagged with a 1-based ``epoch`` column.
 
     Rows whose copy count is 0 are filtered BEFORE the sequence is
     built (Spark's ``sequence(1, 0)`` infers step -1 and would yield
     ``[1, 0]``, not an empty array).
     """
-    weight = F.lit(float(default_weight))
+    weight = F.lit(1.0)
     for src, w in sorted(weights.items()):
         weight = F.when(F.col(source_col) == src, F.lit(float(w))).otherwise(
             weight
         )
-    copies = copies_col(F.col(id_col), weight, resolution)
+    copies = copies_col(F.col(id_col), weight)
     return (
         df.withColumn("__copies", copies)
         .filter(F.col("__copies") >= 1)
@@ -117,20 +114,19 @@ def stratified_sample(
     group_col: str,
     id_col: str,
     rates: dict[str, float],
-    default_rate: float = 1.0,
-    salt: int = 0,
 ) -> DataFrame:
     """Per-group deterministic sampling: each group keeps its own
     hash-gated fraction of rows (e.g. downsample boilerplate-heavy
-    domains, keep the long tail whole).  One map-only filter pass —
+    domains, keep the long tail whole; a group not in ``rates`` keeps
+    every row).  One map-only filter pass —
     the rate lookup is a literal CASE chain, no join, no shuffle, no
     sampling state."""
     # thresholds become Python ints up front (truncation, not engine
     # float->int casts, whose rounding rules differ across engines)
-    thr = F.lit(int(default_rate * _M32))
+    thr = F.lit(_M32)
     for g, r in sorted(rates.items()):
         thr = F.when(F.col(group_col) == g, F.lit(int(r * _M32))).otherwise(thr)
-    bucket = F.pmod(F.col(id_col) * F.lit(_KNUTH) + F.lit(salt), F.lit(_M32))
+    bucket = F.pmod(F.col(id_col) * F.lit(_KNUTH), F.lit(_M32))
     return df.filter(bucket < thr)
 
 
@@ -196,7 +192,6 @@ def temperature_mix(
     group_col: str,
     id_col: str,
     alpha: float = 0.5,
-    resolution: int = 100,
 ) -> DataFrame:
     """Temperature-based source rebalancing (the multilingual-LM
     alpha-sampling recipe, arXiv:1901.07291 §3.1): each source's copy
@@ -224,7 +219,7 @@ def temperature_mix(
     weight = F.round(
         F.pow(F.col("__n_max").cast("double") / F.col("__n"), 1.0 - alpha), 6
     )
-    copies = copies_col(F.col(id_col), weight, resolution)
+    copies = copies_col(F.col(id_col), weight)
     return (
         df.join(F.broadcast(counts), df[group_col] == counts["__g"])
         .withColumn("__copies", copies)
@@ -247,7 +242,6 @@ def dsir_weights(
     text_col: str,
     id_col: str,
     target: Column,
-    buckets: int = 256,
 ) -> DataFrame:
     """DSIR importance log-weights (arXiv:2302.03169): score every
     document by how much more likely its hashed-token profile is under
@@ -256,7 +250,7 @@ def dsir_weights(
 
     Features are hashed token buckets (portable md5-prefix hash so a
     SQL oracle can replay the exact bucketing); both bucket-count
-    profiles (target, raw) are ``buckets``-sized tables.  The add-one
+    profiles (target, raw) are ``buckets``-sized (256) tables.  The add-one
     smoothed log-ratio per bucket is quantized to INTEGER micronats,
     so each document's score is an exact integer sum — no
     order-dependent float accumulation across engines — and floats
@@ -275,6 +269,7 @@ def dsir_weights(
     """
     from pyspark import StorageLevel
 
+    buckets = 256
     toks = df.select(
         F.col(id_col).alias("doc"),
         target.alias("__t"),
@@ -335,8 +330,6 @@ def curriculum_interleave(
     df: DataFrame,
     id_col: str,
     group_col: str,
-    max_weight: int = 4,
-    base: int = 840,
 ) -> DataFrame:
     """Deterministic weighted interleaving of source domains into one
     training order: a domain with weight ``w`` contributes one example
@@ -351,9 +344,9 @@ def curriculum_interleave(
     ``sched_key = (2·r − 1) · (base / w)`` with ``base`` divisible by
     every weight (840 covers 1..8) — no float ever enters the
     ordering.  Weights derive from the engine-portable md5 hash of the
-    group name (``1 + h mod max_weight``); within a group, rank r
-    orders by the md5 of the id (a deterministic shuffle, so the
-    interleave never replays ingest order).
+    group name (``1 + h mod max_weight``, ``max_weight`` = 4); within
+    a group, rank r orders by the md5 of the id (a deterministic
+    shuffle, so the interleave never replays ingest order).
 
     Scale shape: one per-GROUP ranking window (partitioned) + map-only
     key arithmetic.  The GLOBAL order is carried by the key, not
@@ -363,9 +356,7 @@ def curriculum_interleave(
     """
     from pyspark.sql.window import Window
 
-    assert all(base % w == 0 for w in range(1, max_weight + 1)), (
-        f"base {base} must be divisible by every weight 1..{max_weight}"
-    )
+    max_weight, base = 4, 840
     grp_h = F.conv(F.substring(F.md5(F.col(group_col)), 1, 8), 16, 10).cast("long")
     staged = df.select(
         F.col(id_col).alias("id"),

@@ -380,12 +380,11 @@ def ivf_topk(
     k: int = 10,
     ncells: int = 8,
     nprobe: int = 2,
-    centroids: list[tuple[int, list[float]]] | None = None,
 ) -> DataFrame:
-    """IVF approximate top-k: restrict the brute-force scan to the
-    ``nprobe`` cells nearest the query: only ``nprobe/ncells`` of the
-    vectors are scored."""
-    cents = centroids or seed_centroids(df, vec_col, id_col, ncells)
+    """IVF approximate top-k over ``ncells`` seeded cells: restrict the
+    brute-force scan to the ``nprobe`` cells nearest the query: only
+    ``nprobe/ncells`` of the vectors are scored."""
+    cents = seed_centroids(df, vec_col, id_col, ncells)
     cells = probe_cells(cents, query, nprobe)
     assigned = ivf_assign(df, vec_col, cents)
     pool = assigned.filter(F.col("cell").isin(cells))
@@ -592,7 +591,6 @@ def srp_banding_advise(
     cos_threshold: float,
     n_bits: int = 24,
     target_recall: float = 0.9,
-    below: float | None = None,
 ) -> list[dict]:
     """Banding advisor for SRP-LSH (:func:`srp_lsh_pairs`): same
     S-curve selection as ``lsh_banding_advise`` (operators/dedup.py)
@@ -600,9 +598,8 @@ def srp_banding_advise(
     :func:`srp_agreement_prob` — because SRP bits agree with
     probability 1 − θ/π, NOT with probability cos θ, a cosine-0.8 pair
     agrees per-bit at ~0.795 and the right banding differs from the
-    Jaccard-0.8 one.  ``below`` is the dissimilar-pair cosine for the
-    false-positive proxy (default: half the threshold's ANGLE margin —
-    cos of 1.5× the threshold angle, floored at 0).  Output rows carry
+    Jaccard-0.8 one.  The dissimilar-pair cosine for the false-positive
+    proxy is cos of 1.5× the threshold angle.  Output rows carry
     the cosine inputs alongside the bit-agreement probabilities the
     curve actually used."""
     import math
@@ -612,7 +609,7 @@ def srp_banding_advise(
     if not -1 < cos_threshold < 1:
         raise ValueError(f"cos_threshold must be in (-1,1), got {cos_threshold}")
     theta = math.acos(cos_threshold)
-    below_cos = math.cos(min(math.pi, 1.5 * theta)) if below is None else below
+    below_cos = math.cos(min(math.pi, 1.5 * theta))
     p_t = srp_agreement_prob(cos_threshold)
     p_b = srp_agreement_prob(below_cos)
     out = lsh_banding_advise(
@@ -641,55 +638,52 @@ SRP_MIN_ROWS_PER_BAND = 8
 SRP_DEFAULT_BUDGETS = (24, 32, 48, 64, 96, 128, 192)
 
 
-def srp_banding_defaults(
-    cos_threshold: float,
-    target_recall: float = 0.9,
-    min_rows_per_band: int = SRP_MIN_ROWS_PER_BAND,
-    budgets: tuple = SRP_DEFAULT_BUDGETS,
-) -> tuple[int, int]:
+def srp_banding_defaults(cos_threshold: float) -> tuple[int, int]:
     """Derive ``(n_bits, bands)`` for the persisted SRP index from the
     declared verify threshold (r12 verdict task 6): the smallest
-    signature budget whose banding meets ``target_recall`` at the
-    threshold with band keys of at least ``min_rows_per_band`` bits.
+    signature budget in :data:`SRP_DEFAULT_BUDGETS` whose banding meets
+    ``target_recall`` (0.9) at the threshold with band keys of at least
+    :data:`SRP_MIN_ROWS_PER_BAND` bits.
 
     Below cos ≈ 0.7 the per-bit agreement (1 − θ/π) is weak enough
     that NO banding inside the budget list reaches the recall target
     without dropping to short band keys — the quadratic-fan-out regime
     BENCH_NOTES documents for q_srp_incremental's sf1 slope — so the
     derivation REFUSES with guidance instead of silently installing a
-    flood-prone index: pass explicit ``n_bits``/``bands`` (and a
-    ``max_bucket`` cap on the probe) to opt in, or route the job
+    flood-prone index: pass explicit ``n_bits``/``bands`` to opt in,
+    or route the job
     through the IVF family, which is the registered 100 TB path for
     low-threshold best-match tasks."""
-    for budget in budgets:
+    target_recall = 0.9
+    for budget in SRP_DEFAULT_BUDGETS:
         fits = [
             r
             for r in srp_banding_advise(
                 cos_threshold, budget, target_recall=target_recall
             )
             if r["recall_at_threshold"] >= target_recall
-            and r["rows_per_band"] >= min_rows_per_band
+            and r["rows_per_band"] >= SRP_MIN_ROWS_PER_BAND
         ]
         if fits:
             # lowest false-positive proxy among qualifying factorizations
             best = min(fits, key=lambda r: r["fp_at_below"])
             return budget, best["bands"]
     raise ValueError(
-        f"srp_banding_defaults: no banding within a {budgets[-1]}-bit "
+        f"srp_banding_defaults: no banding within a {SRP_DEFAULT_BUDGETS[-1]}-bit "
         f"budget reaches recall {target_recall} at cos_threshold "
-        f"{cos_threshold} with band keys >= {min_rows_per_band} bits — "
+        f"{cos_threshold} with band keys >= {SRP_MIN_ROWS_PER_BAND} bits — "
         f"below ~0.7 SRP banding needs short keys whose bucket fan-out "
         f"grows quadratically with corpus size.  Opt in explicitly with "
-        f"n_bits=/bands= (and a max_bucket probe cap), or use the IVF "
-        f"index family for low-threshold best-match tasks."
+        f"n_bits=/bands=, or use the IVF index family for low-threshold "
+        f"best-match tasks."
     )
 
 
 def _resolve_srp_banding(
     threshold: float, n_bits: int | None, bands: int | None
 ) -> tuple[int, int]:
-    """Banding resolution shared by :func:`build_srp_index` /
-    :func:`srp_dedup_incremental`: explicit values pass through
+    """Banding resolution of a :func:`srp_dedup_incremental` probe with
+    no store manifest to read it from: explicit values pass through
     untouched (the caller owns the trade; registered queries pin their
     oracles this way); ``None`` derives from the advisor at the
     declared threshold.  An explicit budget with derived bands warns
@@ -713,8 +707,7 @@ def _resolve_srp_banding(
             f"SRP banding at cos_threshold {threshold} within an explicit "
             f"{n_bits}-bit budget picked {best['rows_per_band']}-bit band "
             f"keys (< {SRP_MIN_ROWS_PER_BAND}): bucket fan-out grows "
-            f"quadratically with corpus size — cap probes with max_bucket "
-            f"or raise the budget",
+            f"quadratically with corpus size — raise the budget",
             stacklevel=3,
         )
     return n_bits, best["bands"]
@@ -738,15 +731,13 @@ def srp_lsh_pairs(
     vec_col: str,
     id_col: str,
     dims: int,
-    n_bits: int = 24,
-    bands: int = 4,
     threshold: float = 0.5,
     portable: bool = False,
 ) -> DataFrame:
     """Signed-random-projection LSH (Charikar 2002 — the COSINE twin
     of MinHash banding) over an embedding column: each vector's
-    ``n_bits`` sign bits of integer hyperplane projections split into
-    ``bands`` banded bucket keys; same-bucket pairs verify with the
+    ``n_bits`` = 24 sign bits of integer hyperplane projections split
+    into ``bands`` = 4 banded bucket keys; same-bucket pairs verify with the
     exact cosine — ``(id_a, id_b, cosine ≥ threshold)``.
 
     P[bit agrees] = 1 − θ/π, so a (bands × rows) banding tunes the
@@ -778,6 +769,7 @@ def srp_lsh_pairs(
     straddling cosine 0.3 by one ulp of engine summation order).
     Same portable-vs-fast-path contract as
     :func:`~opl_spark.operators.dedup.minhash_dedup_pairs`."""
+    n_bits, bands = 24, 4
     if portable:
         melted = srp_banded_keys(
             df, vec_col, id_col, dims, n_bits, bands, keep_quantized=True
@@ -927,9 +919,6 @@ def build_srp_index(
     id_col: str,
     store_path: str,
     dims: int,
-    n_bits: int | None = None,
-    bands: int | None = None,
-    threshold: float = 0.8,
 ) -> None:
     """Materialize the corpus's banded SRP signatures as the
     persistent EMBEDDING near-dup index: parquet partitioned by
@@ -943,15 +932,13 @@ def build_srp_index(
     smaller than the payloads, and it is the only thing history ever
     re-reads.
 
-    Banding defaults (r12 verdict task 6): when ``n_bits``/``bands``
-    are omitted they derive from :func:`srp_banding_defaults` at the
-    declared ``threshold`` the downstream probes will verify at —
-    recall ≥ 0.9 with band keys ≥ 8 bits, refusing below ~cos 0.7
-    where banding fan-out goes quadratic (explicit values opt in and
-    pass through untouched).  The resolved banding is persisted in the
-    store's ``_srp_meta`` manifest, and probes default to it — so the
-    build is the ONE place banding is decided."""
-    n_bits, bands = _resolve_srp_banding(threshold, n_bits, bands)
+    Banding (r12 verdict task 6): ``n_bits``/``bands`` derive from
+    :func:`srp_banding_defaults` at the cosine ``threshold`` = 0.8 the
+    downstream probes verify at by default — recall ≥ 0.9 with band
+    keys ≥ 8 bits.  The resolved banding is persisted in the store's
+    ``_srp_meta`` manifest, and probes default to it — so the build is
+    the ONE place banding is decided."""
+    n_bits, bands = srp_banding_defaults(0.8)
     _srp_store_rows(df, vec_col, id_col, dims, n_bits, bands).write.partitionBy(
         "band", "bucket_shard"
     ).mode("overwrite").parquet(store_path)
@@ -963,7 +950,6 @@ def srp_probe(
     banded_batch: DataFrame,
     threshold: float,
     exclude_ids: DataFrame | None = None,
-    max_bucket: int | None = None,
 ) -> DataFrame:
     """Core SRP probe: join a banded batch against banded store rows
     on ``(band, bucket_shard, key)``, verify bucket-mates with the
@@ -984,21 +970,7 @@ def srp_probe(
     tie-break (max cos, then MIN stored id) rides one struct-max via
     arithmetic negation of the id, which keeps the aggregation
     map-side combinable (a window would forbid partial aggregation).
-    Non-numeric ids raise immediately rather than mis-sorting.
-
-    ``max_bucket`` (r12, the SRP twin of the MinHash family's
-    hot-bucket guard): store-side ``(band, key)`` buckets wider than
-    the cap are DROPPED before the join — one map-side-combinable
-    count over the store's bucket keys, no window.  This bounds the
-    candidate bill at ``bands · Σ min(b, cap) · p`` when a clustered
-    corpus (or a degenerate boilerplate embedding) floods a bucket —
-    the failure mode the full-suite sf1 slope measured as the
-    q_srp_incremental 31.7× flag (a 6-bit band key is a CONSTANT 64
-    buckets, so occupancy grows with n).  The trade is recall on
-    exactly the vectors whose neighborhoods are over-wide; a vector
-    present in ≥1 surviving band bucket still probes.  Default None
-    preserves exact bucket semantics (the registered queries' oracles
-    replay candidates bit-for-bit and stay cap-free)."""
+    Non-numeric ids raise immediately rather than mis-sorting."""
     from pyspark.sql.types import NumericType
 
     id_type = store.schema["vec_id"].dataType
@@ -1015,15 +987,6 @@ def srp_probe(
         "key",
         "bucket_shard",
     )
-    if max_bucket is not None:
-        widths = old.groupBy("band", "key", "bucket_shard").agg(
-            F.count(F.lit(1)).alias("__bw")
-        )
-        old = (
-            old.join(widths, ["band", "key", "bucket_shard"])
-            .filter(F.col("__bw") <= max_bucket)
-            .drop("__bw")
-        )
     # NO pair-dedup between the banded join and the verify (r13): a
     # pair colliding in several bands verifies to the SAME (cos,
     # old_id) struct each time, and the closing keep-best max is
@@ -1076,7 +1039,6 @@ def srp_dedup_incremental(
     threshold: float = 0.8,
     append: bool = True,
     exclude_self: bool = False,
-    max_bucket: int | None = None,
 ) -> DataFrame:
     """Probe a new embedding batch against the persisted SRP index:
     emits ``(vec_id, dup_of, cos)`` for every new vector whose exact
@@ -1156,9 +1118,7 @@ def srp_dedup_incremental(
             ),
         )
     exclude = banded.select("vec_id").distinct() if exclude_self else None
-    dups = srp_probe(
-        store, banded, threshold, exclude_ids=exclude, max_bucket=max_bucket
-    )
+    dups = srp_probe(store, banded, threshold, exclude_ids=exclude)
     dups = dups.localCheckpoint(eager=True)  # pin before the store mutates
     if append:
         banded.write.partitionBy("band", "bucket_shard").mode("append").parquet(
@@ -1313,8 +1273,6 @@ def pq_train_quantized(
     id_col: str,
     m: int = 8,
     k: int = 16,
-    sample: int = 2048,
-    iters: int = 8,
 ) -> list[list[list[int]]]:
     """Product-quantization codebook trained in INTEGER arithmetic, so
     a SQL oracle can replay it.
@@ -1324,9 +1282,11 @@ def pq_train_quantized(
     min-id representative of each distinct subvector, ordered by that
     min id — the grouping a SQL oracle replays), and each Lloyd round
     is an exact integer argmin (first-lowest-cell ties) plus the
-    half-up integer mean ``(2·Σ + n) // (2n)``.  Only the
-    deterministic ``orderBy(id).limit(sample)`` sample crosses the
-    driver.  Returns ``codebook[m][k'][d/m]`` integer lists."""
+    half-up integer mean ``(2·Σ + n) // (2n)``, for ``iters`` = 8
+    rounds.  Only the deterministic ``orderBy(id).limit(sample)``
+    sample (2048 rows) crosses the driver.  Returns
+    ``codebook[m][k'][d/m]`` integer lists."""
+    sample, iters = 2048, 8
     rows = (
         df.select(F.col(id_col).alias("i"), F.col(vec_col).alias("v"))
         .orderBy("i")
@@ -1596,17 +1556,17 @@ def _ceil_div(a: int, b: int) -> int:
     return -((-a) // b)
 
 
-def _rescale_int(mat, scale: int = 10**6):
-    """Floor-divide an int64 matrix so entries fit in ±scale — the
+def _rescale_int(mat):
+    """Floor-divide an int64 matrix so entries fit in ±10⁶ — the
     deterministic renormalization both engines replay identically."""
     import numpy as np
 
     m = int(np.abs(mat).max())
-    dd = max(1, _ceil_div(m, scale))
+    dd = max(1, _ceil_div(m, 10**6))
     return np.floor_divide(mat, dd)
 
 
-def _dominant_eigvec_int(mat, squarings: int = 12) -> list[int]:
+def _dominant_eigvec_int(mat) -> list[int]:
     """Dominant eigenvector by deterministic integer MATRIX SQUARING:
     ``M ← rescale(M²)`` doubles the effective power each step (2^12 =
     4096 after 12 squarings), which converges even on near-spherical
@@ -1621,6 +1581,7 @@ def _dominant_eigvec_int(mat, squarings: int = 12) -> list[int]:
 
     import numpy as np
 
+    squarings = 12
     M = _rescale_int(np.asarray(mat, dtype=np.int64))
     for _ in range(squarings):
         M = _rescale_int(M @ M)
@@ -1644,7 +1605,7 @@ def _canon_sign(v: list[int]) -> list[int]:
 
 
 def pca_power_project(
-    df: DataFrame, vec_col: str, id_col: str, k: int = 2, iters: int = 12
+    df: DataFrame, vec_col: str, id_col: str, k: int = 2
 ) -> DataFrame:
     """Top-k PCA projection by INTEGER-EXACT power iteration — the
     oracle-replayable sibling of :func:`pca_project` (which uses a
@@ -1653,7 +1614,7 @@ def pca_power_project(
     Coordinates quantize to the 1e-3 integer grid, the scatter matrix
     ``C = n·Σwwᵀ − (Σw)(Σw)ᵀ`` is an exact integer (positive scale —
     eigenvectors unchanged), the dominant direction comes from
-    ``iters`` integer matrix SQUARINGS (effective power 2^iters —
+    12 integer matrix SQUARINGS (effective power 2^12 —
     converges on near-spherical spectra; :func:`_dominant_eigvec_int`),
     the second component comes from exact
     integer Hotelling deflation ``C₂ = (C·(vᵀv)² − (vᵀCv)·vvᵀ) //
@@ -1711,7 +1672,7 @@ def pca_power_project(
     for _ in range(k):
         Mq = [[int(t) for t in row]
               for row in _rescale_int(np.asarray(M, dtype=np.int64))]
-        v = _canon_sign(_dominant_eigvec_int(Mq, squarings=iters))
+        v = _canon_sign(_dominant_eigvec_int(Mq))
         comps.append(v)
         vv = sum(t * t for t in v)
         if vv == 0:
@@ -1834,7 +1795,6 @@ def mmr_select(
     query: list[float],
     k: int = 10,
     shortlist: int = 50,
-    lam: float = 0.7,
 ) -> DataFrame:
     """Maximal Marginal Relevance (Carbonell & Goldstein, SIGIR 1998):
     pick ``k`` results that balance query relevance against redundancy
@@ -1846,12 +1806,12 @@ def mmr_select(
     copies of the same document".
 
     Similarities are integer dot products of 1e-6-quantized unit
-    vectors (:func:`with_unit_quantized`, scale 1e12) and λ is taken in
-    percent, so the whole greedy chain is integer arithmetic — the
-    same picks, scores, and tie-breaks on every engine, which is what
-    lets the registered DuckDB oracle replay the full unrolled chain
-    (cosine at 1e-6 precision; ranking unchanged unless two
-    candidates are closer than that).
+    vectors (:func:`with_unit_quantized`, scale 1e12) and λ = 0.7 is
+    taken in percent (``lam_pct`` = 70), so the whole greedy chain is
+    integer arithmetic — the same picks, scores, and tie-breaks on
+    every engine, which is what lets the registered DuckDB oracle
+    replay the full unrolled chain (cosine at 1e-6 precision; ranking
+    unchanged unless two candidates are closer than that).
 
     Scale shape: the DISTRIBUTED stage is the shortlist — quantized
     cosine top-``shortlist`` via TakeOrderedAndProject, which bounds
@@ -1864,7 +1824,7 @@ def mmr_select(
     """
     import numpy as np
 
-    lam_pct = int(round(lam * 100))
+    lam_pct = 70
     qu = _quantize_unit_np(np.asarray(query, dtype=np.float64))
     if not np.any(qu):
         raise ValueError("mmr_select: query has zero norm — cosine undefined")
@@ -1935,14 +1895,13 @@ def hybrid_search_rrf(
     query_vec: list[float],
     k: int = 10,
     shortlist: int = 50,
-    k0: int = 60,
 ) -> DataFrame:
     """Hybrid retrieval: BM25 lexical shortlist + dense cosine
     shortlist fused by reciprocal-rank fusion (Cormack et al.,
     SIGIR 2009).  RRF contributions are the INTEGER quotients
-    ``1e9 // (k0 + rank)`` — engine-exact fusion scores with no float
-    on the comparison path, so ordering and ties (broken by doc id)
-    can never drift between engines.
+    ``1e9 // (k0 + rank)``, ``k0`` = 60 — engine-exact fusion scores
+    with no float on the comparison path, so ordering and ties (broken
+    by doc id) can never drift between engines.
 
     Scale shape: each leg is the already-scale-audited distributed
     operator (only query-term postings shuffle for BM25; one
@@ -1981,6 +1940,7 @@ def hybrid_search_rrf(
         .alias("dense_rank"),
     )
     fused = lexr.join(denser, "doc", "full_outer")
+    k0 = 60
     rrf = F.coalesce(
         F.expr(f"1000000000 div ({k0} + lex_rank)"), F.lit(0).cast("long")
     ) + F.coalesce(
@@ -1999,12 +1959,12 @@ def random_projection(
     id_col: str,
     out_dim: int = 16,
     in_dim: int = 64,
-    salt: int = 11,
 ) -> DataFrame:
     """Johnson–Lindenstrauss sign random projection (Achlioptas 2003):
     project ``in_dim`` → ``out_dim`` with the ±1 matrix derived from
     the portable multiplicative hash
     ``(i·2654435761 + j·40503 + i·j·2246822519 + salt) mod 2³² < 2³¹``
+    (``salt`` = 11)
     → ±1 — no stored
     matrix, no RNG state, identical on any engine.  Output scaled by
     1/√out_dim so pairwise distances are preserved in expectation.
@@ -2030,6 +1990,7 @@ def random_projection(
 
     vec = F.col(vec_col)
     scale = 1.0 / math.sqrt(out_dim)
+    salt = 11
 
     def sign(i: Column, j: Column) -> Column:
         # the bilinear i*j term is load-bearing: without it the sign
@@ -2074,7 +2035,6 @@ def label_centroid_outliers(
     vec_col: str,
     id_col: str,
     label_col: str,
-    scale: float = 1000.0,
     topk: int = 3,
 ) -> DataFrame:
     """Per-class embedding outliers: the ``topk`` vectors farthest
@@ -2083,9 +2043,10 @@ def label_centroid_outliers(
     (an embedding-space cousin of the z-score/MAD outlier gates).
 
     Integer-exact end to end (the k-means discipline): coordinates
-    quantize to ``floor(x·scale + 0.5)``, the per-label centroid is
-    the half-up integer mean ``(2·Σ + n) // (2n)`` (Python floor-div —
-    the oracle replays it with the explicit DuckDB floor-div CASE),
+    quantize to ``floor(x·scale + 0.5)`` (``scale`` = 1000), the
+    per-label centroid is the half-up integer mean ``(2·Σ + n) //
+    (2n)`` (Python floor-div — the oracle replays it with the explicit
+    DuckDB floor-div CASE),
     and distances are BIGINT sums of squared integer gaps, so ranking
     never touches a float.
 
@@ -2098,6 +2059,7 @@ def label_centroid_outliers(
     """
     from pyspark.sql.window import Window
 
+    scale = 1000.0
     staged = df.select(
         F.col(id_col).alias("id"),
         F.col(label_col).alias("label"),

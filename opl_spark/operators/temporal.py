@@ -103,7 +103,6 @@ def interval_join(
     left_ts: str,
     right_ts: str,
     lookback,
-    how: str = "inner",
 ) -> DataFrame:
     """Interval join: right rows with ``right_ts`` in
     ``(left_ts - lookback, left_ts]`` per key — the attribution /
@@ -116,15 +115,6 @@ def interval_join(
     sides watermarked by the caller), this exact condition is Spark's
     stream-stream interval join — the time bound is what lets the
     engine expire join state instead of keeping both streams forever.
-
-    ``how="left_outer"`` keeps unmatched left rows (null right
-    columns).  On streams this is the watermark-driven outer join: a
-    left row's null extension is emitted only once the watermark
-    passes its join window (the engine must PROVE no match can still
-    arrive), so null rows trail the matched rows by the watermark
-    delay, and rows still inside the final watermark when the query
-    stops stay unemitted — inherent to outer stream-stream semantics,
-    pinned in tests/test_streaming.py.
 
     Output columns: all of ``left``'s, then ``right``'s except keys —
     the inputs must not share other column names."""
@@ -143,4 +133,4 @@ def interval_join(
     out = [F.col(f"__L.{c}") for c in left.columns] + [
         F.col(f"__R.{c}") for c in right.columns if c not in keys
     ]
-    return l.join(r, cond, how).select(*out)
+    return l.join(r, cond).select(*out)

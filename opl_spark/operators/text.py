@@ -47,7 +47,7 @@ def _marker_score(words: Column, markers: tuple[str, ...]) -> Column:
     return F.array_size(F.filter(words, lambda w: w.isin(*markers)))
 
 
-def lang_id_col(text: Column, default: str = "und") -> Column:
+def lang_id_col(text: Column) -> Column:
     """Heuristic language ID: argmax of per-language stopword-marker
     hits over the whitespace tokens; ``und`` (undetermined) when no
     marker hits at all.  Deterministic, shuffle-free."""
@@ -60,7 +60,7 @@ def lang_id_col(text: Column, default: str = "und") -> Column:
     # lexicographically LAST language tag; reverse-sorted build order
     # makes that stable and documented.
     best = F.array_max(F.array(*scored))
-    return F.when(best["score"] > 0, best["lang"]).otherwise(F.lit(default))
+    return F.when(best["score"] > 0, best["lang"]).otherwise(F.lit("und"))
 
 
 def quality_columns(text: Column) -> dict[str, Column]:
@@ -86,7 +86,7 @@ def quality_columns(text: Column) -> dict[str, Column]:
     }
 
 
-def clean_text_col(text: Column, lowercase: bool = False) -> Column:
+def clean_text_col(text: Column) -> Column:
     """Corpus cleaning: strip HTML-ish tags, drop control characters,
     collapse whitespace runs, trim — the normalize-before-dedup stage.
     Pure ``regexp_replace`` chain (whole-stage codegen; the patterns
@@ -94,8 +94,7 @@ def clean_text_col(text: Column, lowercase: bool = False) -> Column:
     oracle is byte-identical)."""
     out = F.regexp_replace(text, r"<[^>]*>", " ")
     out = F.regexp_replace(out, r"[\x00-\x08\x0B\x0C\x0E-\x1F\x7F]", "")
-    out = F.trim(F.regexp_replace(out, r"\s+", " "))
-    return F.lower(out) if lowercase else out
+    return F.trim(F.regexp_replace(out, r"\s+", " "))
 
 
 def fingerprint_col(text: Column) -> Column:
@@ -195,14 +194,13 @@ def blocklist_filter(
     text_col: str,
     id_col: str,
     blocklist: list[str],
-    max_ratio_ppm: int = 20_000,
 ) -> DataFrame:
     """Keyword-blocklist gate — the banned-terms filter every
     production corpus pipeline runs (cf. Dolma / FineWeb / C4's
     word-level filters): per document, word occurrences matching the
     blocklist (case-insensitive whole-word — the same tokenization as
     every other text operator), the hit ratio in exact ppm integers,
-    and the keep decision ``hit_ppm <= max_ratio_ppm`` —
+    and the keep decision ``hit_ppm <= max_ratio_ppm`` (20 000 ppm) —
     ``(doc, n_words, n_hits, hit_ppm, kept)``.
 
     Scale shape: MAP-ONLY.  The blocklist is a literal array in the
@@ -216,6 +214,7 @@ def blocklist_filter(
 
     if not blocklist:
         raise ValueError("blocklist_filter: empty blocklist")
+    max_ratio_ppm = 20_000
     lits = F.array(*[F.lit(t.lower()) for t in sorted(set(blocklist))])
     words = words_col(F.col(text_col))
     staged = df.select(
@@ -238,7 +237,6 @@ def distinct_ngram_ratios(
     df: DataFrame,
     text_col: str,
     group_col: str,
-    ns: tuple[int, ...] = (1, 2, 3),
 ) -> DataFrame:
     """Corpus-diversity report per group: distinct-n ratios (Li et
     al. 2016, "A Diversity-Promoting Objective Function") — for each
@@ -259,6 +257,7 @@ def distinct_ngram_ratios(
     from opl_spark.operators.dedup import shingle_seq_col
 
     text = F.col(text_col)
+    ns = (1, 2, 3)
 
     # NB: a 1-arg closure factory, NOT `lambda g, n=n: ...` — PySpark
     # reads a two-parameter HOF lambda as (element, index)
@@ -285,13 +284,13 @@ def distinct_ngram_ratios(
     )
 
 
-def split_col(id_col: Column, train_pct: int = 90, buckets: int = 100) -> Column:
-    """Deterministic train/holdout assignment from the document id —
+def split_col(id_col: Column) -> Column:
+    """Deterministic 90/10 train/holdout assignment from the document id —
     the reproducible corpus split (same id ⇒ same split, every run,
     every engine; no sampling state, no shuffle).  Production pipelines
     hash a stable natural key instead of a dense id; the modulus shape
     is identical."""
-    return F.when(F.pmod(id_col, F.lit(buckets)) < train_pct, "train").otherwise(
+    return F.when(F.pmod(id_col, F.lit(100)) < 90, "train").otherwise(
         F.lit("val")
     )
 
@@ -302,7 +301,6 @@ def pack_sequences(
     id_col: str,
     group_col: str,
     budget: int = 2048,
-    shards: int = 16,
     shard_expr: Column | None = None,
 ) -> DataFrame:
     """Deterministic document → training-sequence assignment: within
@@ -316,16 +314,16 @@ def pack_sequences(
     group alone: a corpus with a handful of sources would otherwise
     serialize each source's entire token stream through ONE task —
     fine at test scale, a wall at 100 TB.  ``shard =
-    pmod(xxhash64(doc), shards)`` keeps the layout deterministic
+    pmod(xxhash64(doc), 16)`` keeps the layout deterministic
     (same corpus ⇒ same shard ⇒ same packing, any cluster, any run)
-    while restoring ``groups × shards``-way parallelism.  Pass
+    while restoring ``groups × 16``-way parallelism.  Pass
     ``shard_expr`` to override the shard function (e.g. a portable
     ``pmod(id, n)`` when an external system must reproduce the
     layout)."""
     from pyspark.sql.window import Window
 
     if shard_expr is None:
-        shard_expr = F.pmod(F.xxhash64(F.col(id_col)), F.lit(shards))
+        shard_expr = F.pmod(F.xxhash64(F.col(id_col)), F.lit(16))
     t = df.select(
         F.col(id_col).alias("doc"),
         F.col(group_col).alias("grp"),
@@ -396,13 +394,12 @@ def bm25_search(
     id_col: str,
     query_terms: list[str],
     k: int = 10,
-    k1: float = 1.2,
-    b: float = 0.75,
 ) -> DataFrame:
     """BM25 keyword search over the corpus: top-k documents for a bag
     of query terms (Robertson/Sparck-Jones idf, the Okapi tf
-    saturation) — the retrieval baseline every RAG/data-curation
-    pipeline wants next to its ANN path.
+    saturation with ``k1`` = 1.2, ``b`` = 0.75) — the retrieval
+    baseline every RAG/data-curation pipeline wants next to its ANN
+    path.
 
     Scale shape: the corpus pass reduces immediately to per-doc
     lengths (combinable count) and per-(doc, matched-term) tfs — the
@@ -412,6 +409,7 @@ def bm25_search(
     broadcasts.  Selection is TakeOrdered on (score desc, doc asc) —
     a deterministic total order, never a global sort.
     """
+    k1, b = 1.2, 0.75
     toks = df.select(
         F.col(id_col).alias("doc"),
         F.explode(
@@ -636,11 +634,10 @@ def quantile_buckets(
     score_col: Column,
     group_col: str,
     id_col: str,
-    buckets: tuple[str, ...] = ("head", "middle", "tail"),
 ) -> DataFrame:
     """CCNet-style per-group quality bucketing: rank every row within
     its group by score (ascending — low perplexity first) and cut the
-    ranking into ``len(buckets)`` equal-count bands (head = best).
+    ranking into three equal-count bands: head (best), middle, tail.
 
     Integer arithmetic only (``rank * n_buckets <= bucket_ix * n``), so
     band edges are exact and engine-independent — no float quantile
@@ -649,6 +646,7 @@ def quantile_buckets(
     """
     from pyspark.sql.window import Window
 
+    buckets = ("head", "middle", "tail")
     nb = len(buckets)
     w = Window.partitionBy(group_col).orderBy(score_col.asc(), F.col(id_col))
     ranked = df.withColumn("__rn", F.row_number().over(w)).withColumn(
@@ -856,26 +854,23 @@ def gopher_rules(
     df: DataFrame,
     text_col: str,
     id_col: str,
-    min_words: int = 10,
-    max_words: int = 1000,
-    min_mean_len: float = 2.0,
-    max_mean_len: float = 10.0,
-    max_stop_frac: float = 0.5,
-    max_top_frac: float = 0.3,
-    stopwords: tuple[str, ...] = ("the", "a", "and", "of", "to"),
 ) -> DataFrame:
     """Gopher-style repetition/shape quality rules (Rae et al. 2021
-    §A1.1, re-parameterized): per-doc word count bounds, mean word
-    length bounds, stopword-fraction cap, and a most-frequent-word
-    concentration cap — emitted as per-doc metrics plus the combined
-    ``passes`` verdict so downstream filters stay one codegen'd
-    predicate.
+    §A1.1, re-parameterized): per-doc word count in [10, 1000], mean
+    word length in [2, 10], stopword fraction ≤ 0.5 (stopwords: the,
+    a, and, of, to), and a most-frequent-word concentration ≤ 0.3 —
+    emitted as per-doc metrics plus the combined ``passes`` verdict so
+    downstream filters stay one codegen'd predicate.
 
     Everything except ``top_frac`` is a pure map-only expression over
     the token array; ``top_frac`` needs a per-(doc, word) count — one
     map-side-combinable explode-aggregate pair keyed on the doc, the
     same single-shuffle shape as the repetition profile.
     """
+    min_words, max_words = 10, 1000
+    min_mean_len, max_mean_len = 2.0, 10.0
+    max_stop_frac, max_top_frac = 0.5, 0.3
+    stopwords = ("the", "a", "and", "of", "to")
     w = F.split(F.lower(F.trim(F.col(text_col))), r"\s+")
     base = df.select(
         F.col(id_col).alias("doc"),
@@ -930,7 +925,6 @@ def stupid_backoff_score(
     score: DataFrame,
     text_col: str,
     id_col: str,
-    alpha: float = 0.4,
 ) -> DataFrame:
     """Trigram Stupid Backoff language-model scoring (Brants et al.,
     EMNLP 2007) — the LM smoothing designed FOR distributed count
@@ -951,9 +945,11 @@ def stupid_backoff_score(
     each combinable); (N, V) cross as a 1-row broadcast.  Per-doc
     emission is mean log-score over trigram positions, round(6).
 
-    Emits ``(doc, n_trigrams, avg_logscore)``.
+    Emits ``(doc, n_trigrams, avg_logscore)``; α = 0.4.
     """
     from opl_spark.operators.dedup import words_col
+
+    alpha = 0.4
 
     def toks(df: DataFrame) -> DataFrame:
         return (
@@ -1353,7 +1349,7 @@ def readability_scores(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
 
 
 def zipf_slope(
-    df: DataFrame, text_col: str, group_col: str, top_ranks: int = 50
+    df: DataFrame, text_col: str, group_col: str
 ) -> DataFrame:
     """Zipf's-law fit per group: least-squares slope of
     ``ln(freq) ~ ln(rank)`` over each group's ``top_ranks`` most
@@ -1375,6 +1371,7 @@ def zipf_slope(
     """
     from pyspark.sql.window import Window
 
+    top_ranks = 50
     toks = df.select(
         F.col(group_col).alias("grp"),
         F.explode(F.split(F.lower(F.trim(F.col(text_col))), r"\s+")).alias("tok"),
@@ -1493,11 +1490,9 @@ def kneser_ney_logprob(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     )
 
 
-def feature_hash(
-    df: DataFrame, text_col: str, id_col: str, dim: int = 64
-) -> DataFrame:
+def feature_hash(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     """Hashing-trick text features (Weinberger et al. 2009): each
-    token hashes to one of ``dim`` buckets with a ±1 sign from an
+    token hashes to one of ``dim`` = 64 buckets with a ±1 sign from an
     independent hash bit, and a document's feature value is the signed
     count sum — fixed-width model inputs with no vocabulary state at
     all (the property that matters at 100 TB: no fit step, no
@@ -1508,6 +1503,7 @@ def feature_hash(
     bit 6+ of the same hash.  Map-only + one combinable (doc, bucket)
     aggregate; emits sparse ``(doc, bucket, v)`` rows.
     """
+    dim = 64
     toks = df.select(
         F.col(id_col).alias("doc"),
         F.explode(F.split(F.lower(F.trim(F.col(text_col))), r"\s+")).alias("tok"),
@@ -1526,12 +1522,10 @@ def feature_hash(
     )
 
 
-def heldout_perplexity(
-    df: DataFrame, text_col: str, id_col: str, train_mod: int = 10, train_lt: int = 8
-) -> DataFrame:
+def heldout_perplexity(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     """Held-out LM evaluation with proper train/test discipline: an
     add-one-smoothed unigram model fits on the TRAIN split
-    (``id % train_mod < train_lt``) and scores the VAL split — the
+    (``id % train_mod < train_lt``, 10 and 8) and scores the VAL split — the
     corpus-self LM scores (unigram_logprob etc.) flatter themselves;
     this is the number a data-quality gate should threshold on.
 
@@ -1552,6 +1546,7 @@ def heldout_perplexity(
     """
     from pyspark.sql.types import NumericType
 
+    train_mod, train_lt = 10, 8
     if not isinstance(df.schema[id_col].dataType, NumericType):
         raise TypeError(
             f"heldout_perplexity requires a numeric id_col for the "

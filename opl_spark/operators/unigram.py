@@ -55,6 +55,9 @@ UNK_LOGPROB = -100.0
 #: micro-boundary (~1e-10 per piece vs near-certain DP near-ties).
 LOG_SCALE = 1_000_000.0
 
+#: longest piece the trainer seeds and the segmenter decodes.
+MAX_PIECE_LEN = 4
+
 
 def _qlog(c: int, tot: int) -> float:
     """ln(c/tot) in integer micro-units (as an exact double)."""
@@ -160,8 +163,6 @@ def unigram_train(
     text_col: str,
     vocab_size: int = 64,
     iters: int = 3,
-    max_piece_len: int = 4,
-    min_count: int = 2,
 ) -> tuple[list[tuple[str, float]], list[float]]:
     """Train a unigram piece vocabulary.  Returns ``(vocab, losses)``
     where ``vocab`` is ``[(piece, logprob)]`` sorted by (-logprob,
@@ -174,6 +175,7 @@ def unigram_train(
     size, the same one-job-per-round shape as the BPE trainer.
     """
     words = _distinct_words(df, text_col).localCheckpoint(eager=False)
+    max_piece_len, min_count = MAX_PIECE_LEN, 2
 
     # seed inventory: every substring up to max_piece_len with corpus
     # frequency >= min_count, plus ALL single chars (decodability)
@@ -228,7 +230,6 @@ def unigram_segment(
     text_col: str,
     id_col: str,
     vocab: list[tuple[str, float]],
-    max_piece_len: int = 4,
 ) -> DataFrame:
     """Viterbi-segment documents under a trained vocabulary —
     ``(doc, n_words, n_pieces)``.  Same per-TYPE shape as
@@ -241,7 +242,7 @@ def unigram_segment(
     # engine-portably too (the oracle quantizes vocabf identically)
     scores = quantize_scores(dict(vocab))
     viterbi = _make_viterbi(
-        scores, max_piece_len, unk=UNK_LOGPROB * LOG_SCALE
+        scores, MAX_PIECE_LEN, unk=UNK_LOGPROB * LOG_SCALE
     )  # pickles by value
 
     toks = df.select(

@@ -109,7 +109,6 @@ def unpartitioned_unordered_windows(plan: str) -> list[str]:
 def scale_lint(
     df: DataFrame,
     single_row_broadcast_ok: bool = False,
-    summary_window_ok: bool = False,
 ) -> list[str]:
     """Lint a DataFrame's physical plan for the shapes that silently
     stop scaling at 100× — the library form of the repo-wide test
@@ -123,10 +122,7 @@ def scale_lint(
     - ``global window``: an ORDERED window with no partition keys —
       funnels the whole input through one task;
     - ``unordered global window``: an ``OVER ()`` with neither
-      partition nor sort keys — the same single-task funnel (pass
-      ``summary_window_ok=True`` when the windowed input is
-      summary-sized by construction: bin tables, LIMIT-bounded
-      shortlists, category² cells).
+      partition nor sort keys — the same single-task funnel.
 
     (An ``Exchange SinglePartition`` is deliberately NOT flagged: the
     final step of every grand-total aggregate plans one legitimately,
@@ -151,14 +147,12 @@ def scale_lint(
             f"({spec[:60]}...)"
         )
         break
-    if not summary_window_ok:
-        for spec in unpartitioned_unordered_windows(plan):
-            findings.append(
-                "unordered global window: OVER () with no partition or "
-                "sort keys (fine only over summary-sized input; pass "
-                "summary_window_ok=True if so)"
-            )
-            break
+    for spec in unpartitioned_unordered_windows(plan):
+        findings.append(
+            "unordered global window: OVER () with no partition or "
+            "sort keys (fine only over summary-sized input)"
+        )
+        break
     return findings
 
 

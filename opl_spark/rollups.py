@@ -269,7 +269,6 @@ class RollupStore:
         fact: str,
         query_log: list[dict],
         max_rollups: int = 3,
-        max_candidates: int = 64,
     ) -> list[dict]:
         """Lattice ADVISOR — the classic companion to materialized
         pre-aggregation (cf. SQL Server's Database Tuning Advisor /
@@ -289,12 +288,13 @@ class RollupStore:
 
         Driver state is candidate-set-sized (distinct query shapes in
         the log), never data-sized.  A log with more than
-        ``max_candidates`` distinct shapes keeps the most frequent
+        ``max_candidates`` (64) distinct shapes keeps the most frequent
         ones (one aggregate expression per candidate goes into the
         single estimation pass — unbounded shapes would bloat that
         plan); the trim is explicit, not silent: trimmed shapes still
         COUNT toward the covers/benefit of any kept candidate that
         contains them, they just can't be recommended themselves."""
+        max_candidates = 64
         shapes: dict[frozenset, int] = {}
         for params in query_log:
             q, group_cols = engine._plan(fact, *(params.get(k) for k in CORE_PARAMS))

@@ -578,7 +578,6 @@ class SnapshotEngine:
         pivot_date: _dt.date | str,
         facts: list[FactQuery],
         only_fact: str | None = None,
-        execution_ts: _dt.datetime | None = None,
     ) -> dict[str, int]:
         """One snapshot run (the ``-c add -d <date> [-f fact]`` CLI,
         OLAP.php:388-403).  Returns {fact_table: appended_row_count}.
@@ -607,7 +606,7 @@ class SnapshotEngine:
                 raise ValueError(f"invalid query type {fq.query_type!r}")  # OLAP.php:348
             if self.strict_type_parity:
                 df = degrade_types_strict(df)  # OLAP.php:51-58 parity
-            df = attach_audit(df, fq.query_id, scope, execution_ts)
+            df = attach_audit(df, fq.query_id, scope)
             # row count observed as a side effect of the write itself —
             # a separate .count() would re-execute the fact query
             obs = Observation(f"snapshot_{fq.fact_table}_{fq.query_id}")

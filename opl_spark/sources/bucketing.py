@@ -43,9 +43,8 @@ def write_bucketed(
     table: str,
     bucket_col: str,
     num_buckets: int = 8,
-    sort: bool = True,
 ) -> None:
-    """Save as a bucketed (and optionally sorted) catalog table.
+    """Save as a bucketed, bucket-sorted catalog table.
 
     Pre-repartitioning on the bucket column keeps it to one file per
     bucket per write instead of one per task.  Rewrites are idempotent
@@ -56,14 +55,13 @@ def write_bucketed(
     any warehouse scheme works)."""
     spark = df.sparkSession
     drop_table_and_location(spark, table)
-    writer = (
+    (
         df.repartition(num_buckets, bucket_col)
         .write.mode("overwrite")
         .bucketBy(num_buckets, bucket_col)
+        .sortBy(bucket_col)
+        .saveAsTable(table)
     )
-    if sort:
-        writer = writer.sortBy(bucket_col)
-    writer.saveAsTable(table)
 
 
 def materialize_parquet_atomic(
@@ -130,7 +128,6 @@ def bucketed_table_atomic(
     build,
     bucket_col: str,
     num_buckets: int = 8,
-    sort: bool = True,
 ) -> str:
     """Content-addressed BUCKETED catalog table, safe for concurrent
     sessions sharing one warehouse — the bucketed-layout sibling of
@@ -175,15 +172,14 @@ def bucketed_table_atomic(
         # a dot path stays hidden from parquet readers even in that
         # outcome, so a rename loser can never pollute the winner
         tmp_loc = f"{wh}/.{tmp_table}"
-        writer = (
+        (
             df.repartition(num_buckets, bucket_col)
             .write.mode("overwrite")
             .option("path", tmp_loc)  # external: drop removes metadata only
             .bucketBy(num_buckets, bucket_col)
+            .sortBy(bucket_col)
+            .saveAsTable(tmp_table)
         )
-        if sort:
-            writer = writer.sortBy(bucket_col)
-        writer.saveAsTable(tmp_table)
         if not fs.rename(jvm.org.apache.hadoop.fs.Path(tmp_loc), final_path):
             fs.delete(jvm.org.apache.hadoop.fs.Path(tmp_loc), True)
             if not fs.exists(success):
@@ -193,10 +189,9 @@ def bucketed_table_atomic(
                 )
         spark.sql(f"DROP TABLE IF EXISTS {tmp_table}")
     schema_ddl = df._jdf.schema().toDDL()
-    sorted_clause = f"SORTED BY ({bucket_col}) " if sort else ""
     spark.sql(
         f"CREATE TABLE IF NOT EXISTS {final_table} ({schema_ddl}) "
-        f"USING PARQUET CLUSTERED BY ({bucket_col}) {sorted_clause}"
+        f"USING PARQUET CLUSTERED BY ({bucket_col}) SORTED BY ({bucket_col}) "
         f"INTO {num_buckets} BUCKETS LOCATION '{loc}'"
     )
     return final_table

@@ -150,11 +150,9 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def register_sources(
-    spark: SparkSession, sf_dir: str, tables: tuple[str, ...] = TABLES
-) -> None:
+def register_sources(spark: SparkSession, sf_dir: str) -> None:
     """Register every source table as a temp view named after itself."""
-    for name in tables:
+    for name in TABLES:
         load_table(spark, sf_dir, name).createOrReplaceTempView(name)
 
 
@@ -206,14 +204,13 @@ def register_jdbc_catalog(
     spark: SparkSession,
     name: str,
     url: str,
-    pushdown_aggregates: bool = True,
     **options: str,
 ) -> None:
     """DSv2 JDBC catalog registration — the scale path PAST the view
     indirection of :func:`register_jdbc_sources`: tables resolve as
-    ``<name>.<schema>.<table>`` and, with ``pushDownAggregate``,
-    GROUP BY + COUNT/SUM/MIN/MAX/AVG execute INSIDE the source
-    database (the plan shows ``PushedAggregates`` /
+    ``<name>.<schema>.<table>`` and, with ``pushDownAggregate`` (on
+    unless ``options`` turn it off), GROUP BY + COUNT/SUM/MIN/MAX/AVG
+    execute INSIDE the source database (the plan shows ``PushedAggregates`` /
     ``PushedGroupByExpressions`` on the scan) — at 100 TB the source
     returns group-count rows instead of streaming the fact spine to
     Spark.  This is the closest Spark-native analogue of the
@@ -238,9 +235,8 @@ def register_jdbc_catalog(
         "org.apache.spark.sql.execution.datasources.v2.jdbc.JDBCTableCatalog",
     )
     spark.conf.set(f"{prefix}.url", url)
-    if pushdown_aggregates:
-        spark.conf.set(f"{prefix}.pushDownAggregate", "true")
-        spark.conf.set(f"{prefix}.pushDownLimit", "true")
+    spark.conf.set(f"{prefix}.pushDownAggregate", "true")
+    spark.conf.set(f"{prefix}.pushDownLimit", "true")
     for k, v in options.items():
         spark.conf.set(f"{prefix}.{k}", str(v))
     if already:

@@ -130,20 +130,21 @@ def stream_to_fact(
     q.awaitTermination(timeout_sec)
 
 
-def read_stream_fact(
-    spark: SparkSession, fact_path: str, keys: tuple[str, ...] = ("window_start", "event_type")
-) -> DataFrame:
+def read_stream_fact(spark: SparkSession, fact_path: str) -> DataFrame:
     """Read a :func:`stream_to_fact` sink with update-mode semantics
-    applied: of a window's several emissions, only the LAST (highest
-    ``__batch_id``) is the final value — earlier ones are superseded
-    partials and must not be summed.  This is the reader every OLAP
+    applied: of a ``(window_start, event_type)`` window's several
+    emissions, only the LAST (highest ``__batch_id``) is the final
+    value — earlier ones are superseded partials and must not be
+    summed.  This is the reader every OLAP
     consumer of a streamed fact should go through."""
     from pyspark.sql.window import Window
 
     # not open_parquet: the sink's _spark_metadata log decides which
     # files are visible, which one footer of a listed file cannot know
     raw = spark.read.parquet(fact_path)
-    w = Window.partitionBy(*keys).orderBy(F.col("__batch_id").desc())
+    w = Window.partitionBy("window_start", "event_type").orderBy(
+        F.col("__batch_id").desc()
+    )
     return (
         raw.withColumn("__rn", F.row_number().over(w))
         .filter(F.col("__rn") == 1)
@@ -155,17 +156,16 @@ def hopping_counts(
     events: DataFrame,
     window: str = "10 minutes",
     slide: str = "5 minutes",
-    watermark: str | None = "10 minutes",
 ) -> DataFrame:
     """Hopping (sliding) window counts + exact value sum per event
     type: each event lands in ``window/slide`` overlapping windows —
     Spark's ``window(ts, window, slide)`` generates the copies
     map-side, so the fan-out is a bounded constant (2 here), never a
     range self-join.  Batch-or-streaming polymorphic like
-    :func:`windowed_counts`."""
+    :func:`windowed_counts` (a stream gets a 10-minute watermark)."""
     df = events
-    if watermark is not None and df.isStreaming:
-        df = df.withWatermark("ts", watermark)
+    if df.isStreaming:
+        df = df.withWatermark("ts", "10 minutes")
     return (
         df.groupBy(F.window("ts", window, slide).alias("w"), "event_type")
         .agg(
@@ -185,10 +185,10 @@ def stage_time_ordered_arrivals(
     df: DataFrame,
     out_dir: str,
     n_files: int,
-    order_cols: tuple[str, ...] = ("ts", "event_id"),
 ) -> str:
     """Stage a batch frame as ``n_files`` CONTIGUOUS TIME SLICES named
-    in arrival order (``arrival-001.parquet`` …) — the replay input
+    in arrival order (``arrival-001.parquet`` …), sliced over the
+    ``(ts, event_id)`` order — the replay input
     for a ``maxFilesPerTrigger=1`` file stream that mimics production
     arrival (events reach a stream roughly in event time).
 
@@ -206,7 +206,7 @@ def stage_time_ordered_arrivals(
 
     os.makedirs(out_dir, exist_ok=True)
     sliced = df.withColumn(
-        "__slice", F.ntile(n_files).over(Window.orderBy(*order_cols))
+        "__slice", F.ntile(n_files).over(Window.orderBy("ts", "event_id"))
     )
     scratch = tempfile.mkdtemp(prefix="opl-arrivals-")
     try:

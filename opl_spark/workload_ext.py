@@ -245,11 +245,7 @@ def q_dedup_ngram_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ngram_jaccard_pairs(docs, "text", "doc_id", n=3, threshold=0.2, max_doc_freq=5)
 
 
-def _minhash_chain(
-    num_hashes: int = 64,
-    bands: int = 16,
-    max_bucket: int = 1000,
-) -> str:
+def _minhash_chain() -> str:
     """The CTE chain of the PORTABLE MinHash-LSH pipeline (mirrors
     ``operators/dedup.py:minhash_signatures`` /
     ``minhash_lsh_candidates`` / ``minhash_dedup_pairs`` with
@@ -261,6 +257,8 @@ def _minhash_chain(
     int64-exact.  Starts after the ``WITH`` keyword so callers can
     prepend ``RECURSIVE`` and append further CTEs."""
     from opl_spark.operators.dedup import MINHASH_PRIME, minhash_permutation
+
+    num_hashes, bands, max_bucket = 64, 16, 1000
 
     rows = num_hashes // bands
     perm_rows = ",\n    ".join(
@@ -315,9 +313,10 @@ ints AS MATERIALIZED (
 )"""
 
 
-def _minhash_oracle(threshold: float = 0.5) -> str:
+def _minhash_oracle() -> str:
     """Verified-pairs form of the portable MinHash-LSH replay: the
     :func:`_minhash_chain` candidates scored by exact Jaccard."""
+    threshold = 0.5
     return f"""
 WITH {_minhash_chain()}
 SELECT c.id_a, c.id_b,
@@ -405,9 +404,7 @@ def q_dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
     return embedding_dup_pairs(emb, "embedding", "vec_id", "label", threshold=0.3)
 
 
-def _srp_oracle(
-    dims: int = 64, n_bits: int = 24, bands: int = 4, threshold: float = 0.3
-) -> str:
+def _srp_oracle() -> str:
     """SQL replay of srp_lsh_pairs(portable=True): the plane literals
     come from the SAME driver-side generator as the Spark plan, buckets
     replay in integer arithmetic, and the verify is the INTEGER-EXACT
@@ -419,6 +416,8 @@ def _srp_oracle(
     from fractions import Fraction
 
     from opl_spark.operators.similarity import srp_plane_coeff
+
+    dims, n_bits, bands, threshold = 64, 24, 4, 0.3
 
     frac = Fraction(str(threshold))
     t_num, t_den = frac.numerator, frac.denominator
@@ -632,12 +631,11 @@ cent{t} AS MATERIALIZED (
     return "".join(parts)
 
 
-def _ivf_kmeans_oracle(
-    k: int = 8, iters: int = 3, dim: int = 64, nprobe: int = 2, topk: int = 10
-) -> str:
+def _ivf_kmeans_oracle() -> str:
     """DuckDB replay of the integer k-means IVF pipeline
     (:func:`_ivf_kmeans_chain` prefix): integer cell probing, then the
     same round-6 cosine ranking the brute-force oracle hash-checks."""
+    k, iters, dim, nprobe, topk = 8, 3, 64, 2, 10
     parts = ["WITH ", _ivf_kmeans_chain(k, iters, dim)]
     parts.append(f""",
 qd AS MATERIALIZED (
@@ -2374,14 +2372,7 @@ def _pq_fd(a: str, b: str) -> str:
     )
 
 
-def _pq_chain(
-    m: int = 8,
-    k: int = 16,
-    iters: int = 8,
-    dim: int = 64,
-    sample: int = 2048,
-    members_cte: str | None = None,
-) -> str:
+def _pq_chain(dim: int = 64, members_cte: str | None = None) -> str:
     """CTE chain replaying the integer PQ pipeline (mirrors
     ``operators/similarity.py:pq_train_quantized`` /
     ``pq_encode_quantized`` / ``pq_topk_quantized``): quantized
@@ -2391,6 +2382,7 @@ def _pq_chain(
     inputs are all integers — bit-identical doubles on every engine.
     Ends with a ``psim`` CTE of (id, psim); when ``members_cte`` is
     given, encoding/scoring restricts to those ids (the IVF pool)."""
+    m, k, iters, sample = 8, 16, 8, 2048
     sub = dim // m
     member_join = (
         f"JOIN {members_cte} mm ON mm.id = p.id" if members_cte else ""
@@ -2472,7 +2464,8 @@ psim AS MATERIALIZED (
     return "".join(parts)
 
 
-def _pq_topk_oracle(topk: int = 10) -> str:
+def _pq_topk_oracle() -> str:
+    topk = 10
     return f"""
 WITH {_pq_chain()}
 SELECT id, psim,
@@ -2580,14 +2573,13 @@ def q_token_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     return token_entropy(docs, "text", "doc_id")
 
 
-def _ivfpq_oracle(
-    ncells: int = 8, nprobe: int = 4, dim: int = 64, topk: int = 10
-) -> str:
+def _ivfpq_oracle() -> str:
     """IVF-PQ replay: the quantized coarse inverted file (seed
     centroids = the k lowest-id vectors on the integer grid; integer
     cell assignment and probing — the iters=0 case of the k-means
     oracle) feeding the integer-PQ ADC chain restricted to the probed
     pool."""
+    ncells, nprobe, dim, topk = 8, 4, 64, 10
     coarse = f""",
 cseed AS MATERIALIZED (
     SELECT row_number() OVER (ORDER BY id) - 1 AS cell, id
@@ -2711,10 +2703,11 @@ def q_cms_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     return top.join(est, "term").select("term", "corpus_freq", "est")
 
 
-def _pq_rerank_oracle(rerank: int = 16, topk: int = 10) -> str:
+def _pq_rerank_oracle() -> str:
     """ADC shortlist (integer-exact ordering) reranked by the exact
     round-6 cosine — the same scoring tail the brute-force oracle
     hash-checks."""
+    rerank, topk = 16, 10
     return f"""
 WITH {_pq_chain()},
 short AS MATERIALIZED (
@@ -2798,13 +2791,14 @@ def q_corpus_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _minhash_keep_best_oracle(threshold: float = 0.2) -> str:
+def _minhash_keep_best_oracle() -> str:
     """The full-composition replay: portable MinHash-LSH candidates →
     exact-Jaccard verify at ``threshold`` → min-label connected
     components (recursive reach) → keep-the-longest rule (n_chars
     desc, min-id ties) — the same CC/keep-best tail the hash-checked
     q_keep_best oracle uses, fed by LSH pairs instead of the exact
     inverted index."""
+    threshold = 0.2
     return f"""
 WITH RECURSIVE {_minhash_chain()},
 mhp AS MATERIALIZED (
@@ -2915,7 +2909,8 @@ st{t} AS MATERIALIZED (
     return "".join(parts)
 
 
-def _bpe_merges_oracle(num_merges: int = 10) -> str:
+def _bpe_merges_oracle() -> str:
+    num_merges = 10
     steps = "\nUNION ALL ".join(
         f'SELECT CAST({t - 1} AS INTEGER) AS rank, l AS "left", r AS "right", '
         f"c AS count FROM win{t}"
@@ -2973,11 +2968,12 @@ def q_dup_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _bpe_segment_oracle(num_merges: int = 10) -> str:
+def _bpe_segment_oracle() -> str:
     """Apply-side replay: per-word token counts read straight off the
     trained chain's final states (``len(symbols)`` of ``stN``), then
     the per-doc ``Σ cnt·w_tokens`` join — encode_vocab's rank-order
     merge replay equals the training states by construction."""
+    num_merges = 10
     return f"""
 WITH {_bpe_chain(num_merges)},
 wtok AS MATERIALIZED (
@@ -4048,7 +4044,7 @@ def q_salted_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _pca_power_oracle(k: int = 2, iters: int = 12, dim: int = 64) -> str:
+def _pca_power_oracle() -> str:
     """Unrolled-CTE DuckDB replay of the integer-exact matrix-squaring
     PCA (mirrors ``operators/similarity.py:pca_power_project``): the
     integer scatter matrix, ``iters`` squarings per component
@@ -4058,6 +4054,7 @@ def _pca_power_oracle(k: int = 2, iters: int = 12, dim: int = 64) -> str:
     wire), sign canonicalization, and the floor-division projection.
     DuckDB ``//`` truncates while the operator floors, so every signed
     division goes through an explicit floor-division CASE."""
+    k, iters, dim = 2, 12, 64
 
     def fd(a: str, b: str) -> str:
         # floor division for a possibly-negative numerator, positive b
@@ -4513,7 +4510,7 @@ def q_mask_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     return mask_repeated_spans(docs, "text", "doc_id", n=10)
 
 
-def _star_cc_oracle(rounds: int = 10) -> str:
+def _star_cc_oracle() -> str:
     """Entity-resolution replay at linkage-graph scale: the fuzzy pair
     set (``_FUZZY_P_CTE``) fed through ``rounds`` unrolled alternating
     large-star/small-star contractions (Kiveris et al. 2014 — the same
@@ -4525,6 +4522,7 @@ def _star_cc_oracle(rounds: int = 10) -> str:
     digit-substitution component, the sf1/sf0.3 timeout recorded in
     CORRECTNESS_SF1.json; per-round state here is one row per directed
     edge."""
+    rounds = 10
     ctes = [f"e0 AS MATERIALIZED (SELECT a AS lo, b AS hi FROM p)"]
     for r in range(rounds):
         ctes.append(f"""
@@ -5344,9 +5342,7 @@ def q_variant_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
 _UNIGRAM_MAX_WORD = 12
 
 
-def _unigram_chain(
-    iters: int, max_word: int = _UNIGRAM_MAX_WORD, max_piece: int = 4
-) -> str:
+def _unigram_chain(iters: int) -> str:
     """CTE chain replaying unigram-LM hard-EM training (mirrors
     ``operators/unigram.py:unigram_train``): substring seed counts,
     then per-iteration Viterbi E-steps as an unrolled forward DP
@@ -5363,6 +5359,7 @@ def _unigram_chain(
     DuckDB error() (LOUD: a silent empty-CTE guard produced a
     confusing zero-row mismatch).  Ends with ``sc{iters}v`` (the
     post-EM scores) and the ``uf*`` final-count Viterbi chain."""
+    max_word, max_piece = _UNIGRAM_MAX_WORD, 4
 
     def viterbi(tag: str, scores: str) -> str:
         # forward DP + backtrace + freq-weighted piece counts
@@ -5490,7 +5487,8 @@ vocabf AS MATERIALIZED (
     FROM keptc)"""
 
 
-def _unigram_train_oracle(iters: int = 3, vocab_size: int = 64) -> str:
+def _unigram_train_oracle() -> str:
+    iters, vocab_size = 3, 64
     return f"""
 WITH {_unigram_chain(iters)}{_unigram_vocab_tail(iters, vocab_size)}
 SELECT piece, ROUND(lp, 6) AS logprob FROM vocabf
@@ -5525,13 +5523,12 @@ def q_unigram_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _unigram_tokenize_oracle(
-    iters: int = 2, max_word: int = _UNIGRAM_MAX_WORD
-) -> str:
+def _unigram_tokenize_oracle() -> str:
     """Apply-side replay: train (2 EM rounds) + prune as in the train
     oracle, then one more unrolled Viterbi under the pruned vocab;
     per-word piece counts come from the backtrace rows and join back
     to the per-document token stream."""
+    iters, max_word = 2, _UNIGRAM_MAX_WORD
     npieces = "\n    UNION ALL ".join(
         f"SELECT w, freq, piece FROM ugr{j}" for j in range(1, max_word + 1)
     )
@@ -5562,13 +5559,12 @@ GROUP BY d.doc
 """
 
 
-def _unigram_apply_cte(
-    max_word: int = _UNIGRAM_MAX_WORD, max_piece: int = 4
-) -> str:
+def _unigram_apply_cte(max_word: int = _UNIGRAM_MAX_WORD) -> str:
     """The forward-DP + backtrace CTEs of one Viterbi pass under
     ``vocabfv`` (tag ``ug``) — same structure the training chain
     unrolls, emitted as a bare fragment appended after the vocab
     tail."""
+    max_piece = 4
     s = [""",
 ugb0 AS MATERIALIZED (
     SELECT w, CAST(0.0 AS DOUBLE) AS sc FROM wv)"""]
@@ -7976,13 +7972,14 @@ def q_topk_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     return space_saving_topk(toks, "tok", k=20, counters=200)
 
 
-def _mmr_oracle(k: int = 10, shortlist: int = 50, lam_pct: int = 70) -> str:
+def _mmr_oracle() -> str:
     """Unrolled-CTE DuckDB replay of the quantized MMR greedy chain
     (mirrors ``operators/similarity.py:with_unit_quantized`` /
     ``mmr_select``): vectors quantize to 1e-6 unit integers, so every
     dot product is a sum of integer-valued doubles — exact under any
     summation order — and each of the k greedy argmax steps is one
     CTE with an integer score and a min-id tie-break."""
+    k, shortlist, lam_pct = 10, 50, 70
     head = f"""
 WITH pool AS (SELECT vec_id AS id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
 wq AS (SELECT id, list_transform(v, x -> floor(x * 1000 + 0.5)) AS w FROM pool),
@@ -10025,7 +10022,8 @@ def q_revenue_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _bpe_fertility_oracle(num_merges: int = 10) -> str:
+def _bpe_fertility_oracle() -> str:
+    num_merges = 10
     return f"""
 WITH {_bpe_chain(num_merges)},
 wtok AS MATERIALIZED (
@@ -10626,8 +10624,10 @@ def q_distinct_n(spark: SparkSession, sf_dir: str) -> DataFrame:
     return distinct_ngram_ratios(docs, "text", "source")
 
 
-def _retrieval_eval_oracle(n_queries: int = 20, k: int = 10) -> str:
+def _retrieval_eval_oracle() -> str:
     from opl_spark.operators.evaluate import ndcg_weight_micro
+
+    n_queries, k = 20, 10
 
     wts = ", ".join(f"({i}, {ndcg_weight_micro(i)})" for i in range(1, k + 1))
     prefix, acc = ["(0, 0)"], 0
@@ -10770,8 +10770,10 @@ def q_curriculum_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     return curriculum_interleave(docs, "doc_id", "source")
 
 
-def _mrr_oracle(n_queries: int = 20, k: int = 10) -> str:
+def _mrr_oracle() -> str:
     from opl_spark.operators.evaluate import mrr_weight_micro
+
+    n_queries, k = 20, 10
 
     rrs = ", ".join(f"({i}, {mrr_weight_micro(i)})" for i in range(1, k + 1))
     return f"""
@@ -11150,7 +11152,8 @@ def q_heldout_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _label_noise_oracle(n_queries: int = 100, k: int = 5, min_disagree: int = 4) -> str:
+def _label_noise_oracle() -> str:
+    n_queries, k, min_disagree = 100, 5, 4
     return f"""
 WITH pool AS MATERIALIZED (
     SELECT vec_id AS id, CAST(embedding AS DOUBLE[]) AS v, label FROM embeddings
@@ -11199,13 +11202,15 @@ def q_label_noise(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _lsh_tuning_oracle(threshold: float = 0.5, budget: int = 64) -> str:
+def _lsh_tuning_oracle() -> str:
     """Independent replay of the banding S-curve table: one SELECT per
     (bands × rows) factorization recomputing 1 − (1 − t^r)^b with the
     SAME multiply-chain shape as the Spark side (pow_chain_sql) — pure
     IEEE double multiplies, so both engines agree bit-for-bit where a
     libm pow() could differ in the final ulp."""
     from opl_spark.operators.dedup import _factorizations, banding_curve_sql
+
+    threshold, budget = 0.5, 64
 
     below = threshold / 2
     parts = []
@@ -11237,9 +11242,7 @@ def q_lsh_tuning(spark: SparkSession, sf_dir: str) -> DataFrame:
     return banding_curve_frame(spark, 0.5, 64)
 
 
-def _srp_incremental_oracle(
-    dims: int = 64, n_bits: int = 24, bands: int = 4, threshold: float = 0.3
-) -> str:
+def _srp_incremental_oracle() -> str:
     """Replay of the storeless SRP-incremental probe: same plane
     literals and integer bucket arithmetic as _srp_oracle, split into
     store (vec_id % 5 <> 0) and batch (vec_id % 5 = 0), candidates
@@ -11247,6 +11250,8 @@ def _srp_incremental_oracle(
     per batch vector (max cos, min stored id on ties — the rounded
     cosine orders, matching srp_probe's struct-max)."""
     from opl_spark.operators.similarity import srp_plane_coeff
+
+    dims, n_bits, bands, threshold = 64, 24, 4, 0.3
 
     rows = n_bits // bands
     vals = ", ".join(
@@ -11408,10 +11413,11 @@ def q_chi2_independence(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _rendezvous_oracle(k: int = 8) -> str:
+def _rendezvous_oracle() -> str:
     """Replay of HRW sharding: per (doc, shard) weight from the same
     md5-derived 32-bit hash, argmax per doc (ties to the larger shard,
     matching array_max's struct order), then the per-shard rollup."""
+    k = 8
     return f"""
 WITH w AS (
     SELECT d.doc_id, d.n_chars, s.s AS shard,
@@ -11461,9 +11467,7 @@ def q_rendezvous_shard(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _ivf_recall_oracle(
-    k: int = 8, iters: int = 3, dim: int = 64, topk: int = 10
-) -> str:
+def _ivf_recall_oracle() -> str:
     """Replay of the IVF recall curve over the SHARED k-means chain
     (:func:`_ivf_kmeans_chain` — the same centroids
     q_similarity_ivf_kmeans probes): cells ranked by integer distance
@@ -11471,6 +11475,7 @@ def _ivf_recall_oracle(
     the brute-force round-6 cosine top-{topk} as ground truth, then
     recall@nprobe = |truth in the first nprobe cells| / {topk} for
     nprobe = 1..{k}."""
+    k, iters, dim, topk = 8, 3, 64, 10
     return f"""
 WITH {_ivf_kmeans_chain(k, iters, dim)},
 qd AS MATERIALIZED (
@@ -11596,15 +11601,15 @@ def q_ivf_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _srp_recall_oracle(
-    dims: int = 64, n_bits: int = 24, bands: int = 4, topk: int = 10
-) -> str:
+def _srp_recall_oracle() -> str:
     """Replay of the SRP recall curve: brute-force cosine top-{topk}
     truth, integer band keys (the exact q_srp_lsh construction —
     shared ``srp_plane_coeff`` literals, integer dot products, sign
     bits packed per band), each truth vector's FIRST band agreeing
     with the query, then recall@n_bands for n_bands = 1..{bands}."""
     from opl_spark.operators.similarity import srp_plane_coeff
+
+    dims, n_bits, bands, topk = 64, 24, 4, 10
 
     rows = n_bits // bands
     vals = ", ".join(
@@ -11927,12 +11932,13 @@ def q_lsh_recall_measured(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _matching_oracle(rounds: int = 3) -> str:
+def _matching_oracle() -> str:
     """Unrolled replay of dominant-edge matching: per round,
     row_number over (w DESC, partner ASC) on BOTH sides — rs = rp = 1
     is exactly the operator's mutual struct-max — then matched nodes
     drop out.  Integer weights (cents × (100 − disc%)) make the
     argmax tie-breaks engine-portable."""
+    rounds = 3
     parts = ["""
 WITH e0 AS MATERIALIZED (
     SELECT l_suppkey AS s, l_partkey AS p,

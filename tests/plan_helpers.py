@@ -3,6 +3,7 @@ DataFrame's formatted plan prunes, pushes down and reads."""
 
 from __future__ import annotations
 
+import contextlib
 import re
 
 from pyspark.sql import DataFrame
@@ -37,3 +38,15 @@ def read_schemas(df: DataFrame) -> list[str]:
         if "ReadSchema:" in ln:
             out.append(ln.split("ReadSchema:", 1)[1].strip())
     return out
+
+
+@contextlib.contextmanager
+def shuffle_partitions(spark, n: int):
+    """Run the block with ``spark.sql.shuffle.partitions`` set to ``n``,
+    the count the range-partitioned rank passes spread over."""
+    old = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", str(n))
+    try:
+        yield
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", old)

@@ -373,15 +373,15 @@ def test_feature_hash_fixed_width_and_signed(spark):
     df = spark.createDataFrame(
         [(1, "alpha beta alpha"), (2, "gamma")], "doc_id long, text string"
     )
-    rows = feature_hash(df, "text", "doc_id", dim=8).collect()
-    assert all(0 <= r["bucket"] < 8 for r in rows)
+    rows = feature_hash(df, "text", "doc_id").collect()
+    assert all(0 <= r["bucket"] < 64 for r in rows)
     # 'alpha' appears twice -> its bucket's |v| for doc 1 is 2 (same sign)
     by_doc = {}
     for r in rows:
         by_doc.setdefault(r["doc"], []).append(abs(r["v"]))
     assert 2 in by_doc[1]
     # deterministic across calls
-    again = feature_hash(df, "text", "doc_id", dim=8).collect()
+    again = feature_hash(df, "text", "doc_id").collect()
     assert sorted(map(tuple, again)) == sorted(map(tuple, rows))
 
 
@@ -409,7 +409,7 @@ def test_label_noise_flags_planted_mislabel(spark):
             lab = 1  # planted wrong label inside cluster 0
         rows.append((i, [base[0] + 0.001 * i, base[1], 0.01], lab))
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>, label int")
-    out = label_noise(df, "embedding", "vec_id", "label", n_queries=20, k=5)
+    out = label_noise(df, "embedding", "vec_id", "label")
     flagged = {r["vec_id"] for r in out.collect()}
     assert 0 in flagged
     # correctly-labeled cluster cores are not flagged

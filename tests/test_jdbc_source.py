@@ -264,9 +264,8 @@ def test_jdbc_v2_catalog_reregistration_takes_effect(spark, jdbc_url):
     assert "PushedAggregates" in plan  # instance now cached by name
 
     register_jdbc_catalog(
-        spark, "clavis3", jdbc_url, pushdown_aggregates=False, driver=DRIVER
+        spark, "clavis3", jdbc_url, driver=DRIVER, pushDownAggregate="false"
     )
-    spark.conf.set("spark.sql.catalog.clavis3.pushDownAggregate", "false")
     plan = spark.sql(q)._jdf.queryExecution().executedPlan().toString()
     assert "PushedAggregates" not in plan, plan  # new conf took effect
 
@@ -275,7 +274,7 @@ def test_jdbc_v2_catalog_reregistration_takes_effect(spark, jdbc_url):
     spark.sql("USE clavis3.APP")
     try:
         register_jdbc_catalog(
-            spark, "clavis3", jdbc_url, pushdown_aggregates=False, driver=DRIVER
+            spark, "clavis3", jdbc_url, driver=DRIVER, pushDownAggregate="false"
         )
         assert spark.catalog.currentCatalog() == "clavis3"
         assert spark.sql("SELECT current_schema()").first()[0] == "APP"

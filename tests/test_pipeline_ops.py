@@ -394,7 +394,7 @@ def test_pq_encode_deterministic_and_bounded(spark):
     from opl_spark.operators.similarity import pq_encode_quantized, pq_train_quantized
 
     df = _pq_lossless_df(spark)
-    book = pq_train_quantized(df, "embedding", "vec_id", m=4, k=2, sample=32)
+    book = pq_train_quantized(df, "embedding", "vec_id", m=4, k=2)
     a = {r["id"]: tuple(r["codes"]) for r in pq_encode_quantized(df, "embedding", "vec_id", book).collect()}
     b = {r["id"]: tuple(r["codes"]) for r in pq_encode_quantized(df, "embedding", "vec_id", book).collect()}
     assert a == b
@@ -410,7 +410,7 @@ def test_pq_topk_exact_on_lossless_data(spark):
     )
 
     df = _pq_lossless_df(spark)
-    book = pq_train_quantized(df, "embedding", "vec_id", m=4, k=2, sample=32)
+    book = pq_train_quantized(df, "embedding", "vec_id", m=4, k=2)
     q = [0.0, 1.0, 1.0, 0.0, 0.0, 1.0, 1.0, 0.0]
     exact = [(r["id"], r["sim"]) for r in cosine_topk(df, "embedding", "vec_id", q, k=5).collect()]
     pq = [(r["id"], r["psim"]) for r in pq_topk_quantized(df, "embedding", "vec_id", q, book, k=5).collect()]
@@ -437,7 +437,7 @@ def test_pq_topk_rejects_zero_norm_query(spark):
     from opl_spark.operators.similarity import pq_topk_quantized, pq_train_quantized
 
     df = _pq_lossless_df(spark)
-    book = pq_train_quantized(df, "embedding", "vec_id", m=4, k=2, sample=32)
+    book = pq_train_quantized(df, "embedding", "vec_id", m=4, k=2)
     with _pytest.raises(ValueError, match="zero norm"):
         pq_topk_quantized(df, "embedding", "vec_id", [0.0] * 8, book, k=3)
 
@@ -473,7 +473,7 @@ def test_pq_rerank_full_shortlist_equals_exact(spark, sf_dir):
 
     emb = load_table(spark, sf_dir, "embeddings")
     probe = [float(x) for x in emb.filter(F.col("vec_id") == 0).first()["embedding"]]
-    book = pq_train_quantized(emb, "embedding", "vec_id", m=4, k=16, sample=256, iters=3)
+    book = pq_train_quantized(emb, "embedding", "vec_id", m=4, k=16)
     n = emb.count()
     # shortlist covering the whole corpus -> rerank IS exact top-k
     full = pq_topk_quantized(emb, "embedding", "vec_id", probe, book, k=10, rerank=(n // 10) + 1)
@@ -829,7 +829,7 @@ def test_star_components_converge_on_long_chain(spark):
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(n - 1)], "id_a long, id_b long"
     )
-    out = dedup_clusters_star(pairs, max_iter=12)
+    out = dedup_clusters_star(pairs)
     rows = {r["doc"]: r["keeper"] for r in out.collect()}
     assert len(rows) == n
     assert set(rows.values()) == {0}

@@ -106,14 +106,12 @@ def test_pack_sequences_contiguous_and_ordered(spark, n_tok, budget):
     reproducibility reduced to arithmetic, shard by shard."""
     from opl_spark.operators.text import pack_sequences
 
-    shards = 4
+    shards = 16  # pack_sequences' shard count
     rows = [(i, "g", " ".join("w" for _ in range(n))) for i, n in enumerate(n_tok)]
     df = spark.createDataFrame(rows, "doc_id long, source string, text string")
     out = sorted(
         (r["doc"], r["shard"], r["seq_id"]) for r in
-        pack_sequences(
-            df, "text", "doc_id", "source", budget, shards=shards
-        ).collect()
+        pack_sequences(df, "text", "doc_id", "source", budget).collect()
     )
     import pyspark.sql.functions as F  # noqa: F401  (xxhash64 parity below)
 
@@ -576,10 +574,13 @@ def test_rank2_partition_invariance_and_sum(spark, xs):
     row-weighted rank sum is exactly n(n+1) — the closed form any
     correct tie-averaged ranking must satisfy."""
     from opl_spark.operators.ranking import avg_rank2
+    from plan_helpers import shuffle_partitions
 
     df = spark.createDataFrame([(v,) for v in xs], "xv: long")
-    a = {r["v"]: r["rank2"] for r in avg_rank2(df, "xv", partitions=2).collect()}
-    b = {r["v"]: r["rank2"] for r in avg_rank2(df, "xv", partitions=7).collect()}
+    with shuffle_partitions(spark, 2):
+        a = {r["v"]: r["rank2"] for r in avg_rank2(df, "xv").collect()}
+    with shuffle_partitions(spark, 7):
+        b = {r["v"]: r["rank2"] for r in avg_rank2(df, "xv").collect()}
     assert a == b
     assert sum(xs.count(v) * r2 for v, r2 in a.items()) == len(xs) * (len(xs) + 1)
 

@@ -15,6 +15,7 @@ from opl_spark.operators.ranking import (
     kendall_tau_b,
     spearman_rho,
 )
+from plan_helpers import shuffle_partitions
 
 
 def _naive_rank2(values):
@@ -32,10 +33,8 @@ def test_avg_rank2_matches_naive_with_ties(spark):
     random.seed(7)
     vals = [random.randint(0, 12) for _ in range(200)]
     df = spark.createDataFrame([(v,) for v in vals], "xv: long")
-    got = {
-        r["v"]: (r["c"], r["rank2"])
-        for r in avg_rank2(df, "xv", partitions=5).collect()
-    }
+    with shuffle_partitions(spark, 5):
+        got = {r["v"]: (r["c"], r["rank2"]) for r in avg_rank2(df, "xv").collect()}
     want2 = _naive_rank2(vals)
     assert set(got) == set(want2)
     for v, (c, r2) in got.items():
@@ -259,7 +258,8 @@ def test_row_rank2_matches_naive_per_row(spark):
     vals = [random.randint(0, 15) for _ in range(300)] + [None] * 7
     df = spark.createDataFrame([(i, v) for i, v in enumerate(vals)],
                                "i: long, xv: long")
-    got = row_rank2(df, "xv", "r2", partitions=6).collect()
+    with shuffle_partitions(spark, 6):
+        got = row_rank2(df, "xv", "r2").collect()
     want = _naive_rank2([v for v in vals if v is not None])
     assert len(got) == 300  # NULLs excluded
     for r in got:
@@ -340,7 +340,8 @@ def test_row_rank2_accepts_decimal_scale_zero(spark):
         F.col("id").alias("i"),
         (F.col("id") % 5).cast("decimal(12,0)").alias("v"),
     )
-    got = row_rank2(df, "v", "r2", partitions=4).collect()
+    with shuffle_partitions(spark, 4):
+        got = row_rank2(df, "v", "r2").collect()
     want = _naive_rank2([i % 5 for i in range(60)])
     assert len(got) == 60
     for r in got:

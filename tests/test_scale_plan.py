@@ -193,7 +193,7 @@ def test_pq_encode_is_map_only(spark, sf_dir):
     from opl_spark.sources import load_table
 
     emb = load_table(spark, sf_dir, "embeddings")
-    book = pq_train_quantized(emb, "embedding", "vec_id", m=4, k=8, sample=256, iters=2)
+    book = pq_train_quantized(emb, "embedding", "vec_id", m=4, k=8)
     assert _exchanges(pq_encode_quantized(emb, "embedding", "vec_id", book)) == 0
 
 
@@ -430,17 +430,12 @@ def test_scale_lint_flags_known_bad_and_passes_known_good(spark, sf_dir):
         "rn", F.row_number().over(Window.orderBy("doc_id"))
     )
     assert any("global window" in f for f in scale_lint(bad_window))
-    # unordered OVER () funnels identically — flagged unless declared
-    # summary-sized via the opt-in flag
+    # unordered OVER () funnels identically
     bad_unordered = docs.withColumn(
         "tot", F.sum("doc_id").over(Window.partitionBy())
     )
     assert any(
         "unordered global window" in f for f in scale_lint(bad_unordered)
-    )
-    assert not any(
-        "unordered" in f
-        for f in scale_lint(bad_unordered, summary_window_ok=True)
     )
     good = docs.groupBy((F.col("doc_id") % 10).alias("b")).count()
     assert scale_lint(good) == []

@@ -43,8 +43,8 @@ def test_derivation_is_deterministic_and_threshold_monotone():
 def test_low_threshold_refuses_with_opt_in_guidance():
     """Below ~cos 0.7 the derivation refuses instead of installing a
     flood-prone index — the message names the opt-in (explicit
-    n_bits/bands + max_bucket) and the IVF alternative."""
-    with pytest.raises(ValueError, match="max_bucket"):
+    n_bits/bands) and the IVF alternative."""
+    with pytest.raises(ValueError, match="n_bits=/bands="):
         srp_banding_defaults(0.3)
     with pytest.raises(ValueError, match="IVF"):
         srp_banding_defaults(0.65)
@@ -55,7 +55,7 @@ def test_low_threshold_refuses_with_opt_in_guidance():
 def test_explicit_budget_with_short_keys_warns():
     """n_bits given, bands derived: the caller owns the budget, so a
     short-key pick warns (hot-bucket fan-out) instead of refusing."""
-    with pytest.warns(UserWarning, match="max_bucket"):
+    with pytest.warns(UserWarning, match="raise the budget"):
         n_bits, bands = _resolve_srp_banding(0.5, 24, None)
     assert n_bits == 24
     advised = srp_banding_advise(0.5, 24)
@@ -85,9 +85,9 @@ def test_store_manifest_is_source_of_truth(spark, sf_dir, tmp_path):
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     dims = len(emb.first()["embedding"])
     store = str(tmp_path / "srp_store")
-    build_srp_index(emb, "embedding", "vec_id", store, dims, threshold=0.9)
+    build_srp_index(emb, "embedding", "vec_id", store, dims)
     meta = _read_srp_meta(spark, store)
-    assert (meta["n_bits"], meta["bands"]) == srp_banding_defaults(0.9)
+    assert (meta["n_bits"], meta["bands"]) == srp_banding_defaults(0.8)
     assert meta["dims"] == dims
     # the manifest is invisible to the signature scan
     sig_cols = set(spark.read.parquet(store).columns)

@@ -295,89 +295,6 @@ def test_streamed_fact_serves_cube_queries(spark, sf_dir, tmp_path):
 
 
 @pytest.mark.slow  # r14 slow tier
-def test_interval_join_left_outer_stream_stream(spark, sf_dir, tmp_path):
-    """Watermark-driven OUTER stream-stream join: unmatched clicks get
-    their null extension only after the watermark proves no view can
-    still arrive.  Feed the month of events as four time-ordered files
-    (one per microbatch) so the watermark advances three times:
-    matched rows must equal the batch inner join exactly; emitted null
-    rows must be a subset of the batch outer nulls; and every click
-    that expired well before the final batch's watermark MUST have
-    been emitted (eviction actually fires, the outer join is not
-    silently inner)."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    from opl_spark.operators.temporal import interval_join
-
-    ev = load_table(spark, sf_dir, "events").orderBy("ts").collect()
-    schema = load_table(spark, sf_dir, "events").schema
-    quarter = (len(ev) + 3) // 4
-    src = tmp_path / "stream_in"
-    src.mkdir()
-    cut_ts = []  # max ts per file
-    for i in range(4):
-        chunk = ev[i * quarter : (i + 1) * quarter]
-        spark.createDataFrame(chunk, schema).coalesce(1).write.parquet(
-            str(src / f"f{i}")
-        )
-        cut_ts.append(max(r["ts"] for r in chunk))
-        os.utime(str(src / f"f{i}"), (1_000_000 + i, 1_000_000 + i))
-
-    def sides(df):
-        click = df.filter(F.col("event_type") == "click").select(
-            "user_id",
-            F.col("ts").alias("click_ts"),
-            F.col("event_id").alias("click_id"),
-        )
-        view = df.filter(F.col("event_type") == "view").select(
-            "user_id", F.col("ts").alias("view_ts"), F.col("event_id").alias("view_id")
-        )
-        return click, view
-
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src / "*"))
-    )
-    s_click, s_view = sides(stream)
-    joined = interval_join(
-        s_click.withWatermark("click_ts", "10 minutes"),
-        s_view.withWatermark("view_ts", "10 minutes"),
-        ["user_id"],
-        "click_ts",
-        "view_ts",
-        "10 MINUTES",
-        how="left_outer",
-    )
-    assert joined.isStreaming
-    got = run_to_memory(joined, "t_ssouter", output_mode="append").collect()
-
-    b_click, b_view = sides(load_table(spark, sf_dir, "events"))
-    inner = interval_join(
-        b_click, b_view, ["user_id"], "click_ts", "view_ts", "10 MINUTES"
-    ).collect()
-    outer_nulls = interval_join(
-        b_click, b_view, ["user_id"], "click_ts", "view_ts", "10 MINUTES",
-        how="left_outer",
-    ).filter(F.col("view_id").isNull()).collect()
-
-    key = lambda r: (r["user_id"], str(r["click_ts"]), r["click_id"], r["view_id"])  # noqa: E731
-    got_matched = [r for r in got if r["view_id"] is not None]
-    got_nulls = [r for r in got if r["view_id"] is None]
-    assert sorted(map(key, got_matched)) == sorted(map(key, inner))
-    assert set(map(key, got_nulls)) <= set(map(key, outer_nulls))
-    # clicks expired ≥ 30 min before the last batch's watermark horizon
-    import datetime
-
-    horizon = cut_ts[2] - datetime.timedelta(minutes=30)
-    must_emit = {key(r) for r in outer_nulls if r["click_ts"] < horizon}
-    assert must_emit, "test data gives the watermark nothing to evict"
-    assert must_emit <= set(map(key, got_nulls))
-
-
-@pytest.mark.slow  # r14 slow tier
 def test_time_ordered_staging_is_complete_and_ordered(spark, sf_dir, tmp_path):
     """stage_time_ordered_arrivals: the sliced replay holds every
     original row exactly once, and file i's max event time never
