@@ -25,7 +25,6 @@ from opl_spark.operators.dedup import (  # noqa: F401
     bloom_might_contain,
     contamination,
     dedup_clusters,
-    dedup_clusters_star,
     keep_best_dedup,
     exact_dedup,
     incremental_dedup,

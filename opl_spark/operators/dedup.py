@@ -837,86 +837,6 @@ def minhash_dedup_pairs(
     )
 
 
-def dedup_clusters(pairs: DataFrame) -> DataFrame:
-    """Resolve near-dup pairs into clusters: every document maps to its
-    connected component's minimum id (the canonical keeper) —
-    ``(doc, keeper)``, one row per document that appears in any
-    NON-SELF pair (self-pairs carry no linkage and are dropped, the
-    same contract as :func:`dedup_clusters_star` — pinned against a
-    union-find reference by
-    ``test_cc_variants_match_union_find_reference``).
-
-    Min-label propagation: each iteration every node takes the min of
-    its own label and its neighbors' labels, so labels converge in
-    O(component diameter) rounds — near-dup components are tiny
-    (pairs/triangles), so this terminates in a handful of distributed
-    joins even at corpus scale.  ``localCheckpoint`` truncates the
-    lineage per round (iterative self-join plans otherwise grow
-    exponentially); the driver only ever sees a per-round change
-    COUNT, never data."""
-    # checkpoint the edge list ONCE — every propagation round joins
-    # against it, and without this the upstream pair computation (an
-    # inverted-index self-join, the expensive part) re-executes per
-    # round.  Both orientations come from a single explode pass, not a
-    # union (each union branch would recompute the pair join).
-    # Measured on the sf0.1 keep-best bench: 23 s -> ~7 s.
-    edges = (
-        pairs.filter(F.col("id_a") != F.col("id_b"))
-        .select(
-            F.explode(
-                F.array(
-                    F.struct(F.col("id_a").alias("src"), F.col("id_b").alias("dst")),
-                    F.struct(F.col("id_b").alias("src"), F.col("id_a").alias("dst")),
-                )
-            ).alias("e")
-        )
-        .select("e.src", "e.dst")
-        .localCheckpoint(eager=False)
-    )
-    labels = (
-        edges.select(F.col("src").alias("node")).distinct()
-        .withColumn("label", F.col("node"))
-        .localCheckpoint(eager=False)
-    )
-    max_iter = 20
-    for _ in range(max_iter):
-        neighbor_min = (
-            edges.join(labels, edges.dst == labels.node)
-            .groupBy("src")
-            .agg(F.min("label").alias("nmin"))
-        )
-        updated = (
-            labels.join(neighbor_min, labels.node == neighbor_min.src, "left")
-            .select(
-                "node",
-                F.least(F.col("label"), F.coalesce("nmin", F.col("label"))).alias(
-                    "new_label"
-                ),
-                F.col("label").alias("old_label"),
-            )
-            # LAZY: the changed-count action materializes the round's
-            # labels INTO the checkpoint in one pass (an eager
-            # checkpoint would run the round twice — once to persist,
-            # once for the count; same trick as dedup_clusters_star)
-            .localCheckpoint(eager=False)
-        )
-        labels = updated.select("node", F.col("new_label").alias("label"))
-        if _ == 0:
-            # Round 1's convergence count is provably wasted: every
-            # component has >= 2 nodes, so its non-min members MUST
-            # change label in the first propagation — changed > 0
-            # whenever any edge exists, and with no edges the label
-            # set is empty and every later count is trivially 0.
-            # Skipping the count drops one serial job per call; the
-            # round's lazy checkpoint simply materializes inside the
-            # next round's count instead (same total compute).
-            continue
-        changed = updated.filter(F.col("new_label") != F.col("old_label")).count()
-        if changed == 0:
-            break
-    return labels.select(F.col("node").alias("doc"), F.col("label").alias("keeper"))
-
-
 # ---------------------------------------------------------------------------
 # SimHash
 # ---------------------------------------------------------------------------
@@ -1165,7 +1085,7 @@ def keep_best_dedup(
 
     ``pairs`` is any near-dup pair stream (``id_a``/``id_b``);
     ``quality`` maps ``id_col`` → ``score_col``.  Components come from
-    :func:`dedup_clusters` (min-label propagation); the argmax is two
+    :func:`dedup_clusters` (large-star/small-star); the argmax is two
     map-side-combinable aggregations per cluster — max score, then min
     id among the members holding it — which stays correct for ANY
     orderable id type (a negate-the-id struct-max trick would
@@ -1648,45 +1568,37 @@ def mask_repeated_spans(
     )
 
 
-def dedup_clusters_star(pairs: DataFrame) -> DataFrame:
-    """Connected components by alternating large-star / small-star
-    rounds (Kiveris et al. 2014, "Connected Components in MapReduce
-    and Beyond") — same ``(doc, keeper)`` contract as
-    :func:`dedup_clusters`, but convergence is O(log n) ROUNDS
-    REGARDLESS OF COMPONENT DIAMETER, where min-label propagation
-    needs O(diameter) rounds.  Use this for linkage graphs with long
-    chains (entity resolution over near-identical keys); min-label
-    stays the cheaper choice for the tiny pair/triangle components
-    near-dup text produces.
+def dedup_clusters(pairs: DataFrame) -> DataFrame:
+    """Resolve near-dup pairs into connected components: every document
+    maps to its component's minimum id (the canonical keeper) —
+    ``(doc, keeper)``, one row per document that appears in any
+    NON-SELF pair (self-pairs carry no linkage and are dropped; pinned
+    against a union-find reference by
+    ``test_dedup_clusters_matches_union_find_reference``).
+
+    Alternating large-star / small-star rounds (Kiveris et al. 2014,
+    "Connected Components in MapReduce and Beyond") converge in
+    O(log n) rounds regardless of component diameter, and each round
+    is a serial scheduling step on Spark, so it is the one CC operator:
+    at sf0.1 per-node min-label propagation was no faster on any of the
+    four CC queries and ran more jobs on each (39 against 18 on the
+    high-diameter entity-resolution linkage graph).
 
     large-star(u): every neighbor v > u re-links to m(u) = min(N(u) ∪ {u})
     small-star(u): every neighbor v ≤ u (and u itself) links to m(u)
     At the fixpoint every component is a star centered on its min.
 
-    Execution shape — 2 shuffles per round, not 7: each half-round
-    computes m(u) as a WINDOW min over the symmetric edge explode
-    (``min(v) over (partition by u)`` — one exchange; the old
-    groupBy-min + re-join paid the nb exchange twice and the join a
-    third time, and a broadcast of m would cap V at driver memory,
-    which a 100 TB linkage graph exceeds).  Per-round edge dedup runs
-    EVERY SECOND ROUND (r14): every operator in the round — m, the
-    star relink targets, the final keeper min — is a function of the
+    Execution shape — 2 shuffles per round: each half-round computes
+    m(u) as a WINDOW min over the symmetric edge explode
+    (``min(v) over (partition by u)`` — one exchange, no join back; a
+    broadcast of m would cap V at driver memory).  Edges are deduped
+    every second round: every operator in the round — m, the star
+    relink targets, the final keeper min — is a function of the
     SUPPORT of the edge multiset, and duplicate rows map one-to-one
     through large/small relinks, so the multiset's support evolves
-    exactly as the deduped edge set would; its row count is bounded
-    by |E| + O(rounds·|V|) without dedup (large keeps one direction
-    per edge row; small keeps one per large row plus up to one
-    self-link per node per round, and contraction turns distinct
-    edges into duplicate rows instead of dropping them).  r13 ran
-    with NO dedup; r14 measured the multiset directly on the
-    entity-resolution linkage graph (sf0.1: dup factor peaks at 1.58
-    in rounds 0–1, support 27.5k→15k; properly ALTERNATED paired A/B
-    is a wash locally — 4.45 vs 4.47 s median — because per-round
-    fixed costs dominate 58k edges) and the alternating schedule —
-    dedup on odd rounds only — is kept for scale: the contraction
-    rounds run on the shrunken distinct set, the row bound tightens
-    to |E| + O(|V|), and only half the rounds pay the extra (a, b)
-    exchange.  Large-star emits no self-loops at all
+    exactly as the deduped edge set would.  The odd-round distinct
+    bounds the row count to |E| + O(|V|), and only half the rounds pay
+    its extra (a, b) exchange.  Large-star emits no self-loops at all
     (a = v > u ≥ m = b); small-star's are dropped by one map-side
     ``a != b`` filter.  The per-node self-link ``(u, m)`` reuses the
     window stage's partitioning (a groupBy on the window's own key
@@ -1702,18 +1614,11 @@ def dedup_clusters_star(pairs: DataFrame) -> DataFrame:
     the neighbor frame the round computes anyway.  The checkpointed
     frame is that neighbor frame (lineage truncation per round), the
     round body and the final keeper read both reuse it, and the
-    driver only ever sees the boolean — never data.  r14: the probe
-    runs on round 0 (so an already-star input exits with zero round
-    bodies) and then on ODD rounds only — each probe is a serial
-    driver action on the critical path, a star set is a FIXPOINT of
-    both half-rounds (support-invariant, see above), so the worst
-    case of the sparser cadence is one support-no-op round of extra
-    compute against half the probe actions on every real run
-    (convergence on the sf0.1 linkage graph lands on an odd round,
-    so the measured run pays no extra round at all).
-    Versus the edge-signature scheme this saves the opening full
-    pass AND the one wasted detect-no-change round after the
-    fixpoint.
+    driver only ever sees the boolean — never data.  The probe runs
+    on round 0 (an already-star input exits with zero round bodies)
+    and then on odd rounds only: a star set is a FIXPOINT of both
+    half-rounds, so the sparser cadence costs at most one
+    support-no-op round against half the serial probe actions.
     """
     from pyspark.sql import Window
 

@@ -83,6 +83,13 @@ def bucketize_edges(
     return spark.table(table).select("src", "dst")
 
 
+def _degrees(e: DataFrame) -> DataFrame:
+    """``(node, deg)`` of an edge list with both directions present."""
+    return e.groupBy(F.col("src").alias("node")).agg(
+        F.count(F.lit(1)).alias("deg")
+    )
+
+
 def pagerank(
     edges: DataFrame,
     iterations: int = 3,
@@ -107,9 +114,7 @@ def pagerank(
     e = edges.select("src", "dst")
     if checkpoint:
         e = e.localCheckpoint(eager=False)
-    deg = e.groupBy(F.col("src").alias("node")).agg(
-        F.count(F.lit(1)).alias("deg")
-    )
+    deg = _degrees(e)
     damping_pct = 85
     base = int(round((100 - damping_pct) / 100 * PR_SCALE))
     pr = deg.select("node", "deg", F.lit(PR_SCALE).alias("pr"))
@@ -132,6 +137,18 @@ def pagerank(
     return pr.select("node", "pr")
 
 
+def _kcore_round(e: DataFrame, k: int) -> tuple[DataFrame, DataFrame]:
+    """One k-core pruning round: the node-sized list of nodes whose
+    degree is below ``k``, and ``e`` without their incident edges (one
+    degree aggregation + two anti-joins against that list)."""
+    bad = _degrees(e).filter(F.col("deg") < k).select("node")
+    pruned = (
+        e.join(bad, e["src"] == bad["node"], "left_anti")
+        .join(bad, e["dst"] == bad["node"], "left_anti")
+    )
+    return bad, pruned
+
+
 def kcore_prune(edges: DataFrame, k: int, rounds: int) -> DataFrame:
     """Fixed-round k-core pruning of an undirected edge list (both
     directions present): each round drops nodes whose current degree
@@ -140,27 +157,17 @@ def kcore_prune(edges: DataFrame, k: int, rounds: int) -> DataFrame:
     engine-portable prefix of the k-core fixpoint (all-integer, so a
     SQL oracle can unroll the identical rounds).
 
-    Per round: one degree aggregation + two anti-joins against the
-    node-sized below-k list — no driver traffic at all for the fixed-
-    round form.  :func:`kcore` iterates the same round to convergence.
+    No driver traffic at all for the fixed-round form.  :func:`kcore`
+    iterates the same round to convergence.
     """
     e = edges.select("src", "dst").localCheckpoint(eager=False)
     for _ in range(rounds):
-        deg = e.groupBy(F.col("src").alias("node")).agg(
-            F.count(F.lit(1)).alias("deg")
-        )
-        bad = deg.filter(F.col("deg") < k).select("node")
-        e = (
-            e.join(bad, e["src"] == bad["node"], "left_anti")
-            .join(bad, e["dst"] == bad["node"], "left_anti")
-        )
-    return e.groupBy(F.col("src").alias("node")).agg(
-        F.count(F.lit(1)).alias("deg")
-    )
+        _bad, e = _kcore_round(e, k)
+    return _degrees(e)
 
 
 def kcore(edges: DataFrame, k: int) -> DataFrame:
-    """k-core to convergence: repeat :func:`kcore_prune` rounds until
+    """k-core to convergence: repeat :func:`kcore_prune`'s round until
     no node falls below ``k`` (every survivor then has degree >= k in
     the surviving subgraph — the classical k-core).  Driver state per
     round is ONE count (the number of below-k nodes); lineage is
@@ -169,20 +176,11 @@ def kcore(edges: DataFrame, k: int) -> DataFrame:
     e = edges.select("src", "dst").localCheckpoint(eager=False)
     max_iter = 50
     for _ in range(max_iter):
-        deg = e.groupBy(F.col("src").alias("node")).agg(
-            F.count(F.lit(1)).alias("deg")
-        )
-        bad = deg.filter(F.col("deg") < k).select("node")
+        bad, pruned = _kcore_round(e, k)
         if bad.limit(1).count() == 0:
             break
-        e = (
-            e.join(bad, e["src"] == bad["node"], "left_anti")
-            .join(bad, e["dst"] == bad["node"], "left_anti")
-            .localCheckpoint(eager=False)
-        )
-    return e.groupBy(F.col("src").alias("node")).agg(
-        F.count(F.lit(1)).alias("deg")
-    )
+        e = pruned.localCheckpoint(eager=False)
+    return _degrees(e)
 
 
 def label_propagation(

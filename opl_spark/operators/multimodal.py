@@ -91,15 +91,12 @@ def _bmp_tools():
     inside a ``mapInPandas`` batch closure makes cloudpickle ship them
     BY VALUE to executor Python workers — same self-containment rule
     as the decode closures below (workers may not have this module
-    importable).  Returns ``(decode, encode, area_resize)``:
+    importable).  Returns ``(decode, encode)``:
 
     - ``decode(by) -> (width, height, rgba uint8 [h,w,4])`` for
       uncompressed (BI_RGB) 24/32-bit BMPs, bottom-up or top-down;
     - ``encode(arr) -> bytes`` writes a 24-bit bottom-up BMP from an
-      RGB(A) uint8 array (alpha dropped — BMP24 has none);
-    - ``area_resize(img, oh, ow)`` deterministic box-filter resize
-      (nearest-neighbor duplication first when upscaling) — the
-      library-free stand-in for Pillow's thumbnail filter.
+      RGB(A) uint8 array (alpha dropped — BMP24 has none).
     """
     import struct
 
@@ -176,24 +173,7 @@ def _bmp_tools():
         )
         return hdr + dib + rows.tobytes()
 
-    def area_resize(img, oh: int, ow: int):
-        a = np.asarray(img, dtype=np.float64)
-        h, w = a.shape[:2]
-        if h < oh:  # nearest-duplicate up so every output bin is fed
-            a = a[(np.arange(oh) * h) // oh]
-            h = oh
-        if w < ow:
-            a = a[:, (np.arange(ow) * w) // ow]
-            w = ow
-        ri = (np.arange(h) * oh) // h
-        ci = (np.arange(w) * ow) // w
-        out = np.zeros((oh, ow) + a.shape[2:], dtype=np.float64)
-        cnt = np.zeros((oh, ow), dtype=np.float64)
-        np.add.at(out, (ri[:, None], ci[None, :]), a)
-        np.add.at(cnt, (ri[:, None], ci[None, :]), 1.0)
-        return out / (cnt[..., None] if out.ndim == 3 else cnt)
-
-    return decode, encode, area_resize
+    return decode, encode
 
 
 def synthetic_bmp_media(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
@@ -367,7 +347,7 @@ def _decode_images_bmp(df: DataFrame) -> DataFrame:
     + std of RGBA/255, computed over the FULL pixel array (exact,
     where the Pillow path approximates via a 16×16 thumbnail)."""
     cols = [f.name for f in DECODED_SCHEMA.fields]
-    decode, _encode, _resize = _bmp_tools()
+    decode, _encode = _bmp_tools()
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import numpy as _np

@@ -120,7 +120,8 @@ inter AS (
 """
 
 # shared DuckDB connected-components CTE (recursive reach over the
-# >=0.2-Jaccard 3-gram near-dup graph; mirrors dedup_clusters)
+# >=0.2-Jaccard 3-gram near-dup graph; the same min-id labels
+# dedup_clusters computes by star contraction)
 _COMPONENTS_CTE = (
     _SHINGLE_CTE.replace("WITH docs", "WITH RECURSIVE docs", 1)
     + """,
@@ -2793,7 +2794,7 @@ def q_corpus_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _minhash_keep_best_oracle() -> str:
     """The full-composition replay: portable MinHash-LSH candidates →
-    exact-Jaccard verify at ``threshold`` → min-label connected
+    exact-Jaccard verify at ``threshold`` → min-id connected
     components (recursive reach) → keep-the-longest rule (n_chars
     desc, min-id ties) — the same CC/keep-best tail the hash-checked
     q_keep_best oracle uses, fed by LSH pairs instead of the exact
@@ -4514,7 +4515,7 @@ def _star_cc_oracle() -> str:
     """Entity-resolution replay at linkage-graph scale: the fuzzy pair
     set (``_FUZZY_P_CTE``) fed through ``rounds`` unrolled alternating
     large-star/small-star contractions (Kiveris et al. 2014 — the same
-    O(log n)-round CC the Spark side runs in dedup_clusters_star), then
+    O(log n)-round CC the Spark side runs in dedup_clusters), then
     a LOUD ``error()`` guard if the edge set is not a min-centered star
     set at the end (a silently-unconverged replay would hash-mismatch
     confusingly).  The old formulation's RECURSIVE ``reach`` built the
@@ -4573,15 +4574,13 @@ def q_entity_resolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Entity resolution end-to-end: symmetric-delete (SymSpell)
     linkage edges over customer names -> connected components ->
     lexicographic-min canonical name.  The digit-substitution linkage
-    graph is one giant HIGH-DIAMETER component — exactly the case
-    min-label propagation (O(diameter) rounds) handles poorly — so
-    components run as alternating large-star/small-star rounds
-    (Kiveris et al. 2014), which converge in O(log n) rounds
-    regardless of diameter.  The CC input is fuzzy_link_edges' star
-    subset (O(bucket) edges, components provably identical to the full
-    fuzzy_pairs graph), not the O(bucket²) pair list the oracle
-    enumerates."""
-    from opl_spark.operators.dedup import dedup_clusters_star, fuzzy_link_edges
+    graph is one giant HIGH-DIAMETER component, which dedup_clusters'
+    alternating large-star/small-star rounds (Kiveris et al. 2014)
+    resolve in O(log n) rounds regardless of diameter.  The CC input
+    is fuzzy_link_edges' star subset (O(bucket) edges, components
+    provably identical to the full fuzzy_pairs graph), not the
+    O(bucket²) pair list the oracle enumerates."""
+    from opl_spark.operators.dedup import fuzzy_link_edges
 
     cust = load_table(spark, sf_dir, "customer")
     # connectivity-equivalent SymSpell star edges, NOT the full pair
@@ -4590,7 +4589,7 @@ def q_entity_resolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = fuzzy_link_edges(cust, "c_name").select(
         F.col("a").alias("id_a"), F.col("b").alias("id_b")
     )
-    comp = dedup_clusters_star(pairs)
+    comp = dedup_clusters(pairs)
     return comp.select(
         F.col("doc").alias("name"), F.col("keeper").alias("canonical")
     )

@@ -15,7 +15,7 @@ from opl_spark.operators.multimodal import (
     decode_images,
 )
 
-bmp_decode, bmp_encode, bmp_area_resize = _bmp_tools()
+bmp_decode, bmp_encode = _bmp_tools()
 
 
 def _rand_rgb(rng: np.random.Generator, h: int, w: int) -> np.ndarray:
@@ -111,14 +111,6 @@ def test_bmp_bitfields_swapped_masks_fail_loudly():
         bmp_decode(_bitfields_bmp(0xFF, 0xFF00, 0xFF0000))
     with pytest.raises(ValueError, match="masks"):
         bmp_decode(_bitfields_bmp(0xFF0000, 0xFF00, 0xFF, 0x000000FF))
-
-
-def test_area_resize_box_means():
-    img = np.arange(16, dtype=np.float64).reshape(4, 4)
-    out = bmp_area_resize(img, 2, 2)
-    assert out.tolist() == [[2.5, 4.5], [10.5, 12.5]]
-    # upscale duplicates nearest then averages back exactly
-    assert np.array_equal(bmp_area_resize(out, 4, 4)[::2, ::2], out)
 
 
 # ------------------------------------------------------------ spark plumbing

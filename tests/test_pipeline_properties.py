@@ -371,15 +371,13 @@ def test_fuzzy_link_edges_connectivity_equals_fuzzy_pairs(spark, words):
         max_size=40,
     )
 )
-def test_cc_variants_match_union_find_reference(spark, edges):
-    """Both connected-components implementations (min-label
-    propagation AND alternating large-star/small-star) must produce
-    exactly the labelling an independent pure-Python union-find
-    computes: every node that appears in any non-self pair maps to its
-    component's minimum id.  Random multigraphs with self-loops and
-    duplicate edges included — the existing star==min-label test
-    could not catch a bug shared by both Spark variants."""
-    from opl_spark.operators.dedup import dedup_clusters, dedup_clusters_star
+def test_dedup_clusters_matches_union_find_reference(spark, edges):
+    """The connected-components operator must produce exactly the
+    labelling an independent pure-Python union-find computes: every
+    node that appears in any non-self pair maps to its component's
+    minimum id.  Random multigraphs with self-loops and duplicate
+    edges included."""
+    from opl_spark.operators.dedup import dedup_clusters
 
     parent: dict[int, int] = {}
 
@@ -402,14 +400,8 @@ def test_cc_variants_match_union_find_reference(spark, edges):
     want = {(x, comp_min[find(x)]) for x in nodes}
 
     df = spark.createDataFrame(edges, "id_a long, id_b long")
-    got_star = {
-        (r["doc"], r["keeper"]) for r in dedup_clusters_star(df).collect()
-    }
-    got_label = {
-        (r["doc"], r["keeper"]) for r in dedup_clusters(df).collect()
-    }
-    assert got_star == want
-    assert got_label == want
+    got = {(r["doc"], r["keeper"]) for r in dedup_clusters(df).collect()}
+    assert got == want
 
 
 @settings(**_SETTINGS)
